@@ -57,14 +57,23 @@ class EspiParseError(ValueError):
     pass
 
 
-def _local(tag: str) -> str:
-    """Strip '{namespace}' prefix (parse_helpers.rs:6-12)."""
-    return tag.rsplit("}", 1)[-1]
+class _LocalNames(dict):
+    """'{namespace}name' -> 'name' (parse_helpers.rs:6-12), memoized for
+    one parse: a feed uses a handful of distinct tags, so each is split
+    once instead of once per element."""
+
+    def __missing__(self, tag: str) -> str:
+        name = self[tag] = tag.rsplit("}", 1)[-1]
+        return name
 
 
 def _all_text(node: ET.Element) -> str:
-    """Concatenate trimmed descendant text (parse_helpers.rs:14-25)."""
-    return "".join(t.strip() for t in node.itertext())
+    """Concatenate trimmed descendant text (parse_helpers.rs:14-25).
+    A leaf's only text is its own, so it skips the itertext walk."""
+    if len(node):
+        return "".join(t.strip() for t in node.itertext())
+    text = node.text
+    return text.strip() if text else ""
 
 
 def _parse_text(node: ET.Element, typ, default):
@@ -106,32 +115,28 @@ def _parse_hex_u32(text: str, field: str) -> int:
     return int(text, 16)
 
 
-def _parse_interval_reading(node: ET.Element, entry_index: int) -> dict[str, Any]:
-    row: dict[str, Any] = {
-        "row_kind": KIND_INTERVAL_READING,
-        "entry_index": entry_index,
-        "cost": float("nan"),
-        "quality": 16,  # "other"
-        "value": None,
-        "tou": 0,
-        "time_period_start_unix": None,
-        "time_period_duration_seconds": None,
-    }
+def _parse_interval_reading(
+    node: ET.Element, entry_index: int, local: _LocalNames
+) -> dict[str, Any]:
+    cost = math.nan
+    quality = 16  # "other"
+    value = start = duration = None
+    tou = 0
     for child in node:
-        tag = _local(child.tag)
+        tag = local[child.tag]
         if tag == "cost":
             # ESPI cost is 1/100000 currency units (interval_reading.rs:36-38)
-            row["cost"] = _parse_text(child, float, 0.0) / 100000.0
+            cost = _parse_text(child, float, 0.0) / 100000.0
         elif tag == "ReadingQuality":
-            row["quality"] = _parse_text(child, int, 0)
+            quality = _parse_text(child, int, 0)
         elif tag == "value":
-            row["value"] = _parse_text(child, int, 0)
+            value = _parse_text(child, int, 0)
         elif tag == "tou":
-            row["tou"] = _parse_text(child, int, 0)
+            tou = _parse_text(child, int, 0)
         elif tag == "timePeriod":
             start = duration = None
             for sub in child:
-                subtag = _local(sub.tag)
+                subtag = local[sub.tag]
                 if subtag == "start":
                     start = _parse_text(sub, int, 0)
                 elif subtag == "duration":
@@ -140,17 +145,24 @@ def _parse_interval_reading(node: ET.Element, entry_index: int) -> dict[str, Any
                 raise EspiParseError("Missing start time.")
             if duration is None:
                 raise EspiParseError("Missing duration")
-            row["time_period_start_unix"] = start
-            row["time_period_duration_seconds"] = duration
         else:
             # reference rejects unknown IntervalReading children
             # (interval_reading.rs:43-47)
             raise EspiParseError(f"Unmatched tag name: {tag!r}")
-    if row["value"] is None:
+    if value is None:
         raise EspiParseError("Missing required field value in IntervalReading")
-    if row["time_period_start_unix"] is None:
+    if start is None:
         raise EspiParseError("Missing timePeriod in IntervalReading")
-    return row
+    return {
+        "row_kind": KIND_INTERVAL_READING,
+        "entry_index": entry_index,
+        "cost": cost,
+        "quality": quality,
+        "value": value,
+        "tou": tou,
+        "time_period_start_unix": start,
+        "time_period_duration_seconds": duration,
+    }
 
 
 _READING_TYPE_FIELDS = {
@@ -166,15 +178,16 @@ _READING_TYPE_FIELDS = {
 }
 
 
-def _parse_reading_type(node: ET.Element, entry_index: int) -> dict[str, Any]:
+def _parse_reading_type(
+    node: ET.Element, entry_index: int, local: _LocalNames
+) -> dict[str, Any]:
     row: dict[str, Any] = {
         "row_kind": KIND_READING_TYPE,
         "entry_index": entry_index,
         "phase": 0,  # "none" when missing (reading_type.rs:19-20)
     }
     for child in node:
-        tag = _local(child.tag)
-        col = _READING_TYPE_FIELDS.get(tag)
+        col = _READING_TYPE_FIELDS.get(local[child.tag])
         if col is not None:
             row[col] = _parse_text(child, int, 0)
     for col in _READING_TYPE_FIELDS.values():
@@ -183,7 +196,9 @@ def _parse_reading_type(node: ET.Element, entry_index: int) -> dict[str, Any]:
     return row
 
 
-def _parse_local_time_parameters(node: ET.Element, entry_index: int) -> dict[str, Any]:
+def _parse_local_time_parameters(
+    node: ET.Element, entry_index: int, local: _LocalNames
+) -> dict[str, Any]:
     # entry_index links the LTP back to its carrying entry (-> href ->
     # usage-point scope), which the non-strict multi-LTP mode resolves
     # per usage point; the reference itself never needs it (it aborts
@@ -193,7 +208,7 @@ def _parse_local_time_parameters(node: ET.Element, entry_index: int) -> dict[str
         "entry_index": entry_index,
     }
     for child in node:
-        tag = _local(child.tag)
+        tag = local[child.tag]
         if tag == "dstStartRule":
             row["dst_start_rule"] = _parse_hex_u32(_all_text(child), "dstStartRule")
         elif tag == "dstEndRule":
@@ -202,15 +217,17 @@ def _parse_local_time_parameters(node: ET.Element, entry_index: int) -> dict[str
             row["dst_offset"] = _parse_text(child, int, 0)
         elif tag == "tzOffset":
             row["tz_offset"] = _parse_text(child, int, 0)
-        elif _local(child.tag):
-            raise EspiParseError(f"Unmatched tag name: {_local(child.tag)!r}")
+        elif tag:
+            raise EspiParseError(f"Unmatched tag name: {tag!r}")
     for col in ("dst_start_rule", "dst_end_rule", "dst_offset", "tz_offset"):
         if col not in row:
             raise EspiParseError(f"Missing required LocalTimeParameters field {col}")
     return row
 
 
-def _parse_entry(node: ET.Element, entry_index: int) -> list[dict[str, Any]]:
+def _parse_entry(
+    node: ET.Element, entry_index: int, local: _LocalNames
+) -> list[dict[str, Any]]:
     rows: list[dict[str, Any]] = []
     entry: dict[str, Any] = {
         "row_kind": KIND_ENTRY,
@@ -220,7 +237,7 @@ def _parse_entry(node: ET.Element, entry_index: int) -> list[dict[str, Any]]:
     }
     content_node: ET.Element | None = None
     for child in node:
-        tag = _local(child.tag)
+        tag = local[child.tag]
         if tag == "title":
             if child.text is None:
                 raise EspiParseError("Empty title.")
@@ -263,7 +280,7 @@ def _parse_entry(node: ET.Element, entry_index: int) -> list[dict[str, Any]]:
     reading_type_node: ET.Element | None = None
     ltp_node: ET.Element | None = None
     for child in content_node:
-        tag = _local(child.tag)
+        tag = local[child.tag]
         if tag == "IntervalBlock":
             set_type(ENTRY_TYPE_INTERVAL_BLOCK)
             interval_blocks.append(child)
@@ -286,21 +303,22 @@ def _parse_entry(node: ET.Element, entry_index: int) -> list[dict[str, Any]]:
 
     for ib in interval_blocks:
         for child in ib:
-            if _local(child.tag) == "IntervalReading":
-                rows.append(_parse_interval_reading(child, entry_index))
+            if local[child.tag] == "IntervalReading":
+                rows.append(_parse_interval_reading(child, entry_index, local))
     if reading_type_node is not None:
-        rows.append(_parse_reading_type(reading_type_node, entry_index))
+        rows.append(_parse_reading_type(reading_type_node, entry_index, local))
     if ltp_node is not None:
-        rows.append(_parse_local_time_parameters(ltp_node, entry_index))
+        rows.append(_parse_local_time_parameters(ltp_node, entry_index, local))
     return rows
 
 
 def iter_espi_stream(source, source_file: str):
-    """Memory-bounded streaming parse (``ET.iterparse``): yields
-    PARSED_SCHEMA row dicts per completed ``<entry>``, never holding more
-    than one entry subtree in memory — the giant-file scale path (a
-    multi-GB provider export parses in O(one entry) executor memory,
-    where ``ET.fromstring`` would hold a DOM ~5-10x the raw bytes).
+    """Memory-bounded streaming parse (``ET.XMLPullParser`` fed 16 KiB
+    at a time, as ``ET.iterparse`` would): yields PARSED_SCHEMA row dicts
+    per completed ``<entry>``, never holding more than one entry subtree
+    in memory — the giant-file scale path (a multi-GB provider export
+    parses in O(one entry) executor memory, where ``ET.fromstring``
+    would hold a DOM ~5-10x the raw bytes).
 
     ``source`` is a file-like object (text mode preserves the
     reference's strict-UTF-8 read: a bad byte raises UnicodeDecodeError
@@ -314,27 +332,36 @@ def iter_espi_stream(source, source_file: str):
     """
     yielded = 0
     try:
-        it = ET.iterparse(source, events=("start", "end"))
+        parser = ET.XMLPullParser(events=("start", "end"))
+        local = _LocalNames()
         depth = -1
         entry_index = 0
         root: ET.Element | None = None
-        for event, elem in it:
-            if event == "start":
-                depth += 1
-                if depth == 0:
-                    root = elem
-                    if _local(elem.tag) != "feed":
-                        raise EspiParseError("Missing feed")
-                continue
-            depth -= 1
-            if depth == 0 and _local(elem.tag) == "entry":
-                for row in _parse_entry(elem, entry_index):
-                    row["source_file"] = source_file
-                    yielded += 1
-                    yield row
-                entry_index += 1
-                # drop the finished entry subtree from the root
-                root.clear()
+        while True:
+            data = source.read(16 * 1024)
+            if data:
+                parser.feed(data)
+            else:
+                parser.close()
+            for event, elem in parser.read_events():
+                if event == "start":
+                    depth += 1
+                    if depth == 0:
+                        root = elem
+                        if local[elem.tag] != "feed":
+                            raise EspiParseError("Missing feed")
+                    continue
+                depth -= 1
+                if depth == 0 and local[elem.tag] == "entry":
+                    for row in _parse_entry(elem, entry_index, local):
+                        row["source_file"] = source_file
+                        yielded += 1
+                        yield row
+                    entry_index += 1
+                    # drop the finished entry subtree from the root
+                    root.clear()
+            if not data:
+                break
         if yielded == 0:
             # an empty feed would otherwise vanish from every downstream
             # table; the reference errors it at denormalize (lib.rs:46-50)

@@ -156,3 +156,84 @@ def test_fastpath_equals_spark_on_random_feeds(spark, tmp_path_factory, spec):
         assert not fast_rows and not spark_rows
         return
     assert _canon(fast_rows) == _canon(spark_rows)
+
+
+# 2023 and 2024 windows of the US rules 360E2000 / B40E2000 as the
+# reference decodes them (naive-UTC epoch seconds, 02:00 on 2023-03-14,
+# 2023-11-07, 2024-03-12 and 2024-11-05)
+_WINDOWS = {2023: (1678759200, 1699322400), 2024: (1710208800, 1730772000)}
+
+
+def _memo_edge_feed() -> tuple[str, dict[str, list[int]]]:
+    """A fixed feed on the fast path's per-entry and per-year memo keys,
+    and the raw reading starts of each series: readings across
+    Dec 31 -> Jan 1 into a year with another DST window, readings exactly
+    at each window edge (the window is strict) and one second inside it,
+    two meter readings sharing one reading type, an interval block before
+    its meter reading, and an orphan meter reading with no interval
+    block."""
+    from tests.test_espi_synthetic_golden import (
+        _HEADER,
+        _entry,
+        _interval_blocks,
+        _ltp,
+        _rt,
+    )
+
+    base = "https://api.memo.example/espi/1_1/resource"
+    up = f"{base}/UsagePoint/UP1"
+    rt, rt_orphan = f"{base}/ReadingType/RT1", f"{base}/ReadingType/RT9"
+    mr = {k: f"{up}/MeterReading/{k}" for k in ("A", "B", "orphan")}
+    edges = [t + d for lo, hi in _WINDOWS.values() for t in (lo, hi) for d in (0, 1, -1)]
+    new_year = [1704063600 + 3600 * k for k in range(-2, 3)]  # 2023-12-31 22:00 ..
+    starts = {"Usage A": edges + new_year,
+              "Usage B": [1689400000, 1721000000] + new_year}
+
+    def block(title, key, values):
+        readings = [_reading(t, 3600, v, cost=1000 * v) for t, v in values]
+        return _entry(title, f"{mr[key]}/IntervalBlock/1", "espi-entry/IntervalBlock",
+                      _interval_blocks([readings]))
+
+    def meter(key, rt_href):
+        return _entry("Meter Reading", mr[key], "espi-entry/MeterReading",
+                      "<espi:MeterReading/>", related=[(rt_href, "espi-entry/ReadingType")])
+
+    xml = [
+        _HEADER,
+        _entry("DST", f"{base}/LocalTimeParameters/1", "espi-entry/LocalTimeParameters",
+               _ltp(-18000, 3600, "360E2000", "B40E2000")),
+        block("Usage B", "B", [(t, 40 + i) for i, t in enumerate(starts["Usage B"])]),
+        meter("A", rt),
+        _entry("Reading Type", rt, "espi-entry/ReadingType", _rt(RT_KWH)),
+        meter("B", rt),
+        block("Usage A", "A", [(t, 7 + i) for i, t in enumerate(starts["Usage A"])]),
+        meter("orphan", rt_orphan),
+        _entry("Reading Type", rt_orphan, "espi-entry/ReadingType", _rt(RT_GAS)),
+        "</feed>\n",
+    ]
+    return "".join(xml), starts
+
+
+def test_fastpath_equals_spark_on_memo_key_edges(spark, tmp_path):
+    import time
+
+    from greenbuttonengine_spark.espi import fastpath as fp
+    from greenbuttonengine_spark.espi.pipeline import timeseries_from_files
+
+    xml, starts = _memo_edge_feed()
+    path = tmp_path / "memo_edges.xml"
+    path.write_text(xml)
+
+    fast_rows, fast_errors = fp.convert_file(str(path))
+    ts, errors_df = timeseries_from_files(spark, str(path))
+    assert not fast_errors and errors_df.count() == 0
+    assert _canon(fast_rows) == _canon([r.asDict() for r in ts.collect()])
+
+    # the feed reaches the edges it is meant to: strict window per year
+    def shifted(t):
+        lo, hi = _WINDOWS[time.gmtime(t).tm_year]
+        return t - 18000 + (3600 if lo < t < hi else 0)
+
+    for title, raw in starts.items():
+        got = sorted(r["time_period_start_unix"] for r in fast_rows if r["title"] == title)
+        assert got == sorted(map(shifted, raw)), title
