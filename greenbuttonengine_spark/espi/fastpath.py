@@ -199,7 +199,9 @@ def rule_epoch(rule: int | None, year: int) -> int | None:
     return calendar.timegm(dt.timetuple())
 
 
-def _year_window(start_rule: int | None, end_rule: int | None, year: int):
+def _year_window(
+    start_rule: int | None, end_rule: int | None, year: int
+) -> tuple[int, int, int, int]:
     """-> (year start, next year start, DST start, DST end) in naive-UTC
     epoch seconds; an empty (0, 0) DST window when either rule yields
     none, as lib.rs:157-162 then never shifts."""

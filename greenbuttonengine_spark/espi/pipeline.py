@@ -472,14 +472,19 @@ def timeseries_from_files(
 
     The parsed union table is the single Python-stage output; it is
     consumed by several branches (entries x3 aliases, facts, LTP), so it
-    is materialized once via ``localCheckpoint(eager=False)`` — one
-    parse per file total, like the reference.  Unlike ``persist``, the
+    is materialized once via ``localCheckpoint(eager=True)`` — one
+    parse per file total, like the reference.  Eager, because a lazy
+    checkpoint is marked by whichever concurrent broadcast job finishes
+    first, and Spark 4.1 can deadlock there: that thread holds the
+    checkpoint registry lock and waits for the RDD's lock, which the
+    DAG scheduler holds while it waits for the registry (seen under
+    pytest as a collect that never returned).  Unlike ``persist``, the
     checkpoint blocks are released automatically (ContextCleaner) once
     the returned DataFrames are garbage-collected, so repeated ingests
     in one session don't accumulate cached blocks.  For deterministic,
     scope-bound cleanup use :func:`espi_ingest`.
     """
-    parsed = read_espi(spark, paths).localCheckpoint(eager=False)
+    parsed = read_espi(spark, paths).localCheckpoint(eager=True)
     tables = split_tables(parsed)
     # denormalize_with_errors folds tables["errors"] (parse failures)
     # into its error channel alongside LTP/reading-type violations

@@ -207,7 +207,7 @@ def test_cli_fastpath_value_parity_with_spark(spark, tmp_path):
 
 def test_cli_fastpath_latency_and_routing(tmp_path, capsys):
     """Fast-path conversion of a small EGD-shaped export must stay well
-    under 200 ms in-process (convert + CSV of its 20 rows measured ~2 ms
+    under 200 ms in-process (convert + CSV of its 20 rows measured ~1 ms
     on a 4-core x86 box; a whole CLI process on it ~0.1 s, mostly
     interpreter startup), must never import pyspark, and the CLI must
     route single files to it and directories/globs to Spark."""
