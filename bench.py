@@ -112,8 +112,10 @@ def _run_suite(
 ) -> tuple[dict[str, float], dict[str, float], dict]:
     """One full measurement pass: headline queries + the ESPI workload.
 
-    Returns (timings, minima, espi_extras).  Re-running this in the same
-    session is always warm — consistent with the warm-median protocol.
+    Returns (timings, minima, espi_extras); espi_extras says
+    ``"espi": "skipped: input missing"`` when the EGD export is absent.
+    Re-running this in the same session is always warm — consistent
+    with the warm-median protocol.
     """
     timings: dict[str, float] = {}
     minima: dict[str, float] = {}
@@ -128,7 +130,7 @@ def _run_suite(
 
     # ESPI end-to-end: XML -> parse -> denormalize -> parquet (BASELINE.md
     # protocol; the reference's own workload).  Two protocol rules:
-    #   1. The Python/mapInPandas worker path is warmed UNTIMED first —
+    #   1. The Python/mapInArrow worker path is warmed UNTIMED first —
     #      every preceding headline query is pure JVM, so the first parse
     #      would otherwise be billed one-time Python-worker + Arrow
     #      startup (~3x inflation: 14.5s cold vs 4.6s warm for identical
@@ -178,13 +180,13 @@ def _run_suite(
         espi_files_per_sec_median = round(n_files / statistics.median(multi_trials), 1)
         shutil.rmtree(multi, ignore_errors=True)
 
-    espi_extras: dict = {}
-    if espi_files_per_sec is not None:
-        espi_extras = {
-            "espi_files_per_sec": espi_files_per_sec,
-            "espi_files_per_sec_median": espi_files_per_sec_median,
-            "espi_multifile_n": n_files,
-        }
+    if espi_files_per_sec is None:
+        return timings, minima, {"espi": "skipped: input missing"}
+    espi_extras = {
+        "espi_files_per_sec": espi_files_per_sec,
+        "espi_files_per_sec_median": espi_files_per_sec_median,
+        "espi_multifile_n": n_files,
+    }
     return timings, minima, espi_extras
 
 

@@ -4,12 +4,12 @@
 Spark-first layout (contrast with the reference's single-pass Rust loop,
 lib/personalgreenbutton/src/lib.rs:32-233):
 
-    parser    pure-Python per-file XML parse (runs inside mapInPandas)
+    parser    pure-Python per-file XML parse (runs inside mapInArrow)
     schemas   fixed StructTypes for the parse output + TimeSeries
     source    distributed file scan -> union-typed parse-output DataFrame
-    enum_dim  XSD enum dictionary as a broadcast dim table
+    enum_dim  XSD enum dictionary as literal SQL maps
     dst       DST/tz rule evaluation as native Catalyst expressions
-    pipeline  denormalize_and_link as declarative joins + projections
+    pipeline  denormalize_and_link as a star join on broadcast dimensions
 """
 
 __all__ = [
@@ -23,8 +23,9 @@ __all__ = [
 def __getattr__(name: str):
     # Lazy re-exports (PEP 562): the pipeline module imports pyspark,
     # but the pure-Python submodules (parser, fastpath) must stay
-    # importable without it — the CLI fast path converts a single
-    # small file in <200 ms, far less than a pyspark import.
+    # importable without it — importing pyspark.sql alone takes about
+    # 0.25 s, half of a whole fast-path CLI conversion of a year-long
+    # export (about 0.5 s on a 4-core Xeon).
     if name in __all__:
         from . import pipeline
 

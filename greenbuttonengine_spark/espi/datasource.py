@@ -51,7 +51,8 @@ class EspiDataSourceReader(DataSourceReader):
         # Streaming parse: a multi-GB file never materializes — neither
         # its bytes nor its DOM — only one <entry> subtree at a time.
         # A mid-file failure (bad byte, bad tag) streams an error row;
-        # the denormalize plan anti-joins the file's partial rows away.
+        # the file gets no denormalize dimension row, so the inner join
+        # drops its partial rows.
         from .parser import iter_espi_stream
 
         with open(partition.path, encoding="utf-8") as fh:

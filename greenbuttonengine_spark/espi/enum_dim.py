@@ -1,28 +1,22 @@
-"""ESPI enum dictionary as a broadcast dim table (P10, S7).
+"""ESPI enum dictionary (P10, S7).
 
 The reference compiles the XSD enum values into a static phf map and
-decodes per row (gb_type_details.rs:8-31).  Spark-first: the dictionary
-is DATA — a 454-row parquet dim (built by tools/build_enum_dim.py from
-the public NAESB espi.xsd) broadcast-joined per enum column.  Codes stay
-ints through every shuffle; strings appear only in the final projection
-— the same "intern until the end" property the reference gets from
-&'static str.
+decodes per row (gb_type_details.rs:8-31).  Here the dictionary is DATA
+— a 454-row parquet table (built by tools/build_enum_dim.py from the
+public NAESB espi.xsd) — read once per process with pyarrow and turned
+into literal SQL maps.  The pipeline decodes the reading-type codes once
+per entry, on its entry dimension, and the reading quality per row.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ENUM_DIM_PATH = str(Path(__file__).resolve().parent / "data" / "espi_enum_dim.parquet")
 
 MISSING_APP_INFO = "Missing app info"
-
-
-def load_enum_dim(spark: SparkSession, path: str | None = None) -> DataFrame:
-    return spark.read.parquet(path or ENUM_DIM_PATH)
 
 
 _MAPS_CACHE: dict[tuple[str, str], dict[int, str]] | None = None
@@ -74,29 +68,8 @@ def decode_enum_expr(code_col: str, field: str, scope: str = "ReadingType"):
     """Enum decode as a literal MAP lookup — the Spark analog of the
     reference's compile-time phf map (gb_type_details.rs:8-31).
 
-    Strictly cheaper than the broadcast-join form at any scale: no
-    exchange, no extra stage, evaluates inside whole-stage codegen.
+    No exchange and no extra stage: it evaluates inside whole-stage
+    codegen.
     Unknown / NULL codes -> 'Missing app info' (gb_type_details.rs:24-29).
     """
     return F.expr(_decode_sql(code_col, field, scope))
-
-
-def decode_enum(
-    df: DataFrame,
-    dim: DataFrame,
-    code_col: str,
-    out_col: str,
-    field: str,
-    scope: str = "ReadingType",
-) -> DataFrame:
-    """Decode an int enum-code column to its app_info string via a
-    broadcast join; unknown codes -> 'Missing app info'
-    (gb_type_details.rs:24-29)."""
-    sub = dim.filter((F.col("type") == scope) & (F.col("field") == field)).select(
-        F.col("value").alias("__enum_code"), F.col("app_info").alias("__enum_str")
-    )
-    joined = df.join(F.broadcast(sub), df[code_col] == F.col("__enum_code"), "left")
-    return (
-        joined.withColumn(out_col, F.coalesce(F.col("__enum_str"), F.lit(MISSING_APP_INFO)))
-        .drop("__enum_code", "__enum_str")
-    )

@@ -1,6 +1,6 @@
 """Pure-Python ESPI Atom-feed parser — the one Python stage in the engine.
 
-Runs per-file inside ``mapInPandas`` (see source.py); everything after
+Runs per-file inside ``mapInArrow`` (see source.py); everything after
 it is native Catalyst.  Semantics mirror the reference parser:
 
 * feed -> entry traversal: lib/personalgreenbutton/src/lib.rs:192-224
@@ -326,9 +326,10 @@ def iter_espi_stream(source, source_file: str):
 
     Failure atomicity is RELATIONAL, not buffered: a mid-file error
     yields a ``row_kind='error'`` row after whatever rows already
-    streamed out, and the denormalize plan anti-joins every table
-    against the error file set (lib.rs:32-50 fail-the-file semantics)
-    — so the parser never needs to retract, and memory stays bounded.
+    streamed out, and the denormalize plan gives an error file no
+    dimension row, so the inner join drops its partial rows (lib.rs:32-50
+    fail-the-file semantics) — the parser never needs to retract, and
+    memory stays bounded.
     """
     yielded = 0
     try:

@@ -1,15 +1,30 @@
-"""denormalize_and_link as a declarative Spark plan.
+"""denormalize_and_link as a declarative Spark plan: a star join.
 
-The reference's single-pass row loop (lib.rs:32-190) becomes:
+The reference's single-pass row loop (lib.rs:32-190) becomes one fact
+stream over two small broadcast dimensions:
 
-    facts ──join entries (title, rt resolution)──join reading_types──
-          ──8x broadcast enum decode──broadcast DST-year dim──project
+    facts ──⋈ entry dim (title, f32(10^p), 8 enum strings, is_enova)──
+          ──⋈ DST dim (per file[, usage point] and year)──project──sink
 
-Every join carries ``source_file`` in its key so multi-file ingest is
-one job (the reference loops files single-threaded and UNION-ALLs).
-At scale the fact side never broadcasts; the dimension sides (entries,
-reading types, LTP, enum dim, year dim) are tiny per file and AQE
-converts the joins to broadcast at runtime.
+Everything that is constant per file or per entry is resolved once, on
+dimensions built from the non-fact tables plus one distinct-key
+aggregate over the facts:
+
+* file aggregate  entries ∪ LTP ∪ parse-error rows grouped by file:
+                  LTP count, parse-error flag, first-entry href (enova)
+* entry dim       entry -> meter reading -> reading type (two href hops)
+                  with the reading-type codes decoded once per entry
+* fact keys       distinct (file, entry, year): feeds the 'Missing
+                  reading type' check and the DST dim
+
+The entry dim is O(entries) and the DST dim O(files x years), however
+many readings there are, so both carry explicit broadcast hints and the
+fact stream is one stage: scan, two broadcast hash joins, project — no
+shuffle, no window.  A file that fails any check has no row in the
+entry dim, so the inner join drops its facts, including partial rows a
+streaming parse emitted before its error row.  Every key carries
+``source_file`` so a multi-file ingest is one job (the reference loops
+files single-threaded and UNION-ALLs).
 
 Quirk parity with the reference (each cited):
 * value = f32(raw) * f32(10^power_of_ten_multiplier) in FLOAT
@@ -28,13 +43,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dst import apply_local_time_shift, build_dst_dim
-from .enum_dim import decode_enum_expr, load_enum_dim
-from .schemas import TIMESERIES_COLUMNS
+from .enum_dim import decode_enum_expr
 from .source import read_espi, split_tables
 
 
@@ -58,29 +73,6 @@ _ENUM_FIELDS = [
     ("phase", "phase"),
     ("uom", "uom"),
 ]
-
-
-def _validate_single_ltp(ltp: DataFrame, all_files: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Files must carry exactly one LTP row (lib.rs:42-50).
-
-    ``all_files`` is the distinct source_file universe from successfully
-    parsed files — needed because a file with ZERO LTP rows never appears
-    in the LTP table at all.  Returns (valid single-row ltp, error rows).
-    """
-    counts = all_files.join(
-        ltp.groupBy("source_file").agg(F.count("*").alias("n")), "source_file", "left"
-    ).withColumn("n", F.coalesce("n", F.lit(0)))
-    bad = counts.filter(F.col("n") != 1).select(
-        "source_file",
-        F.when(
-            F.col("n") > 1,
-            F.lit("Input with multiple LocalTimeParameters is currently unsupported."),
-        )
-        .otherwise(F.lit("Missing LocalTimeParameters."))
-        .alias("error"),
-    )
-    good = ltp.join(counts.filter(F.col("n") == 1).select("source_file"), "source_file", "left_semi")
-    return good, bad
 
 
 # ESPI hrefs scope resources under ".../UsagePoint/{id}/..."; the prefix
@@ -211,12 +203,12 @@ def resolve_reading_types(entries: DataFrame) -> DataFrame:
         F.col("entry_type").alias("rt_entry_type"),
     )
     hop1 = e.filter(F.col("mr_href") != "").join(
-        mr,
+        F.broadcast(mr),
         (F.col("source_file") == F.col("mr_file")) & (F.col("mr_href") == F.col("mr_self_href")),
         "left",
     )
     hop2 = hop1.join(
-        rt,
+        F.broadcast(rt),
         (F.col("source_file") == F.col("rt_file")) & (F.col("rt_href") == F.col("rt_self_href")),
         "left",
     )
@@ -229,33 +221,102 @@ def resolve_reading_types(entries: DataFrame) -> DataFrame:
     )
 
 
+def _year(unix_seconds: Column) -> Column:
+    return F.year(F.timestamp_seconds(unix_seconds)).cast("long")
+
+
+def _file_aggregate(
+    entries: DataFrame, ltp: DataFrame, errors: DataFrame | None
+) -> DataFrame:
+    """One aggregate per file over entries ∪ LTP ∪ parse-error rows:
+    entry and LTP counts, the parse-error flag, the LTP rules (exact
+    when the file has one LTP) and the enova flag, taken from the FIRST
+    entry's href (timeseries.rs:173-178).  Only entry rows carry an
+    ``entry_index``; ``min_by`` skips the NULL orderings of the rest."""
+    null = F.lit(None)
+    parts = [
+        entries.select(
+            "source_file", "entry_index", "href",
+            F.lit(0).alias("is_ltp"), F.lit(0).alias("is_err"),
+            *[null.cast("long").alias(c) for c in _LTP_RULE_COLS],
+        ),
+        ltp.select(
+            "source_file", null.cast("long").alias("entry_index"),
+            null.cast("string").alias("href"),
+            F.lit(1).alias("is_ltp"), F.lit(0).alias("is_err"), *_LTP_RULE_COLS,
+        ),
+    ]
+    if errors is not None:
+        parts.append(errors.select(
+            "source_file", null.cast("long").alias("entry_index"),
+            null.cast("string").alias("href"),
+            F.lit(0).alias("is_ltp"), F.lit(1).alias("is_err"),
+            *[null.cast("long").alias(c) for c in _LTP_RULE_COLS],
+        ))
+    return reduce(DataFrame.unionByName, parts).groupBy("source_file").agg(
+        F.count("entry_index").alias("n_entries"),
+        F.sum("is_ltp").alias("n_ltp"),
+        F.max("is_err").alias("has_err"),
+        F.min_by("href", "entry_index").contains("enova").alias("is_enova"),
+        *[F.max(c).alias(c) for c in _LTP_RULE_COLS],
+    )
+
+
+def _entry_dim(entries: DataFrame, reading_types: DataFrame) -> DataFrame:
+    """Per entry: title, usage-point key, ``f32(10^p)`` and the 8 decoded
+    reading-type strings.  An entry whose reading type does not resolve
+    (lib.rs:168-169) keeps its row with a NULL ``scale``."""
+    rt_codes = reading_types.select(
+        "source_file",
+        F.col("entry_index").alias("rt_entry_index"),
+        "power_of_ten_multiplier",
+        *[c for c, _ in _ENUM_FIELDS],
+    )
+    return (
+        entries.select(
+            "source_file", "entry_index", "title",
+            F.regexp_extract("href", _USAGE_POINT_RE, 1).alias("up_key"),
+        )
+        .join(F.broadcast(resolve_reading_types(entries)), ["source_file", "entry_index"], "left")
+        .join(F.broadcast(rt_codes), ["source_file", "rt_entry_index"], "left")
+        .select(
+            "source_file", "entry_index", "title", "up_key",
+            # P6: the scale factor in FLOAT, as the reference computes it
+            F.pow(F.lit(10.0), F.col("power_of_ten_multiplier").cast("double"))
+            .cast("float")
+            .alias("scale"),
+            # P10: literal-map decode (the phf-map analog), once per entry
+            *[decode_enum_expr(c, xsd).alias(c) for c, xsd in _ENUM_FIELDS],
+        )
+    )
+
+
 def denormalize_and_link(
     tables: dict[str, DataFrame],
-    enum_dim: DataFrame,
     include_source_file: bool = False,
     strict_single_ltp: bool = True,
 ) -> DataFrame:
     """Four normalized tables -> the 15-column TimeSeries DataFrame.
     Thin wrapper over :func:`denormalize_with_errors` for callers that
     only want the data side."""
-    ts, _errors = denormalize_with_errors(
-        tables, enum_dim, include_source_file, strict_single_ltp
-    )
+    ts, _errors = denormalize_with_errors(tables, include_source_file, strict_single_ltp)
     return ts
 
 
 def denormalize_with_errors(
     tables: dict[str, DataFrame],
-    enum_dim: DataFrame,
     include_source_file: bool = False,
     strict_single_ltp: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Four normalized tables -> (TimeSeries, per-file error rows).
 
-    Error rows cover: LTP cardinality violations (lib.rs:42-50) and
-    facts whose entry resolves to no reading type (lib.rs:168-169,
-    'Missing reading type') — in both cases the WHOLE file is excluded,
-    matching the reference's fail-the-file semantics.
+    Error rows cover: parse failures (``tables["errors"]``), LTP
+    cardinality violations (lib.rs:42-50) and facts whose entry resolves
+    to no reading type (lib.rs:168-169, 'Missing reading type') — in
+    every case the WHOLE file is excluded, matching the reference's
+    fail-the-file semantics.  A file gets one error: a parse error
+    hides the LTP check, and only files whose LTP is valid are checked
+    for reading types.
 
     ``strict_single_ltp=False`` (SURVEY §7 improvement; r13 VERDICT
     item 7) relaxes the reference's one-LTP-per-file restriction:
@@ -272,194 +333,123 @@ def denormalize_with_errors(
     _pin_utc(tables["entries"].sparkSession)
     entries = tables["entries"]
     facts = tables["interval_readings"]
-    rts = tables["reading_types"]
-
-    # Fail-the-file atomicity for streaming parses: a file that errored
-    # mid-stream (iter_espi_stream) has already emitted partial rows —
-    # anti-join them away here so error files contribute NOTHING to any
-    # table (lib.rs:32-50).  The error set is tiny: broadcast anti-join.
+    ltp = tables["local_time_parameters"]
     err = tables.get("errors")
-    if err is not None:
-        err_files = F.broadcast(err.select("source_file").distinct())
-        entries = entries.join(err_files, "source_file", "left_anti")
-        facts = facts.join(err_files, "source_file", "left_anti")
-        rts = rts.join(err_files, "source_file", "left_anti")
 
-    all_files = entries.select("source_file").distinct()
+    # files that parsed: at least one entry and no error row
+    files = _file_aggregate(entries, ltp, err).filter(
+        (F.col("n_entries") > 0) & (F.col("has_err") == 0)
+    )
+    entry_dim = _entry_dim(entries, tables["reading_types"])
+    fact_keys = facts.select(
+        "source_file", "entry_index", _year(F.col("time_period_start_unix")).alias("year")
+    ).distinct()
+
     if strict_single_ltp:
-        ltp, ltp_errors = _validate_single_ltp(
-            tables["local_time_parameters"], all_files
-        )
-        entry_dim = entries.select("source_file", "entry_index", "title")
-    else:
-        entry_dim = entries.select(
+        ltp_errors = files.filter(F.col("n_ltp") != 1).select(
             "source_file",
-            "entry_index",
-            "title",
-            F.regexp_extract("href", _USAGE_POINT_RE, 1).alias("up_key"),
-        )
-        # per-(file, usage point, year) dim universe from the RAW facts
-        # (same keep-the-chain-once reasoning as the strict file_years)
-        entry_up = entries.select(
-            "source_file",
-            "entry_index",
-            F.regexp_extract("href", _USAGE_POINT_RE, 1).alias("up_key"),
-        )
-        file_up_years = (
-            facts.join(entry_up, ["source_file", "entry_index"])
-            .select(
-                "source_file",
-                "up_key",
-                F.year(F.timestamp_seconds(F.col("time_period_start_unix")))
-                .cast("long")
-                .alias("year"),
+            F.when(
+                F.col("n_ltp") > 1,
+                F.lit("Input with multiple LocalTimeParameters is currently unsupported."),
             )
+            .otherwise(F.lit("Missing LocalTimeParameters."))
+            .alias("error"),
+        )
+        ltp_ok = files.filter(F.col("n_ltp") == 1)
+    else:
+        file_up_years = (
+            fact_keys.join(
+                F.broadcast(entry_dim.select("source_file", "entry_index", "up_key")),
+                ["source_file", "entry_index"],
+            )
+            .select("source_file", "up_key", "year")
             .distinct()
         )
-        fact_ups = file_up_years.select("source_file", "up_key").distinct()
         ltp_resolved, ltp_errors = resolve_ltp_for_scopes(
-            tables["local_time_parameters"], entries, all_files, fact_ups
+            ltp,
+            entries,
+            files.select("source_file"),
+            file_up_years.select("source_file", "up_key").distinct(),
+        )
+        # a file with a parse error reports only that error
+        ltp_errors = ltp_errors.join(
+            F.broadcast(files.select("source_file")), "source_file", "left_semi"
+        )
+        ltp_ok = files.join(
+            F.broadcast(ltp_errors.select("source_file")), "source_file", "left_anti"
         )
 
-    rt_map = resolve_reading_types(entries)
-    f1 = (
-        facts.join(entry_dim, ["source_file", "entry_index"], "inner")
-        .join(rt_map, ["source_file", "entry_index"], "left")
-    )
-
-    # keep only files with a valid LTP config (error channel carries the rest)
-    if strict_single_ltp:
-        f1 = f1.join(ltp.select("source_file"), "source_file", "left_semi")
-    else:
-        f1 = f1.join(
-            all_files.join(
-                ltp_errors.select("source_file"), "source_file", "left_anti"
-            ),
-            "source_file",
+    # J4: a fact whose entry resolves to no reading type fails its WHOLE
+    # file (lib.rs:168-169); entries without readings never do
+    rt_error_files = (
+        fact_keys.join(
+            F.broadcast(entry_dim.filter(F.col("scale").isNull())),
+            ["source_file", "entry_index"],
             "left_semi",
         )
-
-    # J4: fact -> reading type codes. A fact that resolves to no reading
-    # type fails its WHOLE file into the error channel (lib.rs:168-169).
-    rt_codes = rts.select(
-        "source_file",
-        F.col("entry_index").alias("rt_entry_index"),
-        *[c for c, _ in _ENUM_FIELDS if c != "phase"],
-        "phase",
-        "power_of_ten_multiplier",
-    )
-    f2all = f1.join(rt_codes, ["source_file", "rt_entry_index"], "left")
-    # rt_errors (the errors branch only) re-derives from f2all; the DATA
-    # plan instead drops invalid files with one window flag over the
-    # fact stream.  The previous anti-join form built its tiny build
-    # side FROM f2all, which replanned the whole fact join chain a
-    # second time inside the timeseries plan (measured: 107 exchanges /
-    # 61 joins in one 512-file plan; the window form plus the raw-facts
-    # dst dim below cut it to ~1/4).  The window shuffles by file —
-    # bounded partitions (files are small by construction), and at
-    # scale it replaces a second full pass over the fact chain.
-    missing_rt_files = (
-        f2all.filter(F.col("power_of_ten_multiplier").isNull())
         .select("source_file")
         .distinct()
     )
-    rt_errors = missing_rt_files.select(
-        "source_file", F.lit("Missing reading type").alias("error")
-    )
-    from pyspark.sql.window import Window
+    rt_errors = rt_error_files.join(
+        F.broadcast(ltp_ok.select("source_file")), "source_file", "left_semi"
+    ).select("source_file", F.lit("Missing reading type").alias("error"))
+    good = ltp_ok.join(
+        F.broadcast(rt_error_files), "source_file", "left_anti"
+    ).select("source_file", "is_enova", *_LTP_RULE_COLS)
 
-    file_bad = F.max(
-        F.col("power_of_ten_multiplier").isNull().cast("int")
-    ).over(Window.partitionBy("source_file"))
-    f2 = (
-        f2all.withColumn("__file_bad", file_bad)
-        .filter(F.col("__file_bad") == 0)
-        .drop("__file_bad")
-    )
-
-    # P6: value scaling in genuine FLOAT arithmetic (golden bit parity)
-    f2 = f2.withColumn(
-        "value_scaled",
-        (
-            F.col("value").cast("float")
-            * F.pow(F.lit(10.0), F.col("power_of_ten_multiplier").cast("double")).cast("float")
-        ).cast("float"),
-    )
-
-    # P11: DST/tz shift via the per-(file, year) broadcast dim.  The
-    # (file, year) universe is a function of the RAW facts alone —
-    # deriving it from f2 duplicated the entire fact join chain under
-    # the dim build; deriving upstream keeps the chain in the plan
-    # exactly once.  (Files later excluded by the error channel leave
-    # harmless extra dim rows: the dim is left-joined.)
-    ts = F.timestamp_seconds(F.col("time_period_start_unix"))
-    f2 = f2.withColumn("reading_ts", ts).withColumn("year", F.year("reading_ts").cast("long"))
+    # P11: DST/tz rules per (file[, usage point], year), from the fact
+    # keys — the analog of the reference's per-year memoization
     if strict_single_ltp:
-        file_years = facts.select(
-            "source_file",
-            F.year(F.timestamp_seconds(F.col("time_period_start_unix"))).cast("long").alias("year"),
-        ).distinct()
-        dst_dim = build_dst_dim(ltp, file_years)
-        f3 = f2.join(F.broadcast(dst_dim), ["source_file", "year"], "left")
+        dst_keys = ["source_file", "year"]
+        dst_dim = build_dst_dim(good, fact_keys.select(*dst_keys).distinct())
     else:
+        dst_keys = ["source_file", "up_key", "year"]
         dst_dim = build_dst_dim(
             ltp_resolved, file_up_years, keys=("source_file", "up_key")
         )
-        f3 = f2.join(
-            F.broadcast(dst_dim), ["source_file", "up_key", "year"], "left"
+
+    reading_ts = F.timestamp_seconds(F.col("time_period_start_unix"))
+    stream = (
+        facts.join(
+            F.broadcast(
+                entry_dim.join(F.broadcast(good.select("source_file", "is_enova")), "source_file")
+            ),
+            ["source_file", "entry_index"],
         )
+        .withColumn("year", _year(F.col("time_period_start_unix")))
+        .join(F.broadcast(dst_dim), dst_keys, "left")
+    )
     shifted = apply_local_time_shift(
-        F.col("reading_ts"),
+        reading_ts,
         F.col("dst_start_ts"),
         F.col("dst_end_ts"),
         F.col("dst_offset"),
         F.col("tz_offset"),
     )
-    f3 = f3.withColumn("shifted_unix", F.unix_timestamp(shifted))
-
-    # P12: enova provider cost patch, gated per file on the FIRST entry href
-    first_href = (
-        entries.groupBy("source_file")
-        .agg(F.min_by("href", "entry_index").alias("first_href"))
-        .select("source_file", F.col("first_href").contains("enova").alias("is_enova"))
+    # P12: the enova cost patch.  The cost NaN sentinel
+    # (interval_reading.rs:15-16) crosses the Arrow hop in the parse
+    # stage as NULL — restore NaN so the column is never-null like the
+    # reference's REQUIRED FLOAT.
+    cost = F.when(F.col("is_enova"), F.col("cost") * F.lit(100.0).cast("float")).otherwise(
+        F.col("cost")
     )
-    f3 = f3.join(F.broadcast(first_href), "source_file", "left")
-    f3 = f3.withColumn(
-        "cost_patched",
-        F.when(F.coalesce(F.col("is_enova"), F.lit(False)), F.col("cost") * F.lit(100.0).cast("float"))
-        .otherwise(F.col("cost"))
-        .cast("float"),
-    )
-
-    # P10: enum decode — 8 reading-type columns + fact-side quality.
-    # Literal map lookups (the phf-map analog), one withColumns pass:
-    # no broadcast exchanges, single Catalyst analysis.
-    decode_cols = {"quality_str": decode_enum_expr("quality", "QualityOfReading", scope="")}
-    for code_col, xsd_field in _ENUM_FIELDS:
-        decode_cols[f"{code_col}_str"] = decode_enum_expr(code_col, xsd_field)
-    decoded = f3.withColumns(decode_cols)
-
-    # the cost NaN sentinel (interval_reading.rs:15-16) survives as NULL
-    # through the Arrow hop in the parse stage — restore NaN so the
-    # column is never-null like the reference's REQUIRED FLOAT
     out_cols = [
-        F.col("title"),
-        F.coalesce(F.col("cost_patched"), F.lit(float("nan")).cast("float")).alias("cost"),
-        F.col("quality_str").alias("quality"),
-        F.col("value_scaled").alias("value"),
-        F.col("tou"),
-        F.col("shifted_unix").alias("time_period_start_unix"),
-        F.col("time_period_duration_seconds"),
-        *[F.col(f"{c}_str").alias(c) for c, _ in _ENUM_FIELDS],
+        "title",
+        F.coalesce(cost.cast("float"), F.lit(float("nan")).cast("float")).alias("cost"),
+        decode_enum_expr("quality", "QualityOfReading", scope="").alias("quality"),
+        # P6: value scaling in genuine FLOAT arithmetic (golden bit parity)
+        (F.col("value").cast("float") * F.col("scale")).cast("float").alias("value"),
+        "tou",
+        F.unix_timestamp(shifted).alias("time_period_start_unix"),
+        "time_period_duration_seconds",
+        *[c for c, _ in _ENUM_FIELDS],
     ]
     if include_source_file:
-        out_cols.insert(0, F.col("source_file"))
-    result = decoded.select(*out_cols)
-    ordered = ["source_file", *TIMESERIES_COLUMNS] if include_source_file else TIMESERIES_COLUMNS
+        out_cols.insert(0, "source_file")
     all_errors = ltp_errors.unionByName(rt_errors)
     if err is not None:
         all_errors = err.select("source_file", "error").unionByName(all_errors)
-    return result.select(*ordered), all_errors
+    return stream.select(*out_cols), all_errors
 
 
 def timeseries_from_files(
@@ -488,9 +478,7 @@ def timeseries_from_files(
     tables = split_tables(parsed)
     # denormalize_with_errors folds tables["errors"] (parse failures)
     # into its error channel alongside LTP/reading-type violations
-    return denormalize_with_errors(
-        tables, load_enum_dim(spark), include_source_file, strict_single_ltp
-    )
+    return denormalize_with_errors(tables, include_source_file, strict_single_ltp)
 
 
 @contextmanager
@@ -510,8 +498,6 @@ def espi_ingest(
     parsed = read_espi(spark, paths).persist()
     try:
         tables = split_tables(parsed)
-        yield denormalize_with_errors(
-            tables, load_enum_dim(spark), include_source_file, strict_single_ltp
-        )
+        yield denormalize_with_errors(tables, include_source_file, strict_single_ltp)
     finally:
         parsed.unpersist()

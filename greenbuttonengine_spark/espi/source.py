@@ -1,10 +1,12 @@
 """Distributed ESPI file source.
 
 ``spark.read.format('binaryFile')`` lists and splits the file set
-across executors; the per-file parse runs inside ``mapInPandas`` (Arrow
-batches in/out), emitting union-typed rows per PARSED_SCHEMA.  One
-parse pass feeds all four normalized tables — the reference parses each
-file once too (lib.rs:192-233), but single-threaded.
+across executors; the per-file parse runs inside ``mapInArrow``: each
+Arrow batch of (path, content) rows becomes one Arrow batch of
+union-typed rows per PARSED_SCHEMA, built column by column with no
+pandas hop.  One parse pass feeds all four normalized tables — the
+reference parses each file once too (lib.rs:192-233), but
+single-threaded.
 
 At 100 TB scale: file listing is driver-side metadata only; parse
 parallelism = number of files (fine for many small provider exports —
@@ -17,36 +19,46 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .parser import parse_espi_feed
 from .schemas import PARSED_SCHEMA
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in PARSED_SCHEMA.fields]
-    for pdf in batches:
-        out: list[dict] = []
-        for _, row in pdf.iterrows():
-            content = row["content"]
+def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(PARSED_SCHEMA)
+    for batch in batches:
+        rows: list[dict] = []
+        for path, content in zip(
+            batch.column("path").to_pylist(), batch.column("content").to_pylist()
+        ):
             try:
-                text = (
-                    content.decode("utf-8")
-                    if isinstance(content, (bytes, bytearray))
-                    else str(content)
-                )
+                text = content.decode("utf-8")
             except UnicodeDecodeError as ex:  # S2: bad encoding is a per-file error
-                out.append(
+                rows.append(
                     {
                         "row_kind": "error",
-                        "source_file": row["path"],
+                        "source_file": path,
                         "error": f"UnicodeDecodeError: {ex}",
                     }
                 )
                 continue
-            out.extend(parse_espi_feed(text, row["path"]))
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
+            rows.extend(parse_espi_feed(text, path))
+        # one pass over the row dicts fills every column; a row leaves
+        # the columns of the other row kinds NULL
+        cols = {f.name: [None] * len(rows) for f in schema}
+        for i, row in enumerate(rows):
+            for name, value in row.items():
+                cols[name][i] = value
+        # from_pandas: the parser's NaN cost sentinel becomes NULL, as
+        # the pandas hop this replaced did (the pipeline restores NaN)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(cols[f.name], f.type, from_pandas=True) for f in schema],
+            schema=schema,
+        )
 
 
 from ..shipping import ensure_package_shipped as _ensure_package_shipped  # noqa: E402
@@ -56,7 +68,7 @@ def read_espi(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """paths (glob/dir/list) -> union-typed parsed DataFrame."""
     _ensure_package_shipped(spark)
     raw = spark.read.format("binaryFile").load(paths).select("path", "content")
-    return raw.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
+    return raw.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
 
 
 def split_tables(parsed: DataFrame) -> dict[str, DataFrame]:

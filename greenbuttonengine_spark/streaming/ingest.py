@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..espi import denormalize_and_link
-from ..espi.enum_dim import load_enum_dim
 from ..espi.schemas import PARSED_SCHEMA
 from ..espi.source import _parse_batches, split_tables
 from .bronze import commit_epoch, read_bronze
@@ -64,7 +63,7 @@ def start_ingest_stream(
     )
 
     def _parse_batch(batch: DataFrame, epoch_id: int) -> None:
-        parsed = batch.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
+        parsed = batch.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
         commit_epoch(parsed, bronze_dir, epoch_id)
 
     return (
@@ -83,5 +82,5 @@ def read_accumulated_timeseries(
     whole."""
     parsed = read_bronze(spark, bronze_dir, PARSED_SCHEMA)
     tables = split_tables(parsed)
-    ts = denormalize_and_link(tables, load_enum_dim(spark), include_source_file)
+    ts = denormalize_and_link(tables, include_source_file)
     return ts.orderBy("title", "time_period_start_unix")

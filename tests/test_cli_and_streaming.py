@@ -34,13 +34,15 @@ def test_streaming_ingest_accumulates(tmp_path, spark):
         read_accumulated_timeseries,
         start_ingest_stream,
     )
+    from tests.test_round11 import _egd_feed
 
     drop = tmp_path / "drop"
     drop.mkdir()
     bronze = str(tmp_path / "bronze")
     ckpt = str(tmp_path / "ckpt")
 
-    shutil.copy(EGD, drop / "a.xml")
+    egd = _egd_feed(tmp_path)  # EGD-shaped, 20 daily readings
+    shutil.copy(egd, drop / "a.xml")
     q = start_ingest_stream(spark, str(drop), bronze, ckpt)
     try:
         q.processAllAvailable()
@@ -49,7 +51,7 @@ def test_streaming_ingest_accumulates(tmp_path, spark):
         assert n1 == 20
 
         # drop a second file -> accumulated whole grows (WASM ingest contract)
-        shutil.copy(EGD, drop / "b.xml")
+        shutil.copy(egd, drop / "b.xml")
         q.processAllAvailable()
         ts2 = read_accumulated_timeseries(spark, bronze, include_source_file=True)
         assert ts2.count() == 2 * n1

@@ -1,5 +1,5 @@
 """spark.read.format('espi') — the Python DataSource V2 packaging of the
-parse stage — must agree with the mapInPandas source and feed the same
+parse stage — must agree with the mapInArrow source and feed the same
 pipeline. Also covers provider-quirk fixtures beyond the EGD corpus
 (FIXTURES.md §4): multiple IntervalBlocks per content, empty cost tags,
 the enova cost patch with real costs."""
@@ -118,7 +118,6 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     emits partial rows + an error row, and the denormalize plan
     anti-joins the partial rows away (fail-the-file, lib.rs:32-50)."""
     from greenbuttonengine_spark.espi.datasource import register_espi_source
-    from greenbuttonengine_spark.espi.enum_dim import load_enum_dim
     from greenbuttonengine_spark.espi.pipeline import denormalize_with_errors
     from greenbuttonengine_spark.espi.source import split_tables
 
@@ -143,7 +142,7 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     bad_rows = parsed.filter(F.col("source_file").contains("partial.xml"))
     kinds = {r.row_kind for r in bad_rows.collect()}
     assert "error" in kinds and len(kinds) > 1  # partial rows + error row
-    ts, errors = denormalize_with_errors(split_tables(parsed), load_enum_dim(spark))
+    ts, errors = denormalize_with_errors(split_tables(parsed))
     errs = errors.collect()
     assert any("Unknown tag name" in e.error for e in errs)
     # the broken file contributes nothing; the good file's 2 rows survive
