@@ -3,8 +3,8 @@
 ``spark.read.format('binaryFile')`` lists and splits the file set
 across executors; the per-file parse runs inside ``mapInArrow``: each
 Arrow batch of (path, content) rows becomes one Arrow batch of
-union-typed rows per PARSED_SCHEMA, built column by column with no
-pandas hop.  One parse pass feeds all four normalized tables — the
+union-typed rows per PARSED_SCHEMA, built column by column from the
+parser's row dicts.  One parse pass feeds all four normalized tables — the
 reference parses each file once too (lib.rs:192-233), but
 single-threaded.
 
@@ -53,8 +53,8 @@ def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
         for i, row in enumerate(rows):
             for name, value in row.items():
                 cols[name][i] = value
-        # from_pandas: the parser's NaN cost sentinel becomes NULL, as
-        # the pandas hop this replaced did (the pipeline restores NaN)
+        # from_pandas: the parser's NaN cost sentinel becomes NULL (the
+        # pipeline restores NaN after the joins)
         yield pa.RecordBatch.from_arrays(
             [pa.array(cols[f.name], f.type, from_pandas=True) for f in schema],
             schema=schema,
