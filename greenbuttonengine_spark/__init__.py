@@ -1,8 +1,8 @@
 """greenbuttonengine_spark — a PySpark-native analytics engine with the
 query and data-processing capabilities of tdresser/greenbuttonengine.
 
-The reference (see /root/reference, SURVEY.md) is a single-threaded Rust
-pipeline: ESPI Green Button XML -> 4 normalized columnar tables ->
+The reference engine (SURVEY.md) is a single-threaded Rust pipeline:
+ESPI Green Button XML -> 4 normalized columnar tables ->
 join/denormalize -> derived projection -> sort/chunk -> {csv, parquet,
 influx line protocol}.  This package re-expresses every operator in that
 dataflow as first-class Spark DataFrame operations, designed for a
@@ -13,13 +13,18 @@ text analysis, multimodal columns).
 
 Layout:
     session      SparkSession builder tuned for the workload
-    sources      table catalog + ESPI XML distributed reader
-    espi         the Green Button pipeline (schemas, parse, denormalize)
-    operators    generic relational operators (joins/aggs/sorts/windows)
-    functions    scalar function library (SURVEY §2.6)
-    sinks        csv / parquet / influx line-protocol writers
-    extensions   dedup, similarity, text stats, multimodal
-    streaming    incremental ingest wrapper (Structured Streaming)
+    shipping     ships this package to executor Python workers
+    cli          gbcli batch conversion (driver-only fast path + Spark)
+    sources      table catalog (+ spread_scan) and text-corpus readers
+    espi         the Green Button pipeline (schemas, parse, denormalize,
+                 driver-only fast path)
+    plans        the declared query inventory and its DuckDB oracles
+    sinks        csv / parquet / influx writers, corpus shards, charts,
+                 PQ index
+    extensions   dedup, similarity, text stats, multimodal, quality,
+                 sampling and other corpus operators
+    streaming    incremental ingest, admission, bronze/silver tables
+                 (Structured Streaming)
 """
 
 __version__ = "0.1.0"

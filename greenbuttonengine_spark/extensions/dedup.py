@@ -292,166 +292,24 @@ def ngram_jaccard_pairs_prefix(
     )
 
 
-LONG_MAX = (1 << 63) - 1
-
-
-def minhash_signature(col_name: str, num_perm: int = 32, k: int = 8):
-    """num_perm-wide MinHash signature as an array column (expression
-    form: one fold over the shingle array).
-
-    Kept for column-expression callers; ``minhash_signatures`` (the
-    DataFrame form) is ~2x faster — higher-order-function lambdas are
-    interpreted per element, while the explode+groupBy form runs in
-    whole-stage-codegen hash aggregation with map-side combine."""
-    sh = _shingles(col_name, k)
-    init = F.array_repeat(F.lit(LONG_MAX).cast("long"), num_perm)
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(*[F.xxhash64(s, F.lit(j)) for j in range(num_perm)]),
-            lambda a, h: F.least(a, h),
-        ),
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_perm: int = 32, k: int = 8,
-) -> DataFrame:
-    """(id, sig array<long>) via explode + codegen'd min aggregates.
-
-    Two-level hashing: each shingle is string-hashed ONCE (xxhash64),
-    then the num_perm permutations hash the resulting 8-byte long —
-    fixed-width work per permutation regardless of shingle size.
-    The explode never shuffles raw shingles: partial min() aggregation
-    collapses them map-side, so only num_perm longs per (doc,
-    partition) cross the wire. Measured ~2x the HOF-fold form at sf0.1
-    and scales the same way (one narrow shuffle keyed by id).
-
-    The whole num_perm-way aggregation builds as ONE parsed expression
-    (array of min()s — r16 driver-overhead cut; same partial
-    aggregation, the array projection folds into the aggregate)."""
-    ex = spread_scan(docs).select(
-        F.col(id_col), F.explode(_shingles(text_col, k, distinct=False)).alias("__sh")
-    ).select(F.col(id_col), F.xxhash64("__sh").alias("h0"))
-    mins = ", ".join(f"min(xxhash64(h0, {j}))" for j in range(num_perm))
-    return ex.groupBy(id_col).agg(F.expr(f"array({mins})").alias("sig"))
-
-
-def band_buckets(
-    sig: DataFrame, num_perm: int = 32, bands: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, band_idx, band_hash) LSH bucket rows from MinHash
-    signatures: band_hash = xxhash64 over the band's signature slice.
-    Scan-stage projection + explode — the shape that feeds both the
-    in-corpus self-join (``minhash_lsh_pairs``) and the persistent
-    band store of the streaming admission path
-    (``incremental_near_dedup``), so batch and stream agree on the
-    bucket function by construction."""
-    rows = num_perm // bands
-    # one parsed expression for all bands (r16 driver-overhead cut)
-    band_structs = ", ".join(
-        "named_struct('band_idx', {bi}, 'band_hash', xxhash64({args}))".format(
-            bi=bi,
-            args=", ".join(f"sig[{bi * rows + r}]" for r in range(rows)),
-        )
-        for bi in range(bands)
-    )
-    return sig.select(
-        F.col(id_col), F.expr(f"explode(array({band_structs}))").alias("b")
-    ).select(
-        id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_hash").alias("band_hash")
-    )
-
-
-def _cap_buckets(buckets: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop LSH buckets holding more than ``max_bucket`` members —
-    the hot-key guard shared by the in-corpus self-join and both
-    sides of the admission probe (one map-side-combined count, then a
-    left-semi filter; the hot rows are scanned once, never paired)."""
-    sizes = buckets.groupBy("band_idx", "band_hash").agg(F.count("*").alias("bn"))
-    return buckets.join(
-        sizes.filter(F.col("bn") <= max_bucket).select("band_idx", "band_hash"),
-        ["band_idx", "band_hash"],
-        "left_semi",
-    )
-
-
-def _sig_agreement(num_perm: int):
-    """Estimated Jaccard = fraction of agreeing MinHash components
-    (expects sig_a / sig_b array columns in scope)."""
-    return (
-        F.aggregate(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(float(num_perm))
-    )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_perm: int = 32,
-    bands: int = 8,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket: int = 10000,
-) -> DataFrame:
-    """MinHash + banded LSH near-dup candidates, verified by estimated
-    Jaccard (signature agreement rate) >= threshold.
-
-    Scale shape: signatures are one narrow projection; candidates come
-    from a self-equi-join on (band_idx, band_hash) — a shuffle on the
-    band key, never all-pairs.  rows/bands chosen so P(candidate) at
-    the threshold is high (8 bands x 4 rows, s-curve midpoint ~0.72).
-    """
-    rows = num_perm // bands
-    sig = minhash_signatures(docs, text_col, id_col, num_perm, k)
-    # Signatures feed four branches (buckets, bucket sizes, both verify
-    # sides).  localCheckpoint(eager=False) materializes them once on
-    # first use and — unlike DataFrame.persist, whose CacheManager entry
-    # lives until an explicit unpersist — its blocks are auto-freed by
-    # the ContextCleaner when the result DataFrame is garbage-collected,
-    # so repeated calls in one session don't pin executor memory.  On a
-    # multi-node cluster note localCheckpoint truncates lineage: an
-    # executor loss fails the job instead of recomputing.
-    sig = sig.localCheckpoint(eager=False)
-    buckets = band_buckets(sig, num_perm=num_perm, bands=bands, id_col=id_col)
-    buckets = _cap_buckets(buckets, max_bucket)  # hot-key guard
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = _sig_agreement(num_perm)
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-
-
 # ---------------------------------------------------------------------------
-# Seeded (oracle-reproducible) MinHash — the r6 "integer-LCG" trick
-# extended to string hashing: md5 is the one string hash BOTH engines
-# expose, and conv(substring(md5(s),1,15),16,10) == DuckDB
-# CAST(concat('0x', substr(md5(s),1,15)) AS BIGINT) bit-for-bit, so the
-# whole MinHash+LSH pipeline becomes engine-independent arithmetic.
-# The xxhash64 forms above stay as the production/streaming path (the
-# admission store's bucket function must not change shape).
+# MinHash hash families.  The MinHash/LSH pipeline below is written once;
+# ``seeded`` picks the leaf hash family, the convention simhash_* share:
+#
+#   seeded=False  xxhash64 shingle hash + xxhash64 permutations + xxhash64
+#                 band keys — the production family.  The streaming
+#                 admission store persists these band hashes, so this
+#                 bucket function must not change shape
+#                 (tests/test_extensions.py pins its values).
+#   seeded=True   the r6 "integer-LCG" trick extended to string hashing:
+#                 md5 is the one string hash BOTH engines expose, and
+#                 conv(substring(md5(s),1,15),16,10) == DuckDB
+#                 CAST(concat('0x', substr(md5(s),1,15)) AS BIGINT)
+#                 bit-for-bit; literal-LCG permutations and weighted-sum
+#                 band keys make every value DuckDB-reproducible
+#                 (minhash_seeded_pair_ctes emits the matching oracle).
+#
+# Both families run the identical plan shape.
 # ---------------------------------------------------------------------------
 
 _MH_P = (1 << 31) - 1  # Mersenne prime: permutation modulus
@@ -490,64 +348,146 @@ def lcg_perm_params(n: int, seed: int = 0xC0FFEE) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures_seeded(
+def minhash_signatures(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_perm: int = 32, k: int = 8,
+    num_perm: int = 32, k: int = 8, seeded: bool = False,
 ) -> DataFrame:
-    """Same explode + codegen'd min-aggregate shape as
-    ``minhash_signatures`` (one narrow shuffle keyed by id), but the
-    shingle hash is md5-derived and the permutations are literal-LCG
-    modular arithmetic — every value reproducible in the DuckDB oracle.
-    a*h+b < 2^62 for a,h < 2^31, so ANSI long arithmetic cannot throw.
+    """(id, sig array<long>) via explode + codegen'd min aggregates.
 
-    The scan is spread first (``spread_scan``): the md5-per-shingle
+    Two-level hashing: each shingle is string-hashed ONCE (h0), then
+    the num_perm permutations hash the resulting long — fixed-width
+    work per permutation regardless of shingle size.  The explode
+    never shuffles raw shingles: partial min() aggregation collapses
+    them map-side, so only num_perm longs per (doc, partition) cross
+    the wire. Measured ~2x the HOF-fold form at sf0.1 and scales the
+    same way (one narrow shuffle keyed by id).
+
+    ``seeded=False``: h0 = xxhash64(shingle), permutation j =
+    xxhash64(h0, j).  ``seeded=True``: h0 = md5_hash32(shingle) mod
+    2^31-1, permutation j = (a_j*h0 + b_j) mod 2^31-1 with literal-LCG
+    (a_j, b_j); a*h+b < 2^62 for a,h < 2^31, so ANSI long arithmetic
+    cannot throw.
+
+    The scan is spread first (``spread_scan``): the per-shingle hash
     explode is the operator's hot loop and a single-file input caps it
-    at one core — measured 5.45s -> 1.75s at sf0.1/local[32] (r15)."""
-    params = lcg_perm_params(num_perm)
+    at one core — measured 5.45s -> 1.75s at sf0.1/local[32] on the
+    seeded family (r15).  The whole num_perm-way aggregation builds as
+    ONE parsed expression (array of min()s — r16 driver-overhead cut;
+    same partial aggregation, the array projection folds into the
+    aggregate; integer literals below 2^31 parse to the same
+    IntegerType F.lit produced)."""
+    if seeded:
+        h0 = md5_hash32(F.col("__sh")) % F.lit(_MH_P)
+        mins = ", ".join(
+            f"min(({a} * h0 + {b}) % {_MH_P})" for a, b in lcg_perm_params(num_perm)
+        )
+    else:
+        h0 = F.xxhash64("__sh")
+        mins = ", ".join(f"min(xxhash64(h0, {j}))" for j in range(num_perm))
     ex = spread_scan(docs).select(
         F.col(id_col), F.explode(_shingles(text_col, k, distinct=False)).alias("__sh")
-    ).select(F.col(id_col), (md5_hash32(F.col("__sh")) % F.lit(_MH_P)).alias("h0"))
-    # one parsed expression for the whole num_perm-way aggregation
-    # (r16 driver-overhead cut; the array projection folds into the
-    # aggregate, partial min() combine unchanged) — integer literals
-    # below 2^31 parse to the same IntegerType F.lit produced
-    mins = ", ".join(
-        f"min(({a} * h0 + {b}) % {_MH_P})" for a, b in params
-    )
+    ).select(F.col(id_col), h0.alias("h0"))
     return ex.groupBy(id_col).agg(F.expr(f"array({mins})").alias("sig"))
 
 
-def band_buckets_seeded(
-    sig: DataFrame, num_perm: int = 32, bands: int = 8, id_col: str = "doc_id"
+def band_buckets(
+    sig: DataFrame, num_perm: int = 32, bands: int = 8, id_col: str = "doc_id",
+    seeded: bool = False,
 ) -> DataFrame:
-    """(id, band_idx, band_hash) where band_hash is the positional
-    weighted sum sum_r sig[band*rows+r] * BASE^r — not injective, but
-    both engines compute the identical value, and the verify stage
-    filters false bucket collisions anyway (exactly as with the
-    xxhash64 band hash)."""
+    """(id, band_idx, band_hash) LSH bucket rows from MinHash
+    signatures.  Scan-stage projection + explode — the shape that
+    feeds both the in-corpus self-join (``minhash_lsh_pairs``) and the
+    persistent band store of the streaming admission path
+    (``incremental_near_dedup``), so batch and stream agree on the
+    bucket function by construction.
+
+    ``seeded=False``: band_hash = xxhash64 over the band's signature
+    slice.  ``seeded=True``: the positional weighted sum
+    sum_r sig[band*rows+r] * BASE^r — not injective, but both engines
+    compute the identical value, and the verify stage filters false
+    bucket collisions anyway (exactly as with the xxhash64 band hash);
+    weights stay < 2^31 (1021^3), so the integer literals parse to the
+    same IntegerType F.lit produced."""
     rows = num_perm // bands
-    weights = [_BAND_BASE**r for r in range(rows)]
-    # one parsed expression for all bands (r16 driver-overhead cut);
-    # weights stay < 2^31 (1021^3), so the integer literals parse to
-    # the same IntegerType F.lit produced
+
+    def band_hash(bi: int) -> str:
+        cells = [f"sig[{bi * rows + r}]" for r in range(rows)]
+        if seeded:
+            return " + ".join(f"{c} * {_BAND_BASE**r}" for r, c in enumerate(cells))
+        return f"xxhash64({', '.join(cells)})"
+
+    # one parsed expression for all bands (r16 driver-overhead cut)
     band_structs = ", ".join(
-        "named_struct('band_idx', {bi}, 'band_hash', {acc})".format(
-            bi=bi,
-            acc=" + ".join(
-                f"sig[{bi * rows + r}] * {w}" for r, w in enumerate(weights)
-            ),
-        )
+        f"named_struct('band_idx', {bi}, 'band_hash', {band_hash(bi)})"
         for bi in range(bands)
     )
     return sig.select(
         F.col(id_col), F.expr(f"explode(array({band_structs}))").alias("b")
     ).select(
-        id_col, F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_hash").alias("band_hash"),
+        id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_hash").alias("band_hash")
     )
 
 
-def minhash_lsh_candidates_seeded(
+def _cap_buckets(buckets: DataFrame, max_bucket: int) -> DataFrame:
+    """Drop LSH buckets holding more than ``max_bucket`` members —
+    the hot-key guard shared by the in-corpus self-join and both
+    sides of the admission probe (one map-side-combined count, then a
+    left-semi filter; the hot rows are scanned once, never paired)."""
+    sizes = buckets.groupBy("band_idx", "band_hash").agg(F.count("*").alias("bn"))
+    return buckets.join(
+        sizes.filter(F.col("bn") <= max_bucket).select("band_idx", "band_hash"),
+        ["band_idx", "band_hash"],
+        "left_semi",
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, key: str, id_col: str) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band_idx, ``key``)
+    bucket: the band-key self-equi-join every banded LSH family
+    (MinHash, SimHash, the admission batch) generates candidates with
+    — a shuffle on the band key, never all-pairs."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame, sig: DataFrame, sig_col: str, id_col: str, score, keep
+) -> DataFrame:
+    """The verify tail of a banded LSH family: join both signature
+    sides (``{sig_col}_a`` / ``{sig_col}_b``) onto the candidate pairs,
+    emit (id_a, id_b, score) and keep the rows passing ``keep``."""
+    sa = sig.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias(f"{sig_col}_a"))
+    sb = sig.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias(f"{sig_col}_b"))
+    return (
+        cand.join(sa, "id_a").join(sb, "id_b")
+        .select("id_a", "id_b", score)
+        .filter(keep)
+    )
+
+
+def _sig_agreement(num_perm: int):
+    """Estimated Jaccard = fraction of agreeing MinHash components
+    (expects sig_a / sig_b array columns in scope)."""
+    return (
+        F.aggregate(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        ).cast("double")
+        / F.lit(float(num_perm))
+    )
+
+
+def minhash_lsh_candidates(
     docs: DataFrame,
     num_perm: int = 32,
     bands: int = 8,
@@ -555,34 +495,33 @@ def minhash_lsh_candidates_seeded(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 10000,
+    seeded: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """(signatures, candidate pairs) of the seeded LSH family — the
-    shared front half of :func:`minhash_lsh_pairs_seeded`, exposed
-    (r16) for consumers that need the CANDIDATE set itself
-    (eval_split_leakage: its leakage definition — and its oracle — is
-    band collision, so the r15 shape's signature-agreement verify at
-    threshold 0.0 joined both signature sides only to keep every row;
-    est_jaccard is a [0,1] agreement fraction, so ``>= 0.0`` prunes
-    nothing).  Signatures come back checkpointed for verify reuse."""
-    sig = minhash_signatures_seeded(docs, text_col, id_col, num_perm, k)
-    sig = sig.localCheckpoint(eager=False)  # feeds buckets + both verify sides
-    buckets = band_buckets_seeded(sig, num_perm=num_perm, bands=bands, id_col=id_col)
-    buckets = _cap_buckets(buckets, max_bucket)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return sig, cand
+    """(signatures, candidate pairs): the front half of
+    :func:`minhash_lsh_pairs`, exposed (r16) for consumers that need
+    the CANDIDATE set itself (eval_split_leakage: its leakage
+    definition — and its oracle — is band collision, so a signature-
+    agreement verify at threshold 0.0 would join both signature sides
+    only to keep every row).
+
+    Signatures come back checkpointed: they feed four branches
+    (buckets, bucket sizes, both verify sides).
+    localCheckpoint(eager=False) materializes them once on first use
+    and — unlike DataFrame.persist, whose CacheManager entry lives
+    until an explicit unpersist — its blocks are auto-freed by the
+    ContextCleaner when the result DataFrame is garbage-collected, so
+    repeated calls in one session don't pin executor memory.  On a
+    multi-node cluster note localCheckpoint truncates lineage: an
+    executor loss fails the job instead of recomputing."""
+    sig = minhash_signatures(
+        docs, text_col, id_col, num_perm, k, seeded=seeded
+    ).localCheckpoint(eager=False)
+    buckets = band_buckets(sig, num_perm=num_perm, bands=bands, id_col=id_col, seeded=seeded)
+    buckets = _cap_buckets(buckets, max_bucket)  # hot-key guard
+    return sig, _bucket_pairs(buckets, "band_hash", id_col)
 
 
-def minhash_lsh_pairs_seeded(
+def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
     num_perm: int = 32,
@@ -591,22 +530,26 @@ def minhash_lsh_pairs_seeded(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 10000,
+    seeded: bool = False,
 ) -> DataFrame:
-    """``minhash_lsh_pairs`` with the seeded signature/band functions:
-    identical scale shape (checkpointed signatures, capped band-key
-    self-equi-join, signature-agreement verify), every value DuckDB-
-    reproducible.  ``minhash_seeded_oracle_sql`` emits the matching
-    oracle from the same literals."""
-    sig, cand = minhash_lsh_candidates_seeded(
-        docs, num_perm, bands, k, text_col, id_col, max_bucket
+    """MinHash + banded LSH near-dup candidates, verified by estimated
+    Jaccard (signature agreement rate) >= threshold.
+
+    Scale shape: signatures are one narrow projection; candidates come
+    from a self-equi-join on (band_idx, band_hash) — a shuffle on the
+    band key, never all-pairs.  rows/bands chosen so P(candidate) at
+    the threshold is high (8 bands x 4 rows, s-curve midpoint ~0.72).
+    ``seeded=True`` makes every value DuckDB-reproducible
+    (``minhash_seeded_oracle_sql`` emits the matching oracle from the
+    same literals).
+    """
+    sig, cand = minhash_lsh_candidates(
+        docs, num_perm, bands, k, text_col, id_col, max_bucket, seeded=seeded
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = _sig_agreement(num_perm)
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+    return _verify_pairs(
+        cand, sig, "sig", id_col,
+        _sig_agreement(num_perm).alias("est_jaccard"),
+        F.col("est_jaccard") >= threshold,
     )
 
 
@@ -675,7 +618,7 @@ def minhash_seeded_oracle_sql(
     threshold: float = 0.8, num_perm: int = 32, bands: int = 8, k: int = 8,
     max_bucket: int = 10000,
 ) -> str:
-    """DuckDB oracle for ``minhash_lsh_pairs_seeded`` generated from
+    """DuckDB oracle for ``minhash_lsh_pairs(seeded=True)`` generated from
     the SAME LCG literals the Spark plan embeds."""
     ctes = minhash_seeded_pair_ctes(threshold, num_perm, bands, k, max_bucket)
     return f"""
@@ -964,7 +907,7 @@ def simhash_pairs(
     sh = simhash_signatures(
         docs, bits=bits, text_col=text_col, id_col=id_col, seeded=seeded
     )
-    # see minhash_lsh_pairs: auto-freed once consumers are GC'd
+    # see minhash_lsh_candidates: auto-freed once consumers are GC'd
     sh = sh.localCheckpoint(eager=False)
     band_arr = F.array(
         *[
@@ -978,24 +921,11 @@ def simhash_pairs(
     buckets = sh.select(id_col, F.explode(band_arr).alias("b")).select(
         id_col, "b.band_idx", "b.band_val"
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    ha = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    hb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.join(ha, "id_a").join(hb, "id_b")
-        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    return _verify_pairs(
+        _bucket_pairs(buckets, "band_val", id_col), sh, "sh", id_col,
+        hamming.cast("int").alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -1527,53 +1457,6 @@ def cascade_oracle_sql(threshold: float = 0.8, k: int = 8) -> str:
     """
 
 
-def contamination_flags(
-    docs: DataFrame,
-    benchmark_filter,
-    k: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Benchmark-contamination scan: for every non-benchmark document,
-    count distinct character ``k``-shingles it shares with ANY document
-    of the benchmark set (rows matching ``benchmark_filter``), the
-    standard n-gram-overlap decontamination check run before training.
-
-    Output: (doc_id, n_shingles, n_shared, shared_frac, contaminated)
-    with shared_frac an integer-ratio double (bit-deterministic) and
-    contaminated = n_shared > 0.
-
-    Scale shape: the benchmark side is tiny by construction — its
-    DISTINCT shingle set broadcasts; the corpus side is an exploded
-    scan-stage projection, so the check is one broadcast semi-join plus
-    a (doc)-keyed count.  No all-pairs, no shuffle on the shingle key.
-    """
-    bench_sh = (
-        docs.filter(benchmark_filter)
-        .select(F.explode(_shingles(text_col, k)).alias("__sh"))
-        .distinct()
-    )
-    corpus = docs.filter(~benchmark_filter)
-    ex = corpus.select(F.col(id_col), F.explode(_shingles(text_col, k)).alias("__sh"))
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    shared = (
-        ex.join(F.broadcast(bench_sh), "__sh")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_shared"))
-    )
-    out = sizes.join(shared, id_col, "left").select(
-        F.col(id_col),
-        F.col("n_shingles").cast("long").alias("n_shingles"),
-        F.coalesce(F.col("n_shared"), F.lit(0)).cast("long").alias("n_shared"),
-        (
-            F.coalesce(F.col("n_shared"), F.lit(0)).cast("double")
-            / F.col("n_shingles").cast("double")
-        ).alias("shared_frac"),
-        (F.coalesce(F.col("n_shared"), F.lit(0)) > 0).cast("int").alias("contaminated"),
-    )
-    return out
-
-
 def incremental_dedup(
     new_batch: DataFrame,
     corpus_fingerprints: DataFrame,
@@ -1694,16 +1577,14 @@ def incremental_near_dedup(
 
     from .textstats import fingerprint_col
 
-    # ``seeded=True`` swaps the xxhash64 hash family for the md5-60 +
+    # ``seeded=True`` swaps the xxhash64 hash family for the md5 +
     # literal-LCG one (identical plan shape) so the whole admission
     # becomes DuckDB-reproducible; incremental_near_oracle_sql emits
     # the matching oracle from the same literals.
-    sig_fn = minhash_signatures_seeded if seeded else minhash_signatures
-    band_fn = band_buckets_seeded if seeded else band_buckets
     sig = (
         batch_sigs
         if batch_sigs is not None
-        else sig_fn(new_batch, text_col, id_col, num_perm, k)
+        else minhash_signatures(new_batch, text_col, id_col, num_perm, k, seeded=seeded)
     ).localCheckpoint(eager=False)
 
     fp = new_batch.select(
@@ -1734,7 +1615,7 @@ def incremental_near_dedup(
     )
 
     bb = _cap_buckets(
-        band_fn(sig, num_perm=num_perm, bands=bands, id_col=id_col),
+        band_buckets(sig, num_perm=num_perm, bands=bands, id_col=id_col, seeded=seeded),
         max_bucket,
     ).localCheckpoint(eager=False)
 
@@ -1782,28 +1663,14 @@ def incremental_near_dedup(
 
     surv_sig = sig.join(corpus_matches.select(id_col), id_col, "left_anti")
     surv_bb = _cap_buckets(
-        band_fn(surv_sig, num_perm=num_perm, bands=bands, id_col=id_col),
+        band_buckets(surv_sig, num_perm=num_perm, bands=bands, id_col=id_col, seeded=seeded),
         max_bucket,
     )
-    a, b = surv_bb.alias("a"), surv_bb.alias("b")
-    pair_cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    pa = surv_sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    pb = surv_sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    pairs = (
-        pair_cand.join(pa, "id_a").join(pb, "id_b")
-        .withColumn("est_jaccard", _sig_agreement(num_perm))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b")
-    )
+    pairs = _verify_pairs(
+        _bucket_pairs(surv_bb, "band_hash", id_col), surv_sig, "sig", id_col,
+        _sig_agreement(num_perm).alias("est_jaccard"),
+        F.col("est_jaccard") >= threshold,
+    ).select("id_a", "id_b")
     comp = duplicate_clusters(pairs)
     dup_batch = comp.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias(id_col), F.col("cluster_id").alias("matched_id")
@@ -1926,86 +1793,42 @@ def repeated_substring_spans(
 
 def semantic_dedup_pairs(
     emb: DataFrame,
+    quantizer,
     threshold: float = 0.9,
-    n_clusters: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 42,
-    fit_sample_fraction: float | None = None,
 ) -> DataFrame:
-    """SemDeDup-style semantic near-dup pairs: k-means-cluster the
-    embedding space, then exact cosine only WITHIN each cluster.
+    """SemDeDup-style semantic near-dup pairs: the coarse ``quantizer``
+    (``similarity.KMeansQuantizer`` or ``similarity.SeededQuantizer``)
+    cells the embedding space, then exact cosine only WITHIN each cell.
 
     The published recipe for embedding-level dedup at corpus scale
     (cluster first, compare within cells): two semantically-identical
     documents land in the same cell with near-certainty, so the
     quadratic comparison shrinks from C(n,2) to sum C(cell,2) — with
-    n_clusters sized ~n/target_cell, per-cell work is bounded and the
+    n_cells sized ~n/target_cell, per-cell work is bounded and the
     comparison is an EQUI-join on the cell id (one shuffle), never a
-    cross join.  Set ``fit_sample_fraction`` at scale so the coarse
-    model fits on a seeded sample (same posture as IVF).
+    cross join.  At scale give the k-means quantizer a
+    ``fit_sample_fraction`` so it fits on a seeded sample (same
+    posture as IVF).  The seeded quantizer is the oracle-checkable
+    declared form of dedup_semantic (r6): cells are the Voronoi
+    regions of the n_cells corpus vectors with the smallest
+    (LCG(vec_id), vec_id) key, and the whole query is integer LCG
+    arithmetic + ordered double folds that DuckDB reproduces
+    bit-for-bit.  An empty seeded corpus yields no pairs.
 
     Verification stays exact: every emitted pair carries its true
     cosine >= threshold.  Recall loss is confined to pairs split
     across a cell boundary — rare for the near-identical pairs dedup
     targets (pytest asserts recall against the all-pairs oracle).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = _with_norm(emb, vec_col, id_col).withColumn(
-        "features", array_to_vector(F.col("v"))
-    )
-    km = KMeans(k=n_clusters, seed=seed, maxIter=10)
-    fit_input = (
-        base if fit_sample_fraction is None
-        else base.sample(fraction=fit_sample_fraction, seed=seed)
-    )
-    model = km.fit(fit_input)
-    assigned = model.transform(base).select(
-        F.col(id_col), "v", "__norm", F.col("prediction").alias("__cell")
-    )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    cosine = _dot("a.v", "b.v") / (F.col("a.__norm") * F.col("b.__norm"))
-    return (
-        a.join(
-            b,
-            (F.col("a.__cell") == F.col("b.__cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cosine.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def semantic_dedup_pairs_seeded(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """``semantic_dedup_pairs`` with the seeded-sample coarse
-    quantizer instead of MLlib k-means (same construction as
-    ``similarity.ivf_topk_seeded``): cells are the Voronoi regions of
-    the n_clusters corpus vectors with the smallest (LCG(vec_id),
-    vec_id) key, assignment is a scan-stage argmax against literal
-    seed vectors.  Cell balance is worse than trained k-means, but
-    the whole query is integer LCG arithmetic + ordered double folds
-    that DuckDB reproduces bit-for-bit — this is the oracle-checkable
-    declared form of dedup_semantic (r6); the trained variant stays
-    as the production API with pytest recall bounds."""
-    from .similarity import seeded_cell_scores, seeded_centroids
-
-    seeds = seeded_centroids(emb, n_clusters, vec_col, id_col)
-    cell_scores = seeded_cell_scores(seeds)
-    base = _with_norm(emb, vec_col, id_col).withColumn(
-        "__cell", -F.element_at(cell_scores("v"), 1)["nc"]
-    )
+    base = _with_norm(emb, vec_col, id_col)
+    cells = quantizer.fit(emb, vec_col, id_col, base, "v")
+    if cells is None:  # no cells, so no pairs
+        base = base.limit(0).withColumn("__cell", F.lit(0))
+    else:
+        assign, _ = cells
+        base = assign(base, "v", "__cell")
     a, b = base.alias("a"), base.alias("b")
     cosine = _dot("a.v", "b.v") / (F.col("a.__norm") * F.col("b.__norm"))
     return (

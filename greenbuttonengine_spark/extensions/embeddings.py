@@ -79,52 +79,6 @@ def l2_normalize(
     )
 
 
-def label_centroids(
-    emb: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    grid: int = 64,
-) -> DataFrame:
-    """Per-label embedding centroids via fixed-point accumulation.
-
-    Floating-point SUM is partition-order dependent — the one thing a
-    reproducible corpus statistic cannot be.  So each component is
-    snapped to a 1/``grid`` fixed-point lattice (floor(v*grid + 0.5),
-    exact: grid is a power of two so v*grid is a lossless scale), the
-    lattice integers are summed (associative, order-free), and ONE
-    exact double division sum/(grid*count) converts back at the end.
-    Result: bit-identical centroids on any cluster layout, any retry,
-    any engine, at 1/128-precision — plenty for routing/monitoring
-    (IVF seeding, per-source drift dashboards).
-
-    Output is exploded (label, dim, centroid, n_vecs) scalar rows.
-    Scale shape: posexplode in the scan stage, then one (label, dim)
-    hash agg with map-side partial sums — the wire carries
-    labels x dims rows, independent of corpus size.
-    """
-    q = emb.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(
-            F.transform(
-                _as_double(vec_col),
-                lambda x: F.floor(x * F.lit(float(grid)) + F.lit(0.5)).cast("long"),
-            )
-        ).alias("dim", "qg"),
-    )
-    agg = q.groupBy("label", "dim").agg(
-        F.sum("qg").alias("__s"), F.count("*").alias("__c")
-    )
-    return agg.select(
-        F.col("label").cast("long").alias("label"),
-        F.col("dim").cast("long").alias("dim"),
-        (
-            F.col("__s").cast("double")
-            / (F.lit(float(grid)) * F.col("__c").cast("double"))
-        ).alias("centroid"),
-        F.col("__c").cast("long").alias("n_vecs"),
-    )
-
-
 def pca_fit(
     emb: DataFrame,
     vec_col: str = "embedding",

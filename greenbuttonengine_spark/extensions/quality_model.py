@@ -343,40 +343,29 @@ def fixed_point_quality(
     ]
     # lazy: epoch 1's aggregate materializes it (consumers are strictly
     # sequential, so no lazy-checkpoint race), saving one separate
-    # materialization action per build (r16).  AQE-off planning is
-    # immaterial here: fx is already checkpointed, so the z projection
-    # has no exchange for AQE to re-optimize.
+    # materialization action per build (r16).
     z = fx.select(F.col(id_col), *scaled, F.col("y")).localCheckpoint(eager=False)
 
-    spark = docs.sparkSession
-    w = [0] * nf
     # Each epoch is one global aggregate folding the checkpointed z to
-    # a single 7-int row — AQE's extra stage round-trip per query buys
-    # nothing for that shape at ANY scale (the partial aggregation is
-    # what parallelizes, and it is AQE-independent), and costs ~0.1s
-    # of driver latency per epoch at sf0.1 (r16 measurement).
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(epochs):
-            margin = " + ".join(f"z{j} * {w[j]}L" for j in range(nf))
-            upd = z.select(
-                *[
-                    F.sum(
-                        F.when(
-                            (F.col("y") == 1) & (F.expr(margin) <= 0), F.col(f"z{j}")
-                        )
-                        .when(
-                            (F.col("y") == 0) & (F.expr(margin) > 0), -F.col(f"z{j}")
-                        )
-                        .otherwise(F.lit(0))
-                    ).alias(f"u{j}")
-                    for j in range(nf)
-                ]
-            ).collect()[0]
-            w = [w[j] + int(upd[f"u{j}"] or 0) for j in range(nf)]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+    # a single 7-int row, planned under the session's own AQE setting.
+    w = [0] * nf
+    for _ in range(epochs):
+        margin = " + ".join(f"z{j} * {w[j]}L" for j in range(nf))
+        upd = z.select(
+            *[
+                F.sum(
+                    F.when(
+                        (F.col("y") == 1) & (F.expr(margin) <= 0), F.col(f"z{j}")
+                    )
+                    .when(
+                        (F.col("y") == 0) & (F.expr(margin) > 0), -F.col(f"z{j}")
+                    )
+                    .otherwise(F.lit(0))
+                ).alias(f"u{j}")
+                for j in range(nf)
+            ]
+        ).collect()[0]
+        w = [w[j] + int(upd[f"u{j}"] or 0) for j in range(nf)]
 
     margin = " + ".join(f"z{j} * {w[j]}L" for j in range(nf))
     return z.select(

@@ -17,8 +17,8 @@ per-operator docstrings):
   ================  ======================  ============================
   few queries       cosine_topk             exact; corpus scanned once,
                                             norms hoisted per row (r15)
-  cells <= ~1e3     ivf_topk_seeded         literal-seed argmax optimal;
-                                            full DuckDB oracle
+  cells <= ~1e3     ivf_topk +              literal-seed argmax optimal;
+                    SeededQuantizer         full DuckDB oracle
   large cells /     ivf_topk_blocked        Arrow tiles, 67 MB/task
   cells ~ sqrt(n)                           bound; auto hub valve opens
                                             > 64k rows/cell (3.0x on a
@@ -44,6 +44,7 @@ double).
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -79,10 +80,6 @@ def _lit_double_array(values) -> "F.Column":
     return F.expr("array(" + ", ".join(f"{x!r}D" for x in vals) + ")")
 
 
-def _norm(v):
-    return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
 def _finite_cosine(col):
     """Keep-predicate for cosine columns: non-finite cosines are
     DROPPED from every top-k, the one rule ALL forms in this module
@@ -104,7 +101,7 @@ def _with_norm(side: DataFrame, vec: str, nrm: str) -> DataFrame:
     """Hoist the per-ROW L2 norm (and the entry finiteness gate) onto
     the slim n-row side of a top-k, so the per-PAIR tail is one dot
     plus a scalar multiply instead of three folds — the
-    ivf_topk_seeded hoist (r13) applied module-wide.
+    seeded-IVF hoist (r13) applied module-wide.
 
     Both the fold and the tail dot stay HOFs, NOT dim-unrolled
     element_at chains: measured r15 at sf0.1 bench scale (2k rows,
@@ -237,75 +234,6 @@ def _bucket_signature(v, weights: list[list[float]]):
     return sig
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    fit_sample_fraction: float | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means centroids
-    partition the corpus into cells; each query scans only its
-    ``n_probe`` nearest cells.
-
-    The coarse quantizer is MLlib KMeans (fixed seed -> deterministic
-    model); assignment and probing are native joins.  At 100 TB pass
-    ``fit_sample_fraction`` so the centroid model is trained on a
-    seeded sample (the fit is otherwise itself a full-corpus job; cell
-    quality needs only a representative sample), the corpus is written
-    partitioned by cell, and a query touches n_probe/n_centroids of
-    the data — the classic IVF trade (recall vs cells scanned)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    # the finiteness gate (sq < inf == the old forall on non-overflow
-    # inputs) runs BEFORE the k-means fit, same as the old entry
-    # filter, so centroids are unchanged; zero-norm rows pass the gate
-    # and keep participating in the fit, dropped per-pair in the tail
-    c = _with_norm(c, "cv", "cnrm")
-    with_vec = c.withColumn("features", array_to_vector(F.col("cv")))
-    km = KMeans(k=n_centroids, seed=seed, maxIter=10)
-    fit_input = (
-        with_vec
-        if fit_sample_fraction is None
-        else with_vec.sample(fraction=fit_sample_fraction, seed=seed)
-    )
-    model = km.fit(fit_input)
-    assigned = model.transform(with_vec).select(
-        "neighbor_id", "cv", "cnrm", F.col("prediction").alias("cell")
-    )
-
-    centroids = [list(map(float, cc)) for cc in model.clusterCenters()]
-    centroid_rows = [(i, centroids[i]) for i in range(len(centroids))]
-    cdf = corpus.sparkSession.createDataFrame(centroid_rows, "cell int, centroid array<double>")
-
-    q = _with_norm(q, "qv", "qnrm")
-    qc = q.crossJoin(F.broadcast(cdf))
-    dist2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = W.partitionBy("query_id").orderBy(dist2.asc(), F.col("cell"))
-    probes = (
-        qc.withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "qv", "qnrm", "cell")
-    )
-
-    return _score_and_rank(assigned.join(F.broadcast(probes), "cell"), k)
-
-
 def seeded_centroids(
     corpus: DataFrame,
     n_centroids: int,
@@ -414,74 +342,141 @@ def _empty_topk(spark) -> DataFrame:
     )
 
 
-def ivf_topk_seeded(
+# Coarse quantizers: the part of a cell join that varies.
+# ``fit(corpus, vec_col, id_col, base, vec)`` sees the raw corpus and
+# the caller's normalized frame ``base`` (vector column ``vec``) and
+# returns ``(assign, probe)`` — or None when the corpus has no cells:
+#   assign(df, vec, cell)         adds each row's cell id as ``cell``
+#   probe(df, key, vec, n_probe)  one row per (``key`` row, scanned
+#                                 cell), the cell id as column "cell"
+
+
+@dataclass(frozen=True)
+class KMeansQuantizer:
+    """MLlib k-means cells (fixed seed -> deterministic model) fitted
+    on ``base``; a query probes its ``n_probe`` nearest centroids by
+    L2 (a per-query window over the broadcast centroid table).  At
+    100 TB pass ``fit_sample_fraction``: the fit is otherwise itself a
+    full-corpus job, and cell quality needs only a representative
+    sample.  Balanced cells, but a trained model no other engine
+    reproduces, so its consumers carry pytest recall bounds."""
+
+    n_cells: int = 16
+    seed: int = 42
+    fit_sample_fraction: float | None = None
+
+    def fit(self, corpus, vec_col, id_col, base, vec):
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
+
+        def featurize(df: DataFrame, v: str) -> DataFrame:
+            return df.withColumn("features", array_to_vector(F.col(v)))
+
+        fit_input = featurize(base, vec)
+        if self.fit_sample_fraction is not None:
+            fit_input = fit_input.sample(fraction=self.fit_sample_fraction, seed=self.seed)
+        model = KMeans(k=self.n_cells, seed=self.seed, maxIter=10).fit(fit_input)
+        centroids = [(i, list(map(float, cc))) for i, cc in enumerate(model.clusterCenters())]
+
+        def assign(df: DataFrame, v: str, cell: str) -> DataFrame:
+            return model.transform(featurize(df, v)).select(
+                *df.columns, F.col("prediction").alias(cell)
+            )
+
+        def probe(df: DataFrame, key: str, v: str, n_probe: int) -> DataFrame:
+            cdf = df.sparkSession.createDataFrame(centroids, "cell int, centroid array<double>")
+            dist2 = F.aggregate(
+                F.zip_with(F.col(v), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            w = W.partitionBy(key).orderBy(dist2.asc(), F.col("cell"))
+            return (
+                df.crossJoin(F.broadcast(cdf))
+                .withColumn("cell_rank", F.row_number().over(w))
+                .filter(F.col("cell_rank") <= n_probe)
+                .select(*df.columns, "cell")
+            )
+
+        return assign, probe
+
+
+@dataclass(frozen=True)
+class SeededQuantizer:
+    """Seeded-sample cells (``seeded_centroids`` + ``seeded_cell_scores``),
+    sampled from the raw corpus before any entry gate, as the oracles
+    do: assignment and probing rank by cosine-to-seed against LITERAL
+    seed arrays — a pure scan-stage argmax (sorted struct array), no
+    window, no shuffle, no fit job.  Less balanced than k-means, but
+    every value is integer+double arithmetic DuckDB reproduces
+    bit-for-bit, so its consumers carry full oracles
+    (``_seeded_cells_cte``)."""
+
+    n_cells: int = 16
+
+    def fit(self, corpus, vec_col, id_col, base, vec):
+        seeds = seeded_centroids(corpus, self.n_cells, vec_col, id_col)
+        if not seeds:
+            return None
+        cell_scores = seeded_cell_scores(seeds)
+
+        def assign(df: DataFrame, v: str, cell: str) -> DataFrame:
+            return df.withColumn(cell, -F.element_at(cell_scores(v), 1)["nc"])
+
+        def probe(df: DataFrame, key: str, v: str, n_probe: int) -> DataFrame:
+            top = F.slice(cell_scores(v), 1, n_probe)
+            return df.select(
+                *df.columns, F.explode(F.transform(top, lambda s: -s["nc"])).alias("cell")
+            )
+
+        return assign, probe
+
+
+def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    quantizer: KMeansQuantizer | SeededQuantizer,
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """IVF approximate top-k with the seeded-sample coarse quantizer
-    (``seeded_centroids``): assignment and probing rank by
-    cosine-to-seed, computed against LITERAL seed arrays — a pure
-    scan-stage argmax (sorted struct array), no window, no shuffle
-    for assignment; the only shuffle is the cell equi-join, with the
-    (tiny) probe side broadcast.
+    """IVF (inverted-file) approximate top-k: the ``quantizer`` cells
+    the corpus; each query scans only its ``n_probe`` cells, so at
+    scale (corpus written partitioned by cell) a query touches
+    n_probe/n_cells of the data — the classic recall-vs-cells trade.
+    The only shuffle is the cell equi-join, probe side broadcast.
+    ``SeededQuantizer`` is the oracle-checkable declared form
+    (ann_ivf_topk).  An empty seeded corpus returns the empty top-k.
 
-    vs ``ivf_topk`` (MLlib k-means): cells are less balanced, but the
-    whole query is deterministic integer+double arithmetic both
-    engines reproduce bit-for-bit, so it carries a full DuckDB oracle
-    instead of a rows-only row.  Same recall contract (pytest bounds
-    both against brute force).
+    Per-ROW norms are hoisted above the join by ``_with_norm``, whose
+    finiteness gate runs before a k-means fit (the seeded sample reads
+    the raw corpus); zero-norm rows keep their cells and are dropped
+    per-pair in ``_score_and_rank``.
 
     ``broadcast_queries=False`` lets the planner pick the cell-join
     strategy instead of forcing a broadcast of the exploded probe
     side — the right setting when queries ~ corpus (e.g. the bitext
     miner at scale: probe side is n_queries x n_probe rows and no
     longer driver-sized); values are identical either way."""
-    seeds = seeded_centroids(corpus, n_centroids, vec_col, id_col)
-    if not seeds:
-        return _empty_topk(corpus.sparkSession)
-    cell_scores = seeded_cell_scores(seeds)
-
-    # Per-ROW norms hoisted above the join (each was being re-folded
-    # per PAIR inside _score_and_rank): same IEEE op sequence, so
-    # every cosine — and the oracle — is bit-identical.  _with_norm's
-    # sq gate replaces the old forall entry filter (same drops, plus
-    # the r14 ADVICE overflow-magnitude hole), and the tail dot is the
-    # shared HOF fold — the r14 unrolled chain measured SLOWER once
-    # A/B'd fairly (see _with_norm; the win attributed to unrolling in
-    # r13 came from the norm hoist, which stays).
     c = _with_norm(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-        ),
+        corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")),
         "cv",
         "cnrm",
     )
-    c = c.withColumn("cell", -F.element_at(cell_scores("cv"), 1)["nc"])
+    cells = quantizer.fit(corpus, vec_col, id_col, c, "cv")
+    if cells is None:
+        return _empty_topk(corpus.sparkSession)
+    assign, probe = cells
     q = _with_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-        ),
+        queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")),
         "qv",
         "qnrm",
     )
-    q = q.select(
-        "query_id",
-        "qv",
-        "qnrm",
-        F.explode(
-            F.transform(
-                F.slice(cell_scores("qv"), 1, n_probe), lambda s: -s["nc"]
-            )
-        ).alias("cell"),
-    )
-    probe_side = F.broadcast(q) if broadcast_queries else q
-    return _score_and_rank(c.join(probe_side, "cell"), k)
+    probes = probe(q, "query_id", "qv", n_probe)
+    probe_side = F.broadcast(probes) if broadcast_queries else probes
+    return _score_and_rank(assign(c, "cv", "cell").join(probe_side, "cell"), k)
 
 
 # Literal per-task memory bound for the blocked IVF scorer: one active
@@ -515,8 +510,9 @@ def ivf_topk_blocked(
     hot_cell_rows: int | None = HOT_CELL_ROWS_DEFAULT,
     count_sample_mod: int = 64,
 ) -> DataFrame:
-    """``ivf_topk_seeded`` re-expressed as an Arrow cell-matrix kernel
-    — bitwise-identical output, built for LARGE cell counts.
+    """``ivf_topk`` with the ``SeededQuantizer`` re-expressed as an
+    Arrow cell-matrix kernel — bitwise-identical output, built for
+    LARGE cell counts.
 
     The expression form embeds every seed vector as plan literals
     (n_centroids x dim terms per row expression); that is optimal for

@@ -236,18 +236,6 @@ def pii_scan(
     )
 
 
-def analyze(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    text = F.col(text_col)
-    cols = {
-        **token_count_cols(text),
-        **quality_score_cols(text),
-        **lang_marker_counts(text),
-        "lang_pred": lang_id_col(text),
-        "fingerprint": fingerprint_col(text),
-    }
-    return docs.select(F.col(id_col), *[c.alias(n) for n, c in cols.items()])
-
-
 def rare_token_stats(
     docs: DataFrame,
     min_cf: int = 5,

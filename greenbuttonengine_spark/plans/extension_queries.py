@@ -131,8 +131,8 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross-checks recall against dedup_ngram_jaccard.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_lsh_pairs_seeded(
-        load_table(spark, "documents", sf_dir), threshold=0.8
+    return dedup.minhash_lsh_pairs(
+        load_table(spark, "documents", sf_dir), threshold=0.8, seeded=True
     )
 
 
@@ -234,7 +234,7 @@ def _seeded_cells_cte(n_centroids: int) -> str:
 
 def _ivf_seeded_oracle_sql(n_centroids: int = 16, n_probe: int = 4,
                            k: int = 10) -> str:
-    """DuckDB mirror of similarity.ivf_topk_seeded: the seeded-sample
+    """DuckDB mirror of similarity.ivf_topk(SeededQuantizer): the seeded-sample
     coarse quantizer is integer LCG arithmetic + ordered double folds,
     both of which DuckDB reproduces bit-for-bit (list_dot_product is
     the same left-to-right fold as the Spark aggregate)."""
@@ -293,12 +293,13 @@ def _ivf_seeded_oracle_sql(n_centroids: int = 16, n_probe: int = 4,
     "integer-LCG seed selection makes the whole query DuckDB-"
     "reproducible, so this carries a full oracle (r6 — it was rows-"
     "only when the quantizer was MLlib k-means; that trained variant "
-    "remains as similarity.ivf_topk with pytest recall bounds).",
+    "remains as similarity.ivf_topk(KMeansQuantizer) with pytest "
+    "recall bounds).",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    return similarity.ivf_topk_seeded(
-        emb, emb.filter(F.col("vec_id") < 16), k=10
+    return similarity.ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 16), similarity.SeededQuantizer(16), k=10
     )
 
 
@@ -1376,7 +1377,7 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semantic_seeded_oracle_sql(n_clusters: int = 16,
                                 threshold: float = 0.3) -> str:
-    """DuckDB mirror of dedup.semantic_dedup_pairs_seeded (same seeded
+    """DuckDB mirror of dedup.semantic_dedup_pairs(SeededQuantizer) (same seeded
     quantizer construction as ann_ivf_topk's oracle)."""
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -1412,15 +1413,18 @@ def _semantic_seeded_oracle_sql(n_clusters: int = 16,
     "The declared query uses the seeded-sample quantizer "
     "(integer-LCG seed selection, scan-stage argmax against literal "
     "seed vectors — DuckDB-reproducible, full oracle since r6); the "
-    "MLlib k-means variant remains as dedup.semantic_dedup_pairs "
-    "with pytest recall bounds against the all-pairs oracle.",
+    "MLlib k-means quantizer (similarity.KMeansQuantizer) remains "
+    "the production choice, with pytest recall bounds against the "
+    "all-pairs oracle.",
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold 0.3 = the synthetic corpus' same-label similarity band
     # (it has no planted near-identical vectors); pytest covers the
     # high-threshold regime with planted copies
-    return dedup.semantic_dedup_pairs_seeded(
-        load_table(spark, "embeddings", sf_dir), threshold=0.3
+    return dedup.semantic_dedup_pairs(
+        load_table(spark, "embeddings", sf_dir),
+        similarity.SeededQuantizer(16),
+        threshold=0.3,
     )
 
 

@@ -1018,8 +1018,8 @@ def dt1_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "md5+LCG pair family feeding the recursive-CTE closure.",
 )
 def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.minhash_lsh_pairs_seeded(
-        load_table(spark, "documents", sf_dir), threshold=0.8
+    pairs = dedup.minhash_lsh_pairs(
+        load_table(spark, "documents", sf_dir), threshold=0.8, seeded=True
     )
     return dedup.duplicate_clusters(pairs)
 

@@ -241,8 +241,9 @@ def eval_minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..extensions.sampling import hash_bucket
 
     docs = load_table(spark, "documents", sf_dir)
-    cand = dedup.minhash_lsh_pairs_seeded(
-        docs, threshold=0.0, num_perm=_MP_PERM, bands=_MP_BANDS, k=_MP_K
+    cand = dedup.minhash_lsh_pairs(
+        docs, threshold=0.0, num_perm=_MP_PERM, bands=_MP_BANDS, k=_MP_K,
+        seeded=True,
     )
     pairkey = (
         F.pmod(F.col("id_a"), F.lit(2147483648)) * F.lit(100003)

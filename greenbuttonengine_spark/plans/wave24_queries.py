@@ -471,7 +471,7 @@ def eval_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature-agreement verify at threshold 0.0, which keeps every
     # candidate (est_jaccard is in [0,1]) — two signature joins for
     # nothing; the oracle reads from its cand CTE, same definition
-    _, cand = dedup.minhash_lsh_candidates_seeded(docs)
+    _, cand = dedup.minhash_lsh_candidates(docs, seeded=True)
     s = assign_splits(docs.select("doc_id"), "doc_id").select("doc_id", "split")
     sa = s.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = s.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))

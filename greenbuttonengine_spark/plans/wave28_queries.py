@@ -236,8 +236,9 @@ _PAIRS_CTE = _pairs_cte(_E_REAL)
 
 # Seeded-IVF candidate CTE chain: the odd side plays the corpus (seeds
 # come from IT), the even side the queries; mirrors
-# similarity.ivf_topk_seeded / _ivf_seeded_oracle_sql restricted by
-# parity, ending in the same u(src_id, tgt_id, u_e9) contract.
+# similarity.ivf_topk(SeededQuantizer) / _ivf_seeded_oracle_sql
+# restricted by parity, ending in the same u(src_id, tgt_id, u_e9)
+# contract.
 def _ann_pairs_cte(e_src: str) -> str:
     return f"""
     WITH e AS ({e_src}),
@@ -323,8 +324,8 @@ def mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The SCALE tier of mine_bitext_margin: candidate pairs come "
     "from the seeded-IVF retriever (every even vector queries the odd "
     f"side's {_ANN_CELLS}-cell/{_ANN_PROBE}-probe index for its top-"
-    f"{_ANN_CAND_K} candidates — similarity.ivf_topk_seeded, the "
-    "oracle-reproducible quantizer), and the margin neighborhoods are "
+    f"{_ANN_CAND_K} candidates — similarity.ivf_topk with the "
+    "oracle-reproducible SeededQuantizer), and the margin neighborhoods are "
     "computed WITHIN the retrieved candidate set, the standard "
     "practice when mining with ANN (the src neighborhood is its "
     "retrieved list; the tgt neighborhood is the sources that "

@@ -616,10 +616,10 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the store's signatures feed BOTH store legs (band buckets +
     # verify join); checkpoint so the seeded-MinHash corpus pass — the
     # dominant term — materializes once, not once per leg (r15)
-    sigs = dedup.minhash_signatures_seeded(corpus).localCheckpoint(eager=False)
+    sigs = dedup.minhash_signatures(corpus, seeded=True).localCheckpoint(eager=False)
     return dedup.incremental_near_dedup(
         batch,
-        dedup.band_buckets_seeded(sigs),
+        dedup.band_buckets(sigs, seeded=True),
         sigs,
         threshold=0.7,
         seeded=True,
@@ -918,7 +918,7 @@ def _rag_oracle_sql(
     "building blocks (md5-60 hash encoder + seeded-sample IVF cells, "
     "the ann_ivf_topk quantizer), so the whole pipeline replays in "
     "DuckDB; the MLlib k-means retriever remains as "
-    "similarity.ivf_topk (rag_index_and_query(seeded=False)) with "
+    "similarity.KMeansQuantizer (rag_index_and_query(seeded=False)) with "
     "pytest recall pins.  At scale the corpus is written partitioned "
     "by cell and a query touches n_probe/n_centroids of the data.  "
     "Pytest pins verbatim-text retrieval at rank 1 with exact "
@@ -937,7 +937,7 @@ def rag_index_and_query(
     n_probe: int = 3,
     seeded: bool = False,
 ) -> DataFrame:
-    from ..extensions.similarity import ivf_topk, ivf_topk_seeded
+    from ..extensions.similarity import KMeansQuantizer, SeededQuantizer, ivf_topk
     from ..extensions.textstats import chunk_documents
 
     embed = hash_embed_seeded if seeded else hash_embed
@@ -963,9 +963,7 @@ def rag_index_and_query(
     if seeded:
         # seeded-sample coarse quantizer: no fit job at all, and the
         # whole pipeline is DuckDB-reproducible (the declared form)
-        hits = ivf_topk_seeded(
-            corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe
-        )
+        quantizer = SeededQuantizer(n_centroids)
     else:
         # cap the k-means fit at ~50k chunks: the coarse quantizer
         # needs a representative sample, not the corpus — fitting on
@@ -974,10 +972,8 @@ def rag_index_and_query(
         # corpus ML job while every other stage is one pass).
         n_chunks = corpus.count()
         frac = None if n_chunks <= 50_000 else 50_000 / n_chunks
-        hits = ivf_topk(
-            corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe,
-            fit_sample_fraction=frac,
-        )
+        quantizer = KMeansQuantizer(n_centroids, fit_sample_fraction=frac)
+    hits = ivf_topk(corpus, queries, quantizer, k=k, n_probe=n_probe)
     prov = chunks.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("doc_id").alias("hit_doc_id"),

@@ -173,11 +173,13 @@ def spread_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
         for uri in files:
             # Hadoop paths surface as file:/..., file:///... or bare
             # paths; urlparse handles every spelling (r16 ADVICE — the
-            # prefix-strip form silently no-op'd on 'file:/root/...')
+            # prefix-strip form silently no-op'd on 'file:/root/...'),
+            # and the URI is percent-encoded ('with%20space'), so it is
+            # unquoted before it reaches the local filesystem
             parsed = urllib.parse.urlparse(uri)
             if parsed.scheme not in ("", "file"):
                 return df  # non-local storage: trust the planner's layout
-            path = parsed.path or uri
+            path = urllib.parse.unquote(parsed.path or uri)
             if not os.path.exists(path):
                 return df
             # A parquet split only yields rows to the range holding a
@@ -188,8 +190,8 @@ def spread_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
             # no-op'd on exactly the one-task pathology it targets).
             size_splits = max(1, -(-os.path.getsize(path) // max_pb))
             est_tasks += min(size_splits, _parquet_row_groups(path))
-        if est_tasks * min_factor >= p:
-            return df
+            if est_tasks * min_factor >= p:
+                return df  # already parallel: read no more footers
         return df.repartition(p)
     except Exception:  # pragma: no cover - defensive: never break a query
         return df

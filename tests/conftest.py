@@ -5,6 +5,9 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# get_spark defaults the driver heap to 16g, more than a 15 GB host
+# holds once the JVM grows; the suite fits comfortably in 4g
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
 def pytest_configure(config):

@@ -29,14 +29,15 @@ def test_minhash_lsh_recall_vs_exact(spark, docs, family):
     on the same family — while silently missing near-dups)."""
     from greenbuttonengine_spark.extensions import dedup
 
-    fn = (
-        dedup.minhash_lsh_pairs if family == "xxhash"
-        else dedup.minhash_lsh_pairs_seeded
-    )
     exact = {
         (r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(docs, threshold=0.8).collect()
     }
-    approx = {(r.id_a, r.id_b) for r in fn(docs, threshold=0.8).collect()}
+    approx = {
+        (r.id_a, r.id_b)
+        for r in dedup.minhash_lsh_pairs(
+            docs, threshold=0.8, seeded=family == "seeded"
+        ).collect()
+    }
     assert exact, "corpus should contain true near-dup pairs"
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"{family} LSH recall {recall} too low ({len(approx)} candidates)"
@@ -141,7 +142,9 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
     }
     ivf = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4).collect()
+        for r in similarity.ivf_topk(
+            emb, queries, similarity.KMeansQuantizer(16), k=10, n_probe=4
+        ).collect()
     }
     recall = len(exact & ivf) / len(exact)
     # probing 4/16 cells of a near-orthogonal corpus: recall well above
@@ -154,7 +157,8 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
     sampled = {
         (r.query_id, r.neighbor_id)
         for r in similarity.ivf_topk(
-            emb, queries, k=10, n_centroids=16, n_probe=4, fit_sample_fraction=0.5
+            emb, queries, similarity.KMeansQuantizer(16, fit_sample_fraction=0.5),
+            k=10, n_probe=4,
         ).collect()
     }
     recall_sampled = len(exact & sampled) / len(exact)
@@ -301,7 +305,7 @@ def test_prefix_jaccard_hashed_path_identical(spark, docs):
     assert raw == hashed and raw
 
 
-def test_spread_scan_spreads_scans_and_noops_elsewhere(spark, docs):
+def test_spread_scan_spreads_scans_and_noops_elsewhere(spark, docs, tmp_path):
     """spread_scan raises a single-file scan's partition count to the
     session's parallelism, never changes rows, and NO-OPS on plans
     that are not narrow scans (already downstream of an exchange)."""
@@ -313,6 +317,12 @@ def test_spread_scan_spreads_scans_and_noops_elsewhere(spark, docs):
     assert sorted(spread.select("doc_id").toPandas()["doc_id"]) == sorted(
         docs.select("doc_id").toPandas()["doc_id"]
     )
+    # a local path with a space reaches inputFiles() percent-encoded;
+    # it must still be found on disk and spread
+    spaced = str(tmp_path / "with space" / "documents.parquet")
+    docs.coalesce(1).write.parquet(spaced)
+    spaced_docs = spark.read.parquet(spaced)
+    assert spread_scan(spaced_docs).rdd.getNumPartitions() == p
     # narrow project/filter on top: still a scan, still spread
     narrowed = spread_scan(docs.filter(F.col("text").isNotNull()).select("doc_id"))
     assert narrowed.rdd.getNumPartitions() == p
@@ -684,6 +694,7 @@ def test_semantic_dedup_recall_and_precision(spark, emb):
     similarity, which SemDeDup does not target), so plant 30
     near-identical copies: vec' = vec + small deterministic noise."""
     from greenbuttonengine_spark.extensions import dedup
+    from greenbuttonengine_spark.extensions.similarity import KMeansQuantizer
 
     rows = emb.limit(30).collect()
     planted = spark.createDataFrame(
@@ -704,7 +715,9 @@ def test_semantic_dedup_recall_and_precision(spark, emb):
     assert len(exact) >= 30, f"planting failed: {len(exact)} pairs"
     sem_pairs = {
         (r.id_a, r.id_b)
-        for r in dedup.semantic_dedup_pairs(corpus, threshold=thr, n_clusters=16).collect()
+        for r in dedup.semantic_dedup_pairs(
+            corpus, KMeansQuantizer(16), threshold=thr
+        ).collect()
     }
     assert sem_pairs <= exact, "within-cell verify must be exact (no false pairs)"
     recall = len(sem_pairs & exact) / len(exact)
@@ -713,7 +726,7 @@ def test_semantic_dedup_recall_and_precision(spark, emb):
     sem_s = {
         (r.id_a, r.id_b)
         for r in dedup.semantic_dedup_pairs(
-            corpus, threshold=thr, n_clusters=16, fit_sample_fraction=0.5
+            corpus, KMeansQuantizer(16, fit_sample_fraction=0.5), threshold=thr
         ).collect()
     }
     assert sem_s <= exact and len(sem_s & exact) / len(exact) >= 0.8
@@ -724,6 +737,7 @@ def test_semantic_dedup_seeded_recall_and_precision(spark, emb):
     dedup_semantic) must keep SemDeDup's contract on the same planted
     corpus: no false pairs, recall >= 0.8 of the exact all-pairs set."""
     from greenbuttonengine_spark.extensions import dedup
+    from greenbuttonengine_spark.extensions.similarity import SeededQuantizer
 
     rows = emb.limit(30).collect()
     planted = spark.createDataFrame(
@@ -743,8 +757,8 @@ def test_semantic_dedup_seeded_recall_and_precision(spark, emb):
     }
     seeded = {
         (r.id_a, r.id_b)
-        for r in dedup.semantic_dedup_pairs_seeded(
-            corpus, threshold=thr, n_clusters=16
+        for r in dedup.semantic_dedup_pairs(
+            corpus, SeededQuantizer(16), threshold=thr
         ).collect()
     }
     assert seeded <= exact, "within-cell verify must be exact"
@@ -952,8 +966,8 @@ def test_ivf_seeded_recall_and_cell_cover(spark, emb):
         (r.query_id, r.neighbor_id)
         for r in similarity.cosine_topk(emb, queries, k=10).collect()
     }
-    seeded = similarity.ivf_topk_seeded(
-        emb, queries, k=10, n_centroids=16, n_probe=4
+    seeded = similarity.ivf_topk(
+        emb, queries, similarity.SeededQuantizer(16), k=10, n_probe=4
     ).collect()
     got = {(r.query_id, r.neighbor_id) for r in seeded}
     recall = len(exact & got) / len(exact)
@@ -1181,3 +1195,47 @@ def test_near_dedup_store_side_bucket_cap(spark):
     capped = incremental_near_dedup(batch, store_bands, store_sigs,
                                     threshold=0.6, max_bucket=3)
     assert capped.collect()[0].verdict == "accept"
+
+
+def test_production_band_buckets_pinned(spark):
+    """The xxhash64 band hashes the streaming admission store persists
+    (streaming/admission.py) must not drift: a store written by one
+    build is probed by the next, so these values are a stored format.
+    Docs 1 and 2 are near-duplicates and collide in band 4."""
+    from greenbuttonengine_spark.extensions.dedup import band_buckets, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumped over the lazy dogs"),
+            (3, "green button interval readings, 15-minute kWh"),
+        ],
+        "doc_id long, text string",
+    )
+    got = sorted(tuple(r) for r in band_buckets(minhash_signatures(docs)).collect())
+    assert got == [
+        (1, 0, 9075539338583317957),
+        (1, 1, -6572481575991725399),
+        (1, 2, -8744377538475515363),
+        (1, 3, 7869751729565463464),
+        (1, 4, 454308336826852834),
+        (1, 5, 2192081292627811450),
+        (1, 6, -6534266525969603635),
+        (1, 7, 3589202839876291198),
+        (2, 0, -8362099355998858128),
+        (2, 1, -8397371966824699036),
+        (2, 2, -1567592825411834924),
+        (2, 3, -8398707747430617151),
+        (2, 4, 454308336826852834),
+        (2, 5, -419495896903852293),
+        (2, 6, 69926878793635982),
+        (2, 7, 8398905253234718217),
+        (3, 0, 4686670210916486113),
+        (3, 1, -8093195949714158302),
+        (3, 2, 269250061386063799),
+        (3, 3, 4337624490525743163),
+        (3, 4, 6500650426667892706),
+        (3, 5, -4617123674218086429),
+        (3, 6, 2804374502391369563),
+        (3, 7, -5714132950133805802),
+    ]

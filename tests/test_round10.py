@@ -85,17 +85,17 @@ def test_incremental_near_seeded_verdicts(spark):
     from pyspark.sql import Row
 
     from greenbuttonengine_spark.extensions.dedup import (
-        band_buckets_seeded,
+        band_buckets,
         incremental_near_dedup,
-        minhash_signatures_seeded,
+        minhash_signatures,
     )
 
     base = ("the quick brown fox jumps over the lazy dog and then runs "
             "far away into the deep green forest before the winter snow "
             "falls on the quiet mountain village near the frozen lake")
     corpus = spark.createDataFrame([Row(doc_id=1, text=base)])
-    sigs = minhash_signatures_seeded(corpus)
-    bands = band_buckets_seeded(sigs)
+    sigs = minhash_signatures(corpus, seeded=True)
+    bands = band_buckets(sigs, seeded=True)
     edited = base.replace("winter", "summer")
     fresh = ("completely different content about spark dataframes and "
              "catalyst optimizer rules with predicate pushdown and "

@@ -304,7 +304,7 @@ def test_md5_60_hash_family_cross_engine_property(spark):
 def test_minhash_band_membership_cross_engine_property(spark):
     """Band membership (doc_id, band_idx, band_hash) — the unit the LSH
     bucket join and the persistent band store key on — must be
-    SET-EQUAL between minhash_signatures_seeded/band_buckets_seeded and
+    SET-EQUAL between minhash_signatures/band_buckets(seeded=True) and
     the DuckDB CTE chain built from the same LCG literals, on
     hypothesis-generated corpora (short docs stress the
     greatest(len-k+1, 1) single-shingle edge; repeated-run docs stress
@@ -314,8 +314,8 @@ def test_minhash_band_membership_cross_engine_property(spark):
     from hypothesis import given, settings, strategies as st
 
     from greenbuttonengine_spark.extensions.dedup import (
-        _MH_P, band_buckets_seeded, lcg_perm_params,
-        minhash_signatures_seeded, _BAND_BASE)
+        _MH_P, band_buckets, lcg_perm_params,
+        minhash_signatures, _BAND_BASE)
 
     num_perm, bands, k = 16, 4, 4
     rows = num_perm // bands
@@ -362,11 +362,11 @@ def test_minhash_band_membership_cross_engine_property(spark):
     # evaluate as ONE corpus in one Spark job + one DuckDB query
     sdf = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string")
-    sig = minhash_signatures_seeded(sdf, num_perm=num_perm, k=k)
+    sig = minhash_signatures(sdf, num_perm=num_perm, k=k, seeded=True)
     got = {
         (r.doc_id, r.band_idx, r.band_hash)
-        for r in band_buckets_seeded(
-            sig, num_perm=num_perm, bands=bands).collect()
+        for r in band_buckets(
+            sig, num_perm=num_perm, bands=bands, seeded=True).collect()
     }
     con = duckdb.connect()
     con.register("documents",

@@ -135,8 +135,8 @@ def test_split_leakage_matches_candidates(spark, sf_dir):
     from greenbuttonengine_spark.sources.catalog import load_table
 
     rows = eval_split_leakage(spark, sf_dir).collect()
-    cand = dedup.minhash_lsh_pairs_seeded(
-        load_table(spark, "documents", sf_dir), threshold=0.0
+    cand = dedup.minhash_lsh_pairs(
+        load_table(spark, "documents", sf_dir), threshold=0.0, seeded=True
     ).select("id_a", "id_b").collect()
     want: dict[tuple, list] = {}
     for p in cand:

@@ -151,8 +151,8 @@ def test_blocked_ivf_bitwise_equals_expression_form(spark):
     odd = emb.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1)
     expr = {
         (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-        for r in similarity.ivf_topk_seeded(
-            odd, even, k=16, n_centroids=16, n_probe=4
+        for r in similarity.ivf_topk(
+            odd, even, similarity.SeededQuantizer(16), k=16, n_probe=4
         ).collect()
     }
     blocked = {
@@ -302,7 +302,10 @@ def test_blocked_ivf_property_matches_expression_form(spark):
         kw = dict(k=k, n_centroids=n_cells, n_probe=n_probe)
         expr = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-            for r in similarity.ivf_topk_seeded(corpus, queries, **kw).collect()
+            for r in similarity.ivf_topk(
+                corpus, queries, similarity.SeededQuantizer(n_cells),
+                k=k, n_probe=n_probe,
+            ).collect()
         }
         blocked = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
@@ -315,16 +318,24 @@ def test_blocked_ivf_property_matches_expression_form(spark):
 
 def test_ivf_empty_corpus_returns_empty(spark):
     """ADVICE r12: an empty corpus must not raise (seeds == [])."""
-    from greenbuttonengine_spark.extensions import similarity
+    from greenbuttonengine_spark.extensions import dedup, similarity
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     queries = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    for fn in (similarity.ivf_topk_seeded, similarity.ivf_topk_blocked):
-        out = fn(empty, queries, k=3, n_centroids=4, n_probe=2)
+    for out in (
+        similarity.ivf_topk(
+            empty, queries, similarity.SeededQuantizer(4), k=3, n_probe=2
+        ),
+        similarity.ivf_topk_blocked(empty, queries, k=3, n_centroids=4, n_probe=2),
+    ):
         assert out.count() == 0
         assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+    # the seeded SemDeDup cell join on the same empty corpus: no pairs
+    sem = dedup.semantic_dedup_pairs(empty, similarity.SeededQuantizer(4))
+    assert sem.count() == 0
+    assert sem.columns == ["id_a", "id_b", "cosine"]
 
 
 def test_clustered_fixture_is_cross_engine_bitwise(spark):
@@ -515,7 +526,10 @@ def test_zero_norm_vectors_dropped_identically(spark):
         kw = dict(k=k, n_centroids=n_cells, n_probe=n_probe)
         expr = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-            for r in similarity.ivf_topk_seeded(corpus, queries, **kw).collect()
+            for r in similarity.ivf_topk(
+                corpus, queries, similarity.SeededQuantizer(n_cells),
+                k=k, n_probe=n_probe,
+            ).collect()
         }
         blocked = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)

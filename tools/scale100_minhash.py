@@ -11,7 +11,7 @@ agreement — no phantom pairs; see the SCALING.md round-5 protocol
 lesson on why verbatim or token-prefix replicas are traps for CHAR
 shingles).
 
-Times minhash_lsh_pairs_seeded warm (2 runs) and reports per-run wall
+Times minhash_lsh_pairs(seeded=True) warm (2 runs) and reports per-run wall
 plus executor shuffle/spill totals from the Spark UI REST API.
 
 Usage: python tools/scale100_minhash.py [n_replicas] [shuffle_partitions]
@@ -103,7 +103,7 @@ def main() -> None:
     walls = []
     for run in range(2):
         t0 = time.time()
-        cnt = dedup.minhash_lsh_pairs_seeded(docs, threshold=0.8).count()
+        cnt = dedup.minhash_lsh_pairs(docs, threshold=0.8, seeded=True).count()
         walls.append(round(time.time() - t0, 1))
         print(f"run {run}: {walls[-1]}s, {cnt} pairs", flush=True)
     try:
