@@ -2,40 +2,18 @@
 
 The reference compiles the XSD enum values into a static phf map and
 decodes per row (gb_type_details.rs:8-31).  Here the dictionary is DATA
-— a 454-row parquet table (built by tools/build_enum_dim.py from the
-public NAESB espi.xsd) — read once per process with pyarrow and turned
-into literal SQL maps.  The pipeline decodes the reading-type codes once
-per entry, on its entry dimension, and the reading quality per row.
+— a 454-row JSON table (built by tools/build_enum_dim.py from the
+public NAESB espi.xsd, loaded by ``schemas.enum_maps``) — read once per
+process and turned into literal SQL maps.  The pipeline decodes the
+reading-type codes once per entry, on its entry dimension, and the
+reading quality per row.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import functions as F
 
-ENUM_DIM_PATH = str(Path(__file__).resolve().parent / "data" / "espi_enum_dim.parquet")
-
-MISSING_APP_INFO = "Missing app info"
-
-
-_MAPS_CACHE: dict[tuple[str, str], dict[int, str]] | None = None
-
-
-def enum_maps() -> dict[tuple[str, str], dict[int, str]]:
-    """The dictionary as plain Python maps, loaded once per process via
-    pyarrow (no Spark job).  Keyed by (type, field)."""
-    global _MAPS_CACHE
-    if _MAPS_CACHE is None:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(ENUM_DIM_PATH, columns=["type", "field", "value", "app_info"])
-        maps: dict[tuple[str, str], dict[int, str]] = {}
-        for typ, field, value, app_info in zip(*(tbl.column(c).to_pylist() for c in tbl.column_names)):
-            maps.setdefault((typ, field), {})[value] = app_info
-        _MAPS_CACHE = maps
-    return _MAPS_CACHE
-
+from .schemas import MISSING_APP_INFO, enum_maps
 
 _DECODE_SQL_CACHE: dict[tuple[str, str, str], str] = {}
 

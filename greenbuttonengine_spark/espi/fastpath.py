@@ -15,8 +15,8 @@ same parser output, for ONE file at a time:
 * bit-packed DST rule evaluation + strict-window shift (dst.py,
   local_time_parameters.rs:43-143, lib.rs:157-162),
 * enova provider cost x100 patch (timeseries.rs:173-178),
-* enum decode from the same XSD dictionary (JSON twin of the parquet
-  dim; 'Missing app info' fallback, gb_type_details.rs:24-29),
+* enum decode from the same XSD dictionary (``schemas.enum_maps``;
+  'Missing app info' fallback, gb_type_details.rs:24-29),
 * NaN cost sentinel (interval_reading.rs:15-16).
 
 Imports are stdlib-only (json/struct/datetime/calendar): no pyspark,
@@ -34,7 +34,6 @@ fixtures.
 from __future__ import annotations
 
 import calendar
-import json
 import math
 import operator
 import struct
@@ -43,45 +42,20 @@ from pathlib import Path
 from typing import Any
 
 from .schemas import (
+    ENUM_FIELDS,
     KIND_ENTRY,
     KIND_ERROR,
     KIND_INTERVAL_READING,
     KIND_LOCAL_TIME_PARAMETERS,
     KIND_READING_TYPE,
+    MISSING_APP_INFO,
     TIMESERIES_COLUMNS,
+    enum_maps,
 )
-
-MISSING_APP_INFO = "Missing app info"
-_ENUM_JSON = Path(__file__).resolve().parent / "data" / "espi_enum_dim.json"
-
-_ENUM_FIELDS = [
-    ("accumulation_behaviour", "accumulationBehaviour"),
-    ("commodity", "commodity"),
-    ("currency", "currency"),
-    ("data_qualifier", "dataQualifier"),
-    ("flow_direction", "flowDirection"),
-    ("kind", "kind"),
-    ("phase", "phase"),
-    ("uom", "uom"),
-]
-
-_MAPS: dict[tuple[str, str], dict[int, str]] | None = None
-
-
-def _enum_maps() -> dict[tuple[str, str], dict[int, str]]:
-    global _MAPS
-    if _MAPS is None:
-        with open(_ENUM_JSON) as fh:
-            rows = json.load(fh)
-        maps: dict[tuple[str, str], dict[int, str]] = {}
-        for typ, field, value, app_info in rows:
-            maps.setdefault((typ, field), {})[value] = app_info
-        _MAPS = maps
-    return _MAPS
 
 
 def _decode(scope: str, field: str, code: int | None) -> str:
-    return _enum_maps().get((scope, field), {}).get(code, MISSING_APP_INFO)
+    return enum_maps().get((scope, field), {}).get(code, MISSING_APP_INFO)
 
 
 # ---------------------------------------------------------------------------
@@ -284,11 +258,11 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
             return ()
         enums = {
             col: _decode("ReadingType", xsd_field, rt.get(col))
-            for col, xsd_field in _ENUM_FIELDS
+            for col, xsd_field in ENUM_FIELDS
         }
         return entry["title"], f32(10.0 ** rt["power_of_ten_multiplier"]), enums
 
-    quality_name = _enum_maps().get(("", "QualityOfReading"), {}).get
+    quality_name = enum_maps().get(("", "QualityOfReading"), {}).get
     start_rule, end_rule = ltp["dst_start_rule"], ltp["dst_end_rule"]
     dst_offset, tz_offset = ltp["dst_offset"], ltp["tz_offset"] or 0
     per_entry: dict[int, tuple] = {}
@@ -393,7 +367,7 @@ _MEAS_KEEP = set(
 )
 
 _SERIES_KEY = operator.itemgetter(
-    "title", *(col for col, _ in _ENUM_FIELDS)
+    "title", *(col for col, _ in ENUM_FIELDS)
 )
 
 
@@ -473,7 +447,7 @@ def write_parquet_local(rows: list[dict[str, Any]], out: str, sort: bool = False
         ),
         **{
             c: pa.array([r[c] for r in rows], pa.string())
-            for c, _ in _ENUM_FIELDS
+            for c, _ in ENUM_FIELDS
         },
     }
     pq.write_table(

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from .dst import apply_local_time_shift, build_dst_dim
 from .enum_dim import decode_enum_expr
+from .schemas import ENUM_FIELDS
 from .source import read_espi, split_tables
 
 
@@ -62,17 +63,6 @@ def _pin_utc(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:  # pragma: no cover - static-conf sessions
         pass
-
-_ENUM_FIELDS = [
-    ("accumulation_behaviour", "accumulationBehaviour"),
-    ("commodity", "commodity"),
-    ("currency", "currency"),
-    ("data_qualifier", "dataQualifier"),
-    ("flow_direction", "flowDirection"),
-    ("kind", "kind"),
-    ("phase", "phase"),
-    ("uom", "uom"),
-]
 
 
 # ESPI hrefs scope resources under ".../UsagePoint/{id}/..."; the prefix
@@ -270,7 +260,7 @@ def _entry_dim(entries: DataFrame, reading_types: DataFrame) -> DataFrame:
         "source_file",
         F.col("entry_index").alias("rt_entry_index"),
         "power_of_ten_multiplier",
-        *[c for c, _ in _ENUM_FIELDS],
+        *[c for c, _ in ENUM_FIELDS],
     )
     return (
         entries.select(
@@ -286,7 +276,7 @@ def _entry_dim(entries: DataFrame, reading_types: DataFrame) -> DataFrame:
             .cast("float")
             .alias("scale"),
             # P10: literal-map decode (the phf-map analog), once per entry
-            *[decode_enum_expr(c, xsd).alias(c) for c, xsd in _ENUM_FIELDS],
+            *[decode_enum_expr(c, xsd).alias(c) for c, xsd in ENUM_FIELDS],
         )
     )
 
@@ -442,7 +432,7 @@ def denormalize_with_errors(
         "tou",
         F.unix_timestamp(shifted).alias("time_period_start_unix"),
         "time_period_duration_seconds",
-        *[c for c, _ in _ENUM_FIELDS],
+        *[c for c, _ in ENUM_FIELDS],
     ]
     if include_source_file:
         out_cols.insert(0, "source_file")

@@ -11,6 +11,10 @@ reading_types (reading_type.rs:9-22), local_time_parameters
 
 from __future__ import annotations
 
+import json
+from functools import lru_cache
+from pathlib import Path
+
 KIND_ENTRY = "entry"
 KIND_INTERVAL_READING = "interval_reading"
 KIND_READING_TYPE = "reading_type"
@@ -93,3 +97,34 @@ TIMESERIES_COLUMNS = [
     "phase",
     "uom",
 ]
+
+# Reading-type enum columns and the XSD field each decodes through
+# (reading_type.rs:9-22).
+ENUM_FIELDS = [
+    ("accumulation_behaviour", "accumulationBehaviour"),
+    ("commodity", "commodity"),
+    ("currency", "currency"),
+    ("data_qualifier", "dataQualifier"),
+    ("flow_direction", "flowDirection"),
+    ("kind", "kind"),
+    ("phase", "phase"),
+    ("uom", "uom"),
+]
+
+# Decode of an unknown or NULL code (gb_type_details.rs:24-29).
+MISSING_APP_INFO = "Missing app info"
+
+ENUM_DIM_PATH = Path(__file__).resolve().parent / "data" / "espi_enum_dim.json"
+
+
+@lru_cache(maxsize=None)
+def enum_maps() -> dict[tuple[str, str], dict[int, str]]:
+    """The XSD enum dictionary (454 ``[type, field, value, app_info]``
+    rows built by tools/build_enum_dim.py), keyed by (type, field),
+    read once per process with stdlib json: no Spark job, no pyarrow."""
+    with open(ENUM_DIM_PATH) as fh:
+        rows = json.load(fh)
+    maps: dict[tuple[str, str], dict[int, str]] = {}
+    for typ, field, value, app_info in rows:
+        maps.setdefault((typ, field), {})[value] = app_info
+    return maps

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import spread_scan
+from .similarity import _seq_dots, _seq_norm, _stack_rows
 
 
 def _shingles(col, k: int = 8, distinct: bool = True):
@@ -1088,29 +1089,12 @@ def embedding_cosine_pairs_blocked(
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         ti, tj = int(pdf["ti"].iloc[0]), int(pdf["tj"].iloc[0])
         ids = pdf["vid"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        mat = _stack_rows(pdf["vec"])
         blk = pdf["blk"].to_numpy()
-        d = mat.shape[1]
-        # k-ordered accumulation: ((0 + x0*y0) + x1*y1) + ... — the
-        # exact IEEE op sequence of the F.aggregate fold / DuckDB
-        # list_dot_product, so cosines are bitwise identical.
-        def seq_norm(m):
-            acc = np.zeros(m.shape[0])
-            for k in range(d):
-                acc += m[:, k] * m[:, k]
-            return np.sqrt(acc)
-
-        def seq_dots(a, b):
-            acc = np.zeros((a.shape[0], b.shape[0]))
-            for k in range(d):
-                acc += np.outer(a[:, k], b[:, k])
-            return acc
-
         if ti == tj:
             ia = ib = ids
-            dots = seq_dots(mat, mat)
-            norms = seq_norm(mat)
-            cos = dots / np.outer(norms, norms)
+            norms = _seq_norm(mat)
+            cos = _seq_dots(mat, mat) / np.outer(norms, norms)
             r, c = np.where(cos >= threshold)
             keep = ia[r] < ib[c]
             r, c = r[keep], c[keep]
@@ -1123,7 +1107,7 @@ def embedding_cosine_pairs_blocked(
                 return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                     {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
                 )
-            cos = seq_dots(a_mat, b_mat) / np.outer(seq_norm(a_mat), seq_norm(b_mat))
+            cos = _seq_dots(a_mat, b_mat) / np.outer(_seq_norm(a_mat), _seq_norm(b_mat))
             r, c = np.where(cos >= threshold)
             out_c = cos[r, c]
             ra, rb = a_ids[r], b_ids[c]
@@ -1181,20 +1165,9 @@ def embedding_cosine_pairs_bipartite(
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
             )
-        lm = np.stack(lpdf["lvec"].to_numpy()).astype(np.float64)
-        rm = np.stack(rpdf["rvec"].to_numpy()).astype(np.float64)
-        d = lm.shape[1]
-
-        def seq_norm(m):
-            acc = np.zeros(m.shape[0])
-            for k in range(d):
-                acc += m[:, k] * m[:, k]
-            return np.sqrt(acc)
-
-        acc = np.zeros((lm.shape[0], rm.shape[0]))
-        for k in range(d):
-            acc += np.outer(lm[:, k], rm[:, k])
-        cos = acc / np.outer(seq_norm(lm), seq_norm(rm))
+        lm = _stack_rows(lpdf["lvec"])
+        rm = _stack_rows(rpdf["rvec"])
+        cos = _seq_dots(lm, rm) / np.outer(_seq_norm(lm), _seq_norm(rm))
         nl, nr = lm.shape[0], rm.shape[0]
         return pd.DataFrame(
             {

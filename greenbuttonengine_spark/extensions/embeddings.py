@@ -422,7 +422,8 @@ def pca_power_fixed(
        d x d = 64 x 64 — driver cost is microseconds; the DATA never
        leaves the cluster.
     4. Sign canonicalization: flip so the max-|x| coordinate (lowest
-       index on ties) is positive.
+       index on ties) is positive.  Steps 3-4 are
+       :func:`power_deflate_components` with ``k=1``.
     5. Distributed projection: ``pc1n = n * (q . x) - (m . x)`` — the
        centered projection scaled by n*grid*xscale, one zip_with +
        aggregate fold per row, no shuffle, scan-stage only.
@@ -446,24 +447,9 @@ def pca_power_fixed(
     if n == 0:
         raise ValueError("pca_power_fixed: empty input")
 
-    a_raw = [
-        [n * s_mat[i][j] - m_vec[i] * m_vec[j] for j in range(dim)]
-        for i in range(dim)
-    ]
-    amax = max(abs(v) for row in a_raw for v in row)
-    if amax == 0:
-        raise ValueError("pca_power_fixed: zero covariance")
-    a = [[_tdiv(v, ascale, amax) for v in row] for row in a_raw]
-    x = [xscale] * dim
-    for _ in range(iters):
-        y = [sum(a[i][j] * x[j] for j in range(dim)) for i in range(dim)]
-        ymax = max(abs(v) for v in y)
-        if ymax == 0:
-            raise ValueError("pca_power_fixed: iteration collapsed to zero")
-        x = [_tdiv(v, xscale, ymax) for v in y]
-    lead = min(range(dim), key=lambda i: (-abs(x[i]), i))
-    if x[lead] < 0:
-        x = [-v for v in x]
+    x = power_deflate_components(
+        n, s_mat, m_vec, 1, ascale=ascale, xscale=xscale, iters=iters
+    )[0]
     mdotx = sum(m_vec[i] * x[i] for i in range(dim))
     xlit = F.array(*[F.lit(v).cast("long") for v in x])
     dot = F.aggregate(

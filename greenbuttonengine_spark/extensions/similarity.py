@@ -19,13 +19,13 @@ per-operator docstrings):
                                             norms hoisted per row (r15)
   cells <= ~1e3     ivf_topk +              literal-seed argmax optimal;
                     SeededQuantizer         full DuckDB oracle
-  large cells /     ivf_topk_blocked        Arrow tiles, 67 MB/task
-  cells ~ sqrt(n)                           bound; auto hub valve opens
+  large cells /     ivf_topk_blocked +      Arrow tiles, 67 MB/task
+  cells ~ sqrt(n)   FlatSeedCells           bound; auto hub valve opens
                                             > 64k rows/cell (3.0x on a
                                             genuine hub, no-op at 5.4x
                                             ordinary skew — r14)
-  cells >= ~1e4     ivf_topk_hier_blocked   assignment O(n(S+C/S)d);
-                                            35x over flat at C=1e4/1.6M,
+  cells >= ~1e4     ivf_topk_blocked +      assignment O(n(S+C/S)d);
+                    HierSeedCells           35x over flat at C=1e4/1.6M,
                                             2x LOSS at C=1024 (r14)
   hash-bucketed     lsh_topk                candidates ~ corpus/2^planes
   ================  ======================  ============================
@@ -479,6 +479,40 @@ def ivf_topk(
     return _score_and_rank(assign(c, "cv", "cell").join(probe_side, "cell"), k)
 
 
+# The k-ordered fold every Arrow kernel here (and in dedup) sums with:
+# ((0 + x0*y0) + x1*y1) + ..., one dimension at a time — the exact IEEE
+# op sequence of the F.aggregate fold and of DuckDB's list_dot_product,
+# so kernel cosines are bitwise-equal to the expression forms and the
+# oracles.  Keep the explicit loop: a BLAS matmul sums in another order.
+
+
+def _stack_rows(col):
+    """(n, d) float64 matrix from a pandas column of vectors."""
+    import numpy as np
+
+    return np.stack(col.to_numpy()).astype(np.float64, copy=False)
+
+
+def _seq_norm(m):
+    """Per-row L2 norms of ``m`` by the k-ordered fold."""
+    import numpy as np
+
+    acc = np.zeros(m.shape[0])
+    for j in range(m.shape[1]):
+        acc += m[:, j] * m[:, j]
+    return np.sqrt(acc)
+
+
+def _seq_dots(a, b):
+    """(len(a), len(b)) matrix of row dot products by the k-ordered fold."""
+    import numpy as np
+
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for j in range(a.shape[1]):
+        acc += np.outer(a[:, j], b[:, j])
+    return acc
+
+
 # Literal per-task memory bound for the blocked IVF scorer: one active
 # score block is at most _Q_BLOCK x _C_BLOCK doubles — 67 MB (64 MiB),
 # the figure SCALING.md/COVERAGE.md quote — no matter
@@ -498,36 +532,192 @@ _C_BLOCK = 8192
 HOT_CELL_ROWS_DEFAULT = 8 * _C_BLOCK
 
 
+def _seed_arrays(corpus: DataFrame, n_cells: int, vec_col: str, id_col: str):
+    """``seeded_centroids`` as a (C, d) seed matrix and its (C,) norms,
+    or None for an empty corpus."""
+    import numpy as np
+
+    seeds = seeded_centroids(corpus, n_cells, vec_col, id_col)
+    if not seeds:
+        return None
+    return (
+        np.array([v for _, v, _ in seeds], dtype=np.float64),
+        np.array([nrm for _, _, nrm in seeds], dtype=np.float64),
+    )
+
+
+# Seeded cell rules for ``ivf_topk_blocked``: the part of the blocked
+# pipeline that varies.  ``fit(corpus, vec_col, id_col)`` samples the
+# seeds and returns numpy ``(assign, probe)`` over an (n, d) float64
+# batch — or None when the corpus has no seeds:
+#   assign(m) -> (n,) cell of each row
+#   probe(m)  -> (row, cell) index arrays, one entry per probed cell
+
+
+@dataclass(frozen=True)
+class FlatSeedCells:
+    """The ``SeededQuantizer`` cells as a numpy rule: every vector is
+    scored against ALL C seeds; the corpus takes its argmax (ties ->
+    lowest cell, numpy's first max), a query its stable top
+    ``n_probe`` — the exact IEEE op sequence and tie order of the
+    literal expressions, so ``ivf_topk_blocked`` with these cells is a
+    bitwise twin of ``ivf_topk(SeededQuantizer)``.  Cost is
+    O(n * C * d), O(n^1.5 d) at C ~ sqrt(n); the seed matrix (C x d
+    doubles) rides each task's closure."""
+
+    n_cells: int = 16
+    n_probe: int = 4
+
+    def fit(self, corpus, vec_col, id_col):
+        import numpy as np
+
+        seeds = _seed_arrays(corpus, self.n_cells, vec_col, id_col)
+        if seeds is None:
+            return None
+        mat, nrm = seeds
+        npr = min(self.n_probe, len(mat))  # fewer seeds than probes
+
+        def assign(m):
+            return np.argmax(_seq_dots(m, mat) / nrm, axis=1)
+
+        def probe(m):
+            # stable argsort of -score: score desc, ties -> lowest cell
+            top = np.argsort(-(_seq_dots(m, mat) / nrm), axis=1, kind="stable")
+            return np.repeat(np.arange(len(m)), npr), top[:, :npr].reshape(-1)
+
+        return assign, probe
+
+
+def _mask_invalid_supers(scores, valid):
+    """Restrict a (rows x supers) score matrix to the valid (non-empty)
+    supers: invalid columns become -inf, so the subsequent first-max
+    argmax / stable descending sort picks the best VALID super with
+    ties still breaking to the lowest valid index.  Pure helper so the
+    empty-super guard is unit-testable without a degenerate corpus."""
+    import numpy as np
+
+    if valid.all():
+        return scores
+    return np.where(valid[None, :], scores, -np.inf)
+
+
+@dataclass(frozen=True)
+class HierSeedCells:
+    """Two-level (hierarchical) seeded cells, the FAISS IMI shape and
+    the assignment-cost fix for ``FlatSeedCells``' O(n*C*d): vectors
+    first pick their best SUPER-cell among S = the first ``n_super``
+    seeds of the same LCG-ordered seed list (supers are a prefix of the
+    cells, so no second selection rule exists to drift), then rank only
+    the cells MAPPED to that super — O(n*(S + C/S)*d), minimized at
+    S ~ sqrt(C).  The cell->super map is the C x S argmax of
+    seed-to-super cosine (ties -> lowest super), computed once on the
+    driver with the same k-ordered fold.
+
+    Measured regimes (SCALING.md): at C=1024 / 800k vectors hier is a
+    2x LOSS (the two-level map worsens balance +44% and flat seed
+    scoring is only ~25% of the bill); at C=10^4 / 1.6M vectors it is
+    a 35x WIN (flat 309s vs hier 8.8s warm, r14 — the balance penalty
+    vanishes there, +0.03% sum-of-squared cell sizes).  Pick hier when
+    C >= ~10^4; flat remains the declared path below that.
+
+    Probing is quota-based, the IMI convention: a query takes its top
+    ``super_probe`` supers, then its top ``cells_per_super`` cells
+    WITHIN each probed super — per-super quotas, unlike the flat
+    form's global n_probe.  Cell membership therefore DIFFERS from the
+    flat cells: a separate declared operating point with its own oracle
+    and recall eval (eval_ann_hier_recall), not a bitwise twin.
+
+    Empty supers: a super with NO mapped cells is normally impossible
+    (each super IS cell s < S, and Cauchy-Schwarz self-cosine 1 plus
+    ties->lowest keeps cell s under super s), but FP noise on
+    near-parallel seeds can break the self-mapping.  Vectors and
+    queries therefore rank only NON-EMPTY supers (``_mask_invalid_supers``
+    — ties still -> lowest non-empty super); the DuckDB oracle mirrors
+    the rule with its ``nesupers`` CTE.  Without the mask an orphaned
+    vector would crash the kernel (argmax over an empty cell list)
+    while the oracle silently dropped it via the inner join on sup
+    (r13 ADVICE)."""
+
+    n_cells: int = 16
+    n_super: int = 4
+    super_probe: int = 2
+    cells_per_super: int = 2
+
+    def fit(self, corpus, vec_col, id_col):
+        import numpy as np
+
+        seeds = _seed_arrays(corpus, self.n_cells, vec_col, id_col)
+        if seeds is None:
+            return None
+        mat, nrm = seeds
+        S = min(self.n_super, len(mat))
+        spr = min(self.super_probe, S)
+        # cell -> super (ties -> lowest super via first-max); ascending
+        # cell ids per super -> first-max == lowest cell
+        cell2sup = np.argmax(_seq_dots(mat, mat[:S]) / nrm[:S], axis=1)
+        cells_of = [np.where(cell2sup == s)[0].astype("int64") for s in range(S)]
+        sup_valid = np.array([len(cl) > 0 for cl in cells_of])
+        assert sup_valid.any()  # every cell maps somewhere, so >=1 non-empty
+
+        def sup_scores(m):
+            return _mask_invalid_supers(_seq_dots(m, mat[:S]) / nrm[:S], sup_valid)
+
+        def cell_scores(m, cl):
+            return _seq_dots(m, mat[cl]) / nrm[cl]
+
+        def assign(m):
+            sup = np.argmax(sup_scores(m), axis=1)
+            cell = np.zeros(len(m), dtype="int64")
+            for s in np.unique(sup):
+                mask = sup == s
+                cl = cells_of[s]  # non-empty: sup ranges over valid supers
+                cell[mask] = cl[np.argmax(cell_scores(m[mask], cl), axis=1)]
+            return cell
+
+        def probe(m):
+            sorder = np.argsort(-sup_scores(m), axis=1, kind="stable")[:, :spr]
+            rows_out, cells_out = [np.zeros(0, "int64")], [np.zeros(0, "int64")]
+            for s, cl in enumerate(cells_of):
+                rows = np.where((sorder == s).any(axis=1))[0]
+                if not len(rows) or not len(cl):
+                    continue
+                top = np.argsort(-cell_scores(m[rows], cl), axis=1, kind="stable")
+                top = top[:, : self.cells_per_super]
+                rows_out.append(np.repeat(rows, top.shape[1]))
+                cells_out.append(cl[top].reshape(-1))
+            return np.concatenate(rows_out), np.concatenate(cells_out)
+
+        return assign, probe
+
+
 def ivf_topk_blocked(
     corpus: DataFrame,
     queries: DataFrame,
+    cells: FlatSeedCells | HierSeedCells,
     k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cell_split: int = 1,
     hot_cell_rows: int | None = HOT_CELL_ROWS_DEFAULT,
     count_sample_mod: int = 64,
 ) -> DataFrame:
-    """``ivf_topk`` with the ``SeededQuantizer`` re-expressed as an
-    Arrow cell-matrix kernel — bitwise-identical output, built for
-    LARGE cell counts.
+    """Seeded-IVF top-k as Arrow cell-matrix kernels, built for LARGE
+    cell counts; ``cells`` is the assignment and probe rule.  With
+    ``FlatSeedCells`` the output is bitwise-identical to
+    ``ivf_topk(SeededQuantizer)``; ``HierSeedCells`` is the two-level
+    operating point.  An empty corpus returns the empty top-k.
 
     The expression form embeds every seed vector as plan literals
-    (n_centroids x dim terms per row expression); that is optimal for
-    the small-sf oracle operating point (16 cells: ~1k literals) but
-    the plan TREE grows linearly in cells and Catalyst optimization
+    (n_cells x dim terms per row expression); that is optimal for the
+    small-sf oracle operating point (16 cells: ~1k literals) but the
+    plan TREE grows linearly in cells and Catalyst optimization
     superlinearly in tree size — at the hundreds-to-thousands of cells
     a real corpus needs (cells ~ sqrt(n)), plan compilation itself
     becomes the bottleneck (observed: 256 cells did not compile within
     minutes).  Here the seeds live in a closure ndarray instead:
 
-    * assignment / probing: ``mapInPandas`` — per Arrow batch, one
-      k-ordered (dim-major) numpy accumulation against the seed
-      matrix, argmax (ties -> lowest cell, numpy's first-max) for the
-      corpus, stable top-``n_probe`` for queries — the exact IEEE op
-      sequence and tie order of the literal expressions;
+    * assignment / probing: ``mapInPandas`` — per Arrow batch, the
+      cells' numpy rule over the k-ordered fold (``_seq_dots``);
     * scoring: cogrouped ``applyInPandas`` per cell — the bipartite
       block-matrix trick of ``embedding_cosine_pairs_blocked``, TILED:
       the cell's query x corpus cosine matrix is computed in
@@ -535,9 +725,9 @@ def ivf_topk_blocked(
       the sqrt(n)-cells operating point the untiled matrix is ~4n
       entries per task, linear in the corpus, an OOM near 1e9
       vectors), per-query top-k within the cell emitted (rows out =
-      queries x n_probe x k, linear — candidate pairs are never
+      queries x probed cells x k, linear — candidate pairs are never
       materialized as rows);
-    * one final per-query window over the n_probe * k survivors.
+    * one final per-query window over the probed-cells * k survivors.
 
     ``cell_split > 1`` additionally splits each cell's CORPUS side
     into that many hash sub-cells (queries probe every sub-cell): a
@@ -551,15 +741,15 @@ def ivf_topk_blocked(
     ``hot_cell_rows`` is the AUTO form of that valve (r13 VERDICT: the
     manual knob required operator intervention): per-cell corpus
     counts are ESTIMATED from a deterministic 1/``count_sample_mod``
-    hash sample of ids (assignment of the sample is the only extra
-    work — O(n/mod * C * d) — and the estimate rides a driver-sized
-    ≤C-row collect, the ``_cap_buckets`` count-then-act pattern), and
-    any cell estimated above the literal row threshold splits into
-    ``ceil(est / hot_cell_rows)`` hash sub-cells.  Because output is
-    split-INVARIANT (pytest pins trigger-on == trigger-off bitwise),
-    sampling error costs only balance, never correctness — which is
-    what lets the estimate be a sample instead of a second full
-    assignment pass.  Measured trigger point: see SCALING.md r14.
+    hash sample of ids, assigned by the same cells rule (the only
+    extra work — O(n/mod) assignments — and the estimate rides a
+    driver-sized ≤C-row collect, the ``_cap_buckets`` count-then-act
+    pattern), and any cell estimated above the literal row threshold
+    splits into ``ceil(est / hot_cell_rows)`` hash sub-cells.  Because
+    output is split-INVARIANT (pytest pins trigger-on == trigger-off
+    bitwise), sampling error costs only balance, never correctness —
+    which is what lets the estimate be a sample instead of a second
+    full assignment pass.  Measured trigger point: see SCALING.md r14.
 
     Tiling preserves bitwise equality because each cosine is an
     independent dim-ordered accumulation (tile membership never enters
@@ -575,59 +765,28 @@ def ivf_topk_blocked(
     twins even on degenerate inputs (closes the r12 ADVICE NaN
     divergence; pytest pins it with zero-norm vectors).
 
-    Shuffle volume is corpus + queries x n_probe x cell_split rows in,
-    queries x n_probe x cell_split x k rows out.  pytest pins bitwise
-    equality against the expression form (and across splits); the
-    shared DuckDB oracle covers both.
-
-    Cost honesty at extreme cell counts: assignment/probing score
-    every vector against ALL C seeds — O(n * C * d), i.e. O(n^1.5 d)
-    at C ~ sqrt(n), the classic flat-IVF assignment bill, and the seed
-    matrix rides each task's closure (C x d doubles; ~50 MB at C=1e5,
-    d=64).  Both are fine through the measured 10^6-vector regime and
-    well past it; at 10^8+ vectors the standard next step is a
-    hierarchical coarse quantizer (assign to ~sqrt(C) super-cells,
-    then refine within) — a DIFFERENT operating point (cell membership
-    changes), so it belongs as a separate variant with its own
-    agreement eval, not a drop-in swap for this oracle-pinned form."""
-    import numpy as np
+    Shuffle volume is corpus + queries x probed cells x cell_split
+    rows in, queries x probed cells x cell_split x k rows out.  pytest
+    pins bitwise equality against the expression form (and across
+    splits); the DuckDB oracles cover both cell rules."""
     import pandas as pd
 
-    seeds = seeded_centroids(corpus, n_centroids, vec_col, id_col)
-    if not seeds:
+    fitted = cells.fit(corpus, vec_col, id_col)
+    if fitted is None:
         return _empty_topk(corpus.sparkSession)
-    seed_mat = np.array([v for _, v, _ in seeds], dtype=np.float64)  # (C, d)
-    seed_nrm = np.array([nrm for _, _, nrm in seeds], dtype=np.float64)
-    d = seed_mat.shape[1]
-    npr = min(n_probe, seed_mat.shape[0])  # fewer seeds than probes
-
-    def _seq_norm(m):
-        acc = np.zeros(m.shape[0])
-        for j in range(d):
-            acc += m[:, j] * m[:, j]
-        return np.sqrt(acc)
-
-    def _seq_scores(m):  # (n, d) -> (n, C), k-ordered like the fold
-        acc = np.zeros((m.shape[0], seed_mat.shape[0]))
-        for j in range(d):
-            acc += np.outer(m[:, j], seed_mat[:, j])
-        return acc / seed_nrm
-
-    def _mat(pdf_col):
-        return np.stack([np.asarray(v, dtype=np.float64) for v in pdf_col])
+    assign, probe = fitted
 
     def _assign(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            m = _mat(pdf["cv"])
+            m = _stack_rows(pdf["cv"])
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["neighbor_id"].astype("int64"),
                     "cv": [list(v) for v in m],
                     "cnrm": _seq_norm(m),
-                    # ties -> lowest cell: argmax returns the FIRST max
-                    "cell": np.argmax(_seq_scores(m), axis=1).astype("int32"),
+                    "cell": assign(m).astype("int32"),
                 }
             )
 
@@ -635,24 +794,27 @@ def ivf_topk_blocked(
         for pdf in it:
             if not len(pdf):
                 continue
-            m = _mat(pdf["qv"])
-            # stable argsort of -score: score desc, ties -> lowest cell
-            order = np.argsort(-_seq_scores(m), axis=1, kind="stable")
-            top = order[:, :npr]
+            m = _stack_rows(pdf["qv"])
+            row, cell = probe(m)
+            if not len(row):
+                continue
             yield pd.DataFrame(
                 {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy().astype("int64"), npr
-                    ),
-                    "qv": [list(v) for v in np.repeat(m, npr, axis=0)],
-                    "qnrm": np.repeat(_seq_norm(m), npr),
-                    "cell": top.reshape(-1).astype("int32"),
+                    "query_id": pdf["query_id"].to_numpy().astype("int64")[row],
+                    "qv": [list(v) for v in m[row]],
+                    "qnrm": _seq_norm(m)[row],
+                    "cell": cell.astype("int32"),
                 }
             )
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).mapInPandas(_assign, "neighbor_id long, cv array<double>, cnrm double, cell int")
+    assigned = "neighbor_id long, cv array<double>, cnrm double, cell int"
+
+    def vectors(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+        )
+
+    c = vectors(corpus).mapInPandas(_assign, assigned)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
     ).mapInPandas(_probe, "query_id long, qv array<double>, qnrm double, cell int")
@@ -660,14 +822,11 @@ def ivf_topk_blocked(
     cell_splits: dict[int, int] | None = None
     if hot_cell_rows is not None:
         mod = max(1, count_sample_mod)
-        sample = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0
-        ).select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
+        sample = corpus.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
         est = {
             int(r["cell"]): int(r["n"]) * mod
-            for r in sample.mapInPandas(
-                _assign, "neighbor_id long, cv array<double>, cnrm double, cell int"
-            )
+            for r in vectors(sample)
+            .mapInPandas(_assign, assigned)
             .groupBy("cell")
             .agg(F.count("*").alias("n"))
             .collect()
@@ -678,18 +837,17 @@ def ivf_topk_blocked(
             if n > hot_cell_rows
         }
 
-    return _blocked_score_tail(q, c, k, d, cell_split, cell_splits=cell_splits)
+    return _blocked_score_tail(q, c, k, cell_split, cell_splits=cell_splits)
 
 
 def _blocked_score_tail(
     q,
     c,
     k: int,
-    d: int,
     cell_split: int = 1,
     cell_splits: dict[int, int] | None = None,
 ) -> DataFrame:
-    """Shared scoring tail of the blocked IVF kernels: given probe rows
+    """Scoring tail of ``ivf_topk_blocked``: given probe rows
     (query_id, qv, qnrm, cell) and assigned corpus rows (neighbor_id,
     cv, cnrm, cell), score each cell's query x corpus cosine matrix in
     _Q_BLOCK x _C_BLOCK tiles (literal per-task memory bound; bitwise-
@@ -746,7 +904,7 @@ def _blocked_score_tail(
                 ).alias("__sub"),
             )
         )
-        return _blocked_score_window(q, c, k, d, keys=("cell", "__sub"))
+        return _blocked_score_window(q, c, k, keys=("cell", "__sub"))
     if cell_split > 1:
         sub = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(cell_split)).cast("int")
         c = c.withColumn("cell", F.col("cell") * cell_split + sub)
@@ -763,17 +921,14 @@ def _blocked_score_tail(
                 )
             ).alias("cell"),
         )
-    return _blocked_score_window(q, c, k, d, keys=("cell",))
+    return _blocked_score_window(q, c, k, keys=("cell",))
 
 
-def _blocked_score_window(q, c, k: int, d: int, keys: tuple[str, ...]) -> DataFrame:
+def _blocked_score_window(q, c, k: int, keys: tuple[str, ...]) -> DataFrame:
     """Tiled per-(grouping-key) scoring + the final global window —
     the common tail of both split forms of ``_blocked_score_tail``."""
     import numpy as np
     import pandas as pd
-
-    def _mat(pdf_col):
-        return np.stack([np.asarray(v, dtype=np.float64) for v in pdf_col])
 
     def _score_cell(key, qpdf, cpdf):
         if not len(qpdf) or not len(cpdf):
@@ -787,23 +942,20 @@ def _blocked_score_window(q, c, k: int, d: int, keys: tuple[str, ...]) -> DataFr
         # j-ordered sum, so permuting corpus rows only permutes matrix
         # rows, bitwise.
         cpdf = cpdf.sort_values("neighbor_id")
-        cm = _mat(cpdf["cv"])
+        cm = _stack_rows(cpdf["cv"])
         cn = cpdf["cnrm"].to_numpy()
         nid = cpdf["neighbor_id"].to_numpy().astype("int64")
         frames = []
         for q0 in range(0, len(qpdf), _Q_BLOCK):
             qb = qpdf.iloc[q0 : q0 + _Q_BLOCK]
-            qm = _mat(qb["qv"])
+            qm = _stack_rows(qb["qv"])
             qn = qb["qnrm"].to_numpy()
             qid = qb["query_id"].to_numpy().astype("int64")
             tile_c, tile_n = [], []
             for c0 in range(0, len(cpdf), _C_BLOCK):
                 cmb = cm[c0 : c0 + _C_BLOCK]
                 nid_b = nid[c0 : c0 + _C_BLOCK]
-                acc = np.zeros((len(qb), cmb.shape[0]))
-                for j in range(d):
-                    acc += np.outer(qm[:, j], cmb[:, j])
-                cos = acc / np.outer(qn, cn[c0 : c0 + _C_BLOCK])
+                cos = _seq_dots(qm, cmb) / np.outer(qn, cn[c0 : c0 + _C_BLOCK])
                 masked = np.where(nid_b[None, :] == qid[:, None], -np.inf, cos)
                 order = np.argsort(-masked, axis=1, kind="stable")[:, :k]
                 tile_c.append(np.take_along_axis(masked, order, axis=1))
@@ -845,214 +997,6 @@ def _blocked_score_window(q, c, k: int, d: int, keys: tuple[str, ...]) -> DataFr
         survivors.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
     )
-
-
-def _mask_invalid_supers(scores, valid):
-    """Restrict a (rows x supers) score matrix to the valid (non-empty)
-    supers: invalid columns become -inf, so the subsequent first-max
-    argmax / stable descending sort picks the best VALID super with
-    ties still breaking to the lowest valid index.  Pure helper so the
-    empty-super guard is unit-testable without a degenerate corpus."""
-    import numpy as np
-
-    if valid.all():
-        return scores
-    return np.where(valid[None, :], scores, -np.inf)
-
-
-def ivf_topk_hier_blocked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_super: int = 4,
-    super_probe: int = 2,
-    cells_per_super: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cell_split: int = 1,
-    hot_cell_rows: int | None = HOT_CELL_ROWS_DEFAULT,
-    count_sample_mod: int = 64,
-) -> DataFrame:
-    """Two-level (hierarchical) seeded-IVF top-k — the assignment-cost
-    fix the flat kernel's docstring flags: ``ivf_topk_blocked`` scores
-    every vector against ALL C cell seeds (O(n*C*d), O(n^1.5 d) at the
-    miner's C ~ sqrt(n) operating point).  Here vectors first pick
-    their best SUPER-cell among S = the first ``n_super`` seeds of the
-    same LCG-ordered seed list (supers are a prefix of the cells, so
-    no second selection rule exists to drift), then rank only the
-    cells MAPPED to that super — O(n*(S + C/S)*d), minimized at
-    S ~ sqrt(C) (the FAISS IMI shape).  The cell->super map is the
-    C x S argmax of seed-to-super cosine (ties -> lowest super),
-    computed once driver-side with the same sequential fold.
-
-    Measured regimes (SCALING.md): at C=1024 / 800k vectors hier is a
-    2x LOSS (the two-level map worsens balance +44% and flat seed
-    scoring is only ~25% of the bill); at C=10^4 / 1.6M vectors it is
-    a 35x WIN (flat 309s vs hier 8.8s warm, r14 — the balance penalty
-    vanishes there, +0.03% sum-of-squared cell sizes), because flat
-    assignment is O(n*C*d) and dominates everything at large C.  Pick
-    hier when C >= ~10^4; flat remains the declared path below that.
-
-    Probing is quota-based, the IMI convention: a query takes its top
-    ``super_probe`` supers, then its top ``cells_per_super`` cells
-    WITHIN each probed super (total probed cells = super_probe x
-    cells_per_super) — per-super quotas, unlike the flat form's global
-    n_probe, so the kernel never scores a query against cells of
-    unprobed supers.  Cell membership therefore DIFFERS from the flat
-    quantizer: this is a separate declared operating point with its
-    own oracle and recall eval (eval_ann_hier_recall), not a bitwise
-    twin.  All arithmetic is the same k-ordered fold as every kernel
-    here (DuckDB-reproducible; ties -> lowest super/cell/neighbor);
-    scoring reuses the tiled ``_blocked_score_tail`` (literal 67 MB
-    per-task bound, cell_split hub valve; ``hot_cell_rows`` enables
-    the same sampled-count AUTO valve as the flat kernel, estimated
-    against THIS quantizer's assignment rule — output split-invariant
-    either way).
-
-    Non-finite cosines (zero-norm vectors) are dropped from the top-k,
-    the module-wide ``_finite_cosine`` rule shared with every form
-    here (the shared tail's isfinite keep enforces it).
-
-    Empty supers: a super with NO mapped cells is normally impossible
-    (each super IS cell s < S, and Cauchy-Schwarz self-cosine 1 plus
-    ties->lowest keeps cell s under super s), but FP noise on
-    near-parallel seeds can break the self-mapping.  Vectors and
-    queries therefore rank only NON-EMPTY supers (empty columns masked
-    to -inf before the first-max/stable-sort — ties still -> lowest
-    non-empty super); the DuckDB oracle mirrors the rule with its
-    ``nesupers`` CTE.  Without the mask an orphaned vector would crash
-    the kernel (argmax over an empty cell list) while the oracle
-    silently dropped it via the inner join on sup (r13 ADVICE).
-    """
-    import numpy as np
-    import pandas as pd
-
-    seeds = seeded_centroids(corpus, n_cells, vec_col, id_col)
-    if not seeds:
-        return _empty_topk(corpus.sparkSession)
-    seed_mat = np.array([v for _, v, _ in seeds], dtype=np.float64)  # (C, d)
-    seed_nrm = np.array([nrm for _, _, nrm in seeds], dtype=np.float64)
-    C, d = seed_mat.shape
-    S = min(n_super, C)
-    sup_mat, sup_nrm = seed_mat[:S], seed_nrm[:S]
-    spr = min(super_probe, S)
-
-    def _fold_scores(m, mat, nrm):  # k-ordered: bitwise == the SQL fold
-        acc = np.zeros((m.shape[0], mat.shape[0]))
-        for j in range(d):
-            acc += np.outer(m[:, j], mat[:, j])
-        return acc / nrm
-
-    # cell -> super (driver-side; ties -> lowest super via first-max)
-    cell2sup = np.argmax(_fold_scores(seed_mat, sup_mat, sup_nrm), axis=1)
-    cells_of = {
-        s: np.where(cell2sup == s)[0].astype("int64") for s in range(S)
-    }  # ascending cell ids per super -> first-max == lowest cell
-    sup_valid = np.array([len(cells_of[s]) > 0 for s in range(S)])
-    assert sup_valid.any()  # every cell maps somewhere, so >=1 non-empty
-
-    def _seq_norm(m):
-        acc = np.zeros(m.shape[0])
-        for j in range(d):
-            acc += m[:, j] * m[:, j]
-        return np.sqrt(acc)
-
-    def _mat(pdf_col):
-        return np.stack([np.asarray(v, dtype=np.float64) for v in pdf_col])
-
-    def _assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = _mat(pdf["cv"])
-            sup = np.argmax(
-                _mask_invalid_supers(_fold_scores(m, sup_mat, sup_nrm), sup_valid),
-                axis=1,
-            )
-            cell = np.zeros(len(pdf), dtype="int64")
-            for s in np.unique(sup):
-                mask = sup == s
-                cl = cells_of[int(s)]  # non-empty: sup ranges over valid supers
-                sc = _fold_scores(m[mask], seed_mat[cl], seed_nrm[cl])
-                cell[mask] = cl[np.argmax(sc, axis=1)]
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].astype("int64"),
-                    "cv": [list(v) for v in m],
-                    "cnrm": _seq_norm(m),
-                    "cell": cell.astype("int32"),
-                }
-            )
-
-    def _probe(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = _mat(pdf["qv"])
-            qn = _seq_norm(m)
-            qid = pdf["query_id"].to_numpy().astype("int64")
-            sorder = np.argsort(
-                -_mask_invalid_supers(_fold_scores(m, sup_mat, sup_nrm), sup_valid),
-                axis=1,
-                kind="stable",
-            )[:, :spr]
-            out_q, out_v, out_n, out_c = [], [], [], []
-            for s in range(S):
-                rows = np.where((sorder == s).any(axis=1))[0]
-                cl = cells_of[s]
-                if not len(rows) or not len(cl):
-                    continue
-                sc = _fold_scores(m[rows], seed_mat[cl], seed_nrm[cl])
-                top = np.argsort(-sc, axis=1, kind="stable")[:, :cells_per_super]
-                npc = top.shape[1]
-                out_q.append(np.repeat(qid[rows], npc))
-                out_v.append(np.repeat(m[rows], npc, axis=0))
-                out_n.append(np.repeat(qn[rows], npc))
-                out_c.append(cl[top].reshape(-1))
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "qv": [list(v) for v in np.concatenate(out_v)],
-                    "qnrm": np.concatenate(out_n),
-                    "cell": np.concatenate(out_c).astype("int32"),
-                }
-            )
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).mapInPandas(_assign, "neighbor_id long, cv array<double>, cnrm double, cell int")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).mapInPandas(_probe, "query_id long, qv array<double>, qnrm double, cell int")
-
-    cell_splits: dict[int, int] | None = None
-    if hot_cell_rows is not None:
-        # same sampled-count auto valve as the flat kernel, against
-        # THIS quantizer's assignment rule (hier cell membership
-        # differs from flat by construction)
-        mod = max(1, count_sample_mod)
-        sample = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0
-        ).select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
-        est = {
-            int(r["cell"]): int(r["n"]) * mod
-            for r in sample.mapInPandas(
-                _assign, "neighbor_id long, cv array<double>, cnrm double, cell int"
-            )
-            .groupBy("cell")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        cell_splits = {
-            cell: -(-n // hot_cell_rows)
-            for cell, n in est.items()
-            if n > hot_cell_rows
-        }
-
-    return _blocked_score_tail(q, c, k, d, cell_split, cell_splits=cell_splits)
 
 
 def lsh_topk(
@@ -1148,18 +1092,6 @@ def knn_graph(
         )
     )
 
-    def _seq_norm(m, d):
-        acc = np.zeros(m.shape[0])
-        for kk in range(d):
-            acc += m[:, kk] * m[:, kk]
-        return np.sqrt(acc)
-
-    def _seq_dots(a, b, d):
-        acc = np.zeros((a.shape[0], b.shape[0]))
-        for kk in range(d):
-            acc += np.outer(a[:, kk], b[:, kk])
-        return acc
-
     def _emit_topk(q_ids, n_ids, cos):
         # per row: top-k under (cosine desc, neighbor id asc)
         out_q, out_n, out_c = [], [], []
@@ -1175,16 +1107,15 @@ def knn_graph(
     def _part(pdf: pd.DataFrame) -> pd.DataFrame:
         ti, tj = int(pdf["ti"].iloc[0]), int(pdf["tj"].iloc[0])
         ids = pdf["vid"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        mat = _stack_rows(pdf["vec"])
         blk = pdf["blk"].to_numpy()
-        d = mat.shape[1]
         empty = pd.DataFrame({"vec_id": [], "neighbor_id": [], "cosine": []}).astype(
             {"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
         )
         if ti == tj:
             if len(ids) < 2:
                 return empty
-            cos = _seq_dots(mat, mat, d) / np.outer(_seq_norm(mat, d), _seq_norm(mat, d))
+            cos = _seq_dots(mat, mat) / np.outer(_seq_norm(mat), _seq_norm(mat))
             np.fill_diagonal(cos, -np.inf)  # exclude self
             q, n, c = _emit_topk(ids, ids, cos)
         else:
@@ -1193,8 +1124,7 @@ def knn_graph(
             a_mat, b_mat = mat[am], mat[~am]
             if len(a_ids) == 0 or len(b_ids) == 0:
                 return empty
-            na, nb = _seq_norm(a_mat, d), _seq_norm(b_mat, d)
-            cos = _seq_dots(a_mat, b_mat, d) / np.outer(na, nb)
+            cos = _seq_dots(a_mat, b_mat) / np.outer(_seq_norm(a_mat), _seq_norm(b_mat))
             qa, nna, ca = _emit_topk(a_ids, b_ids, cos)
             qb, nnb, cb = _emit_topk(b_ids, a_ids, cos.T)
             q = np.concatenate([qa, qb]) if len(qa) or len(qb) else []
@@ -1270,18 +1200,6 @@ def hard_negatives(
         )
     )
 
-    def _seq_norm(m, d):
-        acc = np.zeros(m.shape[0])
-        for kk in range(d):
-            acc += m[:, kk] * m[:, kk]
-        return np.sqrt(acc)
-
-    def _seq_dots(a, b, d):
-        acc = np.zeros((a.shape[0], b.shape[0]))
-        for kk in range(d):
-            acc += np.outer(a[:, kk], b[:, kk])
-        return acc
-
     def _emit_topk(q_ids, q_lbl, n_ids, n_lbl, cos):
         out = {"q": [], "ql": [], "n": [], "nl": [], "c": []}
         for r in range(cos.shape[0]):
@@ -1303,9 +1221,8 @@ def hard_negatives(
         ti, tj = int(pdf["ti"].iloc[0]), int(pdf["tj"].iloc[0])
         ids = pdf["vid"].to_numpy()
         lbl = pdf["lbl"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        mat = _stack_rows(pdf["vec"])
         blk = pdf["blk"].to_numpy()
-        d = mat.shape[1]
         empty = pd.DataFrame({c: [] for c in cols}).astype(cols)
 
         def frame(o):
@@ -1322,7 +1239,7 @@ def hard_negatives(
         if ti == tj:
             if len(ids) < 2:
                 return empty
-            cos = _seq_dots(mat, mat, d) / np.outer(_seq_norm(mat, d), _seq_norm(mat, d))
+            cos = _seq_dots(mat, mat) / np.outer(_seq_norm(mat), _seq_norm(mat))
             cos[np.equal.outer(lbl, lbl)] = -np.inf  # mask positives (incl. self)
             return frame(_emit_topk(ids, lbl, ids, lbl, cos))
         am = blk == ti
@@ -1331,9 +1248,7 @@ def hard_negatives(
         a_mat, b_mat = mat[am], mat[~am]
         if len(a_ids) == 0 or len(b_ids) == 0:
             return empty
-        cos = _seq_dots(a_mat, b_mat, d) / np.outer(
-            _seq_norm(a_mat, d), _seq_norm(b_mat, d)
-        )
+        cos = _seq_dots(a_mat, b_mat) / np.outer(_seq_norm(a_mat), _seq_norm(b_mat))
         cos[np.equal.outer(a_lbl, b_lbl)] = -np.inf
         oa = _emit_topk(a_ids, a_lbl, b_ids, b_lbl, cos)
         ob = _emit_topk(b_ids, b_lbl, a_ids, a_lbl, cos.T)

@@ -7,11 +7,18 @@ as-of join) and the influx sink projection as an oracle-checked query.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from .registry import register
+
+# The reference implementation's checkout, beside this one; may be absent.
+REFERENCE = os.path.abspath(os.path.join(__file__, *[".."] * 4, "reference"))
+EGD_XML = f"{REFERENCE}/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
+GOLDEN_PARQUET = f"{REFERENCE}/cli-frontend/tests/goldens/golden.parquet"
 
 
 def _dec(c, scale: int = 2):
@@ -432,20 +439,17 @@ def j9_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "enforced in tests/test_espi_golden.py).",
 )
 def espi_egd_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..espi import timeseries_from_files
 
-    egd = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-    if not os.path.exists(egd):  # environment without the reference corpus
+    if not os.path.exists(EGD_XML):  # environment without the reference corpus
         return spark.createDataFrame([], "title string, value float")
-    ts, _errors = timeseries_from_files(spark, egd)
+    ts, _errors = timeseries_from_files(spark, EGD_XML)
     return ts
 
 
 @register(
     "espi_egd_golden_parity",
-    """
+    f"""
     SELECT title,
            CASE WHEN isnan(cost) THEN NULL
                 ELSE CAST(cost AS DOUBLE) END AS cost,
@@ -457,7 +461,7 @@ def espi_egd_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
            accumulation_behaviour, commodity, currency, data_qualifier,
            flow_direction, kind, phase, uom
     FROM read_parquet(
-        '/root/reference/cli-frontend/tests/goldens/golden.parquet')
+        '{GOLDEN_PARQUET}')
     WHERE title = 'Meter data'
     """,
     tags=("espi", "flagship", "golden"),
@@ -474,12 +478,9 @@ def espi_egd_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     "end-to-end pipeline is value-pinned by the gate itself.",
 )
 def espi_egd_golden_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..espi import timeseries_from_files
 
-    egd = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-    if not os.path.exists(egd):
+    if not os.path.exists(EGD_XML):
         # Environment with the input XML stripped: there is no pipeline
         # run to check.  Emit a single SENTINEL row that cannot
         # hash-match the oracle (which reads the golden parquet), so a
@@ -503,7 +504,7 @@ def espi_egd_golden_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ],
         )
-    ts, _errors = timeseries_from_files(spark, egd)
+    ts, _errors = timeseries_from_files(spark, EGD_XML)
     return ts.select(
         "title",
         F.when(F.isnan("cost"), F.lit(None))

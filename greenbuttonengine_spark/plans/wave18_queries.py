@@ -34,8 +34,10 @@ from .wave9_queries import (
     _PQ_GRID,
     _PQ_K,
     _pq_centroids,
-    pq_train_sums_pandas,
     _pq_quantized,
+    pq_codes_pandas,
+    pq_dists_pandas,
+    pq_train_sums_pandas,
 )
 
 _PQT_ITERS = 2
@@ -249,103 +251,6 @@ def _train_pq_codebook(spark: SparkSession, sf_dir: str) -> list[list[list[int]]
     return cents
 
 
-def _pq_codes2_pandas(
-    df: DataFrame,
-    cents_a: list[list[list[int]]],
-    cents_b: list[list[list[int]]],
-    keep: tuple[str, ...] = ("vec_id",),
-) -> DataFrame:
-    """Dual-codebook variant of ``pq_codes_pandas``: one Arrow pass
-    over the quantized corpus emits ct0..ct{S-1} (codebook A) and
-    cr0..cr{S-1} (codebook B) argmin code columns — the corpus is
-    scanned and Arrow-transposed ONCE for both codebooks (r16; the
-    per-codebook math is the identical exact int64 einsum + argmin,
-    so each column set matches its single-codebook twin bitwise)."""
-    import numpy as np
-    import pandas as pd
-
-    ca = np.asarray(cents_a, dtype=np.int64)
-    cb = np.asarray(cents_b, dtype=np.int64)
-    n_subs, _, n_dim = ca.shape
-    qcols = [f"q{i}" for i in range(n_subs * n_dim)]
-    keep = tuple(keep)
-    keep_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keep
-    )
-    schema = (
-        keep_fields
-        + ", "
-        + ", ".join(f"ct{j} int" for j in range(n_subs))
-        + ", "
-        + ", ".join(f"cr{j} int" for j in range(n_subs))
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            q = (
-                pdf[qcols]
-                .to_numpy(dtype=np.int64)
-                .reshape(len(pdf), n_subs, n_dim)
-            )
-            out = {c: pdf[c] for c in keep}
-            for tag, cent in (("ct", ca), ("cr", cb)):
-                diff = q[:, :, None, :] - cent[None, :, :, :]
-                d2 = np.einsum("nskd,nskd->nsk", diff, diff)
-                codes = d2.argmin(axis=2)
-                for j in range(n_subs):
-                    out[f"{tag}{j}"] = codes[:, j].astype("int32")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(gen, schema)
-
-
-def _pq_dists2_pandas(
-    df: DataFrame,
-    cents_a: list[list[list[int]]],
-    cents_b: list[list[list[int]]],
-    keep: tuple[str, ...] = ("vec_id",),
-) -> DataFrame:
-    """Dual-codebook variant of ``pq_dists_pandas``: one Arrow pass
-    over the (query-sized) input emits the full subs x k squared-
-    distance LUTs for BOTH codebooks (``subs_t`` / ``subs_r``).  Same
-    exact int64 arithmetic; bounded by the query count."""
-    import numpy as np
-    import pandas as pd
-
-    ca = np.asarray(cents_a, dtype=np.int64)
-    cb = np.asarray(cents_b, dtype=np.int64)
-    n_subs, _, n_dim = ca.shape
-    qcols = [f"q{i}" for i in range(n_subs * n_dim)]
-    keep = tuple(keep)
-    keep_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keep
-    )
-    schema = (
-        f"{keep_fields}, subs_t array<array<bigint>>, "
-        "subs_r array<array<bigint>>"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            q = (
-                pdf[qcols]
-                .to_numpy(dtype=np.int64)
-                .reshape(len(pdf), n_subs, n_dim)
-            )
-            out = {c: pdf[c] for c in keep}
-            for tag, cent in (("subs_t", ca), ("subs_r", cb)):
-                diff = q[:, :, None, :] - cent[None, :, :, :]
-                d2 = np.einsum("nskd,nskd->nsk", diff, diff)
-                out[tag] = d2.tolist()
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(gen, schema)
-
-
 @register(
     "eval_pq_recall_trained",
     _trained_oracle_sql(),
@@ -406,9 +311,9 @@ def eval_pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # BOTH codebooks (trained + seeded-random) ride ONE fused DAG
-    # (r16, guide §1.2 fewer passes / §2.1 fewer actions): one dual-
-    # codebook codes kernel over the corpus, one dual LUT kernel over
-    # the queries, one crossJoin computing both ADC columns, one
+    # (r16, guide §1.2 fewer passes / §2.1 fewer actions): one codes
+    # kernel pass over the corpus and one LUT kernel pass over the
+    # queries, each with both codebooks, one crossJoin computing both ADC columns, one
     # shortlist exchange carrying two rank windows (same partitioning,
     # one sort each), one re-rank join pair over the TAGGED shortlist
     # union, one final (query, neighbor) join counted per tag.  The
@@ -417,11 +322,12 @@ def eval_pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins).  Every per-branch selection uses the identical values
     # and total order, so the result is bit-identical.
     random_cb = _pq_centroids(subs=_PQT_SUBS, k=_PQ_K, dim=_PQT_DIM)
-    codes2 = _pq_codes2_pandas(qdf, trained, random_cb).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    lut2 = _pq_dists2_pandas(
-        qdf.filter(F.col("vec_id") < _PQT_NQ), trained, random_cb
+    codes2 = pq_codes_pandas(
+        qdf, {"ct": trained, "cr": random_cb}
+    ).withColumnRenamed("vec_id", "neighbor_id")
+    lut2 = pq_dists_pandas(
+        qdf.filter(F.col("vec_id") < _PQT_NQ),
+        {"subs_t": trained, "subs_r": random_cb},
     ).select(
         F.col("vec_id").alias("query_id"),
         *[F.col("subs_t")[j].alias(f"lt{j}") for j in range(_PQT_SUBS)],

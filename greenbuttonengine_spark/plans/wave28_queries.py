@@ -14,9 +14,9 @@ from:
 * ``mine_bitext_margin`` — the EXACT tier: every cross-parity pair
   from the blocked triangle kernel (the oracle-defining form).
 * ``mine_bitext_margin_ann`` — the SCALE tier: candidates from the
-  seeded-IVF retriever (``similarity.ivf_topk_blocked``), neighborhoods
-  computed within the retrieved candidate set (standard practice when
-  mining with ANN).  This makes the exact tier's "at 100 TB the pair
+  seeded-IVF retriever (``similarity.ivf_topk_blocked`` with
+  ``FlatSeedCells``), neighborhoods computed within the retrieved
+  candidate set (standard practice when mining with ANN).  This makes the exact tier's "at 100 TB the pair
   table comes from the ANN candidate generators" claim real, declared,
   oracle-checked code — the same promise-into-code move as
   eval_minhash_precision's literal sample cap.
@@ -331,7 +331,8 @@ def mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "retrieved list; the tgt neighborhood is the sources that "
     "retrieved it — exactly the hub evidence).  Identical scoring "
     "tail and output schema as the exact tier.  The retriever is the "
-    "BLOCKED kernel (similarity.ivf_topk_blocked): Arrow cell-matrix "
+    "BLOCKED kernel (similarity.ivf_topk_blocked with FlatSeedCells): "
+    "Arrow cell-matrix "
     "scoring, pytest-pinned bitwise-equal to the literal-expression "
     "form — every-vector-is-a-query workloads need cells ~ "
     "sqrt(corpus), where the expression form's n_cells x dim plan "
@@ -357,9 +358,8 @@ def _ann_margin_from(emb: DataFrame) -> DataFrame:
     cand = similarity.ivf_topk_blocked(
         odd,
         even,
+        similarity.FlatSeedCells(_ANN_CELLS, _ANN_PROBE),
         k=_ANN_CAND_K,
-        n_centroids=_ANN_CELLS,
-        n_probe=_ANN_PROBE,
         hot_cell_rows=similarity.HOT_CELL_ROWS_DEFAULT,
     )
     u = cand.select(

@@ -1,20 +1,20 @@
 """Round-13 wave: the two-level (hierarchical) coarse quantizer — the
-assignment-cost fix `similarity.ivf_topk_blocked`'s docstring flags for
+assignment-cost fix `similarity.FlatSeedCells`' docstring flags for
 the 10^8+-vector regime, declared with its own oracle and its own
 recall eval (the eval-next-to-approximation convention).
 
 Flat seeded IVF scores every vector against ALL C cell seeds:
 O(n*C*d), which is O(n^1.5 d) at the miner's C ~ sqrt(n) operating
-point.  The hierarchical form (`similarity.ivf_topk_hier_blocked`,
-the FAISS IMI shape) first picks the best of S super-cells — the
-FIRST S seeds of the same LCG-ordered list, so no second selection
-rule exists to drift — then ranks only the cells mapped to that
-super: O(n*(S + C/S)*d), minimized at S ~ sqrt(C).  Probing is
-quota-based (top ``super_probe`` supers, top ``cells_per_super``
-cells within each), so cell membership and probe sets DIFFER from the
-flat quantizer: this is a separate declared operating point, not a
-bitwise twin — which is exactly why it ships with
-``eval_ann_hier_recall`` next to it.
+point.  The hierarchical form (`similarity.ivf_topk_blocked` with
+`similarity.HierSeedCells`, the FAISS IMI shape) first picks the best
+of S super-cells — the FIRST S seeds of the same LCG-ordered list, so
+no second selection rule exists to drift — then ranks only the cells
+mapped to that super: O(n*(S + C/S)*d), minimized at S ~ sqrt(C).
+Probing is quota-based (top ``super_probe`` supers, top
+``cells_per_super`` cells within each), so cell membership and probe
+sets DIFFER from the flat quantizer: this is a separate declared
+operating point, not a bitwise twin — which is exactly why it ships
+with ``eval_ann_hier_recall`` next to it.
 
 Everything is the same k-ordered fold arithmetic as the flat family
 (ties -> lowest super / cell / neighbor), so DuckDB reproduces the
@@ -106,14 +106,11 @@ def _hier_ctes() -> str:
 
 def _hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    return similarity.ivf_topk_hier_blocked(
+    return similarity.ivf_topk_blocked(
         emb,
         emb.filter(F.col("vec_id") < 16),
+        similarity.HierSeedCells(_C, _S, _SUPER_PROBE, _CELLS_PER_SUPER),
         k=_K,
-        n_cells=_C,
-        n_super=_S,
-        super_probe=_SUPER_PROBE,
-        cells_per_super=_CELLS_PER_SUPER,
     )
 
 

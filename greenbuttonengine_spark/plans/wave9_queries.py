@@ -569,18 +569,44 @@ def _pq_dists_expr(cents: list[list[list[int]]] | None = None) -> str:
     return "array(" + ", ".join(subs) + ")"
 
 
+def _pq_schema(df: DataFrame, books: dict, keep: tuple[str, ...]):
+    """Shared setup of the PQ kernels: ``books`` as int64 arrays of one
+    (subs, k, dim) geometry over the same q0..qW-1 columns, the q column
+    list, the (subs, dim) row shape and the ``keep`` schema fields."""
+    import numpy as np
+
+    cents = {name: np.asarray(c, dtype=np.int64) for name, c in books.items()}
+    n_subs, _n_k, n_dim = next(iter(cents.values())).shape
+    keep_fields = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if f.name in keep
+    ]
+    qcols = [f"q{i}" for i in range(n_subs * n_dim)]
+    return cents, qcols, (n_subs, n_dim), keep_fields
+
+
+def _pq_sq_dists(q, cent):
+    """(n, subs, k) exact int64 squared distances from the (n, subs, dim)
+    rows ``q`` to codebook ``cent``; max |q-c| ~ 2^13, far below 2^63."""
+    import numpy as np
+
+    diff = q[:, :, None, :] - cent[None, :, :, :]
+    return np.einsum("nskd,nskd->nsk", diff, diff)
+
+
 def pq_dists_pandas(
     df: DataFrame,
-    cents: list[list[list[int]]] | None = None,
+    books: dict | None = None,
     keep: tuple[str, ...] = ("vec_id",),
 ) -> DataFrame:
     """Arrow-kernel drop-in for ``select(*keep,
-    F.expr(_pq_dists_expr(cents)).alias("subs"))`` over the q0..qW-1
-    quantized scalar columns: per batch, ONE numpy int64 einsum
-    computes every row's subs x k squared-distance table against the
-    codebook (exact integer arithmetic — bitwise-identical to the
-    unrolled expression and the DuckDB oracle; max |q-c| ~ 2^13 so
-    the 8-term sums stay far below 2^63).
+    F.expr(_pq_dists_expr(cents)).alias(name))`` per ``name: cents`` of
+    ``books`` (default: the seeded codebook as ``subs``), in ONE Arrow
+    pass over the q0..qW-1 quantized scalar columns: per batch, one
+    numpy int64 einsum per codebook computes every row's subs x k
+    squared-distance table (exact integer arithmetic — bitwise-
+    identical to the unrolled expression and the DuckDB oracle).
 
     Why a kernel (r15): the 1,024-term literal projection can never
     whole-stage-compile (Janino 64 KB), and Spark RE-ATTEMPTS the
@@ -588,7 +614,7 @@ def pq_dists_pandas(
     eval_pq_recall at sf0.1 with the SAME cached plan, dominated by
     compile attempts + interpreted eval, not data (2k rows).  The
     kernel's plan is tiny and the arithmetic is vectorized; the
-    downstream argmin/LUT projections over ``subs`` are small
+    downstream argmin/LUT projections over the tables are small
     expressions that codegen fine.  This full-table form is for the
     QUERY-SIDE LUTs only (<= n_queries rows by construction): corpus-
     wide paths use :func:`pq_codes_pandas`, which reduces to the code
@@ -599,30 +625,17 @@ def pq_dists_pandas(
     import numpy as np
     import pandas as pd
 
-    cent = np.asarray(
-        cents if cents is not None else _pq_centroids(), dtype=np.int64
+    cents, qcols, shape, keep_fields = _pq_schema(
+        df, books or {"subs": _pq_centroids()}, keep
     )
-    n_subs, _n_k, n_dim = cent.shape
-    qcols = [f"q{i}" for i in range(n_subs * n_dim)]
-    keep = tuple(keep)
-    keep_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keep
-    )
-    schema = f"{keep_fields}, subs array<array<bigint>>"
+    schema = ", ".join(keep_fields + [f"{n} array<array<bigint>>" for n in cents])
 
     def gen(batches):
         for pdf in batches:
-            q = (
-                pdf[qcols]
-                .to_numpy(dtype=np.int64)
-                .reshape(len(pdf), n_subs, n_dim)
-            )
-            diff = q[:, :, None, :] - cent[None, :, :, :]
-            d2 = np.einsum("nskd,nskd->nsk", diff, diff)
+            q = pdf[qcols].to_numpy(dtype=np.int64).reshape(len(pdf), *shape)
             out = {c: pdf[c] for c in keep}
-            out["subs"] = d2.tolist()
+            for name, cent in cents.items():
+                out[name] = _pq_sq_dists(q, cent).tolist()
             yield pd.DataFrame(out)
 
     return df.mapInPandas(gen, schema)
@@ -630,54 +643,45 @@ def pq_dists_pandas(
 
 def pq_codes_pandas(
     df: DataFrame,
-    cents: list[list[list[int]]] | None = None,
+    books: dict | None = None,
     keep: tuple[str, ...] = ("vec_id",),
     with_dist: bool = False,
 ) -> DataFrame:
-    """Corpus-side PQ encode as an Arrow kernel: keep columns +
-    c0..c{S-1} argmin code columns (ties -> first minimum, numpy
-    argmin == ``array_position(subs, array_min(subs))`` — pinned
-    against the expression twin by pytest), plus d0..d{S-1} best
-    squared distances when ``with_dist``.  Same exact int64 math as
-    :func:`pq_dists_pandas`, but the n_subs x k table is reduced to S
-    ints INSIDE the kernel, so the Arrow transfer is 8 ints per row
-    instead of a 128-int nested list — the 100 TB encode shape
-    (measured 800k: 2.2-2.4s vs 3.7s unrolled expression vs 6.5s
-    full-table kernel).  Map-only behind the scan, exactly how FAISS
-    shards PQ encoding."""
+    """Corpus-side PQ encode as an Arrow kernel: keep columns + per
+    ``prefix: cents`` of ``books`` (default: the seeded codebook as
+    ``c``) the {prefix}0..{prefix}{S-1} argmin code columns (ties ->
+    first minimum, numpy argmin == ``array_position(subs,
+    array_min(subs))`` — pinned against the expression twin by
+    pytest), plus d0..d{S-1} best squared distances when ``with_dist``
+    (one codebook).  Same exact int64 math as :func:`pq_dists_pandas`,
+    but the n_subs x k table is reduced to S ints INSIDE the kernel,
+    so the Arrow transfer is 8 ints per row instead of a 128-int
+    nested list — the 100 TB encode shape (measured 800k: 2.2-2.4s vs
+    3.7s unrolled expression vs 6.5s full-table kernel).  Map-only
+    behind the scan, exactly how FAISS shards PQ encoding."""
     import numpy as np
     import pandas as pd
 
-    cent = np.asarray(
-        cents if cents is not None else _pq_centroids(), dtype=np.int64
+    cents, qcols, shape, keep_fields = _pq_schema(
+        df, books or {"c": _pq_centroids()}, keep
     )
-    n_subs, _n_k, n_dim = cent.shape
-    qcols = [f"q{i}" for i in range(n_subs * n_dim)]
-    keep = tuple(keep)
-    keep_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keep
-    )
-    schema = keep_fields + ", " + ", ".join(
-        f"c{j} int" for j in range(n_subs)
-    )
+    if with_dist and len(cents) != 1:
+        raise ValueError("pq_codes_pandas: with_dist takes one codebook")
+    n_subs = shape[0]
+    fields = keep_fields + [f"{p}{j} int" for p in cents for j in range(n_subs)]
     if with_dist:
-        schema += ", " + ", ".join(f"d{j} bigint" for j in range(n_subs))
+        fields += [f"d{j} bigint" for j in range(n_subs)]
+    schema = ", ".join(fields)
 
     def gen(batches):
         for pdf in batches:
-            q = (
-                pdf[qcols]
-                .to_numpy(dtype=np.int64)
-                .reshape(len(pdf), n_subs, n_dim)
-            )
-            diff = q[:, :, None, :] - cent[None, :, :, :]
-            d2 = np.einsum("nskd,nskd->nsk", diff, diff)
-            codes = d2.argmin(axis=2)
+            q = pdf[qcols].to_numpy(dtype=np.int64).reshape(len(pdf), *shape)
             out = {c: pdf[c] for c in keep}
-            for j in range(n_subs):
-                out[f"c{j}"] = codes[:, j].astype("int32")
+            for prefix, cent in cents.items():
+                d2 = _pq_sq_dists(q, cent)
+                codes = d2.argmin(axis=2)
+                for j in range(n_subs):
+                    out[f"{prefix}{j}"] = codes[:, j].astype("int32")
             if with_dist:
                 best = d2.min(axis=2)
                 for j in range(n_subs):
@@ -720,14 +724,8 @@ def pq_train_sums_pandas(
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = (
-                pdf[qcols]
-                .to_numpy(dtype=np.int64)
-                .reshape(len(pdf), n_subs, n_dim)
-            )
-            diff = q[:, :, None, :] - cent[None, :, :, :]
-            d2 = np.einsum("nskd,nskd->nsk", diff, diff)
-            codes = d2.argmin(axis=2)  # ties -> first min, as pq_codes_pandas
+            q = pdf[qcols].to_numpy(dtype=np.int64).reshape(len(pdf), n_subs, n_dim)
+            codes = _pq_sq_dists(q, cent).argmin(axis=2)  # ties -> first min
             out_j, out_s, out_n = [], [], []
             out_sums = [[] for _ in range(n_dim)]
             for j in range(n_subs):

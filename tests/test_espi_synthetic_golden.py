@@ -18,24 +18,31 @@ exercising the provider quirks the stripped files covered —
 and value-exact round-trips through write_parquet / write_csv /
 influx_lines_df, with every expected cell computed here from first
 principles (enum decodes read straight from the XSD-derived dim
-parquet, not through the pipeline under test).
+JSON with pandas, not through the pipeline under test).
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import math
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-ENUM_DIM = "/root/repo/greenbuttonengine_spark/espi/data/espi_enum_dim.parquet"
+ENUM_DIM = (
+    Path(__file__).resolve().parent.parent
+    / "greenbuttonengine_spark" / "espi" / "data" / "espi_enum_dim.json"
+)
 
 # -- independent enum decode (bypasses the pipeline's decode path) ----------
 
-_dim = pq.read_table(ENUM_DIM).to_pandas()
+_dim = pd.DataFrame(
+    json.loads(ENUM_DIM.read_text()), columns=["type", "field", "value", "app_info"]
+)
 
 
 def _decode(field: str, code: int, scope: str = "ReadingType") -> str:

@@ -12,6 +12,12 @@ the seeded-quantizer and BPE-backed queries DO run driver collect()
 jobs at plan-construction time (seed selection / merge training), so
 the sweep costs a couple of minutes, not seconds.
 
+Queries whose oracle or builder reads a file outside the oracle tables
+(``EXTERNAL_INPUTS``) are skipped by name when ``os.path.exists`` says
+that file is absent, and the skipped names are reported as a warning.
+Any other per-query exception or divergence is recorded and the sweep
+goes on, so one broken query cannot hide the rest of the inventory.
+
 Asymmetry rule for integers: a DuckDB float64 against a Spark integer
 column is allowed only when the oracle result actually contains NULLs
 (pandas coerces nullable ints to float on BOTH engines, so the
@@ -21,6 +27,7 @@ serializations agree); otherwise it is the HUGEINT trap and fails.
 from __future__ import annotations
 
 import os
+import warnings
 
 import duckdb
 import pandas as pd
@@ -28,12 +35,16 @@ import pytest
 from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
+from greenbuttonengine_spark.plans.advanced_queries import EGD_XML, GOLDEN_PARQUET
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# oracle-backed queries that read the reference checkout
+EXTERNAL_INPUTS = {"espi_egd_golden_parity": (EGD_XML, GOLDEN_PARQUET)}
 
 
 def _spark_class(dt: T.DataType) -> str:
@@ -111,14 +122,24 @@ def test_oracle_dtype_parity_full_inventory(spark, duck):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     bad: list[str] = []
+    skipped: list[str] = []
     for name, sql in oracles.items():
-        odf = duck.sql(sql).df()
-        schema = qs[name](spark, SF_DIR).schema
+        if not all(os.path.exists(p) for p in EXTERNAL_INPUTS.get(name, ())):
+            skipped.append(name)
+            continue
+        try:
+            odf = duck.sql(sql).df()
+            schema = qs[name](spark, SF_DIR).schema
+        except Exception as ex:  # noqa: BLE001 - record it, sweep the rest
+            bad.append(f"{name}: {type(ex).__name__}: {str(ex)[:300]}")
+            continue
         sclasses = {f.name: _spark_class(f.dataType) for f in schema.fields}
-        assert set(odf.columns) == set(sclasses), (
-            f"{name}: column sets differ: oracle={sorted(odf.columns)} "
-            f"spark={sorted(sclasses)}"
-        )
+        if set(odf.columns) != set(sclasses):
+            bad.append(
+                f"{name}: column sets differ: oracle={sorted(odf.columns)} "
+                f"spark={sorted(sclasses)}"
+            )
+            continue
         for c in odf.columns:
             sc, oc = sclasses[c], _duck_class(odf[c])
             if sc == oc or oc == "empty":
@@ -128,4 +149,6 @@ def test_oracle_dtype_parity_full_inventory(spark, duck):
                 # engines; serializations agree
                 continue
             bad.append(f"{name}.{c}: spark={sc} oracle={oc}")
+    if skipped:
+        warnings.warn(f"external input absent, skipped: {', '.join(skipped)}")
     assert not bad, "dtype divergence (driver hash would mismatch):\n" + "\n".join(bad)

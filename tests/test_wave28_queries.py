@@ -158,7 +158,7 @@ def test_blocked_ivf_bitwise_equals_expression_form(spark):
     blocked = {
         (r.query_id, r.neighbor_id): (r.cosine, r.rank)
         for r in similarity.ivf_topk_blocked(
-            odd, even, k=16, n_centroids=16, n_probe=4
+            odd, even, similarity.FlatSeedCells(16, 4), k=16
         ).collect()
     }
     assert expr == blocked  # keys, exact double cosines, ranks
@@ -218,7 +218,7 @@ def test_blocked_ivf_tiling_and_split_bitwise_invariant(spark, monkeypatch):
         return {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
             for r in similarity.ivf_topk_blocked(
-                odd, even, k=16, n_centroids=16, n_probe=4, **kw
+                odd, even, similarity.FlatSeedCells(16, 4), k=16, **kw
             ).collect()
         }
 
@@ -249,7 +249,7 @@ def test_auto_hot_cell_valve_is_output_invariant(spark):
         return {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
             for r in similarity.ivf_topk_blocked(
-                odd, even, k=16, n_centroids=16, n_probe=4, **kw
+                odd, even, similarity.FlatSeedCells(16, 4), k=16, **kw
             ).collect()
         }
 
@@ -299,7 +299,7 @@ def test_blocked_ivf_property_matches_expression_form(spark):
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         corpus = df.filter("vec_id % 2 = 1")
         queries = df.filter("vec_id % 2 = 0")
-        kw = dict(k=k, n_centroids=n_cells, n_probe=n_probe)
+        cells = similarity.FlatSeedCells(n_cells, n_probe)
         expr = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
             for r in similarity.ivf_topk(
@@ -309,7 +309,7 @@ def test_blocked_ivf_property_matches_expression_form(spark):
         }
         blocked = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-            for r in similarity.ivf_topk_blocked(corpus, queries, **kw).collect()
+            for r in similarity.ivf_topk_blocked(corpus, queries, cells, k=k).collect()
         }
         assert expr == blocked
 
@@ -328,7 +328,9 @@ def test_ivf_empty_corpus_returns_empty(spark):
         similarity.ivf_topk(
             empty, queries, similarity.SeededQuantizer(4), k=3, n_probe=2
         ),
-        similarity.ivf_topk_blocked(empty, queries, k=3, n_centroids=4, n_probe=2),
+        similarity.ivf_topk_blocked(
+            empty, queries, similarity.FlatSeedCells(4, 2), k=3
+        ),
     ):
         assert out.count() == 0
         assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
@@ -523,7 +525,7 @@ def test_zero_norm_vectors_dropped_identically(spark):
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         corpus = df.filter("vec_id % 2 = 1")
         queries = df.filter("vec_id % 2 = 0")
-        kw = dict(k=k, n_centroids=n_cells, n_probe=n_probe)
+        cells = similarity.FlatSeedCells(n_cells, n_probe)
         expr = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
             for r in similarity.ivf_topk(
@@ -533,7 +535,7 @@ def test_zero_norm_vectors_dropped_identically(spark):
         }
         blocked = {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-            for r in similarity.ivf_topk_blocked(corpus, queries, **kw).collect()
+            for r in similarity.ivf_topk_blocked(corpus, queries, cells, k=k).collect()
         }
         assert expr == blocked
         brute = {

@@ -125,7 +125,9 @@ def test_hier_empty_corpus_returns_empty(spark):
     queries = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    out = similarity.ivf_topk_hier_blocked(empty, queries, k=3)
+    out = similarity.ivf_topk_blocked(
+        empty, queries, similarity.HierSeedCells(), k=3
+    )
     assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
 
@@ -229,10 +231,10 @@ def test_hier_auto_hot_cell_valve_is_output_invariant(spark):
     def run(**kw):
         return {
             (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-            for r in similarity.ivf_topk_hier_blocked(
+            for r in similarity.ivf_topk_blocked(
                 emb, emb.filter(F.col("vec_id") < 16),
-                k=K, n_cells=C, n_super=S,
-                super_probe=SUPER_PROBE, cells_per_super=CELLS_PER_SUPER,
+                similarity.HierSeedCells(C, S, SUPER_PROBE, CELLS_PER_SUPER),
+                k=K,
                 **kw,
             ).collect()
         }
@@ -266,25 +268,25 @@ def test_manual_cell_split_composes_with_hot_valve(spark, monkeypatch):
     captured = {}
     orig = S._blocked_score_window
 
-    def spy(q_, c_, k_, d_, keys):
+    def spy(q_, c_, k_, keys):
         captured["fanout"] = {
             r["cell"]: r["n"]
             for r in q_.groupBy("cell").agg(F.count("*").alias("n")).collect()
         }
         captured["keys"] = keys
-        return orig(q_, c_, k_, d_, keys)
+        return orig(q_, c_, k_, keys)
 
     monkeypatch.setattr(S, "_blocked_score_window", spy)
 
     baseline = {
         (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-        for r in S._blocked_score_tail(q, c, 2, 2).collect()
+        for r in S._blocked_score_tail(q, c, 2).collect()
     }
 
     out = {
         (r.query_id, r.neighbor_id): (r.cosine, r.rank)
         for r in S._blocked_score_tail(
-            q, c, 2, 2, cell_split=2, cell_splits={0: 3}
+            q, c, 2, cell_split=2, cell_splits={0: 3}
         ).collect()
     }
     # hot cell 0 -> its own (larger) factor; unlisted cell 1 -> the
@@ -297,7 +299,7 @@ def test_manual_cell_split_composes_with_hot_valve(spark, monkeypatch):
     out2 = {
         (r.query_id, r.neighbor_id): (r.cosine, r.rank)
         for r in S._blocked_score_tail(
-            q, c, 2, 2, cell_split=3, cell_splits={0: 2}
+            q, c, 2, cell_split=3, cell_splits={0: 2}
         ).collect()
     }
     assert captured["fanout"] == {0: 3, 1: 3}

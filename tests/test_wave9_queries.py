@@ -166,6 +166,7 @@ def test_pq_kernels_match_expression_twins(spark, sf_dir):
 
     from greenbuttonengine_spark.plans.wave9_queries import (
         _PQ_SUBS,
+        _pq_centroids,
         _pq_dists_expr,
         _pq_quantized,
         pq_code_cols,
@@ -194,3 +195,27 @@ def test_pq_kernels_match_expression_twins(spark, sf_dir):
     for r in kern:
         for j in range(_PQ_SUBS):
             assert r[f"d{j}"] == want_subs[r.vec_id][j][r[f"c{j}"]]
+
+    # several codebooks in one kernel pass, at the trained 16 x 4
+    # geometry: every output must equal the expression twin of its OWN
+    # codebook (a kernel that mixes the books up fails here)
+    book_a = _pq_centroids(subs=16, k=16, dim=4)
+    book_b = [[[-x for x in c] for c in sub] for sub in book_a]
+    dists2 = pq_dists_pandas(q, {"subs_a": book_a, "subs_b": book_b}).collect()
+    codes2 = {
+        r.vec_id: r
+        for r in pq_codes_pandas(q, {"ca": book_a, "cb": book_b}).collect()
+    }
+    for col, prefix, book in (("subs_a", "ca", book_a), ("subs_b", "cb", book_b)):
+        want = {
+            r.vec_id: r.subs
+            for r in q.select(
+                "vec_id", F.expr(_pq_dists_expr(book)).alias("subs")
+            ).collect()
+        }
+        assert {r.vec_id: r[col] for r in dists2} == want
+        assert set(codes2) == set(want)
+        for vid, tables in want.items():
+            assert tuple(codes2[vid][f"{prefix}{j}"] for j in range(16)) == tuple(
+                min(range(16), key=lambda s: (t[s], s)) for t in tables
+            )

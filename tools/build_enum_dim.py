@@ -11,21 +11,20 @@ Reimplements the reference's build-time dictionary compilation
   filter value NOT NULL AND (type='ReadingType' OR
   field='QualityOfReading') (build.rs:133-172)
 
-Output: a small parquet dim table consumed at runtime via a broadcast
-join (the Spark analog of the reference's phf static map,
-gb_type_details.rs:8-31).
+Output: a small JSON table of ``[type, field, value, app_info]`` rows,
+loaded once per process by ``espi/schemas.enum_maps`` and turned into
+literal SQL maps (the Spark analog of the reference's phf static map,
+gb_type_details.rs:8-31) and the CLI fast path's dict lookups.
 
-Usage: python tools/build_enum_dim.py [xsd_path] [out_parquet]
+Usage: python tools/build_enum_dim.py [xsd_path] [out_json]
 """
 
 from __future__ import annotations
 
+import json
 import sys
 import xml.etree.ElementTree as ET
 from pathlib import Path
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 DEFAULT_XSD = "/root/reference/lib/personalgreenbutton/preprocessing/espi.xsd.xml"
 DEFAULT_OUT = (
@@ -33,7 +32,7 @@ DEFAULT_OUT = (
     / "greenbuttonengine_spark"
     / "espi"
     / "data"
-    / "espi_enum_dim.parquet"
+    / "espi_enum_dim.json"
 )
 
 XS = "{http://www.w3.org/2001/XMLSchema}"
@@ -115,31 +114,16 @@ def main() -> None:
     out_path = Path(sys.argv[2]) if len(sys.argv) > 2 else DEFAULT_OUT
     rows = parse_xsd(xsd)
     out_path.parent.mkdir(parents=True, exist_ok=True)
-    table = pa.table(
-        {
-            "type": [r[0] for r in rows],
-            "field": [r[1] for r in rows],
-            "value": pa.array([r[2] for r in rows], type=pa.int32()),
-            "app_info": [r[3] for r in rows],
-            "documentation": [r[4] for r in rows],
-        }
-    )
-    pq.write_table(table, out_path, compression="snappy")
-    print(f"wrote {len(rows)} enum rows -> {out_path}")
-    # JSON twin for the pyspark-/pyarrow-free CLI fast path
-    # (espi/fastpath.py): stdlib json loads in ~1 ms vs ~300 ms for a
-    # pyarrow import, which matters under the <200 ms single-file bar.
-    import json
-
-    json_path = out_path.with_suffix(".json")
-    with open(json_path, "w") as fh:
+    # stdlib json loads in ~1 ms vs ~300 ms for a pyarrow import, which
+    # matters for the CLI fast path's single-file conversions
+    with open(out_path, "w") as fh:
         json.dump(
             [[r[0], r[1], r[2], r[3]] for r in rows],
             fh,
             ensure_ascii=False,
             separators=(",", ":"),
         )
-    print(f"wrote JSON twin -> {json_path}")
+    print(f"wrote {len(rows)} enum rows -> {out_path}")
 
 
 if __name__ == "__main__":

@@ -119,7 +119,7 @@ def measure_ann_miner_scale() -> None:
     for run in range(2):
         t0 = time.time()
         cand = similarity.ivf_topk_blocked(
-            odd, even, k=_ANN_CAND_K, n_centroids=1024, n_probe=4,
+            odd, even, similarity.FlatSeedCells(1024, 4), k=_ANN_CAND_K,
         )
         u = cand.select(
             F.col("query_id").alias("src_id"),

@@ -77,7 +77,7 @@ def main() -> None:
 
     def miner(cell_split: int):
         cand = similarity.ivf_topk_blocked(
-            odd, even, k=_ANN_CAND_K, n_centroids=CELLS, n_probe=PROBE,
+            odd, even, similarity.FlatSeedCells(CELLS, PROBE), k=_ANN_CAND_K,
             cell_split=cell_split,
         )
         u = cand.select(

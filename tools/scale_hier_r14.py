@@ -142,18 +142,12 @@ def main() -> None:
 
     def run_flat():
         return similarity.ivf_topk_blocked(
-            corpus, queries, k=K, n_centroids=CELLS, n_probe=4
+            corpus, queries, similarity.FlatSeedCells(CELLS, 4), k=K
         )
 
     def run_hier():
-        return similarity.ivf_topk_hier_blocked(
-            corpus,
-            queries,
-            k=K,
-            n_cells=CELLS,
-            n_super=SUPERS,
-            super_probe=2,
-            cells_per_super=2,
+        return similarity.ivf_topk_blocked(
+            corpus, queries, similarity.HierSeedCells(CELLS, SUPERS, 2, 2), k=K
         )
 
     walls: dict[str, list[float]] = {}

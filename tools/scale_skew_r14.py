@@ -161,7 +161,7 @@ def part_c(spark) -> None:
         for trial in range(2):
             t0 = time.time()
             similarity.ivf_topk_blocked(
-                emb, queries, k=10, n_centroids=CELLS, n_probe=4,
+                emb, queries, similarity.FlatSeedCells(CELLS, 4), k=10,
                 hot_cell_rows=hot,
             ).write.format("noop").mode("overwrite").save()
             walls.append(time.time() - t0)
