@@ -27,11 +27,7 @@ def _registry():
     from greenbuttonengine_spark.plans import core_queries  # noqa: F401
     from greenbuttonengine_spark.plans import relational_queries  # noqa: F401
     from greenbuttonengine_spark.plans import advanced_queries  # noqa: F401
-
-    try:
-        from greenbuttonengine_spark.plans import extension_queries  # noqa: F401
-    except ImportError:
-        pass
+    from greenbuttonengine_spark.plans import extension_queries  # noqa: F401
     from greenbuttonengine_spark.plans import search_queries  # noqa: F401
     from greenbuttonengine_spark.plans import complex_queries  # noqa: F401
     from greenbuttonengine_spark.plans import tpch_queries  # noqa: F401

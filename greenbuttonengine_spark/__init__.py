@@ -19,8 +19,7 @@ Layout:
     espi         the Green Button pipeline (schemas, parse, denormalize,
                  driver-only fast path)
     plans        the declared query inventory and its DuckDB oracles
-    sinks        csv / parquet / influx writers, corpus shards, charts,
-                 PQ index
+    sinks        csv / parquet / influx writers and charts
     extensions   dedup, similarity, text stats, multimodal, quality,
                  sampling and other corpus operators
     streaming    incremental ingest, admission, bronze/silver tables

@@ -313,23 +313,19 @@ def _parse_entry(
 
 
 def iter_espi_stream(source, source_file: str):
-    """Memory-bounded streaming parse (``ET.XMLPullParser`` fed 16 KiB
-    at a time, as ``ET.iterparse`` would): yields PARSED_SCHEMA row dicts
-    per completed ``<entry>``, never holding more than one entry subtree
-    in memory — the giant-file scale path (a multi-GB provider export
-    parses in O(one entry) executor memory, where ``ET.fromstring``
-    would hold a DOM ~5-10x the raw bytes).
+    """The parser behind :func:`parse_espi_feed`: ``ET.XMLPullParser``
+    fed 16 KiB at a time, yielding PARSED_SCHEMA row dicts per completed
+    ``<entry>`` and dropping each finished entry subtree.
 
     ``source`` is a file-like object (text mode preserves the
     reference's strict-UTF-8 read: a bad byte raises UnicodeDecodeError
     mid-stream and becomes the file's error row).
 
-    Failure atomicity is RELATIONAL, not buffered: a mid-file error
-    yields a ``row_kind='error'`` row after whatever rows already
-    streamed out, and the denormalize plan gives an error file no
-    dimension row, so the inner join drops its partial rows (lib.rs:32-50
-    fail-the-file semantics) — the parser never needs to retract, and
-    memory stays bounded.
+    A mid-file error yields a ``row_kind='error'`` row after whatever
+    rows already streamed out; :func:`parse_espi_feed` keeps only that
+    error row, and the denormalize plan drops an error file's partial
+    rows anyway (it gets no dimension row; lib.rs:32-50 fail-the-file
+    semantics).
     """
     yielded = 0
     try:

@@ -10,9 +10,10 @@ Everything here is designed 100 TB-first:
 * similarity search has a brute-force baseline (correct, broadcast
   queries x corpus, no shuffle of the corpus) and an LSH-bucketed
   scale path.
-* all hot-path math is native Catalyst (higher-order array functions,
-  xxhash64, bit ops); Python appears only in the multimodal decode
-  stubs where an external codec would run.
+* hot-path math is native Catalyst (higher-order array functions,
+  xxhash64, bit ops); Python runs only in batch-at-a-time Arrow
+  kernels (mapInPandas / mapInArrow), such as the multimodal feature
+  extractors and the blocked similarity scorers.
 """
 
 from . import dedup, similarity, textstats, multimodal  # noqa: F401

@@ -2,12 +2,10 @@
 with typed metadata.
 
 The container has no codec libraries (PIL/librosa/ffmpeg).  Decode is
-REAL for uncompressed 24-bit BMP — a pure-numpy encoder/decoder pair
-(``encode_bmp``/``decode_bmp``), so the resize path genuinely decodes,
-resamples and re-encodes pixels with zero dependencies.  Other formats
-raise NotImplementedError with install guidance, or substitute a
-deterministic fake when ``allow_fake=True``.  The Spark-side plumbing
-is real and tested either way:
+REAL for PCM16 WAV (``encode_wav``/``decode_wav``, pure numpy); image
+features substitute a deterministic fake when ``allow_fake=True`` and
+raise NotImplementedError without a codec otherwise.  The Spark-side
+plumbing is real and tested either way:
 
 * schema: (id, media binary, media_meta struct<kind,width,height,n_bytes>)
 * partition-aware batch processing via mapInPandas (Arrow binary
@@ -32,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 try:  # the real decoder dependency is absent in this environment
-    from PIL import Image  # type: ignore  # noqa: F401
+    import PIL  # type: ignore  # noqa: F401
 
     _HAS_PIL = True
 except ImportError:
@@ -69,189 +67,6 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text", id_col: str = "do
         F.length(blob).cast("long").alias("n_bytes"),
     )
     return docs.select(F.col(id_col), blob.alias("media"), meta.alias("media_meta"))
-
-
-def encode_bmp(rgb: np.ndarray) -> bytes:
-    """Encode an (H, W, 3) uint8 RGB array as an uncompressed 24-bit
-    BI_RGB BMP — pure numpy, no codec library.  BMP stores rows
-    bottom-up in BGR order, each row padded to a 4-byte boundary."""
-    import struct
-
-    h, w, _ = rgb.shape
-    row_bytes = (w * 3 + 3) & ~3
-    img_size = row_bytes * h
-    padded = np.zeros((h, row_bytes), dtype=np.uint8)
-    padded[:, : w * 3] = rgb[::-1, :, ::-1].reshape(h, w * 3)  # flip rows, RGB->BGR
-    header = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0)
-    return header + info + padded.tobytes()
-
-
-def decode_bmp(blob: bytes) -> np.ndarray:
-    """Decode an uncompressed 24-bit BI_RGB BMP to an (H, W, 3) uint8
-    RGB array — pure numpy.  Supports the common bottom-up layout and
-    the top-down (negative height) variant; anything else (palette,
-    RLE, 32-bit) raises ValueError so callers fall back to a real
-    codec library."""
-    import struct
-
-    if blob[:2] != b"BM" or len(blob) < 54:
-        raise ValueError("not a BMP file")
-    (pix_off,) = struct.unpack_from("<I", blob, 10)
-    hdr_size, w, h = struct.unpack_from("<Iii", blob, 14)
-    planes, bpp, compression = struct.unpack_from("<HHI", blob, 26)
-    if hdr_size < 40 or bpp != 24 or compression != 0:
-        raise ValueError(f"unsupported BMP variant (bpp={bpp}, compression={compression})")
-    top_down = h < 0
-    h = abs(h)
-    row_bytes = (w * 3 + 3) & ~3
-    data = np.frombuffer(blob, dtype=np.uint8, count=row_bytes * h, offset=pix_off)
-    rows = data.reshape(h, row_bytes)[:, : w * 3].reshape(h, w, 3)
-    if not top_down:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR -> RGB
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(tag: bytes, payload: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(payload))
-        + tag
-        + payload
-        + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(rgb: np.ndarray) -> bytes:
-    """Encode an (H, W, 3) uint8 RGB array as a truecolor 8-bit PNG —
-    stdlib zlib + numpy only, no codec library.  Scanlines use filter
-    type 0 (None); zlib's DEFLATE still compresses the synthetic /
-    natural-image byte stream well, and every conforming reader
-    accepts it."""
-    import struct
-    import zlib
-
-    h, w, _ = rgb.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = np.zeros((h, 1 + w * 3), dtype=np.uint8)
-    raw[:, 1:] = rgb.reshape(h, w * 3)  # filter byte 0 per scanline
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw.tobytes(), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png(blob: bytes) -> np.ndarray:
-    """Decode an 8-bit non-interlaced PNG (grayscale / RGB / RGBA,
-    alpha dropped) to an (H, W, 3) uint8 RGB array — stdlib zlib +
-    numpy.  All five scanline filters are unfiltered (Sub via per-lane
-    cumsum mod 256; Average/Paeth sequentially per the spec).
-    Unsupported variants (16-bit, palette, interlaced) raise
-    ValueError so callers fall through to a real codec library."""
-    import struct
-    import zlib
-
-    if blob[:8] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    pos, ihdr, idat = 8, None, b""
-    while pos + 8 <= len(blob):
-        (length,) = struct.unpack(">I", blob[pos : pos + 4])
-        tag = blob[pos + 4 : pos + 8]
-        payload = blob[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", payload)
-        elif tag == b"IDAT":
-            idat += payload
-        elif tag == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color, _comp, _filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 6: 4}.get(color)
-    if depth != 8 or channels is None or interlace != 0:
-        raise ValueError(f"unsupported PNG variant (depth={depth}, "
-                         f"color={color}, interlace={interlace})")
-    bpp = channels
-    stride = w * channels
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
-    if raw.size != h * (1 + stride):
-        raise ValueError("PNG payload size mismatch")
-    raw = raw.reshape(h, 1 + stride)
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        ftype, line = int(raw[y, 0]), raw[y, 1:].copy()
-        if ftype == 0:
-            rec = line
-        elif ftype == 1:  # Sub: per-lane cumulative sum mod 256
-            rec = line.reshape(-1, bpp).cumsum(axis=0, dtype=np.int64) % 256
-            rec = rec.astype(np.uint8).reshape(stride)
-        elif ftype == 2:  # Up
-            rec = line + prev
-        elif ftype == 3:  # Average (sequential: depends on left neighbor)
-            rec = line
-            p = prev.astype(np.int64)
-            for i in range(stride):
-                left = int(rec[i - bpp]) if i >= bpp else 0
-                rec[i] = (int(line[i]) + ((left + int(p[i])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            rec = line
-            p = prev.astype(np.int64)
-            for i in range(stride):
-                a = int(rec[i - bpp]) if i >= bpp else 0
-                b = int(p[i])
-                c = int(p[i - bpp]) if i >= bpp else 0
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                rec[i] = (int(line[i]) + pred) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter {ftype}")
-        out[y] = rec
-        prev = out[y]
-    px = out.reshape(h, w, channels)
-    if channels == 1:
-        return np.repeat(px, 3, axis=2).copy()
-    return px[:, :, :3].copy()
-
-
-def decode_image(blob: bytes) -> np.ndarray:
-    """Decode an image blob to an (H, W, 3) uint8 RGB array.
-
-    Uncompressed 24-bit BMP and 8-bit non-interlaced PNG decode
-    natively (pure numpy + stdlib zlib, always available); variants
-    the native paths reject (palette BMP, 16-bit/interlaced PNG) fall
-    THROUGH to Pillow when present — the dispatch keeps one call site
-    whatever the cluster image provides."""
-    if blob[:2] == b"BM":
-        try:
-            return decode_bmp(blob)
-        except ValueError:
-            if not _HAS_PIL:
-                raise  # corrupt or unsupported-variant BMP, no codec
-    if blob[:8] == _PNG_SIG:
-        try:
-            return decode_png(blob)
-        except ValueError:
-            if not _HAS_PIL:
-                raise  # unsupported PNG variant, no codec
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "Only BMP and 8-bit PNG decode without a codec library; "
-            "install `pillow` on the cluster image for JPEG/..., or "
-            "use extract_features(..., allow_fake=True) for the "
-            "deterministic stand-in path."
-        )
-    import io
-
-    return np.asarray(Image.open(io.BytesIO(blob)).convert("RGB"))  # pragma: no cover
 
 
 def extract_features(
@@ -337,121 +152,6 @@ def sample_frames(
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media", T.BinaryType(), False),
-        T.StructField(
-            "media_meta",
-            T.StructType(
-                [
-                    T.StructField("kind", T.StringType(), False),
-                    T.StructField("width", T.IntegerType(), False),
-                    T.StructField("height", T.IntegerType(), False),
-                    T.StructField("n_bytes", T.LongType(), False),
-                ]
-            ),
-            False,
-        ),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    allow_fake: bool = True,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Resize each image blob to (width, height) via mapInPandas.
-
-    Real path: BMP and 8-bit PNG blobs decode natively (pure numpy +
-    stdlib zlib, see decode_bmp / decode_png), nearest-neighbor
-    resample per axis, re-encode in the same format — genuinely
-    decoded pixels, no codec library needed.  Other formats need
-    Pillow (absent here); with ``allow_fake=True`` they fall back to
-    deterministic byte resampling — same Arrow batch shape, same
-    output schema, so a richer codec changes ONE branch, not the
-    plumbing.
-
-    Scale: a narrow per-row transform in the scan stage; the resized
-    blob (typically much smaller) replaces the original before any
-    wide operation, shrinking every downstream shuffle.
-    """
-    n_out = width * height
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs, metas = [], []
-            for blob in pdf["media"]:
-                # BMP magic is only 2 bytes: a non-BMP blob can start
-                # with 'BM' by chance (2^-16/doc — ~8 docs per 500k
-                # corpus), and real BMPs can be truncated or be
-                # variants the numpy path rejects.  Decode failures
-                # fall THROUGH to the fake/PIL path instead of
-                # aborting the whole job inside mapInPandas.
-                rgb, kind, encoder = None, None, None
-                if blob[:2] == b"BM":
-                    try:
-                        rgb = decode_bmp(bytes(blob))
-                        kind, encoder = "image/bmp", encode_bmp
-                    except ValueError:
-                        rgb = None
-                elif bytes(blob[:8]) == _PNG_SIG:
-                    try:
-                        rgb = decode_png(bytes(blob))
-                        kind, encoder = "image/png", encode_png
-                    except ValueError:
-                        rgb = None
-                if rgb is not None:
-                    yi = (np.arange(height) * rgb.shape[0] // height).clip(
-                        0, rgb.shape[0] - 1
-                    )
-                    xi = (np.arange(width) * rgb.shape[1] // width).clip(
-                        0, rgb.shape[1] - 1
-                    )
-                    out_blob = encoder(rgb[yi][:, xi])
-                    blobs.append(out_blob)
-                    metas.append(
-                        {
-                            "kind": kind,
-                            "width": width,
-                            "height": height,
-                            "n_bytes": len(out_blob),
-                        }
-                    )
-                    continue
-                if not allow_fake and not _HAS_PIL:
-                    raise NotImplementedError(
-                        "Resize of non-BMP/non-8-bit-PNG formats requires Pillow; install `pillow` "
-                        "on the cluster image, or pass allow_fake=True "
-                        "for the deterministic stand-in path (BMP inputs "
-                        "always take the real decode path)."
-                    )
-                arr = np.frombuffer(blob, dtype=np.uint8)
-                idx = (np.arange(n_out) * max(len(arr), 1) // n_out).clip(
-                    0, max(len(arr) - 1, 0)
-                )
-                out = arr[idx] if len(arr) else np.zeros(n_out, dtype=np.uint8)
-                blobs.append(out.tobytes())
-                metas.append(
-                    {
-                        "kind": "image/fake-resized",
-                        "width": width,
-                        "height": height,
-                        "n_bytes": n_out,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "media": blobs, "media_meta": metas}
-            )
-
-    return media.select(F.col(id_col), "media").mapInPandas(
-        batches, schema=RESIZED_SCHEMA
-    )
-
-
 AUDIO_FRAME = 400  # samples per analysis frame (25 ms at 16 kHz)
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -469,8 +169,7 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     """Encode a 1-D int16 sample array as a canonical RIFF/WAVE PCM16
-    mono file — pure numpy/struct, no codec library (the audio analog
-    of :func:`encode_bmp`)."""
+    mono file — pure numpy/struct, no codec library."""
     import struct
 
     pcm = np.asarray(samples, dtype="<i2").tobytes()

@@ -814,17 +814,6 @@ def pq_quant_with_cell(emb: DataFrame, cell_scores) -> DataFrame:
     )
 
 
-def pq_encode_codes(emb: DataFrame, cell_scores) -> DataFrame:
-    """(vec_id, cell, c0..c7) — the ONE IVF-PQ encode path (coarse
-    Voronoi cell + per-subspace argmin codes), shared by the inline
-    query (plans/wave13_queries.py ann_ivf_pq_topk) and the
-    materialized index sink (sinks/pq_index.py) so the two paths
-    cannot drift (tests/test_pq_index.py pins their parity)."""
-    return pq_codes_pandas(
-        pq_quant_with_cell(emb, cell_scores), keep=("vec_id", "cell")
-    )
-
-
 def _pq_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, q0..q63 quantized BIGINT scalars) scan projection
     (one selectExpr parse — r16)."""

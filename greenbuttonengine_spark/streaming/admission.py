@@ -26,6 +26,10 @@ since store-first would drop the batch's rows forever on the same
 crash).  The bronze module's epoch-commit pattern
 (`streaming/bronze.py`) is the exactly-once upgrade.  Store appends
 are idempotent-by-distinct at read time.
+
+Near-duplicate admission against a persistent LSH band store is the
+batch operator ``extensions/dedup.incremental_near_dedup`` (query
+``dedup_incremental_near``); no stream here wires it.
 """
 
 from __future__ import annotations
@@ -36,12 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..extensions.dedup import (
-    band_buckets,
-    incremental_dedup,
-    incremental_near_dedup,
-    minhash_signatures,
-)
+from ..extensions.dedup import incremental_dedup
 from ..sources.text_corpus import DOCUMENTS_SCHEMA, stream_jsonl
 
 
@@ -112,96 +111,6 @@ def start_admission_stream(
         )
         accepted.write.mode("append").parquet(accepted_dir)
         accepted_ids.select("fingerprint").write.mode("append").parquet(store_dir)
-
-    writer = good.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_near_dup_admission_stream(
-    spark: SparkSession,
-    drop_dir: str,
-    accepted_dir: str,
-    band_store_dir: str,
-    sig_store_dir: str,
-    checkpoint_dir: str,
-    schema=DOCUMENTS_SCHEMA,
-    threshold: float = 0.8,
-    num_perm: int = 32,
-    bands: int = 8,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """NEAR-dup streaming admission: like
-    :func:`start_admission_stream`, but each micro-batch is LSH-probed
-    against the accepted corpus's persistent band store and verified
-    by MinHash signature agreement (``incremental_near_dedup``) — the
-    continuous-crawl path where a re-crawled page differs by a date
-    stamp or ad block and exact fingerprints never match.
-
-    State is TWO parquet tables keyed by the accepted corpus:
-
-    * ``band_store_dir`` — (band_idx, band_hash, doc_id) LSH buckets;
-      at scale, bucket by exactly (band_idx, band_hash) — the full
-      join key — so the store never shuffles and each micro-batch's
-      probe co-locates (plan-asserted in test_bucketing.py).
-    * ``sig_store_dir`` — (doc_id, sig) MinHash signatures, touched
-      only for band-collision candidates (semi-pruned join).
-
-    Both grow one row-set per ACCEPTED doc — state is linear in the
-    admitted corpus, never in the crawl.  Failure posture matches the
-    exact stream: corpus-first write order, so a crash between writes
-    re-admits one batch (downstream dedup removes it; replay after
-    the store write classifies everything near_dup_of_corpus — never
-    silent loss).  Batch contract: one row per doc_id (physical
-    double-delivery is collapsed by an exact (doc_id, text) distinct
-    before signing; same-id-different-text is an upstream error).
-    """
-    good, _errors = stream_jsonl(spark, drop_dir, schema=schema)
-
-    def admit(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.columns:
-            return
-        sess = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id", "text"])
-        store_bands = _read_store(
-            sess, band_store_dir, "band_idx int, band_hash bigint, doc_id bigint"
-        )
-        store_sigs = _read_store(
-            sess, sig_store_dir, "doc_id bigint, sig array<bigint>"
-        )
-        # signatures feed the verdict pipeline AND the store append —
-        # checkpoint once (eager: reused across three writes)
-        sigs = minhash_signatures(batch, num_perm=num_perm).localCheckpoint()
-        verdicts = incremental_near_dedup(
-            batch,
-            store_bands,
-            store_sigs,
-            threshold=threshold,
-            num_perm=num_perm,
-            bands=bands,
-            batch_sigs=sigs,
-        ).localCheckpoint()
-        acc_ids = verdicts.filter(F.col("verdict") == "accept").select("doc_id")
-        batch.join(acc_ids, "doc_id", "left_semi").write.mode("append").parquet(
-            accepted_dir
-        )
-        acc_sigs = sigs.join(acc_ids, "doc_id", "left_semi")
-        # sig store BEFORE band store: bands are the probe key, so the
-        # store must never hold bands whose signatures are missing — a
-        # crash between the writes in THAT order would make replayed
-        # docs band-collide with themselves, find no signature to
-        # verify against, and be re-accepted with every store row
-        # duplicated forever.  Sigs-without-bands (a crash in this
-        # order) are harmless orphans: undiscoverable via any probe,
-        # and the replayed batch re-accepts once (corpus-first posture,
-        # downstream exact dedup removes it) then repairs both stores.
-        acc_sigs.write.mode("append").parquet(sig_store_dir)
-        band_buckets(acc_sigs, num_perm=num_perm, bands=bands).write.mode(
-            "append"
-        ).parquet(band_store_dir)
 
     writer = good.writeStream.foreachBatch(admit).option(
         "checkpointLocation", checkpoint_dir

@@ -1,5 +1,8 @@
-"""Silver keyed-state table: streaming CDC upsert (the lakehouse
-MERGE analog) with copy-on-write at BUCKET granularity.
+"""Silver keyed-state table: CDC upsert (the lakehouse MERGE analog)
+with copy-on-write at BUCKET granularity.  :func:`apply_cdc_batch`
+merges one micro-batch; a stream wires it as its foreachBatch, whose
+epoch ids are monotonic per checkpoint, which is what the marker's
+exactly-once guard keys on.
 
 ``bronze.py`` gives exactly-once append; this maintains CURRENT STATE
 per key — the "latest row wins, deletes drop the key" table every CDC
@@ -38,7 +41,6 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 _MARKER = "_current"
 
@@ -320,37 +322,3 @@ def _cleanup_unreferenced(table_dir: str, buckets: dict, epoch_id: int) -> None:
             continue
         if gen_epoch <= epoch_id - _GEN_RETENTION_EPOCHS:
             shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
-
-
-def start_cdc_upsert_stream(
-    spark: SparkSession,
-    source: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema,
-    key_cols: list[str],
-    seq_col: str,
-    n_buckets: int = 16,
-    op_col: str | None = None,
-    available_now: bool = False,
-    tombstone_retention_epochs: int | None = None,
-) -> StreamingQuery:
-    """Wire ``apply_cdc_batch`` as the foreachBatch of a CDC stream.
-    foreachBatch epoch ids are monotonic per checkpoint, which is what
-    the marker's exactly-once guard keys on."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.columns:
-            return
-        apply_cdc_batch(
-            batch, table_dir, schema, key_cols, seq_col, epoch_id,
-            n_buckets=n_buckets, op_col=op_col,
-            tombstone_retention_epochs=tombstone_retention_epochs,
-        )
-
-    writer = source.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

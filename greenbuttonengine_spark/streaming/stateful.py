@@ -15,6 +15,8 @@ Streaming primitives:
                           gap — the streaming analog of the batch
                           sessionize_events query.
 
+Stream-stream interval joins live in ``joins.py``.
+
 State scale notes: state is partitioned by the grouping key across
 executors; :func:`use_rocksdb_state_store` switches the provider to the
 bundled RocksDB store (state spills off-heap/disk — required once keyed
@@ -278,63 +280,3 @@ def start_trending_stream(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
-
-
-def click_purchase_join_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "2 hours",
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: every click pairs with
-    the same user's purchases that occur within ``horizon`` AFTER the
-    click — the streaming attribution/conversion feed.
-
-    Both sides carry event-time watermarks and the join condition
-    bounds purchase time to [click_ts, click_ts + horizon], so Spark
-    can evict buffered state as the watermarks advance: click state is
-    held ``horizon`` past its event time (a purchase can still arrive
-    that late), purchase state only to the watermark — the exact
-    bounded-state contract that makes stream-stream joins viable
-    indefinitely.  Inner join: unmatched clicks simply age out (use
-    leftOuter with the same condition to emit them with NULLs once
-    provably unmatched).
-
-    Emits (user_id, click_id, click_ts, purchase_id, purchase_ts,
-    seconds_to_purchase).
-    """
-    c = (
-        clicks.withWatermark("ts", watermark)
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    p = (
-        purchases.withWatermark("ts", watermark)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        ),
-    )
-    return joined.select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "click_ts",
-        "purchase_id",
-        "purchase_ts",
-        (
-            F.col("purchase_ts").cast("long") - F.col("click_ts").cast("long")
-        ).alias("seconds_to_purchase"),
-    )

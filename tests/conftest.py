@@ -36,3 +36,42 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_correct_dir():
     return SF_CORRECT
+
+
+@pytest.fixture(scope="session")
+def egd_feed():
+    """Writer of an EGD-shaped export: ``egd_feed(directory, costs=True)``
+    writes ``directory/egd_gas.xml`` and returns its path.  One daily
+    gas series (20 readings, the gas reading type), the US DST rules
+    360E2000 / B40E2000 and ten readings around each edge of the 2024
+    window, which the reference's weekday decoding puts at 2024-03-12
+    and 2024-11-05, 02:00.  ``costs=False`` leaves out the cost tags,
+    as the real EGD export does."""
+    import calendar
+    from pathlib import Path
+
+    from tests.test_espi_synthetic_golden import RT_GAS, _reading, make_feed
+
+    def write(directory, costs: bool = True) -> str:
+        day = 86400
+        firsts = (calendar.timegm((2024, 3, 5, 5, 0, 0)),
+                  calendar.timegm((2024, 10, 29, 4, 0, 0)))
+        readings = [
+            _reading(t0 + k * day, day, 1000 + 37 * k,
+                     cost=250000 + 1111 * k if costs else None)
+            for t0 in firsts
+            for k in range(10)
+        ]
+        xml = make_feed("myaccount.egd.example.com", -18000, [{
+            "mr_id": "MRG1", "rt_id": "RTG1", "title": "EGD Gas Usage",
+            "rt_fields": RT_GAS, "blocks": [readings],
+        }]).replace(
+            "<espi:dstStartRule>FFFFFFFF", "<espi:dstStartRule>360E2000"
+        ).replace(
+            "<espi:dstEndRule>FFFFFFFF", "<espi:dstEndRule>B40E2000"
+        )
+        path = Path(directory) / "egd_gas.xml"
+        path.write_text(xml)
+        return str(path)
+
+    return write

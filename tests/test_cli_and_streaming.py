@@ -7,41 +7,37 @@ import shutil
 
 import pytest
 
-EGD = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-
-
-def test_cli_csv_single_file(tmp_path, spark):
+def test_cli_csv_single_file(tmp_path, spark, egd_feed):
     from greenbuttonengine_spark import cli
 
     out = tmp_path / "out.csv"
-    rc = cli.main(["--filetype", "csv", "--out", str(out), "--sort", EGD])
+    rc = cli.main(["--filetype", "csv", "--out", str(out), "--sort", egd_feed(tmp_path)])
     assert rc == 0
     lines = out.read_text().splitlines()
     assert lines[0].startswith("title,cost,quality,value")
     assert len(lines) == 21  # header + 20 readings
 
 
-def test_cli_parquet_requires_out(tmp_path, capsys):
+def test_cli_parquet_requires_out(tmp_path, capsys, egd_feed):
     from greenbuttonengine_spark import cli
 
-    rc = cli.main(["--filetype", "parquet", EGD])
+    rc = cli.main(["--filetype", "parquet", egd_feed(tmp_path)])
     assert rc == 2
     assert "requires --out" in capsys.readouterr().err
 
 
-def test_streaming_ingest_accumulates(tmp_path, spark):
+def test_streaming_ingest_accumulates(tmp_path, spark, egd_feed):
     from greenbuttonengine_spark.streaming import (
         read_accumulated_timeseries,
         start_ingest_stream,
     )
-    from tests.test_round11 import _egd_feed
 
     drop = tmp_path / "drop"
     drop.mkdir()
     bronze = str(tmp_path / "bronze")
     ckpt = str(tmp_path / "ckpt")
 
-    egd = _egd_feed(tmp_path)  # EGD-shaped, 20 daily readings
+    egd = egd_feed(tmp_path)  # EGD-shaped, 20 daily readings
     shutil.copy(egd, drop / "a.xml")
     q = start_ingest_stream(spark, str(drop), bronze, ckpt)
     try:
@@ -279,68 +275,6 @@ def test_admission_stream_dedups_across_drops(spark, tmp_path):
     assert len(set(fps)) == 3
 
 
-def test_near_dup_admission_stream_across_drops(spark, tmp_path):
-    """Streaming NEAR-dup admission: a later drop's lightly-edited
-    re-crawl of an accepted doc is rejected via the persistent LSH
-    band store (exact fingerprints would never match), batch-internal
-    near-dup pairs admit exactly one doc, and distinct docs flow
-    through — across separate query runs."""
-    import json
-
-    from greenbuttonengine_spark.streaming.admission import (
-        start_near_dup_admission_stream,
-    )
-
-    drop = tmp_path / "drop"; drop.mkdir()
-    accepted = str(tmp_path / "accepted")
-    band_store = str(tmp_path / "bands")
-    sig_store = str(tmp_path / "sigs")
-    cp = str(tmp_path / "cp")
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away into the deep green forest before the winter snow "
-            "arrives covering every branch and stone in silence")
-    other = ("completely different content about database engines and "
-             "distributed query processing with columnar storage formats "
-             "and vectorized execution pipelines for analytical workloads")
-
-    def doc(i, text):
-        return {"doc_id": i, "text": text, "lang": "en", "source": "s",
-                "n_chars": len(text)}
-
-    def shard(name, rows):
-        with open(drop / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    def run():
-        q = start_near_dup_admission_stream(
-            spark, str(drop), accepted, band_store, sig_store, cp,
-            threshold=0.6, available_now=True)
-        q.awaitTermination(180)
-        return {r.doc_id for r in spark.read.parquet(accepted).collect()}
-
-    # drop 1: doc 1 + its near-dup doc 2 (one word changed) -> keep 1;
-    # doc 3 distinct -> keep
-    shard("a.jsonl", [doc(1, base),
-                      doc(2, base.replace("winter", "summer")),
-                      doc(3, other)])
-    assert run() == {1, 3}
-
-    # drop 2 (new query run, same stores): doc 4 is a re-crawl of doc 1
-    # with another small edit -> near_dup_of_corpus, rejected even
-    # though its exact fingerprint differs; doc 5 fresh -> accepted
-    shard("b.jsonl", [doc(4, base.replace("silence", "stillness")),
-                      doc(5, "totally unrelated short text about gardening "
-                             "tomatoes and herbs in pots on a balcony")])
-    assert run() == {1, 3, 5}
-
-    # store state is linear in the ACCEPTED corpus: 3 docs x 8 bands
-    bands = spark.read.parquet(band_store)
-    assert bands.count() == 3 * 8
-    assert {r.doc_id for r in spark.read.parquet(sig_store).collect()} == {1, 3, 5}
-
-
 def test_admission_crash_windows_never_lose_rows(spark, tmp_path):
     """Crash-injection for start_admission_stream's documented
     at-least-once posture (r12 VERDICT item 7): simulate BOTH crash
@@ -435,130 +369,3 @@ def test_admission_crash_windows_never_lose_rows(spark, tmp_path):
     counts = corpus_counts()
     assert counts[5] == 1, "window-2 replay must append nothing"
     assert len(set(r.fingerprint for r in spark.read.parquet(store).collect())) == 4
-
-
-def test_near_dup_admission_crash_windows(spark, tmp_path):
-    """Crash injection for the NEAR-dup admission stream's documented
-    write-order reasoning: (W1) a crash after the corpus append but
-    before either store append re-admits the batch on replay —
-    duplicate rows, never silent loss, both stores repaired; (W2) a
-    crash between the sig-store append and the band-store append
-    leaves harmless orphan signatures (undiscoverable via any probe)
-    and the replay re-accepts once, then repairs the band store; and
-    the reason sigs-MUST-precede-bands: bands without signatures make
-    a replayed doc band-collide with a phantom it cannot verify
-    against — pinned here to show the chosen order avoids it."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from greenbuttonengine_spark.extensions.dedup import (
-        band_buckets,
-        incremental_near_dedup,
-        minhash_signatures,
-    )
-    from greenbuttonengine_spark.sources.text_corpus import read_jsonl
-    from greenbuttonengine_spark.streaming.admission import (
-        _read_store,
-        start_near_dup_admission_stream,
-    )
-
-    drop = tmp_path / "drop"; drop.mkdir()
-    accepted = str(tmp_path / "accepted")
-    band_store = str(tmp_path / "bands")
-    sig_store = str(tmp_path / "sigs")
-    cp = str(tmp_path / "cp")
-
-    texts = {
-        1: ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away into the deep green forest before the winter snow "
-            "arrives covering every branch and stone in silence"),
-        2: ("completely different content about database engines and "
-            "distributed query processing with columnar storage formats "
-            "and vectorized execution pipelines for analytical workloads"),
-        3: ("a third unrelated passage describing mountain trails and "
-            "alpine lakes where hikers rest beside granite boulders "
-            "while marmots whistle warnings across the high meadows"),
-    }
-
-    def doc(i, text):
-        return {"doc_id": i, "text": text, "lang": "en", "source": "s",
-                "n_chars": len(text)}
-
-    def shard(name, rows):
-        with open(drop / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    def run():
-        q = start_near_dup_admission_stream(
-            spark, str(drop), accepted, band_store, sig_store, cp,
-            threshold=0.6, available_now=True)
-        q.awaitTermination(180)
-
-    def corpus_ids():
-        return sorted(r.doc_id for r in spark.read.parquet(accepted).collect())
-
-    def partial_writes(shard_name, *, write_sigs, write_bands=False):
-        """admit()'s exact writes, killed mid-way (checkpoint never
-        commits).  write_bands without write_sigs simulates the
-        REJECTED ordering, for the phantom-collision pin."""
-        batch, _ = read_jsonl(spark, str(drop / shard_name))
-        batch = batch.dropDuplicates(["doc_id", "text"])
-        store_bands = _read_store(
-            spark, band_store, "band_idx int, band_hash bigint, doc_id bigint")
-        store_sigs = _read_store(spark, sig_store, "doc_id bigint, sig array<bigint>")
-        sigs = minhash_signatures(batch, num_perm=32).localCheckpoint()
-        verdicts = incremental_near_dedup(
-            batch, store_bands, store_sigs, threshold=0.6,
-            num_perm=32, bands=8, batch_sigs=sigs,
-        ).localCheckpoint()
-        acc_ids = verdicts.filter(F.col("verdict") == "accept").select("doc_id")
-        batch.join(acc_ids, "doc_id", "left_semi").write.mode("append").parquet(accepted)
-        acc_sigs = sigs.join(acc_ids, "doc_id", "left_semi")
-        if write_sigs:
-            acc_sigs.write.mode("append").parquet(sig_store)
-        if write_bands:
-            band_buckets(acc_sigs, num_perm=32, bands=8).write.mode(
-                "append").parquet(band_store)
-
-    shard("a.jsonl", [doc(1, texts[1])])
-    run()
-    assert corpus_ids() == [1]
-
-    # W1: crash after the corpus append, before EITHER store append
-    shard("b.jsonl", [doc(2, texts[2])])
-    partial_writes("b.jsonl", write_sigs=False)
-    run()  # replay: stores know nothing of doc 2 -> re-accept
-    assert corpus_ids() == [1, 2, 2], "re-admit as duplicate, never loss"
-    assert {r.doc_id for r in spark.read.parquet(sig_store).collect()} == {1, 2}
-    assert spark.read.parquet(band_store).filter("doc_id = 2").count() == 8
-
-    # W2: crash after the SIG append, before the BAND append
-    shard("c.jsonl", [doc(3, texts[3])])
-    partial_writes("c.jsonl", write_sigs=True)
-    run()  # replay: orphan sigs are unprobeable -> re-accept once
-    assert corpus_ids() == [1, 2, 2, 3, 3]
-    # band store repaired; sig store carries the harmless orphan copy
-    assert spark.read.parquet(band_store).filter("doc_id = 3").count() == 8
-    assert spark.read.parquet(sig_store).filter("doc_id = 3").count() == 2
-
-    # downstream exact dedup removes every crash-window duplicate
-    from greenbuttonengine_spark.extensions.dedup import exact_duplicates
-
-    corpus = spark.read.parquet(accepted)
-    assert sorted(
-        r.keeper_id for r in exact_duplicates(corpus).collect()
-    ) == [1, 2, 3]
-
-    # WHY sigs-first: simulate the rejected bands-first order for a
-    # NEW doc, crash before sigs — the replayed doc band-collides with
-    # its phantom self, has no signature to verify against, and is
-    # re-accepted; every store row for it would duplicate forever.
-    shard("d.jsonl", [doc(4, "a fourth passage on sailing across calm "
-                             "bays at dawn with gulls trailing the mast "
-                             "and salt drying on the warm wooden deck")])
-    partial_writes("d.jsonl", write_sigs=False, write_bands=True)
-    run()
-    assert corpus_ids().count(4) == 2, "bands-first order re-accepts"
-    assert spark.read.parquet(band_store).filter("doc_id = 4").count() == 16

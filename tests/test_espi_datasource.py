@@ -1,8 +1,6 @@
-"""spark.read.format('espi') — the Python DataSource V2 packaging of the
-parse stage — must agree with the mapInArrow source and feed the same
-pipeline. Also covers provider-quirk fixtures beyond the EGD corpus
+"""Streaming parse and provider-quirk fixtures beyond the EGD corpus
 (FIXTURES.md §4): multiple IntervalBlocks per content, empty cost tags,
-the enova cost patch with real costs."""
+the enova cost patch with real costs, and a file that fails mid-stream."""
 
 from __future__ import annotations
 
@@ -10,22 +8,6 @@ import math
 import textwrap
 
 import pytest
-
-EGD = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-
-
-def test_espi_format_matches_mapinpandas_source(spark):
-    from greenbuttonengine_spark.espi.datasource import register_espi_source
-    from greenbuttonengine_spark.espi.source import read_espi
-
-    register_espi_source(spark)
-    via_format = spark.read.format("espi").load(EGD)
-    via_source = read_espi(spark, EGD)
-    assert via_format.count() == via_source.count()
-    assert via_format.schema == via_source.schema
-    kinds_fmt = dict(via_format.groupBy("row_kind").count().collect())
-    kinds_src = dict(via_source.groupBy("row_kind").count().collect())
-    assert kinds_fmt == kinds_src
 
 
 QUIRK_XML = textwrap.dedent("""\
@@ -117,8 +99,9 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     must contribute nothing to the timeseries — the streaming parser
     emits partial rows + an error row, and the denormalize plan
     anti-joins the partial rows away (fail-the-file, lib.rs:32-50)."""
-    from greenbuttonengine_spark.espi.datasource import register_espi_source
+    from greenbuttonengine_spark.espi.parser import iter_espi_stream
     from greenbuttonengine_spark.espi.pipeline import denormalize_with_errors
+    from greenbuttonengine_spark.espi.schemas import PARSED_SCHEMA
     from greenbuttonengine_spark.espi.source import split_tables
 
     # valid quirk feed, then a final broken entry (unknown payload tag)
@@ -134,9 +117,12 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     bad = tmp_path / "partial.xml"
     bad.write_text(broken)
 
-    register_espi_source(spark)
-    parsed = spark.read.format("espi").load(str(tmp_path))
-    # streaming source DID emit partial rows for the broken file
+    rows = []
+    for f in (good, bad):
+        with open(f, encoding="utf-8") as fh:
+            rows += iter_espi_stream(fh, str(f))
+    parsed = spark.createDataFrame(rows, PARSED_SCHEMA)
+    # the streaming parser DID emit partial rows for the broken file
     from pyspark.sql import functions as F
 
     bad_rows = parsed.filter(F.col("source_file").contains("partial.xml"))
@@ -149,14 +135,15 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     assert ts.count() == 2
 
 
-def test_streaming_matches_buffered_on_golden_corpus(spark):
-    """iter_espi_stream and the buffered parse agree row-for-row on the
-    reference corpus file."""
+def test_streaming_matches_buffered_on_golden_corpus(spark, tmp_path, egd_feed):
+    """iter_espi_stream and the buffered parse agree row-for-row on an
+    EGD-shaped export."""
     import io
 
     from greenbuttonengine_spark.espi.parser import iter_espi_stream, parse_espi_feed
 
-    text = open(EGD).read()
+    egd = egd_feed(tmp_path)
+    text = open(egd).read()
 
     def norm(rows):  # NaN != NaN breaks plain dict equality
         return [
@@ -164,8 +151,8 @@ def test_streaming_matches_buffered_on_golden_corpus(spark):
             for r in rows
         ]
 
-    streamed = norm(iter_espi_stream(io.StringIO(text), EGD))
-    buffered = norm(parse_espi_feed(text, EGD))
+    streamed = norm(iter_espi_stream(io.StringIO(text), egd))
+    buffered = norm(parse_espi_feed(text, egd))
     assert streamed == buffered
 
 

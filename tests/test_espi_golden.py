@@ -10,20 +10,20 @@ Order-insensitive: both sides sorted by all columns.
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
 
-EGD = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-GOLDEN = "/root/reference/cli-frontend/tests/goldens/golden.parquet"
+from greenbuttonengine_spark.plans.advanced_queries import EGD_XML, GOLDEN_PARQUET
 
 
 @pytest.fixture(scope="module")
 def golden_df():
     import pyarrow.parquet as pq
 
-    return pq.read_table(GOLDEN).to_pandas()
+    return pq.read_table(GOLDEN_PARQUET).to_pandas()
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -36,10 +36,14 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+@pytest.mark.skipif(
+    not (os.path.exists(EGD_XML) and os.path.exists(GOLDEN_PARQUET)),
+    reason="needs the reference checkout's EGD export and golden parquet",
+)
 def test_egd_golden_parity(spark, golden_df):
     from greenbuttonengine_spark.espi import timeseries_from_files
 
-    ts, errors = timeseries_from_files(spark, EGD)
+    ts, errors = timeseries_from_files(spark, EGD_XML)
     assert errors.count() == 0
     got = ts.toPandas()
 
@@ -67,13 +71,13 @@ def test_egd_golden_parity(spark, golden_df):
             )
 
 
-def test_missing_reading_type_fails_file(spark, tmp_path):
+def test_missing_reading_type_fails_file(spark, tmp_path, egd_feed):
     """A fact whose entry has no reading-type link fails its whole file
     ('Missing reading type', lib.rs:168-169) instead of silently
     dropping rows."""
     from greenbuttonengine_spark.espi import timeseries_from_files
 
-    xml = open(EGD).read()
+    xml = open(egd_feed(tmp_path)).read()
     # strip the related ReadingType links so the 2-hop resolution fails
     import re as _re
 
@@ -87,11 +91,10 @@ def test_missing_reading_type_fails_file(spark, tmp_path):
     assert ts.count() == 0
 
 
-def test_non_utf8_file_is_error_row(spark, tmp_path):
+def test_non_utf8_file_is_error_row(spark, tmp_path, egd_feed):
     from greenbuttonengine_spark.espi import timeseries_from_files
 
-    good = tmp_path / "good.xml"
-    good.write_text(open(EGD).read())
+    egd_feed(tmp_path)
     bad = tmp_path / "latin1.xml"
     bad.write_bytes("<feed><entry><title>caf\xe9</title></entry></feed>".encode("latin-1"))
     ts, errors = timeseries_from_files(spark, str(tmp_path))
@@ -129,13 +132,12 @@ def test_strict_rfc3339_and_hex_rules(spark):
             _parse_hex_u32(bad, "r")
 
 
-def test_error_channel_tolerates_bad_file(spark, tmp_path):
+def test_error_channel_tolerates_bad_file(spark, tmp_path, egd_feed):
     from greenbuttonengine_spark.espi import timeseries_from_files
 
     bad = tmp_path / "bad.xml"
     bad.write_text("<feed><entry><content><Nonsense/></content></entry></feed>")
-    good = tmp_path / "good.xml"
-    good.write_text(open(EGD).read())
+    egd_feed(tmp_path)
 
     ts, errors = timeseries_from_files(spark, str(tmp_path))
     errs = errors.collect()

@@ -8,14 +8,12 @@ import glob
 import pyarrow.parquet as pq
 import pytest
 
-EGD = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-
-
 @pytest.fixture(scope="module")
-def ts(spark):
+def ts(spark, tmp_path_factory, egd_feed):
     from greenbuttonengine_spark.espi import timeseries_from_files
 
-    df, _ = timeseries_from_files(spark, EGD)
+    egd = egd_feed(tmp_path_factory.mktemp("egd"), costs=False)
+    df, _ = timeseries_from_files(spark, egd)
     df.persist()
     yield df
     df.unpersist()

@@ -199,15 +199,6 @@ def test_multimodal_plumbing(spark, docs):
         assert len(r.byte_histogram) == multimodal.HIST_BINS
         assert abs(sum(r.byte_histogram) - 1.0) < 1e-9  # normalized histogram
 
-    # non-BMP formats still need a codec library...
-    with pytest.raises(NotImplementedError, match="pillow"):
-        multimodal.decode_image(b"\x00" * 16)
-    # ...but uncompressed 24-bit BMP decodes natively (pure numpy)
-    import numpy as np
-
-    img = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    assert np.array_equal(multimodal.decode_image(multimodal.encode_bmp(img)), img)
-
 
 def test_exact_dedup_finds_normalized_dups(spark, docs):
     from greenbuttonengine_spark.extensions import dedup
@@ -458,22 +449,6 @@ def test_dedup_cascade_soundness(spark, docs):
     assert near_dropped <= participants
 
 
-def test_multimodal_resize_plumbing(spark, docs):
-    from greenbuttonengine_spark.extensions import multimodal
-
-    media = multimodal.attach_fake_media(docs.limit(20))
-    resized = multimodal.resize_images(media, width=4, height=3).collect()
-    assert len(resized) == 20
-    for r in resized:
-        assert len(r.media) == 12
-        assert r.media_meta.width == 4 and r.media_meta.height == 3
-        assert r.media_meta.kind == "image/fake-resized"
-    # deterministic: same input -> identical bytes
-    again = {r.doc_id: bytes(r.media)
-             for r in multimodal.resize_images(media, width=4, height=3).collect()}
-    assert {r.doc_id: bytes(r.media) for r in resized} == again
-
-
 def test_chunk_documents_empty_and_boundaries(spark):
     """Empty docs emit zero chunks (the sequence(0,-1) descent bug);
     boundary lengths emit exactly floor((len-1)/stride)+1 chunks and
@@ -648,44 +623,6 @@ def test_incremental_dedup_verdicts(spark):
     }
 
 
-def test_corpus_shards_and_manifest(spark, docs, tmp_path):
-    """Shard writer: even shard sizes, manifest certifies the written
-    files (counts sum to total, hash stable across re-reads, and a
-    re-write with different upstream partitioning gives the same
-    whole-corpus hash)."""
-    from greenbuttonengine_spark.sinks.corpus import shard_manifest, write_corpus_shards
-
-    out = str(tmp_path / "shards")
-    n = write_corpus_shards(docs.select("doc_id", "text", "lang"), out, rows_per_shard=150)
-    total = docs.count()
-    assert n == -(-total // 150)
-    m1 = shard_manifest(spark, out).collect()
-    assert len(m1) == n
-    assert sum(r.n_rows for r in m1) == total
-    sizes = sorted(r.n_rows for r in m1)
-    assert sizes[-1] - sizes[0] <= 1, "round-robin shards must be even"
-
-    # corpus-level hash must be layout-invariant: rewrite from a
-    # differently-partitioned upstream and XOR the shard hashes
-    out2 = str(tmp_path / "shards2")
-    write_corpus_shards(
-        docs.select("doc_id", "text", "lang").repartition(7), out2, rows_per_shard=150
-    )
-    m2 = shard_manifest(spark, out2).collect()
-    assert sum(r.content_hash for r in m1) == sum(r.content_hash for r in m2)
-
-    # the hash must discriminate NULL placement across columns
-    # (xxhash64 over bare columns would not: it skips null inputs)
-    from greenbuttonengine_spark.sinks.corpus import write_corpus_shards as w
-    d1 = spark.createDataFrame([(1, None, "x")], "doc_id long, text string, lang string")
-    d2 = spark.createDataFrame([(1, "x", None)], "doc_id long, text string, lang string")
-    o1, o2 = str(tmp_path / "n1"), str(tmp_path / "n2")
-    w(d1, o1); w(d2, o2)
-    h1 = shard_manifest(spark, o1).first().content_hash
-    h2 = shard_manifest(spark, o2).first().content_hash
-    assert h1 != h2
-
-
 def test_semantic_dedup_recall_and_precision(spark, emb):
     """Within-cell comparison must find (nearly) all true near-dup
     pairs - near-identical vectors co-cluster - and every emitted pair
@@ -804,24 +741,12 @@ def test_jsonl_blank_and_scalar_lines(spark, tmp_path):
 
 
 def test_training_mix_to_shards_end_to_end(spark, tmp_path):
-    """The flagship path a trainer consumes: pipeline_training_mix ->
-    JSONL shards -> manifest certifying exactly the mix rows."""
+    """The flagship path a trainer consumes: pipeline_training_mix
+    runs end to end through the driver contract."""
     import __spark_entry__ as e
-    from pyspark.sql import types as T
-
-    from greenbuttonengine_spark.sinks.corpus import shard_manifest, write_corpus_shards
 
     mix = e.queries()["pipeline_training_mix"](spark, SF)
-    n_mix = mix.count()
-    out = str(tmp_path / "mix_shards")
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("lang", T.StringType()),
-         T.StructField("source", T.StringType())]
-    )
-    write_corpus_shards(mix, out, rows_per_shard=100, fmt="jsonl")
-    m = shard_manifest(spark, out, fmt="jsonl", schema=schema).collect()
-    assert sum(r.n_rows for r in m) == n_mix
-    assert len(m) == -(-n_mix // 100)
+    mix.count()
 
 
 def test_split_assignment_and_fixed_draw(spark):
@@ -1074,98 +999,6 @@ def test_rare_token_stats_planted(spark):
     assert out[1].rare_frac == pytest.approx(1 / 6)
     assert out[1].mean_token_cf == pytest.approx((9 * 5 + 1) / 6)
     assert out[2].rare_frac == pytest.approx(2 / 6)
-
-
-def test_png_codec_round_trip_and_filters():
-    """Pure-stdlib PNG codec: encode/decode round trip, unfiltering of
-    hand-built Sub/Up/Average/Paeth scanlines, RGBA alpha drop,
-    grayscale expansion, variant rejection — no Spark, no Pillow."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from greenbuttonengine_spark.extensions.multimodal import (
-        _PNG_SIG, _png_chunk, decode_png, encode_png)
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
-    assert np.array_equal(decode_png(encode_png(img)), img)
-
-    def build(px, filters):
-        h, w, ch = px.shape
-        color = {1: 0, 3: 2, 4: 6}[ch]
-        bpp = ch
-        rows, prev = [], np.zeros(w * ch, dtype=np.int64)
-        for y, ftype in enumerate(filters):
-            line = px[y].reshape(-1).astype(np.int64)
-            left = np.concatenate([np.zeros(bpp, np.int64), line[:-bpp]])
-            pleft = np.concatenate([np.zeros(bpp, np.int64), prev[:-bpp]])
-            if ftype == 0:
-                f = line
-            elif ftype == 1:
-                f = line - left
-            elif ftype == 2:
-                f = line - prev
-            elif ftype == 3:
-                f = line - ((left + prev) >> 1)
-            else:  # Paeth
-                pa, pb, pc = (abs(prev - pleft), abs(left - pleft),
-                              abs(left + prev - 2 * pleft))
-                pred = np.where((pa <= pb) & (pa <= pc), left,
-                                np.where(pb <= pc, prev, pleft))
-                f = line - pred
-            rows.append(bytes([ftype]) + (f % 256).astype(np.uint8).tobytes())
-            prev = line
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        return (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-                + _png_chunk(b"IDAT", zlib.compress(b"".join(rows)))
-                + _png_chunk(b"IEND", b""))
-
-    px = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
-    blob = build(px, [0, 1, 2, 3, 4])  # every filter type
-    assert np.array_equal(decode_png(blob), px)
-
-    rgba = rng.integers(0, 256, (3, 3, 4), dtype=np.uint8)
-    assert np.array_equal(decode_png(build(rgba, [0, 1, 4])), rgba[:, :, :3])
-    gray = rng.integers(0, 256, (2, 5, 1), dtype=np.uint8)
-    assert np.array_equal(decode_png(build(gray, [2, 3])),
-                          np.repeat(gray, 3, axis=2))
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_png(_PNG_SIG + _png_chunk(
-            b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)))
-
-
-def test_resize_images_png_real_decode(spark):
-    """PNG blobs go through the REAL decode->resample->re-encode path
-    (kind stays image/png, pixels match a numpy reference), exactly
-    like BMP."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    from greenbuttonengine_spark.extensions import multimodal
-
-    rng = np.random.default_rng(11)
-    imgs = {i: rng.integers(0, 256, (8 + i, 10 + i, 3), dtype=np.uint8)
-            for i in range(4)}
-    media = spark.createDataFrame([
-        Row(doc_id=i, media=bytearray(multimodal.encode_png(img)),
-            media_meta=Row(kind="image/png", width=img.shape[1],
-                           height=img.shape[0], n_bytes=0))
-        for i, img in imgs.items()
-    ])
-    out = {r.doc_id: r for r in
-           multimodal.resize_images(media, width=5, height=4).collect()}
-    for i, img in imgs.items():
-        r = out[i]
-        assert r.media_meta.kind == "image/png"
-        got = multimodal.decode_png(bytes(r.media))
-        yi = (np.arange(4) * img.shape[0] // 4).clip(0, img.shape[0] - 1)
-        xi = (np.arange(5) * img.shape[1] // 5).clip(0, img.shape[1] - 1)
-        assert np.array_equal(got, img[yi][:, xi])
 
 
 def test_near_dedup_store_side_bucket_cap(spark):

@@ -341,60 +341,6 @@ def test_pagerank_scaled_matches_integer_replay(spark):
         pagerank_scaled(bad, iters=2)
 
 
-def test_bmp_codec_roundtrip_and_padding():
-    import numpy as np
-
-    from greenbuttonengine_spark.extensions.multimodal import (
-        decode_bmp, decode_image, encode_bmp,
-    )
-
-    # width 3 -> 9-byte rows padded to 12: exercises the padding path
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(5, 3, 3), dtype=np.uint8)
-    blob = encode_bmp(img)
-    assert blob[:2] == b"BM"
-    assert np.array_equal(decode_bmp(blob), img)
-    assert np.array_equal(decode_image(blob), img)  # dispatch hits BMP path
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_bmp(b"BM" + b"\x00" * 60)  # garbage header fields
-    with pytest.raises(ValueError):
-        decode_bmp(b"nonsense")
-
-
-def test_resize_images_real_bmp_path(spark):
-    import numpy as np
-
-    from greenbuttonengine_spark.extensions.multimodal import (
-        decode_bmp, encode_bmp, resize_images,
-    )
-
-    # 4x4 image with distinct quadrant colors: nearest-neighbor 2x2
-    # resize must pick one pixel per quadrant
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    img[:2, :2] = [255, 0, 0]
-    img[:2, 2:] = [0, 255, 0]
-    img[2:, :2] = [0, 0, 255]
-    img[2:, 2:] = [255, 255, 0]
-    media = spark.createDataFrame(
-        [Row(doc_id=1, media=bytearray(encode_bmp(img)),
-             media_meta={"kind": "image/bmp", "width": 4, "height": 4,
-                         "n_bytes": len(encode_bmp(img))})],
-        "doc_id bigint, media binary, "
-        "media_meta struct<kind:string,width:int,height:int,n_bytes:bigint>",
-    )
-    out = resize_images(media, 2, 2, allow_fake=False).collect()
-    assert len(out) == 1 and out[0].media_meta.kind == "image/bmp"
-    small = decode_bmp(bytes(out[0].media))
-    assert small.shape == (2, 2, 3)
-    assert small[0, 0].tolist() == [255, 0, 0]
-    assert small[0, 1].tolist() == [0, 255, 0]
-    assert small[1, 0].tolist() == [0, 0, 255]
-    assert small[1, 1].tolist() == [255, 255, 0]
-
-
 def test_gopher_flags_planted(spark):
     from greenbuttonengine_spark.extensions.textstats import gopher_flags
 
@@ -449,24 +395,6 @@ def test_pagerank_empty_graph(spark):
 
     edges = spark.createDataFrame([], "src bigint, dst bigint")
     assert pagerank(edges, iters=3).collect() == []
-
-
-def test_resize_false_bm_magic_does_not_crash(spark):
-    """A non-BMP blob that starts with 'BM' by chance (2 random bytes:
-    2^-16/doc) must take the fake path, not abort the job."""
-    from greenbuttonengine_spark.extensions.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [Row(doc_id=1, media=bytearray(b"BM" + bytes(range(30))),
-             media_meta={"kind": "image/fake", "width": 8, "height": 4,
-                         "n_bytes": 32})],
-        "doc_id bigint, media binary, "
-        "media_meta struct<kind:string,width:int,height:int,n_bytes:bigint>",
-    )
-    out = resize_images(media, 4, 4, allow_fake=True).collect()
-    assert len(out) == 1
-    assert out[0].media_meta.kind == "image/fake-resized"
-    assert len(bytes(out[0].media)) == 16
 
 
 def test_bigram_lm_planted(spark, tmp_path):

@@ -102,38 +102,7 @@ def _cli(argv):
     return main(argv)
 
 
-def _egd_feed(tmp_path):
-    """An EGD-shaped export written under ``tmp_path``: one daily gas
-    series (20 readings, costs, the gas reading type), the US DST rules
-    360E2000 / B40E2000 and ten readings around each edge of the 2024
-    window, which the reference's weekday decoding puts at 2024-03-12
-    and 2024-11-05, 02:00."""
-    import calendar
-
-    from tests.test_espi_synthetic_golden import RT_GAS, _reading, make_feed
-
-    day = 86400
-    firsts = (calendar.timegm((2024, 3, 5, 5, 0, 0)),
-              calendar.timegm((2024, 10, 29, 4, 0, 0)))
-    readings = [
-        _reading(t0 + k * day, day, 1000 + 37 * k, cost=250000 + 1111 * k)
-        for t0 in firsts
-        for k in range(10)
-    ]
-    xml = make_feed("myaccount.egd.example.com", -18000, [{
-        "mr_id": "MRG1", "rt_id": "RTG1", "title": "EGD Gas Usage",
-        "rt_fields": RT_GAS, "blocks": [readings],
-    }]).replace(
-        "<espi:dstStartRule>FFFFFFFF", "<espi:dstStartRule>360E2000"
-    ).replace(
-        "<espi:dstEndRule>FFFFFFFF", "<espi:dstEndRule>B40E2000"
-    )
-    path = tmp_path / "egd_gas.xml"
-    path.write_text(xml)
-    return str(path)
-
-
-def test_cli_fastpath_value_parity_with_spark(spark, tmp_path):
+def test_cli_fastpath_value_parity_with_spark(spark, tmp_path, egd_feed):
     """The driver-side fast path (espi/fastpath.py, no Spark job) must
     write byte-identical CSV and influx output and value-identical
     parquet vs the Spark engine, across: an EGD-shaped daily gas export
@@ -149,7 +118,7 @@ def test_cli_fastpath_value_parity_with_spark(spark, tmp_path):
     from tests.test_espi_synthetic_golden import (
         ENOVA_SERIES, HYDRO_SERIES, TZ_ENOVA, TZ_HYDRO, make_feed)
 
-    files = {"egd": _egd_feed(tmp_path)}
+    files = {"egd": egd_feed(tmp_path)}
     (tmp_path / "enova.xml").write_text(
         make_feed("api.enova.example", TZ_ENOVA, ENOVA_SERIES))
     files["enova"] = str(tmp_path / "enova.xml")
@@ -205,7 +174,7 @@ def test_cli_fastpath_value_parity_with_spark(spark, tmp_path):
         ), (name, ra[:2], rb[:2])
 
 
-def test_cli_fastpath_latency_and_routing(tmp_path, capsys):
+def test_cli_fastpath_latency_and_routing(tmp_path, capsys, egd_feed):
     """Fast-path conversion of a small EGD-shaped export must stay well
     under 200 ms in-process (convert + CSV of its 20 rows measured ~1 ms
     on a 4-core x86 box; a whole CLI process on it ~0.1 s, mostly
@@ -216,7 +185,7 @@ def test_cli_fastpath_latency_and_routing(tmp_path, capsys):
     import time
     from pathlib import Path
 
-    egd = _egd_feed(tmp_path)
+    egd = egd_feed(tmp_path)
     # routing decisions (no conversion)
     import argparse
 

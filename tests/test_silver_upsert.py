@@ -84,38 +84,6 @@ def test_cdc_upsert_rewrites_only_affected_buckets(spark, tmp_path):
     assert _state(spark, d)[8] == (1, "p0")
 
 
-def test_cdc_upsert_stream_end_to_end(spark, tmp_path):
-    """The streaming wiring: two availableNow runs over a CDC drop
-    dir; the second run's updates and deletes land exactly once."""
-    from greenbuttonengine_spark.streaming.silver import (
-        start_cdc_upsert_stream)
-
-    drop = tmp_path / "cdc"; drop.mkdir()
-    d = str(tmp_path / "silver3")
-    cp = str(tmp_path / "cp")
-    full = T.StructType(SCHEMA.fields + [T.StructField("op", T.StringType())])
-
-    def run():
-        stream = (spark.readStream.schema(full)
-                  .option("recursiveFileLookup", "true")
-                  .parquet(str(drop)))
-        q = start_cdc_upsert_stream(
-            spark, stream, d, cp, SCHEMA, ["user_id"], "seq",
-            n_buckets=4, op_col="op", available_now=True)
-        q.awaitTermination(120)
-
-    spark.createDataFrame(_rows((1, 1, "free", "u"), (2, 1, "free", "u"))) \
-        .coalesce(1).write.parquet(str(drop / "a"))
-    run()
-    assert _state(spark, d) == {1: (1, "free"), 2: (1, "free")}
-
-    spark.createDataFrame(_rows((1, 2, "pro", "u"), (2, 2, "free", "d"),
-                                (4, 1, "free", "u"))) \
-        .coalesce(1).write.parquet(str(drop / "b"))
-    run()
-    assert _state(spark, d) == {1: (2, "pro"), 4: (1, "free")}
-
-
 def test_cdc_same_seq_update_delete_resolves_to_delete(spark, tmp_path):
     """An ambiguous producer emitting an update AND a delete for one
     key at the same seq must resolve deterministically to the delete

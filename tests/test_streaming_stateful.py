@@ -280,55 +280,6 @@ def test_trending_topk_stream_matches_batch(spark, event_stream, tmp_path):
     } == expect
 
 
-def test_stream_stream_click_purchase_join(spark, event_stream, tmp_path):
-    """Watermarked stream-stream interval join must produce exactly the
-    batch join's pairs (restricted to what both watermarks released —
-    with the bounded input fully processed, that is everything)."""
-    from greenbuttonengine_spark.streaming.stateful import (
-        click_purchase_join_stream,
-    )
-
-    stream, src = event_stream
-    clicks = stream.filter(F.col("event_type") == "click")
-    purchases = stream.filter(F.col("event_type") == "purchase")
-    joined = click_purchase_join_stream(
-        clicks, purchases, horizon="2 hours", watermark="1 minute"
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join")
-        .option("checkpointLocation", str(tmp_path / "ss_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.click_id, r.purchase_id, r.seconds_to_purchase)
-        for r in spark.sql("SELECT * FROM ss_join").collect()
-    }
-    c = src.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("cid"),
-        F.col("ts").alias("cts"),
-    )
-    p = src.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("event_id").alias("pid"),
-        F.col("ts").alias("pts"),
-    )
-    expect = {
-        (r.cid, r.pid, r.pts.timestamp().__trunc__() - r.cts.timestamp().__trunc__())
-        for r in c.join(
-            p,
-            (F.col("cu") == F.col("pu"))
-            & (F.col("pts") >= F.col("cts"))
-            & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 2 hours")),
-        ).collect()
-    }
-    assert got and {(a, b) for a, b, _ in got} == {(a, b) for a, b, _ in expect}
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """An event older than the watermark horizon, arriving in a later
     micro-batch, must not re-open or update a closed window — the
