@@ -290,13 +290,6 @@ _DRIVER_CHECKED = frozenset(
 )
 
 
-# Mechanism kept for future rounds, currently EMPTY: new-this-round
-# queries listed here yield their in-budget gate slot to the rotated
-# re-check block (ADVICE r4) and become ordinary oracle-new entries the
-# following round, when the budget has room.
-_DEFER_NEW: frozenset[str] = frozenset()
-
-
 # Stalest greens forced to the head of the rotated re-check block this
 # round (r14 VERDICT item 5: last gated <= r5).  They stay in
 # _DRIVER_CHECKED — this only prioritizes their re-check slot.
@@ -316,12 +309,7 @@ def _rotation_seed() -> int:
 
 def _ordered_names(reg) -> list[str]:
     names = [n for n in reg.QUERIES if n not in _LAST]
-    oracle_new = [
-        n
-        for n in names
-        if n in reg.ORACLES and n not in _DRIVER_CHECKED and n not in _DEFER_NEW
-    ]
-    deferred_new = [n for n in names if n in reg.ORACLES and n in _DEFER_NEW]
+    oracle_new = [n for n in names if n in reg.ORACLES and n not in _DRIVER_CHECKED]
     oracle_checked = [n for n in names if n in reg.ORACLES and n in _DRIVER_CHECKED]
     rows_only = [n for n in names if n not in reg.ORACLES]
     # Rotate the checked block so the budget slots left after the new
@@ -331,7 +319,7 @@ def _ordered_names(reg) -> list[str]:
         oracle_checked = oracle_checked[k:] + oracle_checked[:k]
         forced = [n for n in _FORCE_RECHECK if n in oracle_checked]
         oracle_checked = forced + [n for n in oracle_checked if n not in forced]
-    return oracle_new + oracle_checked + deferred_new + rows_only + [
+    return oracle_new + oracle_checked + rows_only + [
         n for n in _LAST if n in reg.QUERIES
     ]
 

@@ -107,6 +107,35 @@ def _probe_steal(window_sec: float = 4.0) -> tuple[float | None, dict]:
     return _steal_between(s0, s1), s1
 
 
+def warm_tables(spark, sf_dir: str) -> None:
+    """Scan every catalog table once, so the JVM and each table's
+    parquet footers are warm and per-query timings measure the query,
+    not first-touch listing costs."""
+    from greenbuttonengine_spark.sources.catalog import TABLES, load_table
+
+    for t in TABLES:
+        load_table(spark, t, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def time_trials(spark, fn, sf_dir: str, n: int) -> list[tuple[float, float]]:
+    """Run the query builder ``fn`` ``n`` times; each trial rebuilds the
+    DataFrame from scratch and then executes it to the noop sink.
+
+    Returns one ``(build_s, exec_s)`` pair per trial.  Build is
+    driver-side plan construction, including any jobs the builder runs
+    itself (seeded collects, fixpoint loops, eager checkpoints); exec
+    materializes every row without driver transfer.
+    """
+    out = []
+    for _ in range(n):
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        out.append((t1 - t0, time.time() - t1))
+    return out
+
+
 def _run_suite(
     spark, qs, names: list[str], sf_dir: str, n_trials: int
 ) -> tuple[dict[str, float], dict[str, float], dict]:
@@ -119,11 +148,7 @@ def _run_suite(
     timings: dict[str, float] = {}
     minima: dict[str, float] = {}
     for name in names:
-        trials = []
-        for _ in range(n_trials):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            trials.append(time.time() - t0)
+        trials = [b + x for b, x in time_trials(spark, qs[name], sf_dir, n_trials)]
         timings[name] = round(statistics.median(trials), 3)
         minima[name] = round(min(trials), 3)
 
@@ -248,12 +273,7 @@ def main() -> None:
     ]
     names.extend(heavy)
 
-    # warm the JVM + every table's parquet footers once, so per-query
-    # timings measure the query, not first-touch listing costs
-    from greenbuttonengine_spark.sources.catalog import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, t, sf_dir).write.format("noop").mode("overwrite").save()
+    warm_tables(spark, sf_dir)
     qs["s1_scan_filter_project"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Measure-and-retry: the run's own steal reading is the ground truth

@@ -5,10 +5,9 @@ Registered LAST in ``__spark_entry__._registry`` on purpose: the
 driver's correctness gate verifies a 50-row budget per round in
 registry order, and this round already carries 44 never-checked
 queries (the TPC-H tail handoff).  The first entries here take the
-remaining in-budget slots; the rest are listed in
-``__spark_entry__._DEFER_NEW`` so they queue BEHIND the rotated
-re-check block (ADVICE r4: keep re-check slots) and get their driver
-rows next round.
+remaining in-budget slots; the rest were deferred BEHIND the rotated
+re-check block (ADVICE r4: keep re-check slots) and got their driver
+rows the round after.
 
 Cross-engine exactness follows the registry's house rules: integer
 bit-length surprisal instead of fp log, single correctly-rounded

@@ -96,7 +96,7 @@ def _margin_select(u: DataFrame, broadcast_small: bool = True) -> DataFrame:
     force-broadcasts the endpoint-sum tables and the per-target best
     map.  Those tables are one row per DISTINCT endpoint — n_src /
     n_tgt rows, NOT driver-sized at mining scale — so the scale path
-    (tools/scale_bitext.py, SCALING.md) passes False: the planner picks
+    (measured in SCALING.md) passes False: the planner picks
     the join strategy, and ``best`` is eagerly localCheckpoint-ed so
     the tgt_best leg reuses it instead of recomputing the whole window
     subtree for a second exchange (eager because two consumers race a

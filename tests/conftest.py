@@ -39,6 +39,23 @@ def sf_correct_dir():
 
 
 @pytest.fixture(scope="session")
+def built_queries(spark, sf_dir):
+    """Every declared query built once at sf0.001, in ``queries()`` order:
+    name -> DataFrame, or the exception its builder raised.  The
+    whole-inventory tests share these builds; each decides what a
+    failed build means for it."""
+    import __spark_entry__ as entrymod
+
+    built = {}
+    for name, fn in entrymod.queries().items():
+        try:
+            built[name] = fn(spark, sf_dir)
+        except Exception as ex:  # noqa: BLE001
+            built[name] = ex
+    return built
+
+
+@pytest.fixture(scope="session")
 def egd_feed():
     """Writer of an EGD-shaped export: ``egd_feed(directory, costs=True)``
     writes ``directory/egd_gas.xml`` and returns its path.  One daily

@@ -20,10 +20,10 @@ def test_queries_and_oracles_aligned():
     assert set(oracles) <= set(qs)
 
 
-def test_each_query_runs_smoke(spark, sf_dir):
-    qs = entrymod.queries()
-    for name, fn in qs.items():
-        df = fn(spark, sf_dir)
+def test_each_query_runs_smoke(built_queries):
+    for name, df in built_queries.items():
+        if isinstance(df, Exception):
+            raise df
         assert df.schema is not None, name
         assert df.limit(1).count() >= 0, name
 
@@ -73,17 +73,15 @@ def test_gate_rotation_ordering():
     phase = []
     for n in names:
         if n in e._LAST:
-            phase.append(4)
-        elif n not in registry.ORACLES:
             phase.append(3)
-        elif n in e._DEFER_NEW:
+        elif n not in registry.ORACLES:
             phase.append(2)
         elif n in e._DRIVER_CHECKED:
             phase.append(1)
         else:
             phase.append(0)
     assert phase == sorted(phase), (
-        "gate order must be new-oracle, checked, deferred-new, rows-only, espi"
+        "gate order must be new-oracle, checked, rows-only, espi"
     )
     assert names[-1] == "espi_egd_timeseries"
     # every _DRIVER_CHECKED name must still exist (renames would

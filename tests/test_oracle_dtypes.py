@@ -36,12 +36,7 @@ from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
 from greenbuttonengine_spark.plans.advanced_queries import EGD_XML, GOLDEN_PARQUET
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-SF_DIR = "/root/testdata/sf0.001"
+from greenbuttonengine_spark.sources.catalog import TABLES
 
 # oracle-backed queries that read the reference checkout
 EXTERNAL_INPUTS = {"espi_egd_golden_parity": (EGD_XML, GOLDEN_PARQUET)}
@@ -109,17 +104,16 @@ def _duck_class(series: pd.Series) -> str:
 
 
 @pytest.fixture(scope="module")
-def duck():
+def duck(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
+        p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     return con
 
 
-def test_oracle_dtype_parity_full_inventory(spark, duck):
-    qs = entrymod.queries()
+def test_oracle_dtype_parity_full_inventory(built_queries, duck):
     oracles = entrymod.oracle_sql()
     bad: list[str] = []
     skipped: list[str] = []
@@ -129,7 +123,9 @@ def test_oracle_dtype_parity_full_inventory(spark, duck):
             continue
         try:
             odf = duck.sql(sql).df()
-            schema = qs[name](spark, SF_DIR).schema
+            if isinstance(built_queries[name], Exception):
+                raise built_queries[name]
+            schema = built_queries[name].schema
         except Exception as ex:  # noqa: BLE001 - record it, sweep the rest
             bad.append(f"{name}: {type(ex).__name__}: {str(ex)[:300]}")
             continue

@@ -406,9 +406,9 @@ def test_bipartite_kernel_bitwise_equals_triangle_plus_filter(spark):
 
 def test_margin_select_scale_path_matches_declared_path(spark):
     """_margin_select(broadcast_small=False) — the mining-scale
-    configuration tools/scale_bitext.py runs (planner-chosen joins,
-    eager checkpoint of the ranked pair table) — must produce exactly
-    the declared broadcast form's rows."""
+    configuration SCALING.md measures (planner-chosen joins, eager
+    checkpoint of the ranked pair table) — must produce exactly the
+    declared broadcast form's rows."""
     from greenbuttonengine_spark.plans.wave28_queries import (
         _cross_pairs,
         _margin_select,

@@ -4,8 +4,9 @@ Writes PLANS.md: one row per query with the plan features that decide
 100 TB behavior — exchange (shuffle) count, sort count, broadcast vs
 sort-merge joins, Python stages, scan pushdown evidence — so every
 SCALING.md claim is checkable from one table without re-running
-explain() by hand.  With --time, each query is also executed to a
-noop sink and its warm wall-clock recorded (run on an idle machine).
+explain() by hand.  With --time, each query is also rebuilt and
+executed to a noop sink (one ``bench.time_trials`` trial) and its build
+and exec wall-clock recorded (run on an idle machine).
 With --nondet, each query is additionally executed TWICE MORE from a
 freshly built DataFrame and an order-independent canonical value hash
 (sum over rows of xxhash64(all columns, sorted by name)) is compared
@@ -21,11 +22,12 @@ from __future__ import annotations
 
 import re
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import time_trials  # noqa: E402
 
 
 def _canon_value_hash(df):
@@ -86,14 +88,7 @@ def main() -> None:
         if name.startswith("espi"):
             continue  # reads reference XML, not sf tables
         try:
-            # Iterative queries (connected-components family) run their
-            # fixpoint loop DURING plan construction (localCheckpoint +
-            # convergence counts), so the build call is timed separately
-            # and reported — otherwise their sec column under-reports
-            # the true cost as ~0.
-            t_build = time.time()
             df = qs[name](spark, sf_dir)
-            build_sec = round(time.time() - t_build, 2)
             s = df._jdf.queryExecution().executedPlan().toString()
         except Exception as ex:  # aux entries needing extra setup
             msg = re.sub(r"[|!\n\r]", " ", str(ex))[:40]
@@ -119,11 +114,15 @@ def main() -> None:
                          & {"all-pairs", "tiny-bnlj"} else "BNLJ(UNTAGGED!)")
         if "CartesianProduct" in s:
             notes.append("CARTESIAN!")
-        sec = "-"
+        build_sec = sec = "-"
         if do_time:
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            sec = round(time.time() - t0, 2)
+            # Iterative queries (connected-components family) run their
+            # fixpoint loop DURING plan construction (localCheckpoint +
+            # convergence counts), so the build is timed separately and
+            # reported — otherwise their sec column under-reports the
+            # true cost as ~0.
+            [(build_sec, sec)] = time_trials(spark, qs[name], sf_dir, 1)
+            build_sec, sec = round(build_sec, 2), round(sec, 2)
         nondet = "-"
         if do_nondet:
             try:
@@ -137,7 +136,7 @@ def main() -> None:
                 nondet = "err:" + re.sub(r"[|!\n\r]", " ", str(ex))[:30]
         rows.append(
             (name, n_ex, n_sort, f"{n_bhj}/{n_smj}", ",".join(py) or "-",
-             pushed, build_sec if do_time else "-", sec, nondet,
+             pushed, build_sec, sec, nondet,
              ",".join(notes) or "-")
         )
 
