@@ -7,15 +7,15 @@ lib/personalgreenbutton/src/lib.rs:32-233):
     parser    pure-Python per-file XML parse (runs inside mapInArrow)
     schemas   fixed StructTypes for the parse output + TimeSeries
     source    distributed file scan -> union-typed parse-output DataFrame
-    enum_dim  XSD enum dictionary as literal SQL maps
-    dst       DST/tz rule evaluation as native Catalyst expressions
-    pipeline  denormalize_and_link as a star join on broadcast dimensions
+    enum_dim  XSD enum dictionary as literal SQL map text
+    dst       DST/tz rule evaluation as SQL expression text
+    pipeline  denormalize_and_link as one SQL statement per output: a
+              star join on broadcast dimensions over the parse table
 """
 
 __all__ = [
     "denormalize_and_link",
     "denormalize_with_errors",
-    "espi_ingest",
     "timeseries_from_files",
 ]
 

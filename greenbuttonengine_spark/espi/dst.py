@@ -1,11 +1,16 @@
-"""DST/timezone rule evaluation as native Catalyst expressions (P11).
+"""DST/timezone rule evaluation as Spark SQL expression text (P11).
 
 The reference decodes a bit-packed u32 rule and evaluates one of 8
 calendar operators per (rule, year), memoized per year
 (local_time_parameters.rs:31-143, lib.rs:117-162).  Here the same math
-is Spark column expressions over a tiny (source_file, year) dim built
-from the facts, then broadcast-joined back — no Python, no per-row
-recomputation, and the dim is O(files x years) regardless of fact count.
+is one SQL expression per rule, evaluated on the pipeline's tiny
+(source_file[, usage point], year) DST dimension — no Python, no
+per-row recomputation, and the dim is O(files x years) regardless of
+fact count.  The builders return text, not Columns: the pipeline
+splices it into its one SQL statement, so the whole rule costs one
+parse instead of a py4j round trip per sub-expression.  Callers pass
+column names or any SQL expression; each argument is parenthesized and
+may appear several times in the result.
 
 Quirk parity (validated against the reference's unit tests, incl. the
 Green Button Alliance example 360E2000/2020 -> 2020-03-10 02:00:00):
@@ -23,117 +28,85 @@ ANSI-safe: every make_date sees validated inputs via CASE branches.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-
-def _dow_monday0(date: Column) -> Column:
+def _dow_monday0(date: str) -> str:
     """Spark dayofweek (1=Sunday..7=Saturday) -> 0=Monday..6=Sunday."""
-    return (F.dayofweek(date) + F.lit(5)) % 7
+    return f"((dayofweek({date}) + 5) % 7)"
 
 
-def _days_since(target_dow: Column, date: Column) -> Column:
+def _days_since(target_dow: str, date: str) -> str:
     """Days from ``date`` forward to the next-or-same ``target_dow``
     (chrono Weekday::days_since semantics)."""
-    return F.pmod(target_dow - _dow_monday0(date), F.lit(7)).cast("int")
+    return f"CAST(pmod({target_dow} - {_dow_monday0(date)}, 7) AS INT)"
 
 
-def rule_datetime(rule: Column, year: Column) -> Column:
-    """Evaluate one DST rule for one year -> timestamp or NULL.
+def rule_datetime_sql(rule: str, year: str) -> str:
+    """Evaluate one DST rule for one year -> TIMESTAMP or NULL.
 
     NULL when: rule is the no-DST sentinel, any field is out of range,
     or the (operator, month, day) combination names no real date —
     exactly the reference's Option/None paths.
     """
-    seconds = rule.bitwiseAND(F.lit(0xFFF))
-    hours = F.shiftright(rule, 12).bitwiseAND(F.lit(0x1F))
-    dow_bits = F.shiftright(rule, 17).bitwiseAND(F.lit(0x7))
-    target_dow = (dow_bits + 1) % 7  # chrono quirk: 0=Monday
-    dom = F.shiftright(rule, 20).bitwiseAND(F.lit(0x1F))
-    op = F.shiftright(rule, 25).bitwiseAND(F.lit(0x7))
-    month = F.shiftright(rule, 28).bitwiseAND(F.lit(0xF))
+    rule, year = f"({rule})", f"({year})"
+
+    def field(shift: int, mask: int) -> str:
+        return f"(shiftright({rule}, {shift}) & {mask})"
+
+    seconds = f"({rule} & 4095)"
+    hours = field(12, 0x1F)
+    target_dow = f"(({field(17, 0x7)} + 1) % 7)"  # chrono quirk: 0=Monday
+    dom = field(20, 0x1F)
+    op = field(25, 0x7)
+    month = field(28, 0xF)
 
     valid_fields = (
-        (seconds <= 3599) & (hours <= 23) & (dom <= 31) & (op <= 7) & (month <= 12)
+        f"({seconds} <= 3599 AND {hours} <= 23 AND {dom} <= 31"
+        f" AND {op} <= 7 AND {month} <= 12)"
     )
-    month_ok = month.between(1, 12)
-    yi, mi = year.cast("int"), month.cast("int")
+    yi, mi = f"CAST({year} AS INT)", f"CAST({month} AS INT)"
+    first_of_month = f"make_date({yi}, {mi}, 1)"  # guarded by the month check below
+    last_of_month = f"last_day({first_of_month})"
+    dom_ok = f"({dom} BETWEEN 1 AND dayofmonth({last_of_month}))"
+    dom_date = f"make_date({yi}, {mi}, CAST({dom} AS INT))"  # guarded by month and dom_ok
 
-    first_of_month = F.make_date(yi, mi, F.lit(1))  # guarded by month_ok below
-    days_in_month = F.dayofmonth(F.last_day(first_of_month))
-    dom_ok = dom.between(1, days_in_month)
-
-    dom_date = F.make_date(yi, mi, dom.cast("int"))  # guarded by month_ok & dom_ok
-
-    date = (
-        F.when(~month_ok, F.lit(None).cast("date"))
-        # 0: the day of the month itself
-        .when(op == 0, F.when(dom_ok, dom_date))
-        # 1: target weekday on or after the day of the month
-        .when(op == 1, F.when(dom_ok, F.date_add(dom_date, _days_since(target_dow, dom_date))))
-        # 7: last occurrence of the weekday in the month
-        .when(
-            op == 7,
-            F.date_sub(
-                F.last_day(first_of_month),
-                F.pmod(_dow_monday0(F.last_day(first_of_month)) - target_dow, F.lit(7)).cast(
-                    "int"
-                ),
-            ),
-        )
-        # 2-6: nth occurrence (may run past month end, as in the reference)
-        .otherwise(
-            F.date_add(
-                F.date_add(first_of_month, _days_since(target_dow, first_of_month)),
-                ((op - 2) * 7).cast("int"),
-            )
-        )
+    date = f"""CASE
+        WHEN NOT ({month} BETWEEN 1 AND 12) THEN CAST(NULL AS DATE)
+        -- 0: the day of the month itself
+        WHEN {op} = 0 THEN CASE WHEN {dom_ok} THEN {dom_date} END
+        -- 1: target weekday on or after the day of the month
+        WHEN {op} = 1 THEN CASE WHEN {dom_ok}
+            THEN date_add({dom_date}, {_days_since(target_dow, dom_date)}) END
+        -- 7: last occurrence of the weekday in the month
+        WHEN {op} = 7 THEN date_sub({last_of_month},
+            CAST(pmod({_dow_monday0(last_of_month)} - {target_dow}, 7) AS INT))
+        -- 2-6: nth occurrence (may run past month end, as in the reference)
+        ELSE date_add(date_add({first_of_month}, {_days_since(target_dow, first_of_month)}),
+            CAST(({op} - 2) * 7 AS INT))
+    END"""
+    ts = (
+        f"to_timestamp({date}) + make_dt_interval(0, CAST({hours} AS INT),"
+        f" CAST({seconds} / 60 AS INT), CAST({seconds} % 60 AS DOUBLE))"
     )
-
-    ts = F.to_timestamp(date) + F.make_dt_interval(
-        F.lit(0), hours.cast("int"), (seconds / 60).cast("int").cast("int"), (seconds % 60).cast("double")
-    )
-    return (
-        F.when(rule == F.lit(0xFFFFFFFF), F.lit(None).cast("timestamp"))
-        .when(~valid_fields, F.lit(None).cast("timestamp"))
-        .otherwise(ts)
-    )
+    return f"""(CASE
+        WHEN {rule} = 4294967295 THEN CAST(NULL AS TIMESTAMP)
+        WHEN NOT {valid_fields} THEN CAST(NULL AS TIMESTAMP)
+        ELSE {ts}
+    END)"""
 
 
-def build_dst_dim(
-    ltp: DataFrame, file_years: DataFrame, keys: tuple[str, ...] = ("source_file",)
-) -> DataFrame:
-    """(keys..., year) x LTP rules -> dst_start_ts / dst_end_ts /
-    offsets.  ``file_years`` is the distinct (keys..., year) set from
-    the facts — the Spark analog of the reference's per-year memoization.
-    ``keys`` defaults to the reference's per-file scope; the non-strict
-    multi-LTP mode passes ("source_file", "up_key") to scope rules per
-    usage point."""
-    dim = file_years.join(F.broadcast(ltp), list(keys), "left")
-    return dim.select(
-        *keys,
-        "year",
-        rule_datetime(F.col("dst_start_rule"), F.col("year")).alias("dst_start_ts"),
-        rule_datetime(F.col("dst_end_rule"), F.col("year")).alias("dst_end_ts"),
-        "dst_offset",
-        "tz_offset",
-    )
-
-
-def apply_local_time_shift(facts_ts: Column, dst_start: Column, dst_end: Column,
-                           dst_offset: Column, tz_offset: Column) -> Column:
+def local_time_sql(ts: str, dst_start: str, dst_end: str,
+                   dst_offset: str, tz_offset: str) -> str:
     """Shift a naive-UTC reading timestamp into provider-local time
     (lib.rs:157-162): +dst_offset when strictly inside the DST window,
     then always +tz_offset."""
+    ts = f"({ts})"
     in_dst = (
-        dst_start.isNotNull()
-        & dst_end.isNotNull()
-        & (dst_start < facts_ts)
-        & (facts_ts < dst_end)
+        f"({dst_start} IS NOT NULL AND {dst_end} IS NOT NULL"
+        f" AND {dst_start} < {ts} AND {ts} < {dst_end})"
     )
-    shifted = F.when(
-        in_dst, facts_ts + F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), dst_offset.cast("double"))
-    ).otherwise(facts_ts)
-    return shifted + F.make_dt_interval(
-        F.lit(0), F.lit(0), F.lit(0), F.coalesce(tz_offset, F.lit(0)).cast("double")
+    return (
+        f"(CASE WHEN {in_dst}"
+        f" THEN {ts} + make_dt_interval(0, 0, 0, CAST({dst_offset} AS DOUBLE))"
+        f" ELSE {ts} END"
+        f" + make_dt_interval(0, 0, 0, CAST(coalesce({tz_offset}, 0) AS DOUBLE)))"
     )

@@ -229,7 +229,7 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
     by_index = {e["entry_index"]: e for e in entries}
 
     def rt_entry_index(entry: dict[str, Any]) -> int | None:
-        """resolve_reading_types: entry -> meter reading -> reading type."""
+        """The entry dim's two href hops: entry -> meter reading -> reading type."""
         mr_href = entry.get("related_meter_reading_entry_href", "")
         if not mr_href:
             return None

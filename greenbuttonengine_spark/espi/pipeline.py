@@ -1,30 +1,40 @@
-"""denormalize_and_link as a declarative Spark plan: a star join.
+"""denormalize_and_link as one SQL statement per output: a star join.
 
 The reference's single-pass row loop (lib.rs:32-190) becomes one fact
-stream over two small broadcast dimensions:
+stream over two small broadcast dimensions, read straight off the
+union-typed parse table (``source.read_espi``):
 
-    facts ──⋈ entry dim (title, f32(10^p), 8 enum strings, is_enova)──
-          ──⋈ DST dim (per file[, usage point] and year)──project──sink
+    parsed ─┬─ facts ──⋈ entry dim (title, up_key, f32(10^p), 8 enum strings)──
+            │          ──⋈ DST dim (file[, usage point], year; is_enova)──project──sink
+            └─ entries / reading types / LTPs / parse errors ──> the dimensions
 
 Everything that is constant per file or per entry is resolved once, on
-dimensions built from the non-fact tables plus one distinct-key
+dimensions built from the non-fact rows plus one distinct-key
 aggregate over the facts:
 
-* file aggregate  entries ∪ LTP ∪ parse-error rows grouped by file:
-                  LTP count, parse-error flag, first-entry href (enova)
+* file aggregate  entry, LTP and parse-error rows grouped by file:
+                  LTP count and rules, parse-error flag, first-entry
+                  href (enova)
 * entry dim       entry -> meter reading -> reading type (two href hops)
                   with the reading-type codes decoded once per entry
 * fact keys       distinct (file, entry, year): feeds the 'Missing
                   reading type' check and the DST dim
+* DST dim         fact keys x the files that pass every check, with the
+                  rules evaluated per year and the enova flag
 
-The entry dim is O(entries) and the DST dim O(files x years), however
-many readings there are, so both carry explicit broadcast hints and the
-fact stream is one stage: scan, two broadcast hash joins, project — no
-shuffle, no window.  A file that fails any check has no row in the
-entry dim, so the inner join drops its facts, including partial rows a
-streaming parse emitted before its error row.  Every key carries
-``source_file`` so a multi-file ingest is one job (the reference loops
-files single-threaded and UNION-ALLs).
+Both dimensions carry broadcast hints and the fact stream is one stage:
+scan, two broadcast hash joins, project — no shuffle, no window.  A
+file that fails any check has no row in the DST dim, so the inner join
+drops its facts, including partial rows a streaming parse emitted
+before its error row.  Every key carries ``source_file`` so a
+multi-file ingest is one job (the reference loops files
+single-threaded and UNION-ALLs).
+
+Each output — the TimeSeries and the per-file error rows — is ONE
+``spark.sql`` statement whose CTE text is built once per process: the
+whole plan costs one parse and one analysis per output, instead of a
+py4j round trip per Column expression (about 5,500 per ingest when it
+was built with the DataFrame API).
 
 Quirk parity with the reference (each cited):
 * value = f32(raw) * f32(10^power_of_ten_multiplier) in FLOAT
@@ -41,17 +51,21 @@ Quirk parity with the reference (each cited):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from contextlib import contextmanager
-from functools import reduce
+from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from .dst import apply_local_time_shift, build_dst_dim
-from .enum_dim import decode_enum_expr
-from .schemas import ENUM_FIELDS
-from .source import read_espi, split_tables
+from .dst import local_time_sql, rule_datetime_sql
+from .enum_dim import decode_enum_sql, sql_str
+from .schemas import (
+    ENUM_FIELDS,
+    KIND_ENTRY,
+    KIND_ERROR,
+    KIND_INTERVAL_READING,
+    KIND_LOCAL_TIME_PARAMETERS,
+    KIND_READING_TYPE,
+)
+from .source import read_espi
 
 
 def _pin_utc(spark: SparkSession) -> None:
@@ -72,50 +86,71 @@ def _pin_utc(spark: SparkSession) -> None:
 # trailing-slash-only pattern silently demoted those to file-global.
 _USAGE_POINT_RE = r"(.*UsagePoint/[^/]*)(?:/|$)"
 _LTP_RULE_COLS = ("dst_start_rule", "dst_end_rule", "dst_offset", "tz_offset")
+_LTP_MULTI = "Input with multiple LocalTimeParameters is currently unsupported."
+_LTP_MISSING = "Missing LocalTimeParameters."
+_LTP_SCOPE = "Multiple LocalTimeParameters in one usage-point scope."
+_RT_MISSING = "Missing reading type"
+# inf * 0: a NaN the analyzer knows is NOT NULL (a cast from 'NaN' is
+# nullable), so the cost column stays never-null
+_NAN_FLOAT = "CAST(1.0E308 * 1.0E308 * 0 AS FLOAT)"
 
 
-def _resolve_ltp_per_usage_point(
-    ltp: DataFrame, entries: DataFrame, all_files: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Non-strict LTP resolution — the SURVEY §7 improvement over the
-    reference's whole-file abort on multiple LocalTimeParameters
-    (lib.rs:42-50): each LTP is SCOPED by the usage-point prefix of its
-    carrying entry's href (no UsagePoint path -> '' = file-global), so
-    a file may legally carry one global plus one LTP per usage point.
+def _cols(alias: str, names) -> str:
+    return ", ".join(f"{alias}.{c}" for c in names)
 
-    Errors (still per-file, fail-the-file atomicity): no LTP at all,
-    or >1 LTP in the SAME scope (genuinely ambiguous).  Returns
-    (scoped ltp rows (source_file, up_key, rules...), error rows).
-    """
-    hrefs = entries.select("source_file", "entry_index", "href")
-    scoped = (
-        ltp.join(hrefs, ["source_file", "entry_index"], "left")
-        .withColumn(
-            "up_key",
-            F.coalesce(F.regexp_extract("href", _USAGE_POINT_RE, 1), F.lit("")),
-        )
-        .select("source_file", "up_key", *_LTP_RULE_COLS)
-    )
-    dup_files = (
-        scoped.groupBy("source_file", "up_key")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .select("source_file")
-        .distinct()
-    )
-    missing = all_files.join(
-        scoped.select("source_file").distinct(), "source_file", "left_anti"
-    ).select(
-        "source_file", F.lit("Missing LocalTimeParameters.").alias("error")
-    )
-    dups = dup_files.select(
-        "source_file",
-        F.lit(
-            "Multiple LocalTimeParameters in one usage-point scope."
-        ).alias("error"),
-    )
-    good = scoped.join(dup_files, "source_file", "left_anti")
-    return good, missing.unionByName(dups)
+
+def _ltp_scope_ctes(ltp: str, entries: str, all_files: str, fact_ups: str) -> str:
+    """Non-strict LTP resolution as CTE text — the SURVEY §7 improvement
+    over the reference's whole-file abort on multiple
+    LocalTimeParameters (lib.rs:42-50).  Each LTP is SCOPED by the
+    usage-point prefix of its carrying entry's href (no UsagePoint path
+    -> '' = file-global), so a file may legally carry one global plus
+    one LTP per usage point.  Every (source_file, up_key) of
+    ``fact_ups`` then resolves to its UP-scoped LTP first, the
+    file-global one as fallback.
+
+    Arguments name the input relations; they need the columns
+    ``ltp``: source_file, entry_index + rules; ``entries``:
+    source_file, entry_index, href; ``all_files``, ``fact_ups``:
+    source_file (+ up_key).  Defines ``ltp_resolved`` (source_file,
+    up_key, rules — NULL-ruled rows kept, so callers apply
+    fail-the-file atomicity) and ``ltp_file_errors`` (one row per
+    failing file: no LTP at all, >1 LTP in the SAME scope, or a fact
+    scope that resolves to neither)."""
+    rules = _LTP_RULE_COLS
+    coalesced = ",\n               ".join(f"coalesce(u.{c}, g.{c}) AS {c}" for c in rules)
+    return f"""
+ltp_scoped AS (
+    SELECT l.source_file, coalesce(regexp_extract(h.href, {sql_str(_USAGE_POINT_RE)}, 1), '')
+               AS up_key, {_cols("l", rules)}
+    FROM {ltp} l
+    LEFT JOIN {entries} h ON l.source_file = h.source_file AND l.entry_index = h.entry_index),
+ltp_dup_files AS (
+    SELECT DISTINCT source_file FROM ltp_scoped
+    GROUP BY source_file, up_key HAVING count(*) > 1),
+ltp_scope_errors AS (
+    SELECT a.source_file, '{_LTP_MISSING}' AS error
+    FROM {all_files} a LEFT ANTI JOIN ltp_scoped s ON a.source_file = s.source_file
+    UNION ALL
+    SELECT source_file, '{_LTP_SCOPE}' AS error FROM ltp_dup_files),
+ltp_rules AS (
+    SELECT s.* FROM ltp_scoped s
+    LEFT ANTI JOIN ltp_dup_files d ON s.source_file = d.source_file),
+ltp_resolved AS (
+    SELECT f.source_file, f.up_key,
+           {coalesced}
+    FROM {fact_ups} f
+    LEFT JOIN (SELECT * FROM ltp_rules WHERE up_key != '') u
+        ON f.source_file = u.source_file AND f.up_key = u.up_key
+    LEFT JOIN (SELECT * FROM ltp_rules WHERE up_key = '') g
+        ON f.source_file = g.source_file),
+ltp_file_errors AS (
+    SELECT source_file, error FROM ltp_scope_errors
+    UNION ALL
+    -- files already errored resolve to nothing too: one error row per file
+    SELECT DISTINCT r.source_file, '{_LTP_MISSING}' AS error
+    FROM ltp_resolved r LEFT ANTI JOIN ltp_scope_errors e ON r.source_file = e.source_file
+    WHERE r.tz_offset IS NULL)"""
 
 
 def resolve_ltp_for_scopes(
@@ -124,183 +159,198 @@ def resolve_ltp_for_scopes(
     all_files: DataFrame,
     fact_ups: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full non-strict LTP resolution for a set of fact scopes: scope
-    the LTPs per usage point (``_resolve_ltp_per_usage_point``), then
-    resolve every (source_file, up_key) in ``fact_ups`` — UP-scoped
-    LTP first, file-global ('') fallback via a left-join coalesce; a
-    scope with neither fails its file.
+    """Full non-strict LTP resolution for a set of fact scopes
+    (``_ltp_scope_ctes``): (ltp_resolved rows (source_file, up_key,
+    rules...), per-file error rows (source_file, error)).
 
-    Returns (ltp_resolved rows (source_file, up_key, rules... —
-    NULL-ruled rows kept so callers apply fail-the-file atomicity),
-    per-file error rows).  This is the production path of
-    ``denormalize_with_errors(strict_single_ltp=False)`` AND the body
+    The CTE text is the one ``denormalize_with_errors(
+    strict_single_ltp=False)`` inlines, and this function is the body
     of the espi_multi_ltp_scope_resolution oracle query — the
     batch-parity pattern the streaming operators use, so the driver
     gate exercises the same code the CLI's --multi-ltp runs."""
-    ltp_scoped, ltp_errors = _resolve_ltp_per_usage_point(ltp, entries, all_files)
-    # resolve each fact scope: UP-scoped LTP first, file-global
-    # ('') fallback; a fact scope with neither fails its file
-    up_scoped = ltp_scoped.filter(F.col("up_key") != "")
-    glob = ltp_scoped.filter(F.col("up_key") == "").select(
-        "source_file",
-        *[F.col(c).alias(f"__g_{c}") for c in _LTP_RULE_COLS],
-    )
-    ltp_resolved = (
-        fact_ups.join(up_scoped, ["source_file", "up_key"], "left")
-        .join(glob, "source_file", "left")
-        .select(
-            "source_file",
-            "up_key",
-            *[
-                F.coalesce(F.col(c), F.col(f"__g_{c}")).alias(c)
-                for c in _LTP_RULE_COLS
-            ],
-        )
-    )
-    unresolved = (
-        ltp_resolved.filter(F.col("tz_offset").isNull())
-        .select("source_file")
-        .distinct()
-        # files already errored (no LTP at all / duplicate scope)
-        # resolve to nothing too — one error row per file, not two
-        .join(ltp_errors.select("source_file"), "source_file", "left_anti")
-        .select(
-            "source_file",
-            F.lit("Missing LocalTimeParameters.").alias("error"),
-        )
-    )
-    return ltp_resolved, ltp_errors.unionByName(unresolved)
-
-
-def resolve_reading_types(entries: DataFrame) -> DataFrame:
-    """J2: entry -> meter-reading entry -> reading-type entry (2-hop href
-    walk, lib.rs:58-83).  Output: (source_file, entry_index,
-    rt_entry_index) with NULL when the entry has no meter-reading link."""
-    e = entries.select(
-        "source_file",
-        "entry_index",
-        F.col("related_meter_reading_entry_href").alias("mr_href"),
-    )
-    mr = entries.select(
-        F.col("source_file").alias("mr_file"),
-        F.col("href").alias("mr_self_href"),
-        F.col("related_reading_type_entry_href").alias("rt_href"),
-    )
-    rt = entries.select(
-        F.col("source_file").alias("rt_file"),
-        F.col("href").alias("rt_self_href"),
-        F.col("entry_index").alias("rt_entry_index"),
-        F.col("entry_type").alias("rt_entry_type"),
-    )
-    hop1 = e.filter(F.col("mr_href") != "").join(
-        F.broadcast(mr),
-        (F.col("source_file") == F.col("mr_file")) & (F.col("mr_href") == F.col("mr_self_href")),
-        "left",
-    )
-    hop2 = hop1.join(
-        F.broadcast(rt),
-        (F.col("source_file") == F.col("rt_file")) & (F.col("rt_href") == F.col("rt_self_href")),
-        "left",
-    )
-    return hop2.select(
-        "source_file",
-        "entry_index",
-        F.when(F.col("rt_entry_type") == "reading_type", F.col("rt_entry_index")).alias(
-            "rt_entry_index"
-        ),
-    )
-
-
-def _year(unix_seconds: Column) -> Column:
-    return F.year(F.timestamp_seconds(unix_seconds)).cast("long")
-
-
-def _file_aggregate(
-    entries: DataFrame, ltp: DataFrame, errors: DataFrame | None
-) -> DataFrame:
-    """One aggregate per file over entries ∪ LTP ∪ parse-error rows:
-    entry and LTP counts, the parse-error flag, the LTP rules (exact
-    when the file has one LTP) and the enova flag, taken from the FIRST
-    entry's href (timeseries.rs:173-178).  Only entry rows carry an
-    ``entry_index``; ``min_by`` skips the NULL orderings of the rest."""
-    null = F.lit(None)
-    parts = [
-        entries.select(
-            "source_file", "entry_index", "href",
-            F.lit(0).alias("is_ltp"), F.lit(0).alias("is_err"),
-            *[null.cast("long").alias(c) for c in _LTP_RULE_COLS],
-        ),
-        ltp.select(
-            "source_file", null.cast("long").alias("entry_index"),
-            null.cast("string").alias("href"),
-            F.lit(1).alias("is_ltp"), F.lit(0).alias("is_err"), *_LTP_RULE_COLS,
-        ),
-    ]
-    if errors is not None:
-        parts.append(errors.select(
-            "source_file", null.cast("long").alias("entry_index"),
-            null.cast("string").alias("href"),
-            F.lit(0).alias("is_ltp"), F.lit(1).alias("is_err"),
-            *[null.cast("long").alias(c) for c in _LTP_RULE_COLS],
-        ))
-    return reduce(DataFrame.unionByName, parts).groupBy("source_file").agg(
-        F.count("entry_index").alias("n_entries"),
-        F.sum("is_ltp").alias("n_ltp"),
-        F.max("is_err").alias("has_err"),
-        F.min_by("href", "entry_index").contains("enova").alias("is_enova"),
-        *[F.max(c).alias(c) for c in _LTP_RULE_COLS],
-    )
-
-
-def _entry_dim(entries: DataFrame, reading_types: DataFrame) -> DataFrame:
-    """Per entry: title, usage-point key, ``f32(10^p)`` and the 8 decoded
-    reading-type strings.  An entry whose reading type does not resolve
-    (lib.rs:168-169) keeps its row with a NULL ``scale``."""
-    rt_codes = reading_types.select(
-        "source_file",
-        F.col("entry_index").alias("rt_entry_index"),
-        "power_of_ten_multiplier",
-        *[c for c, _ in ENUM_FIELDS],
-    )
+    frames = {"ltp": ltp, "entries": entries, "all_files": all_files, "fact_ups": fact_ups}
+    ctes = _ltp_scope_ctes(**{name: "{" + name + "}" for name in frames})
+    spark = ltp.sparkSession
     return (
-        entries.select(
-            "source_file", "entry_index", "title",
-            F.regexp_extract("href", _USAGE_POINT_RE, 1).alias("up_key"),
-        )
-        .join(F.broadcast(resolve_reading_types(entries)), ["source_file", "entry_index"], "left")
-        .join(F.broadcast(rt_codes), ["source_file", "rt_entry_index"], "left")
-        .select(
-            "source_file", "entry_index", "title", "up_key",
-            # P6: the scale factor in FLOAT, as the reference computes it
-            F.pow(F.lit(10.0), F.col("power_of_ten_multiplier").cast("double"))
-            .cast("float")
-            .alias("scale"),
-            # P10: literal-map decode (the phf-map analog), once per entry
-            *[decode_enum_expr(c, xsd).alias(c) for c, xsd in ENUM_FIELDS],
-        )
+        spark.sql(f"WITH {ctes}\nSELECT * FROM ltp_resolved", **frames),
+        spark.sql(f"WITH {ctes}\nSELECT * FROM ltp_file_errors", **frames),
     )
+
+
+def _row_kind(kind: str) -> str:
+    return f"FROM {{parsed}} WHERE row_kind = '{kind}'"
+
+
+@lru_cache(maxsize=None)
+def _statements(strict_single_ltp: bool, include_source_file: bool) -> tuple[str, str]:
+    """The (TimeSeries, errors) SQL statements over ``{parsed}``, built
+    once per process.  They share one CTE prefix; Spark inlines each
+    CTE at its references, so the text describes one plan per output.
+    The text goes through ``str.format`` in ``spark.sql``: apart from
+    ``{parsed}`` it holds no braces (the enum strings have none)."""
+    rules = _LTP_RULE_COLS
+    codes = [c for c, _ in ENUM_FIELDS]
+    decoded = ",\n           ".join(
+        f"{decode_enum_sql(c, xsd)} AS {c}" for c, xsd in ENUM_FIELDS
+    )
+    if strict_single_ltp:
+        ltp_checks = f"""
+ltp_errors AS (
+    SELECT source_file,
+           CASE WHEN n_ltp > 1 THEN '{_LTP_MULTI}' ELSE '{_LTP_MISSING}' END AS error
+    FROM files WHERE n_ltp != 1),
+ltp_ok AS (SELECT * FROM files WHERE n_ltp = 1),"""
+        # P11: DST/tz rules per (file, year) — the analog of the
+        # reference's per-year memoization
+        dst_keys, rules_from = ("source_file", "year"), "g"
+        dst_from = """(SELECT DISTINCT source_file, year FROM fact_keys) k
+    JOIN good g ON k.source_file = g.source_file"""
+    else:
+        ltp_checks = f"""
+file_up_years AS (
+    SELECT /*+ BROADCAST(d) */ DISTINCT k.source_file, d.up_key, k.year
+    FROM fact_keys k
+    JOIN entry_dim d ON k.source_file = d.source_file AND k.entry_index = d.entry_index),
+fact_ups AS (SELECT DISTINCT source_file, up_key FROM file_up_years),
+{_ltp_scope_ctes("ltp", "entries", "files", "fact_ups")},
+-- a file with a parse error reports only that error
+ltp_errors AS (
+    SELECT /*+ BROADCAST(f) */ x.source_file, x.error
+    FROM ltp_file_errors x LEFT SEMI JOIN files f ON x.source_file = f.source_file),
+ltp_ok AS (
+    SELECT /*+ BROADCAST(x) */ f.*
+    FROM files f LEFT ANTI JOIN ltp_errors x ON f.source_file = x.source_file),"""
+        # rules per (file, usage point, year)
+        dst_keys, rules_from = ("source_file", "up_key", "year"), "r"
+        dst_from = """file_up_years k
+    JOIN good g ON k.source_file = g.source_file
+    LEFT JOIN ltp_resolved r ON k.source_file = r.source_file AND k.up_key = r.up_key"""
+    r = rules_from
+
+    ctes = f"""WITH
+entries AS (
+    SELECT source_file, entry_index, entry_type, href, title,
+           related_meter_reading_entry_href AS mr_href,
+           related_reading_type_entry_href AS rt_href
+    {_row_kind(KIND_ENTRY)}),
+facts AS (
+    SELECT source_file, entry_index, cost, quality, value, tou,
+           time_period_start_unix, time_period_duration_seconds,
+           CAST(year(timestamp_seconds(time_period_start_unix)) AS BIGINT) AS year
+    {_row_kind(KIND_INTERVAL_READING)}),
+ltp AS (SELECT source_file, entry_index, {", ".join(rules)} {_row_kind(KIND_LOCAL_TIME_PARAMETERS)}),
+-- files that parsed: at least one entry and no error row.  Only entry
+-- rows order min_by, so is_enova reads the FIRST entry's href
+-- (timeseries.rs:173-178); only LTP rows carry rules, exact when the
+-- file has one LTP.
+files AS (
+    SELECT source_file,
+           count_if(row_kind = '{KIND_LOCAL_TIME_PARAMETERS}') AS n_ltp,
+           contains(min_by(href, CASE WHEN row_kind = '{KIND_ENTRY}' THEN entry_index END), 'enova')
+               AS is_enova,
+           {", ".join(f"max({c}) AS {c}" for c in rules)}
+    FROM {{parsed}}
+    WHERE row_kind IN ('{KIND_ENTRY}', '{KIND_LOCAL_TIME_PARAMETERS}', '{KIND_ERROR}')
+    GROUP BY source_file
+    HAVING count_if(row_kind = '{KIND_ENTRY}') > 0 AND count_if(row_kind = '{KIND_ERROR}') = 0),
+-- J2: entry -> meter-reading entry -> reading-type entry (2-hop href
+-- walk, lib.rs:58-83); an entry whose reading type does not resolve
+-- (lib.rs:168-169) keeps its row with a NULL scale
+entry_dim AS (
+    SELECT /*+ BROADCAST(mr, rt, c) */
+           e.source_file, e.entry_index, e.title,
+           regexp_extract(e.href, {sql_str(_USAGE_POINT_RE)}, 1) AS up_key,
+           -- P6: the scale factor in FLOAT, as the reference computes it
+           CAST(pow(CAST(10 AS DOUBLE), CAST(c.power_of_ten_multiplier AS DOUBLE)) AS FLOAT)
+               AS scale,
+           -- P10: literal-map decode (the phf-map analog), once per entry
+           {decoded}
+    FROM entries e
+    LEFT JOIN entries mr
+        ON e.mr_href != '' AND mr.source_file = e.source_file AND mr.href = e.mr_href
+    LEFT JOIN entries rt ON rt.source_file = mr.source_file AND rt.href = mr.rt_href
+    LEFT JOIN (SELECT source_file, entry_index, power_of_ten_multiplier, {", ".join(codes)}
+               {_row_kind(KIND_READING_TYPE)}) c
+        ON c.source_file = e.source_file
+        AND c.entry_index = CASE WHEN rt.entry_type = 'reading_type' THEN rt.entry_index END),
+fact_keys AS (SELECT DISTINCT source_file, entry_index, year FROM facts),{ltp_checks}
+-- J4: a fact whose entry resolves to no reading type fails its WHOLE
+-- file (lib.rs:168-169); entries without readings never do
+rt_error_files AS (
+    SELECT /*+ BROADCAST(d) */ DISTINCT k.source_file
+    FROM fact_keys k
+    LEFT SEMI JOIN (SELECT source_file, entry_index FROM entry_dim WHERE scale IS NULL) d
+        ON k.source_file = d.source_file AND k.entry_index = d.entry_index),
+rt_errors AS (
+    SELECT /*+ BROADCAST(o) */ x.source_file, '{_RT_MISSING}' AS error
+    FROM rt_error_files x LEFT SEMI JOIN ltp_ok o ON x.source_file = o.source_file),
+good AS (
+    SELECT /*+ BROADCAST(x) */ o.source_file, o.is_enova, {_cols("o", rules)}
+    FROM ltp_ok o LEFT ANTI JOIN rt_error_files x ON o.source_file = x.source_file),
+-- every (file, year) of a good file's facts is a fact key, so the DST
+-- dim holds exactly the good files and carries their enova flag
+dst_dim AS (
+    SELECT /*+ BROADCAST(g, {r}) */
+           {_cols("k", dst_keys)}, g.is_enova,
+           {rule_datetime_sql(f"{r}.dst_start_rule", "k.year")} AS dst_start_ts,
+           {rule_datetime_sql(f"{r}.dst_end_rule", "k.year")} AS dst_end_ts,
+           {r}.dst_offset, {r}.tz_offset
+    FROM {dst_from})
+"""
+    shifted = local_time_sql(
+        "timestamp_seconds(f.time_period_start_unix)",
+        "t.dst_start_ts", "t.dst_end_ts", "t.dst_offset", "t.tz_offset",
+    )
+    dst_on = " AND ".join(
+        f"{'d' if k == 'up_key' else 'f'}.{k} = t.{k}" for k in dst_keys
+    )
+    timeseries = f"""{ctes}
+SELECT /*+ BROADCAST(d, t) */
+       {"f.source_file, " if include_source_file else ""}d.title,
+       -- P12: the enova cost patch.  The cost NaN sentinel
+       -- (interval_reading.rs:15-16) crosses the Arrow hop in the parse
+       -- stage as NULL: restore NaN so the column is never-null like the
+       -- reference's REQUIRED FLOAT
+       coalesce(CAST(CASE WHEN t.is_enova THEN f.cost * CAST(100.0 AS FLOAT) ELSE f.cost END
+                     AS FLOAT), {_NAN_FLOAT}) AS cost,
+       {decode_enum_sql("quality", "QualityOfReading", scope="")} AS quality,
+       -- P6: value scaling in genuine FLOAT arithmetic (golden bit parity)
+       CAST(CAST(f.value AS FLOAT) * d.scale AS FLOAT) AS value,
+       f.tou,
+       unix_timestamp({shifted}) AS time_period_start_unix,
+       f.time_period_duration_seconds,
+       {_cols("d", codes)}
+FROM facts f
+JOIN entry_dim d ON f.source_file = d.source_file AND f.entry_index = d.entry_index
+JOIN dst_dim t ON {dst_on}"""
+    errors = f"""{ctes}
+SELECT source_file, error {_row_kind(KIND_ERROR)}
+UNION ALL SELECT source_file, error FROM ltp_errors
+UNION ALL SELECT source_file, error FROM rt_errors"""
+    return timeseries, errors
 
 
 def denormalize_and_link(
-    tables: dict[str, DataFrame],
+    parsed: DataFrame,
     include_source_file: bool = False,
     strict_single_ltp: bool = True,
 ) -> DataFrame:
-    """Four normalized tables -> the 15-column TimeSeries DataFrame.
+    """Union-typed parse table -> the 15-column TimeSeries DataFrame.
     Thin wrapper over :func:`denormalize_with_errors` for callers that
     only want the data side."""
-    ts, _errors = denormalize_with_errors(tables, include_source_file, strict_single_ltp)
+    ts, _errors = denormalize_with_errors(parsed, include_source_file, strict_single_ltp)
     return ts
 
 
 def denormalize_with_errors(
-    tables: dict[str, DataFrame],
+    parsed: DataFrame,
     include_source_file: bool = False,
     strict_single_ltp: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Four normalized tables -> (TimeSeries, per-file error rows).
+    """Union-typed parse table (``schemas.PARSED_SCHEMA``) ->
+    (TimeSeries, per-file error rows).
 
-    Error rows cover: parse failures (``tables["errors"]``), LTP
+    Error rows cover: parse failures (the table's error rows), LTP
     cardinality violations (lib.rs:42-50) and facts whose entry resolves
     to no reading type (lib.rs:168-169, 'Missing reading type') — in
     every case the WHOLE file is excluded, matching the reference's
@@ -310,136 +360,20 @@ def denormalize_with_errors(
 
     ``strict_single_ltp=False`` (SURVEY §7 improvement; r13 VERDICT
     item 7) relaxes the reference's one-LTP-per-file restriction:
-    LTPs resolve PER USAGE POINT (href-scope join, file-global ''
-    fallback), so a multi-utility export with one tz per usage point
-    processes instead of erroring.  The default keeps reference parity
-    (golden byte-parity depends on it) and the per-file error channel;
+    LTPs resolve PER USAGE POINT (``resolve_ltp_for_scopes``), so a
+    multi-utility export with one tz per usage point processes instead
+    of erroring.  The default keeps reference parity (golden
+    byte-parity depends on it) and the per-file error channel;
     single-global-LTP files produce identical rows under either mode.
     """
-    # The DST window compare and F.year/to_timestamp below evaluate in
-    # the session zone; golden parity (dst.py, reference lib.rs) assumes
+    # The DST window compare and year/to_timestamp evaluate in the
+    # session zone; golden parity (dst.py, reference lib.rs) assumes
     # UTC.  get_spark pins it, but a caller-supplied session may not —
     # pin here so the pipeline is correct in any session.
-    _pin_utc(tables["entries"].sparkSession)
-    entries = tables["entries"]
-    facts = tables["interval_readings"]
-    ltp = tables["local_time_parameters"]
-    err = tables.get("errors")
-
-    # files that parsed: at least one entry and no error row
-    files = _file_aggregate(entries, ltp, err).filter(
-        (F.col("n_entries") > 0) & (F.col("has_err") == 0)
-    )
-    entry_dim = _entry_dim(entries, tables["reading_types"])
-    fact_keys = facts.select(
-        "source_file", "entry_index", _year(F.col("time_period_start_unix")).alias("year")
-    ).distinct()
-
-    if strict_single_ltp:
-        ltp_errors = files.filter(F.col("n_ltp") != 1).select(
-            "source_file",
-            F.when(
-                F.col("n_ltp") > 1,
-                F.lit("Input with multiple LocalTimeParameters is currently unsupported."),
-            )
-            .otherwise(F.lit("Missing LocalTimeParameters."))
-            .alias("error"),
-        )
-        ltp_ok = files.filter(F.col("n_ltp") == 1)
-    else:
-        file_up_years = (
-            fact_keys.join(
-                F.broadcast(entry_dim.select("source_file", "entry_index", "up_key")),
-                ["source_file", "entry_index"],
-            )
-            .select("source_file", "up_key", "year")
-            .distinct()
-        )
-        ltp_resolved, ltp_errors = resolve_ltp_for_scopes(
-            ltp,
-            entries,
-            files.select("source_file"),
-            file_up_years.select("source_file", "up_key").distinct(),
-        )
-        # a file with a parse error reports only that error
-        ltp_errors = ltp_errors.join(
-            F.broadcast(files.select("source_file")), "source_file", "left_semi"
-        )
-        ltp_ok = files.join(
-            F.broadcast(ltp_errors.select("source_file")), "source_file", "left_anti"
-        )
-
-    # J4: a fact whose entry resolves to no reading type fails its WHOLE
-    # file (lib.rs:168-169); entries without readings never do
-    rt_error_files = (
-        fact_keys.join(
-            F.broadcast(entry_dim.filter(F.col("scale").isNull())),
-            ["source_file", "entry_index"],
-            "left_semi",
-        )
-        .select("source_file")
-        .distinct()
-    )
-    rt_errors = rt_error_files.join(
-        F.broadcast(ltp_ok.select("source_file")), "source_file", "left_semi"
-    ).select("source_file", F.lit("Missing reading type").alias("error"))
-    good = ltp_ok.join(
-        F.broadcast(rt_error_files), "source_file", "left_anti"
-    ).select("source_file", "is_enova", *_LTP_RULE_COLS)
-
-    # P11: DST/tz rules per (file[, usage point], year), from the fact
-    # keys — the analog of the reference's per-year memoization
-    if strict_single_ltp:
-        dst_keys = ["source_file", "year"]
-        dst_dim = build_dst_dim(good, fact_keys.select(*dst_keys).distinct())
-    else:
-        dst_keys = ["source_file", "up_key", "year"]
-        dst_dim = build_dst_dim(
-            ltp_resolved, file_up_years, keys=("source_file", "up_key")
-        )
-
-    reading_ts = F.timestamp_seconds(F.col("time_period_start_unix"))
-    stream = (
-        facts.join(
-            F.broadcast(
-                entry_dim.join(F.broadcast(good.select("source_file", "is_enova")), "source_file")
-            ),
-            ["source_file", "entry_index"],
-        )
-        .withColumn("year", _year(F.col("time_period_start_unix")))
-        .join(F.broadcast(dst_dim), dst_keys, "left")
-    )
-    shifted = apply_local_time_shift(
-        reading_ts,
-        F.col("dst_start_ts"),
-        F.col("dst_end_ts"),
-        F.col("dst_offset"),
-        F.col("tz_offset"),
-    )
-    # P12: the enova cost patch.  The cost NaN sentinel
-    # (interval_reading.rs:15-16) crosses the Arrow hop in the parse
-    # stage as NULL — restore NaN so the column is never-null like the
-    # reference's REQUIRED FLOAT.
-    cost = F.when(F.col("is_enova"), F.col("cost") * F.lit(100.0).cast("float")).otherwise(
-        F.col("cost")
-    )
-    out_cols = [
-        "title",
-        F.coalesce(cost.cast("float"), F.lit(float("nan")).cast("float")).alias("cost"),
-        decode_enum_expr("quality", "QualityOfReading", scope="").alias("quality"),
-        # P6: value scaling in genuine FLOAT arithmetic (golden bit parity)
-        (F.col("value").cast("float") * F.col("scale")).cast("float").alias("value"),
-        "tou",
-        F.unix_timestamp(shifted).alias("time_period_start_unix"),
-        "time_period_duration_seconds",
-        *[c for c, _ in ENUM_FIELDS],
-    ]
-    if include_source_file:
-        out_cols.insert(0, "source_file")
-    all_errors = ltp_errors.unionByName(rt_errors)
-    if err is not None:
-        all_errors = err.select("source_file", "error").unionByName(all_errors)
-    return stream.select(*out_cols), all_errors
+    spark = parsed.sparkSession
+    _pin_utc(spark)
+    timeseries, errors = _statements(strict_single_ltp, include_source_file)
+    return spark.sql(timeseries, parsed=parsed), spark.sql(errors, parsed=parsed)
 
 
 def timeseries_from_files(
@@ -450,44 +384,19 @@ def timeseries_from_files(
 ) -> tuple[DataFrame, DataFrame]:
     """End-to-end: file paths -> (timeseries_df, errors_df).
 
-    The parsed union table is the single Python-stage output; it is
-    consumed by several branches (entries x3 aliases, facts, LTP), so it
-    is materialized once via ``localCheckpoint(eager=True)`` — one
-    parse per file total, like the reference.  Eager, because a lazy
-    checkpoint is marked by whichever concurrent broadcast job finishes
-    first, and Spark 4.1 can deadlock there: that thread holds the
-    checkpoint registry lock and waits for the RDD's lock, which the
-    DAG scheduler holds while it waits for the registry (seen under
-    pytest as a collect that never returned).  Unlike ``persist``, the
-    checkpoint blocks are released automatically (ContextCleaner) once
-    the returned DataFrames are garbage-collected, so repeated ingests
-    in one session don't accumulate cached blocks.  For deterministic,
-    scope-bound cleanup use :func:`espi_ingest`.
+    The parsed union table is the single Python-stage output; both
+    statements read it several times (entries x3, facts, reading types,
+    LTPs, the file aggregate), so it is materialized once via
+    ``localCheckpoint(eager=True)`` — one parse per file total, like
+    the reference.  Eager, because a lazy checkpoint is marked by
+    whichever concurrent broadcast job finishes first, and Spark 4.1
+    can deadlock there: that thread holds the checkpoint registry lock
+    and waits for the RDD's lock, which the DAG scheduler holds while it
+    waits for the registry (seen under pytest as a collect that never
+    returned).  Unlike ``persist``, the checkpoint blocks are released
+    automatically (ContextCleaner) once the returned DataFrames are
+    garbage-collected, so repeated ingests in one session don't
+    accumulate cached blocks.
     """
     parsed = read_espi(spark, paths).localCheckpoint(eager=True)
-    tables = split_tables(parsed)
-    # denormalize_with_errors folds tables["errors"] (parse failures)
-    # into its error channel alongside LTP/reading-type violations
-    return denormalize_with_errors(tables, include_source_file, strict_single_ltp)
-
-
-@contextmanager
-def espi_ingest(
-    spark: SparkSession,
-    paths: str | list[str],
-    include_source_file: bool = False,
-    strict_single_ltp: bool = True,
-) -> Iterator[tuple[DataFrame, DataFrame]]:
-    """Scope-bound ingest: ``with espi_ingest(spark, p) as (ts, errors):``.
-
-    Identical to :func:`timeseries_from_files`, but the one-parse-total
-    cache is an explicit ``persist`` released on context exit, so a
-    long-lived session (CLI loops, notebooks, shared clusters) holds no
-    cached blocks afterwards.  Consume the DataFrames inside the scope.
-    """
-    parsed = read_espi(spark, paths).persist()
-    try:
-        tables = split_tables(parsed)
-        yield denormalize_with_errors(tables, include_source_file, strict_single_ltp)
-    finally:
-        parsed.unpersist()
+    return denormalize_with_errors(parsed, include_source_file, strict_single_ltp)

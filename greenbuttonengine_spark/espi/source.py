@@ -4,9 +4,10 @@
 across executors; the per-file parse runs inside ``mapInArrow``: each
 Arrow batch of (path, content) rows becomes one Arrow batch of
 union-typed rows per PARSED_SCHEMA, built column by column from the
-parser's row dicts.  One parse pass feeds all four normalized tables — the
-reference parses each file once too (lib.rs:192-233), but
-single-threaded.
+parser's row dicts.  One parse pass feeds all four normalized tables:
+the pipeline's SQL statements read them off this one table by
+``row_kind`` (schemas.KIND_*), in their CTEs.  The reference parses
+each file once too (lib.rs:192-233), but single-threaded.
 
 At 100 TB scale: file listing is driver-side metadata only; parse
 parallelism = number of files (fine for many small provider exports —
@@ -70,63 +71,3 @@ def read_espi(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     raw = spark.read.format("binaryFile").load(paths).select("path", "content")
     return raw.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
 
-
-def split_tables(parsed: DataFrame) -> dict[str, DataFrame]:
-    """Union-typed parse output -> the four normalized tables + errors.
-
-    Each is a filter+project off one cached scan; Catalyst prunes the
-    unused union columns per branch.
-    """
-    from pyspark.sql import functions as F
-
-    from . import schemas as S
-
-    def kind(k: str) -> DataFrame:
-        return parsed.filter(F.col("row_kind") == k)
-
-    entries = kind(S.KIND_ENTRY).select(
-        "source_file",
-        "entry_index",
-        "entry_type",
-        "href",
-        "title",
-        "published_unix",
-        "updated_unix",
-        "related_meter_reading_entry_href",
-        "related_reading_type_entry_href",
-    )
-    interval_readings = kind(S.KIND_INTERVAL_READING).select(
-        "source_file",
-        "entry_index",
-        "cost",
-        "quality",
-        "value",
-        "tou",
-        "time_period_start_unix",
-        "time_period_duration_seconds",
-    )
-    reading_types = kind(S.KIND_READING_TYPE).select(
-        "source_file",
-        "entry_index",
-        "accumulation_behaviour",
-        "commodity",
-        "currency",
-        "data_qualifier",
-        "flow_direction",
-        "kind",
-        "power_of_ten_multiplier",
-        "phase",
-        "uom",
-    )
-    local_time_parameters = kind(S.KIND_LOCAL_TIME_PARAMETERS).select(
-        "source_file", "entry_index",
-        "dst_start_rule", "dst_end_rule", "dst_offset", "tz_offset",
-    )
-    errors = kind(S.KIND_ERROR).select("source_file", "error")
-    return {
-        "entries": entries,
-        "interval_readings": interval_readings,
-        "reading_types": reading_types,
-        "local_time_parameters": local_time_parameters,
-        "errors": errors,
-    }

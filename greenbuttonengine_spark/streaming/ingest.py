@@ -34,7 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..espi import denormalize_and_link
 from ..espi.schemas import PARSED_SCHEMA
-from ..espi.source import _parse_batches, split_tables
+from ..espi.source import _parse_batches
 from .bronze import commit_epoch, read_bronze
 
 
@@ -81,6 +81,5 @@ def read_accumulated_timeseries(
     the WASM ``get_timeseries_chunked`` contract over the accumulated
     whole."""
     parsed = read_bronze(spark, bronze_dir, PARSED_SCHEMA)
-    tables = split_tables(parsed)
-    ts = denormalize_and_link(tables, include_source_file)
+    ts = denormalize_and_link(parsed, include_source_file)
     return ts.orderBy("title", "time_period_start_unix")

@@ -3,7 +3,8 @@
 the Green Button Alliance documented example.
 
 The reference tests get_date/get_datetime with explicit operator args;
-our native-expression evaluator takes the packed u32, so each case packs
+our evaluator is SQL expression text over the packed u32 (the text the
+ESPI pipeline splices into its DST dimension), so each case packs
 the fields first (encoding per local_time_parameters.rs:108-128, with
 the chrono day-of-week quirk: packed dow d decodes to weekday
 (d+1) % 7 with 0=Monday).
@@ -34,14 +35,17 @@ def dow_bits_for_weekday_monday0(target_mon0: int) -> int:
     raise AssertionError
 
 
-def eval_rule(spark, rule: int, year: int):
-    from greenbuttonengine_spark.espi.dst import rule_datetime
+def _rule_column(rule: str, year: str):
+    """The production rule text as a Column."""
+    from greenbuttonengine_spark.espi.dst import rule_datetime_sql
 
+    return F.expr(rule_datetime_sql(rule, year))
+
+
+def eval_rule(spark, rule: int, year: int):
     row = (
         spark.range(1)
-        .select(
-            rule_datetime(F.lit(rule).cast("long"), F.lit(year).cast("long")).alias("ts")
-        )
+        .select(_rule_column(f"CAST({rule} AS BIGINT)", f"CAST({year} AS BIGINT)").alias("ts"))
         .first()
     )
     return row.ts
@@ -92,7 +96,7 @@ def test_month_zero_yields_null(spark):
 
 # ---------------------------------------------------------------------------
 # Property-based cross-check: a direct pure-Python model of the reference
-# semantics (local_time_parameters.rs:43-143) vs the native-Spark evaluator,
+# semantics (local_time_parameters.rs:43-143) vs the Spark SQL evaluator,
 # over randomized rules x years.
 # ---------------------------------------------------------------------------
 
@@ -166,14 +170,10 @@ def test_hypothesis_cross_check(spark):
 
     collect()
     # evaluate the whole batch in ONE Spark job (per-case jobs would be slow)
-    from greenbuttonengine_spark.espi.dst import rule_datetime
-
     df = spark.createDataFrame(cases, "rule long, year long")
     got = {
         (r.rule, r.year): r.ts
-        for r in df.select(
-            "rule", "year", rule_datetime(F.col("rule"), F.col("year")).alias("ts")
-        ).collect()
+        for r in df.select("rule", "year", _rule_column("rule", "year").alias("ts")).collect()
     }
     for rule, year in cases:
         want = _model_rule_datetime(rule, year)

@@ -102,7 +102,6 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     from greenbuttonengine_spark.espi.parser import iter_espi_stream
     from greenbuttonengine_spark.espi.pipeline import denormalize_with_errors
     from greenbuttonengine_spark.espi.schemas import PARSED_SCHEMA
-    from greenbuttonengine_spark.espi.source import split_tables
 
     # valid quirk feed, then a final broken entry (unknown payload tag)
     broken = QUIRK_XML.replace(
@@ -128,7 +127,7 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     bad_rows = parsed.filter(F.col("source_file").contains("partial.xml"))
     kinds = {r.row_kind for r in bad_rows.collect()}
     assert "error" in kinds and len(kinds) > 1  # partial rows + error row
-    ts, errors = denormalize_with_errors(split_tables(parsed))
+    ts, errors = denormalize_with_errors(parsed)
     errs = errors.collect()
     assert any("Unknown tag name" in e.error for e in errs)
     # the broken file contributes nothing; the good file's 2 rows survive

@@ -1,6 +1,6 @@
 """The ESPI denormalize as a star join over small broadcast dimensions.
 
-Two guards on ``espi.pipeline.denormalize_with_errors``:
+Three guards on ``espi.pipeline.denormalize_with_errors``:
 
 * a MIXED multi-file ingest — good, enova, DST and every bad shape in
   one plan, so the per-file and per-entry dimensions see many files at
@@ -8,7 +8,10 @@ Two guards on ``espi.pipeline.denormalize_with_errors``:
   single-file fast path (``espi.fastpath.convert_file``) gives it;
 * the fact stream must stay one stage: between the interval-reading
   scan and the root there is no shuffle and no window, only broadcast
-  hash joins against the dimensions.
+  hash joins against the dimensions;
+* building the plan is a handful of py4j round trips: each output is
+  one parsed SQL statement, not a DataFrame-API expression tree built
+  one JVM call at a time.
 """
 
 from __future__ import annotations
@@ -196,3 +199,37 @@ def test_fact_stream_has_no_shuffle_or_window(spark, mixed_dir, strict):
         # the parsed table is reached through the fact stream alone
         assert "RDDScanExec" in names, names
         assert names.count("BroadcastHashJoinExec") == 2, names
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_denormalize_build_is_a_few_jvm_calls(spark, mixed_dir, monkeypatch, strict):
+    """Building both outputs of a 2-file ingest stays within a small fixed
+    number of py4j commands (about 20; a DataFrame-API build of the same
+    plan made about 5,500).  Object-release commands are not counted:
+    their number depends on what the garbage collector frees meanwhile,
+    not on the build."""
+    from py4j import protocol as proto
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    from greenbuttonengine_spark.espi.pipeline import denormalize_with_errors
+    from greenbuttonengine_spark.espi.source import read_espi
+
+    paths = [str(mixed_dir / "us_dst.xml"), str(mixed_dir / "enova.xml")]
+    parsed = read_espi(spark, paths).localCheckpoint(eager=True)
+    calls = []
+
+    def counting(send):
+        def send_command(self, command, *args, **kwargs):
+            if not command.startswith(proto.MEMORY_COMMAND_NAME):
+                calls.append(command)
+            return send(self, command, *args, **kwargs)
+
+        return send_command
+
+    for conn in (ClientServerConnection, GatewayConnection):
+        monkeypatch.setattr(conn, "send_command", counting(conn.send_command))
+    ts, errors = denormalize_with_errors(parsed, strict_single_ltp=strict)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 60, calls
+    assert ts.count() > 0 and errors.count() == 0

@@ -247,12 +247,11 @@ def synthetic(spark, tmp_path_factory):
         make_feed("api.enova.example", TZ_ENOVA, ENOVA_SERIES))
     (d / "hydro.xml").write_text(
         make_feed("api.hydroex.example", TZ_HYDRO, HYDRO_SERIES))
-    from greenbuttonengine_spark.espi import espi_ingest
+    from greenbuttonengine_spark.espi import timeseries_from_files
 
-    with espi_ingest(spark, str(d)) as (ts, errors):
-        assert errors.count() == 0
-        got = ts.toPandas()
-        yield ts, got
+    ts, errors = timeseries_from_files(spark, str(d))
+    assert errors.count() == 0
+    return ts, ts.toPandas()
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -407,35 +406,6 @@ def test_chart_chunks(synthetic):
         times = c.table["time_period_start_unix"].to_pylist()
         assert times == sorted(times)
         assert set(c.table.schema.names) == set(got.columns)
-
-
-def test_no_cached_blocks_after_scoped_ingest(spark, tmp_path):
-    """espi_ingest releases the specific RDD(s) it persisted
-    (cache-hygiene contract; VERDICT r1 'unbounded persist lifetimes').
-
-    Asserts on the scope's OWN RDD ids, not global
-    ``getPersistentRDDs()`` count equality: ContextCleaner GCs other
-    fixtures' RDDs mid-suite, so the global count moves under load
-    (this flaked in the r10 judge run as ``assert 1 == 15``)."""
-    d = tmp_path / "one"
-    d.mkdir()
-    (d / "enova.xml").write_text(
-        make_feed("api.enova.example", TZ_ENOVA, ENOVA_SERIES))
-    from greenbuttonengine_spark.espi import espi_ingest
-
-    def persistent_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(i) for i in jmap.keySet().toArray()}
-
-    before = persistent_ids()
-    with espi_ingest(spark, str(d)) as (ts, errors):
-        assert ts.count() == 2 and errors.count() == 0
-        added = persistent_ids() - before
-        assert added, "the scope should persist its parse stage"
-    # the ids added by this scope are gone; other sessions'/fixtures'
-    # RDDs appearing or being GC'd concurrently cannot perturb this
-    assert not (persistent_ids() & added), (
-        "espi_ingest left its persisted RDD(s) cached after scope exit")
 
 
 def test_aggregate_by_period(synthetic):

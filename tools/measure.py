@@ -89,11 +89,13 @@ def words(spark, src: str, out: str, k: int) -> None:
 
     emb = spark.read.parquet(f"{src}/embeddings.parquet")
     n_emb = emb.count()
+    # replica k shifts every element by k * 1e-5: a distinct vector per
+    # replica (float32 resolves 1e-5 at the |u| < 1 of these unit-scale
+    # embeddings), and under 1e-3 up to 100 replicas
     emb.crossJoin(_replicas(spark, k)).select(
         (F.col("vec_id") + F.col("k") * n_emb).alias("vec_id"),
         F.expr(
-            "transform(embedding, (u, i) -> "
-            "u + CAST((k % 7) - 3 AS FLOAT) / 1000.0F)"
+            "transform(embedding, (u, i) -> u + CAST(k AS FLOAT) / 100000.0F)"
         ).alias("embedding"),
         "label",
     ).repartition(32).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
