@@ -12,6 +12,11 @@ parse instead of a py4j round trip per sub-expression.  Callers pass
 column names or any SQL expression; each argument is parenthesized and
 may appear several times in the result.
 
+Zone-free: instants are naive-UTC epoch seconds (BIGINT) and calendar
+math runs on DATEs built from ``unix_date`` / ``date_from_unix_date``,
+so no expression reads ``spark.sql.session.timeZone`` and the result
+is the same in any session.
+
 Quirk parity (validated against the reference's unit tests, incl. the
 Green Button Alliance example 360E2000/2020 -> 2020-03-10 02:00:00):
 
@@ -40,8 +45,14 @@ def _days_since(target_dow: str, date: str) -> str:
     return f"CAST(pmod({target_dow} - {_dow_monday0(date)}, 7) AS INT)"
 
 
-def rule_datetime_sql(rule: str, year: str) -> str:
-    """Evaluate one DST rule for one year -> TIMESTAMP or NULL.
+def year_sql(unix: str) -> str:
+    """The calendar year of naive-UTC epoch seconds ``unix``, as INT."""
+    return f"year(date_from_unix_date(CAST(floor(({unix}) / 86400) AS INT)))"
+
+
+def rule_epoch_sql(rule: str, year: str) -> str:
+    """Evaluate one DST rule for one year -> naive-UTC epoch seconds
+    (BIGINT) or NULL.
 
     NULL when: rule is the no-DST sentinel, any field is out of range,
     or the (operator, month, day) combination names no real date —
@@ -83,30 +94,21 @@ def rule_datetime_sql(rule: str, year: str) -> str:
         ELSE date_add(date_add({first_of_month}, {_days_since(target_dow, first_of_month)}),
             CAST(({op} - 2) * 7 AS INT))
     END"""
-    ts = (
-        f"to_timestamp({date}) + make_dt_interval(0, CAST({hours} AS INT),"
-        f" CAST({seconds} / 60 AS INT), CAST({seconds} % 60 AS DOUBLE))"
-    )
+    epoch = f"CAST(unix_date({date}) AS BIGINT) * 86400 + {hours} * 3600 + {seconds}"
     return f"""(CASE
-        WHEN {rule} = 4294967295 THEN CAST(NULL AS TIMESTAMP)
-        WHEN NOT {valid_fields} THEN CAST(NULL AS TIMESTAMP)
-        ELSE {ts}
+        WHEN {rule} = 4294967295 THEN CAST(NULL AS BIGINT)
+        WHEN NOT {valid_fields} THEN CAST(NULL AS BIGINT)
+        ELSE {epoch}
     END)"""
 
 
-def local_time_sql(ts: str, dst_start: str, dst_end: str,
+def local_time_sql(unix: str, dst_start: str, dst_end: str,
                    dst_offset: str, tz_offset: str) -> str:
-    """Shift a naive-UTC reading timestamp into provider-local time
-    (lib.rs:157-162): +dst_offset when strictly inside the DST window,
-    then always +tz_offset."""
-    ts = f"({ts})"
-    in_dst = (
-        f"({dst_start} IS NOT NULL AND {dst_end} IS NOT NULL"
-        f" AND {dst_start} < {ts} AND {ts} < {dst_end})"
-    )
+    """Shift naive-UTC reading seconds into provider-local seconds
+    (lib.rs:157-162): +dst_offset when strictly inside the DST window
+    (a NULL bound never is), then always +tz_offset."""
+    unix = f"({unix})"
     return (
-        f"(CASE WHEN {in_dst}"
-        f" THEN {ts} + make_dt_interval(0, 0, 0, CAST({dst_offset} AS DOUBLE))"
-        f" ELSE {ts} END"
-        f" + make_dt_interval(0, 0, 0, CAST(coalesce({tz_offset}, 0) AS DOUBLE)))"
+        f"({unix} + CASE WHEN {dst_start} < {unix} AND {unix} < {dst_end}"
+        f" THEN {dst_offset} ELSE 0 END + coalesce({tz_offset}, 0))"
     )

@@ -8,7 +8,9 @@ item 7).  This module replays the EXACT pipeline semantics of
 same parser output, for ONE file at a time:
 
 * single-LTP validation (lib.rs:42-50) -> error channel,
-* 2-hop href reading-type resolution (lib.rs:58-83),
+* the reading type the parser resolved per entry (2-hop href walk,
+  lib.rs:58-83, ``parser._link_entries``: one implementation for
+  both paths),
 * fail-the-file on missing reading type (lib.rs:168-169),
 * f32 value scaling (lib.rs:171-173) via struct round-trips — bit
   parity with Spark's FloatType arithmetic,
@@ -47,7 +49,6 @@ from .schemas import (
     KIND_ERROR,
     KIND_INTERVAL_READING,
     KIND_LOCAL_TIME_PARAMETERS,
-    KIND_READING_TYPE,
     MISSING_APP_INFO,
     TIMESERIES_COLUMNS,
     enum_maps,
@@ -196,9 +197,12 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
     """One XML file -> (TimeSeries row dicts in parse order, errors).
 
     Value-identical to ``timeseries_from_files`` on the same file
-    (pytest-pinned); error strings match the Spark error channel.  What
-    all readings of an entry share (title, reading type, scale, enum
-    strings) is resolved once per entry, and the DST window once per
+    (pytest-pinned); error strings match the Spark error channel.  Both
+    read the same parser output: each entry row already carries the
+    reading-type codes its hrefs resolve to (``parser._link_entries``),
+    so neither path walks hrefs itself.  What all readings of an entry
+    share (title, scale, enum strings) is decoded once per entry, as
+    the pipeline's entry dimension does, and the DST window once per
     year, as the reference memoizes it (lib.rs:117-162)."""
     from .parser import parse_espi_feed
 
@@ -214,7 +218,6 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
 
     entries = [r for r in rows if r["row_kind"] == KIND_ENTRY]
     facts = [r for r in rows if r["row_kind"] == KIND_INTERVAL_READING]
-    rts = [r for r in rows if r["row_kind"] == KIND_READING_TYPE]
     ltps = [r for r in rows if r["row_kind"] == KIND_LOCAL_TIME_PARAMETERS]
 
     if len(ltps) != 1:  # _validate_single_ltp
@@ -225,42 +228,24 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
         ]
     ltp = ltps[0]
 
-    by_href = {e["href"]: e for e in entries}
     by_index = {e["entry_index"]: e for e in entries}
-
-    def rt_entry_index(entry: dict[str, Any]) -> int | None:
-        """The entry dim's two href hops: entry -> meter reading -> reading type."""
-        mr_href = entry.get("related_meter_reading_entry_href", "")
-        if not mr_href:
-            return None
-        mr = by_href.get(mr_href)
-        if mr is None:
-            return None
-        rt = by_href.get(mr.get("related_reading_type_entry_href", ""))
-        if rt is None or rt.get("entry_type") != "reading_type":
-            return None
-        return rt["entry_index"]
-
-    rt_by_index = {r["entry_index"]: r for r in rts}
     first_entry = min(entries, key=lambda e: e["entry_index"], default=None)
     is_enova = bool(first_entry and "enova" in first_entry.get("href", ""))
 
     def entry_constants(entry_index: int):
         """What every reading of one entry shares: None for an orphan
-        (the inner join drops its facts), () when its reading type is
-        missing (fail-the-file, lib.rs:168-169)."""
+        (the inner join drops its facts), () when the parser resolved
+        no reading type for it (fail-the-file, lib.rs:168-169)."""
         entry = by_index.get(entry_index)
         if entry is None:
             return None
-        rt_idx = rt_entry_index(entry)
-        rt = rt_by_index.get(rt_idx) if rt_idx is not None else None
-        if rt is None or rt.get("power_of_ten_multiplier") is None:
+        if entry.get("power_of_ten_multiplier") is None:
             return ()
         enums = {
-            col: _decode("ReadingType", xsd_field, rt.get(col))
+            col: _decode("ReadingType", xsd_field, entry.get(col))
             for col, xsd_field in ENUM_FIELDS
         }
-        return entry["title"], f32(10.0 ** rt["power_of_ten_multiplier"]), enums
+        return entry["title"], f32(10.0 ** entry["power_of_ten_multiplier"]), enums
 
     quality_name = enum_maps().get(("", "QualityOfReading"), {}).get
     start_rule, end_rule = ltp["dst_start_rule"], ltp["dst_end_rule"]

@@ -15,6 +15,9 @@ it is native Catalyst.  Semantics mirror the reference parser:
 * published/updated RFC-3339 quirk — the offset is parsed then DROPPED
   (naive local clock time re-interpreted as UTC): src/entry.rs:96-111
 * hex-encoded DST rules: src/local_time_parameters.rs:152-159
+* J1/J2 per file: the href -> entry index and the two lookups
+  entry -> meter reading -> reading type (lib.rs:52-83), resolved
+  once the file's last entry is parsed (``_link_entries``)
 
 Row dicts target schemas.PARSED_SCHEMA; a file that fails to parse
 yields a single row_kind='error' row instead of killing the job
@@ -227,8 +230,8 @@ def _parse_local_time_parameters(
 
 def _parse_entry(
     node: ET.Element, entry_index: int, local: _LocalNames
-) -> list[dict[str, Any]]:
-    rows: list[dict[str, Any]] = []
+) -> tuple[dict[str, Any], list[dict[str, Any]]]:
+    """-> (the entry row, its reading / reading-type / LTP rows)."""
     entry: dict[str, Any] = {
         "row_kind": KIND_ENTRY,
         "entry_index": entry_index,
@@ -299,23 +302,56 @@ def _parse_entry(
     for required in ("href", "title", "published_unix", "updated_unix"):
         if required not in entry:
             raise EspiParseError(f"Missing required entry field {required}")
-    rows.append(entry)
 
-    for ib in interval_blocks:
-        for child in ib:
-            if local[child.tag] == "IntervalReading":
-                rows.append(_parse_interval_reading(child, entry_index, local))
+    rows = [
+        _parse_interval_reading(child, entry_index, local)
+        for ib in interval_blocks
+        for child in ib
+        if local[child.tag] == "IntervalReading"
+    ]
+    if rows:
+        starts = [r["time_period_start_unix"] for r in rows]
+        entry["first_start_unix"], entry["last_start_unix"] = min(starts), max(starts)
     if reading_type_node is not None:
         rows.append(_parse_reading_type(reading_type_node, entry_index, local))
     if ltp_node is not None:
         rows.append(_parse_local_time_parameters(ltp_node, entry_index, local))
-    return rows
+    return entry, rows
+
+
+_RT_CODES = tuple(_READING_TYPE_FIELDS.values())
+
+
+def _link_entries(
+    entries: list[dict[str, Any]], reading_types: dict[int, dict[str, Any]]
+) -> None:
+    """J1/J2 for one file, as the reference links entries
+    (lib.rs:52-83): an href -> entry index (the last entry wins on a
+    duplicate href, as a HashMap insert), then two lookups: entry ->
+    meter reading (by the href prefix ``_METER_READING_RE`` cut) ->
+    reading type (by the meter reading's related link).  Each entry row
+    gets its reading type's ``power_of_ten_multiplier`` and enum codes;
+    they stay unset (NULL) when a hop finds nothing or lands on an
+    entry that is not a reading type (lib.rs:168-169 then fails the
+    file if the entry has readings)."""
+    by_href = {e["href"]: e for e in entries}
+    for entry in entries:
+        mr_href = entry["related_meter_reading_entry_href"]
+        mr = by_href.get(mr_href) if mr_href else None
+        rt = by_href.get(mr["related_reading_type_entry_href"]) if mr else None
+        codes = reading_types.get(rt["entry_index"]) if rt else None
+        if codes:
+            for col in _RT_CODES:
+                entry[col] = codes[col]
 
 
 def iter_espi_stream(source, source_file: str):
     """The parser behind :func:`parse_espi_feed`: ``ET.XMLPullParser``
     fed 16 KiB at a time, yielding PARSED_SCHEMA row dicts per completed
-    ``<entry>`` and dropping each finished entry subtree.
+    ``<entry>`` and dropping each finished entry subtree.  The entry
+    rows themselves are held back to the end of the file, where
+    ``_link_entries`` resolves their reading types over the whole
+    file's hrefs.
 
     ``source`` is a file-like object (text mode preserves the
     reference's strict-UTF-8 read: a bad byte raises UnicodeDecodeError
@@ -327,7 +363,8 @@ def iter_espi_stream(source, source_file: str):
     rows anyway (it gets no dimension row; lib.rs:32-50 fail-the-file
     semantics).
     """
-    yielded = 0
+    entries: list[dict[str, Any]] = []
+    reading_types: dict[int, dict[str, Any]] = {}
     try:
         parser = ET.XMLPullParser(events=("start", "end"))
         local = _LocalNames()
@@ -350,19 +387,25 @@ def iter_espi_stream(source, source_file: str):
                     continue
                 depth -= 1
                 if depth == 0 and local[elem.tag] == "entry":
-                    for row in _parse_entry(elem, entry_index, local):
+                    entry, rows = _parse_entry(elem, entry_index, local)
+                    entry["source_file"] = source_file
+                    entries.append(entry)
+                    for row in rows:
                         row["source_file"] = source_file
-                        yielded += 1
+                        if row["row_kind"] == KIND_READING_TYPE:
+                            reading_types[entry_index] = row
                         yield row
                     entry_index += 1
                     # drop the finished entry subtree from the root
                     root.clear()
             if not data:
                 break
-        if yielded == 0:
+        if not entries:
             # an empty feed would otherwise vanish from every downstream
             # table; the reference errors it at denormalize (lib.rs:46-50)
             raise EspiParseError("Missing LocalTimeParameters.")
+        _link_entries(entries, reading_types)
+        yield from entries
     except Exception as ex:  # noqa: BLE001 - error channel, not crash
         yield {
             "row_kind": KIND_ERROR,

@@ -6,20 +6,23 @@ union-typed parse table (``source.read_espi``):
 
     parsed ─┬─ facts ──⋈ entry dim (title, up_key, f32(10^p), 8 enum strings)──
             │          ──⋈ DST dim (file[, usage point], year; is_enova)──project──sink
-            └─ entries / reading types / LTPs / parse errors ──> the dimensions
+            └─ entry / LTP / parse-error rows ──> file aggregate ──> the dimensions
 
-Everything that is constant per file or per entry is resolved once, on
-dimensions built from the non-fact rows plus one distinct-key
-aggregate over the facts:
+The parser already linked each file's entries (J1/J2,
+``parser._link_entries``): every entry row carries the reading-type
+codes its hrefs resolve to and the first and last start of its
+readings.  So the dimensions come from the ~1 row per entry that is
+not a fact, with no self-join and no pass over the facts:
 
-* file aggregate  entry, LTP and parse-error rows grouped by file:
-                  LTP count and rules, parse-error flag, first-entry
-                  href (enova)
-* entry dim       entry -> meter reading -> reading type (two href hops)
-                  with the reading-type codes decoded once per entry
-* fact keys       distinct (file, entry, year): feeds the 'Missing
-                  reading type' check and the DST dim
-* DST dim         fact keys x the files that pass every check, with the
+* file aggregate  one GROUP BY source_file over entry, LTP and
+                  parse-error rows: LTP count and rules, parse-error
+                  flag, first-entry href (enova), 'Missing reading
+                  type' (an entry with readings but no codes) and the
+                  years the entries' readings span
+* entry dim       a projection of the entries with readings: title,
+                  usage point, scale and the decoded codes
+* DST dim         the years of each file that passes every check
+                  (per usage point in the multi-LTP mode), with the
                   rules evaluated per year and the enova flag
 
 Both dimensions carry broadcast hints and the fact stream is one stage:
@@ -28,18 +31,22 @@ file that fails any check has no row in the DST dim, so the inner join
 drops its facts, including partial rows a streaming parse emitted
 before its error row.  Every key carries ``source_file`` so a
 multi-file ingest is one job (the reference loops files
-single-threaded and UNION-ALLs).
+single-threaded and UNION-ALLs).  A strict ingest plus its parquet
+write runs 5 jobs: the parse checkpoint, the entry dim, the
+aggregate's shuffle, the DST dim and the fact stream.
 
 Each output — the TimeSeries and the per-file error rows — is ONE
 ``spark.sql`` statement whose CTE text is built once per process: the
 whole plan costs one parse and one analysis per output, instead of a
 py4j round trip per Column expression (about 5,500 per ingest when it
-was built with the DataFrame API).
+was built with the DataFrame API).  The text is zone-free (dst.py): no
+expression reads the session time zone, so any session gives the same
+rows and nothing here sets a session conf.
 
 Quirk parity with the reference (each cited):
 * value = f32(raw) * f32(10^power_of_ten_multiplier) in FLOAT
   arithmetic (lib.rs:171-173) — golden shows 58.000004.
-* DST shift on naive-UTC clock time, strict window (lib.rs:157-162).
+* DST shift on naive-UTC clock seconds, strict window (lib.rs:157-162).
 * enova provider patch: if the file's FIRST entry href contains
   'enova', all costs x100 (timeseries.rs:173-178, lib.rs:187).
 * exactly one LocalTimeParameters row per file required
@@ -55,7 +62,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .dst import local_time_sql, rule_datetime_sql
+from .dst import local_time_sql, rule_epoch_sql, year_sql
 from .enum_dim import decode_enum_sql, sql_str
 from .schemas import (
     ENUM_FIELDS,
@@ -63,20 +70,8 @@ from .schemas import (
     KIND_ERROR,
     KIND_INTERVAL_READING,
     KIND_LOCAL_TIME_PARAMETERS,
-    KIND_READING_TYPE,
 )
 from .source import read_espi
-
-
-def _pin_utc(spark: SparkSession) -> None:
-    """ESPI timestamps are data, not wall clock: every year/timestamp
-    expression in this module must evaluate in UTC regardless of the
-    caller's session zone (ADVICE r1: a non-UTC session silently broke
-    golden parity)."""
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:  # pragma: no cover - static-conf sessions
-        pass
 
 
 # ESPI hrefs scope resources under ".../UsagePoint/{id}/..."; the prefix
@@ -184,15 +179,18 @@ def _row_kind(kind: str) -> str:
 @lru_cache(maxsize=None)
 def _statements(strict_single_ltp: bool, include_source_file: bool) -> tuple[str, str]:
     """The (TimeSeries, errors) SQL statements over ``{parsed}``, built
-    once per process.  They share one CTE prefix; Spark inlines each
-    CTE at its references, so the text describes one plan per output.
-    The text goes through ``str.format`` in ``spark.sql``: apart from
+    once per process.  They share the CTE prefix up to the error rows;
+    only the TimeSeries statement carries the dimensions, since Spark
+    analyzes every CTE a statement defines, referenced or not.  Spark
+    inlines each CTE at its references, so the text describes one plan
+    per output.  The text goes through ``str.format`` in ``spark.sql``: apart from
     ``{parsed}`` it holds no braces (the enum strings have none)."""
     rules = _LTP_RULE_COLS
     codes = [c for c, _ in ENUM_FIELDS]
     decoded = ",\n           ".join(
         f"{decode_enum_sql(c, xsd)} AS {c}" for c, xsd in ENUM_FIELDS
     )
+    up_key = f"regexp_extract(href, {sql_str(_USAGE_POINT_RE)}, 1)"
     if strict_single_ltp:
         ltp_checks = f"""
 ltp_errors AS (
@@ -202,16 +200,19 @@ ltp_errors AS (
 ltp_ok AS (SELECT * FROM files WHERE n_ltp = 1),"""
         # P11: DST/tz rules per (file, year) — the analog of the
         # reference's per-year memoization
-        dst_keys, rules_from = ("source_file", "year"), "g"
-        dst_from = """(SELECT DISTINCT source_file, year FROM fact_keys) k
-    JOIN good g ON k.source_file = g.source_file"""
+        dst_keys = ("source_file", "year")
+        dst_from = "(SELECT *, explode(sequence(first_year, last_year)) AS year FROM good) g"
+        r = k = "g"
+        hint = ""
     else:
         ltp_checks = f"""
-file_up_years AS (
-    SELECT /*+ BROADCAST(d) */ DISTINCT k.source_file, d.up_key, k.year
-    FROM fact_keys k
-    JOIN entry_dim d ON k.source_file = d.source_file AND k.entry_index = d.entry_index),
-fact_ups AS (SELECT DISTINCT source_file, up_key FROM file_up_years),
+-- the usage points a file's readings fall under, and the years each spans
+fact_ups AS (
+    SELECT source_file, {up_key} AS up_key,
+           {year_sql("min(first_start_unix)")} AS first_year,
+           {year_sql("max(last_start_unix)")} AS last_year
+    FROM entries WHERE first_start_unix IS NOT NULL
+    GROUP BY source_file, {up_key}),
 {_ltp_scope_ctes("ltp", "entries", "files", "fact_ups")},
 -- a file with a parse error reports only that error
 ltp_errors AS (
@@ -221,90 +222,75 @@ ltp_ok AS (
     SELECT /*+ BROADCAST(x) */ f.*
     FROM files f LEFT ANTI JOIN ltp_errors x ON f.source_file = x.source_file),"""
         # rules per (file, usage point, year)
-        dst_keys, rules_from = ("source_file", "up_key", "year"), "r"
-        dst_from = """file_up_years k
+        dst_keys = ("source_file", "up_key", "year")
+        dst_from = """(SELECT *, explode(sequence(first_year, last_year)) AS year FROM fact_ups) k
     JOIN good g ON k.source_file = g.source_file
     LEFT JOIN ltp_resolved r ON k.source_file = r.source_file AND k.up_key = r.up_key"""
-    r = rules_from
+        r, k = "r", "k"
+        hint = "/*+ BROADCAST(g, r) */"
 
-    ctes = f"""WITH
+    checks = f"""WITH
 entries AS (
-    SELECT source_file, entry_index, entry_type, href, title,
-           related_meter_reading_entry_href AS mr_href,
-           related_reading_type_entry_href AS rt_href
+    SELECT source_file, entry_index, href, title, first_start_unix, last_start_unix,
+           power_of_ten_multiplier, {", ".join(codes)}
     {_row_kind(KIND_ENTRY)}),
-facts AS (
-    SELECT source_file, entry_index, cost, quality, value, tou,
-           time_period_start_unix, time_period_duration_seconds,
-           CAST(year(timestamp_seconds(time_period_start_unix)) AS BIGINT) AS year
-    {_row_kind(KIND_INTERVAL_READING)}),
 ltp AS (SELECT source_file, entry_index, {", ".join(rules)} {_row_kind(KIND_LOCAL_TIME_PARAMETERS)}),
--- files that parsed: at least one entry and no error row.  Only entry
--- rows order min_by, so is_enova reads the FIRST entry's href
--- (timeseries.rs:173-178); only LTP rows carry rules, exact when the
--- file has one LTP.
+-- one row per file that parsed: at least one entry and no error row.
+-- Only entry rows order min_by, so is_enova reads the FIRST entry's
+-- href (timeseries.rs:173-178); only LTP rows carry rules, exact when
+-- the file has one LTP.  J4: an entry with readings whose reading type
+-- the parser did not resolve fails its WHOLE file (lib.rs:168-169);
+-- entries without readings never do.
 files AS (
     SELECT source_file,
            count_if(row_kind = '{KIND_LOCAL_TIME_PARAMETERS}') AS n_ltp,
            contains(min_by(href, CASE WHEN row_kind = '{KIND_ENTRY}' THEN entry_index END), 'enova')
                AS is_enova,
-           {", ".join(f"max({c}) AS {c}" for c in rules)}
+           {", ".join(f"max({c}) AS {c}" for c in rules)},
+           bool_or(first_start_unix IS NOT NULL AND power_of_ten_multiplier IS NULL)
+               AS rt_missing,
+           {year_sql("min(first_start_unix)")} AS first_year,
+           {year_sql("max(last_start_unix)")} AS last_year
     FROM {{parsed}}
     WHERE row_kind IN ('{KIND_ENTRY}', '{KIND_LOCAL_TIME_PARAMETERS}', '{KIND_ERROR}')
     GROUP BY source_file
-    HAVING count_if(row_kind = '{KIND_ENTRY}') > 0 AND count_if(row_kind = '{KIND_ERROR}') = 0),
--- J2: entry -> meter-reading entry -> reading-type entry (2-hop href
--- walk, lib.rs:58-83); an entry whose reading type does not resolve
--- (lib.rs:168-169) keeps its row with a NULL scale
+    HAVING count_if(row_kind = '{KIND_ENTRY}') > 0 AND count_if(row_kind = '{KIND_ERROR}') = 0),{ltp_checks}
+rt_errors AS (SELECT source_file, '{_RT_MISSING}' AS error FROM ltp_ok WHERE rt_missing)"""
+    dims = f"""
+facts AS (
+    SELECT source_file, entry_index, cost, quality, value, tou,
+           time_period_start_unix, time_period_duration_seconds,
+           {year_sql("time_period_start_unix")} AS year
+    {_row_kind(KIND_INTERVAL_READING)}),
+-- J2 ran in the parser (parser._link_entries): an entry row carries the
+-- codes of the reading type its hrefs resolve to, so the dimension is
+-- a projection of the entries that have readings
 entry_dim AS (
-    SELECT /*+ BROADCAST(mr, rt, c) */
-           e.source_file, e.entry_index, e.title,
-           regexp_extract(e.href, {sql_str(_USAGE_POINT_RE)}, 1) AS up_key,
+    SELECT source_file, entry_index, title, {up_key} AS up_key,
            -- P6: the scale factor in FLOAT, as the reference computes it
-           CAST(pow(CAST(10 AS DOUBLE), CAST(c.power_of_ten_multiplier AS DOUBLE)) AS FLOAT)
+           CAST(pow(CAST(10 AS DOUBLE), CAST(power_of_ten_multiplier AS DOUBLE)) AS FLOAT)
                AS scale,
            -- P10: literal-map decode (the phf-map analog), once per entry
            {decoded}
-    FROM entries e
-    LEFT JOIN entries mr
-        ON e.mr_href != '' AND mr.source_file = e.source_file AND mr.href = e.mr_href
-    LEFT JOIN entries rt ON rt.source_file = mr.source_file AND rt.href = mr.rt_href
-    LEFT JOIN (SELECT source_file, entry_index, power_of_ten_multiplier, {", ".join(codes)}
-               {_row_kind(KIND_READING_TYPE)}) c
-        ON c.source_file = e.source_file
-        AND c.entry_index = CASE WHEN rt.entry_type = 'reading_type' THEN rt.entry_index END),
-fact_keys AS (SELECT DISTINCT source_file, entry_index, year FROM facts),{ltp_checks}
--- J4: a fact whose entry resolves to no reading type fails its WHOLE
--- file (lib.rs:168-169); entries without readings never do
-rt_error_files AS (
-    SELECT /*+ BROADCAST(d) */ DISTINCT k.source_file
-    FROM fact_keys k
-    LEFT SEMI JOIN (SELECT source_file, entry_index FROM entry_dim WHERE scale IS NULL) d
-        ON k.source_file = d.source_file AND k.entry_index = d.entry_index),
-rt_errors AS (
-    SELECT /*+ BROADCAST(o) */ x.source_file, '{_RT_MISSING}' AS error
-    FROM rt_error_files x LEFT SEMI JOIN ltp_ok o ON x.source_file = o.source_file),
-good AS (
-    SELECT /*+ BROADCAST(x) */ o.source_file, o.is_enova, {_cols("o", rules)}
-    FROM ltp_ok o LEFT ANTI JOIN rt_error_files x ON o.source_file = x.source_file),
--- every (file, year) of a good file's facts is a fact key, so the DST
--- dim holds exactly the good files and carries their enova flag
+    FROM entries WHERE first_start_unix IS NOT NULL),
+good AS (SELECT * FROM ltp_ok WHERE NOT rt_missing),
+-- every year a good file's readings span, with its enova flag and the
+-- DST window evaluated once per year
 dst_dim AS (
-    SELECT /*+ BROADCAST(g, {r}) */
-           {_cols("k", dst_keys)}, g.is_enova,
-           {rule_datetime_sql(f"{r}.dst_start_rule", "k.year")} AS dst_start_ts,
-           {rule_datetime_sql(f"{r}.dst_end_rule", "k.year")} AS dst_end_ts,
+    SELECT {hint}
+           {_cols(k, dst_keys)}, g.is_enova,
+           {rule_epoch_sql(f"{r}.dst_start_rule", f"{k}.year")} AS dst_start,
+           {rule_epoch_sql(f"{r}.dst_end_rule", f"{k}.year")} AS dst_end,
            {r}.dst_offset, {r}.tz_offset
     FROM {dst_from})
 """
     shifted = local_time_sql(
-        "timestamp_seconds(f.time_period_start_unix)",
-        "t.dst_start_ts", "t.dst_end_ts", "t.dst_offset", "t.tz_offset",
+        "f.time_period_start_unix", "t.dst_start", "t.dst_end", "t.dst_offset", "t.tz_offset"
     )
     dst_on = " AND ".join(
-        f"{'d' if k == 'up_key' else 'f'}.{k} = t.{k}" for k in dst_keys
+        f"{'d' if key == 'up_key' else 'f'}.{key} = t.{key}" for key in dst_keys
     )
-    timeseries = f"""{ctes}
+    timeseries = f"""{checks},{dims}
 SELECT /*+ BROADCAST(d, t) */
        {"f.source_file, " if include_source_file else ""}d.title,
        -- P12: the enova cost patch.  The cost NaN sentinel
@@ -317,13 +303,13 @@ SELECT /*+ BROADCAST(d, t) */
        -- P6: value scaling in genuine FLOAT arithmetic (golden bit parity)
        CAST(CAST(f.value AS FLOAT) * d.scale AS FLOAT) AS value,
        f.tou,
-       unix_timestamp({shifted}) AS time_period_start_unix,
+       {shifted} AS time_period_start_unix,
        f.time_period_duration_seconds,
        {_cols("d", codes)}
 FROM facts f
 JOIN entry_dim d ON f.source_file = d.source_file AND f.entry_index = d.entry_index
 JOIN dst_dim t ON {dst_on}"""
-    errors = f"""{ctes}
+    errors = f"""{checks}
 SELECT source_file, error {_row_kind(KIND_ERROR)}
 UNION ALL SELECT source_file, error FROM ltp_errors
 UNION ALL SELECT source_file, error FROM rt_errors"""
@@ -366,12 +352,7 @@ def denormalize_with_errors(
     byte-parity depends on it) and the per-file error channel;
     single-global-LTP files produce identical rows under either mode.
     """
-    # The DST window compare and year/to_timestamp evaluate in the
-    # session zone; golden parity (dst.py, reference lib.rs) assumes
-    # UTC.  get_spark pins it, but a caller-supplied session may not —
-    # pin here so the pipeline is correct in any session.
     spark = parsed.sparkSession
-    _pin_utc(spark)
     timeseries, errors = _statements(strict_single_ltp, include_source_file)
     return spark.sql(timeseries, parsed=parsed), spark.sql(errors, parsed=parsed)
 
@@ -385,8 +366,8 @@ def timeseries_from_files(
     """End-to-end: file paths -> (timeseries_df, errors_df).
 
     The parsed union table is the single Python-stage output; both
-    statements read it several times (entries x3, facts, reading types,
-    LTPs, the file aggregate), so it is materialized once via
+    statements read it several times (facts, entries, the file
+    aggregate; LTPs in the multi-LTP mode), so it is materialized once via
     ``localCheckpoint(eager=True)`` — one parse per file total, like
     the reference.  Eager, because a lazy checkpoint is marked by
     whichever concurrent broadcast job finishes first, and Spark 4.1

@@ -51,6 +51,9 @@ def _build_parsed_schema():
         T.StructField("updated_unix", T.LongType(), True),
         T.StructField("related_meter_reading_entry_href", T.StringType(), True),
         T.StructField("related_reading_type_entry_href", T.StringType(), True),
+        # earliest and latest reading start of the entry (NULL: no readings)
+        T.StructField("first_start_unix", T.LongType(), True),
+        T.StructField("last_start_unix", T.LongType(), True),
         # interval_readings
         T.StructField("cost", T.FloatType(), True),
         T.StructField("quality", T.IntegerType(), True),
@@ -58,7 +61,8 @@ def _build_parsed_schema():
         T.StructField("tou", T.IntegerType(), True),
         T.StructField("time_period_start_unix", T.LongType(), True),
         T.StructField("time_period_duration_seconds", T.IntegerType(), True),
-        # reading_types (enum codes)
+        # reading_types (enum codes); an entry row carries the codes of
+        # the reading type its hrefs resolve to (parser._link_entries)
         T.StructField("accumulation_behaviour", T.IntegerType(), True),
         T.StructField("commodity", T.IntegerType(), True),
         T.StructField("currency", T.IntegerType(), True),

@@ -6,8 +6,12 @@ Arrow batch of (path, content) rows becomes one Arrow batch of
 union-typed rows per PARSED_SCHEMA, built column by column from the
 parser's row dicts.  One parse pass feeds all four normalized tables:
 the pipeline's SQL statements read them off this one table by
-``row_kind`` (schemas.KIND_*), in their CTEs.  The reference parses
-each file once too (lib.rs:192-233), but single-threaded.
+``row_kind`` (schemas.KIND_*), in their CTEs.  A file never spans two
+tasks, so the parser links its entries here too (J1/J2, per file, as
+the reference's href index): entry rows leave the task with their
+reading-type codes and reading span, and the pipeline needs no join
+on hrefs.  The reference parses each file once too (lib.rs:192-233),
+but single-threaded.
 
 At 100 TB scale: file listing is driver-side metadata only; parse
 parallelism = number of files (fine for many small provider exports —

@@ -697,7 +697,6 @@ def ivf_topk_blocked(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cell_split: int = 1,
     hot_cell_rows: int | None = HOT_CELL_ROWS_DEFAULT,
     count_sample_mod: int = 64,
 ) -> DataFrame:
@@ -729,23 +728,20 @@ def ivf_topk_blocked(
       materialized as rows);
     * one final per-query window over the probed-cells * k survivors.
 
-    ``cell_split > 1`` additionally splits each cell's CORPUS side
-    into that many hash sub-cells (queries probe every sub-cell): a
-    hub cell that attracts a disproportionate share of both sides
-    becomes ``cell_split`` smaller tasks instead of one straggler.
-    Output is identical for any split: sub-cells partition the cell's
-    neighbor set, per-sub-cell top-k uses the same total order
-    (cosine desc, neighbor_id asc), and the final window takes the
-    global top-k over the union — the knn_graph argument.
-
-    ``hot_cell_rows`` is the AUTO form of that valve (r13 VERDICT: the
-    manual knob required operator intervention): per-cell corpus
-    counts are ESTIMATED from a deterministic 1/``count_sample_mod``
-    hash sample of ids, assigned by the same cells rule (the only
-    extra work — O(n/mod) assignments — and the estimate rides a
-    driver-sized ≤C-row collect, the ``_cap_buckets`` count-then-act
-    pattern), and any cell estimated above the literal row threshold
-    splits into ``ceil(est / hot_cell_rows)`` hash sub-cells.  Because
+    ``hot_cell_rows`` is the hub-cell valve: a cell that attracts a
+    disproportionate share of both sides splits its CORPUS side into
+    hash sub-cells (queries probe every sub-cell), so it becomes
+    several smaller tasks instead of one straggler.  Output is
+    identical for any split: sub-cells partition the cell's neighbor
+    set, per-sub-cell top-k uses the same total order (cosine desc,
+    neighbor_id asc), and the final window takes the global top-k over
+    the union — the knn_graph argument.  Per-cell corpus counts are
+    ESTIMATED from a deterministic 1/``count_sample_mod`` hash sample
+    of ids, assigned by the same cells rule (the only extra work —
+    O(n/mod) assignments — and the estimate rides a driver-sized ≤C-row
+    collect, the ``_cap_buckets`` count-then-act pattern), and any cell
+    estimated above the literal row threshold splits into
+    ``ceil(est / hot_cell_rows)`` hash sub-cells.  Because
     output is split-INVARIANT (pytest pins trigger-on == trigger-off
     bitwise), sampling error costs only balance, never correctness —
     which is what lets the estimate be a sample instead of a second
@@ -765,8 +761,8 @@ def ivf_topk_blocked(
     twins even on degenerate inputs (closes the r12 ADVICE NaN
     divergence; pytest pins it with zero-norm vectors).
 
-    Shuffle volume is corpus + queries x probed cells x cell_split
-    rows in, queries x probed cells x cell_split x k rows out.  pytest
+    Shuffle volume is corpus + queries x probed sub-cells rows in,
+    queries x probed sub-cells x k rows out.  pytest
     pins bitwise equality against the expression form (and across
     splits); the DuckDB oracles cover both cell rules."""
     import pandas as pd
@@ -837,14 +833,13 @@ def ivf_topk_blocked(
             if n > hot_cell_rows
         }
 
-    return _blocked_score_tail(q, c, k, cell_split, cell_splits=cell_splits)
+    return _blocked_score_tail(q, c, k, cell_splits=cell_splits)
 
 
 def _blocked_score_tail(
     q,
     c,
     k: int,
-    cell_split: int = 1,
     cell_splits: dict[int, int] | None = None,
 ) -> DataFrame:
     """Scoring tail of ``ivf_topk_blocked``: given probe rows
@@ -854,9 +849,7 @@ def _blocked_score_tail(
     equal to the untiled matrix — see ivf_topk_blocked), emit per-query
     top-k within the cell, and take the global per-query top-k.
 
-    ``cell_split`` fans EVERY cell's corpus side into that many hash
-    sub-cells (queries probe each; output split-invariant).
-    ``cell_splits`` is the per-cell form (the auto hot-cell valve):
+    ``cell_splits`` is the hot-cell valve's split:
     a driver-sized {cell: factor} map — only the listed cells split,
     each into its own factor, via a broadcast join + per-row
     ``sequence`` explode on the probe side.  Output is identical for
@@ -872,14 +865,7 @@ def _blocked_score_tail(
     if split_rows:
         spark = q.sparkSession
         sdf = spark.createDataFrame(split_rows, "cell int, __split int")
-        # a manual cell_split composes as the FLOOR factor for cells
-        # the valve did not list (r14 ADVICE: the valve silently
-        # discarded the caller's fan-out for non-hot cells): every
-        # cell splits at least cell_split ways, hot cells by their
-        # own larger factor.  Output stays split-invariant either way.
         factor = F.coalesce(F.col("__split"), F.lit(1))
-        if cell_split > 1:
-            factor = F.greatest(factor, F.lit(cell_split))
         c = (
             c.join(F.broadcast(sdf), "cell", "left")
             .withColumn("__split", factor)
@@ -905,28 +891,13 @@ def _blocked_score_tail(
             )
         )
         return _blocked_score_window(q, c, k, keys=("cell", "__sub"))
-    if cell_split > 1:
-        sub = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(cell_split)).cast("int")
-        c = c.withColumn("cell", F.col("cell") * cell_split + sub)
-        q = q.select(
-            "query_id",
-            "qv",
-            "qnrm",
-            F.explode(
-                F.array(
-                    *[
-                        (F.col("cell") * cell_split + F.lit(s)).cast("int")
-                        for s in range(cell_split)
-                    ]
-                )
-            ).alias("cell"),
-        )
     return _blocked_score_window(q, c, k, keys=("cell",))
 
 
 def _blocked_score_window(q, c, k: int, keys: tuple[str, ...]) -> DataFrame:
     """Tiled per-(grouping-key) scoring + the final global window —
-    the common tail of both split forms of ``_blocked_score_tail``."""
+    the common tail of the split and unsplit forms of
+    ``_blocked_score_tail``."""
     import numpy as np
     import pandas as pd
 

@@ -85,22 +85,17 @@ def _cross_pairs_from(emb: DataFrame) -> DataFrame:
     )
 
 
-def _margin_select(u: DataFrame, broadcast_small: bool = True) -> DataFrame:
+def _margin_select(u: DataFrame) -> DataFrame:
     """Shared scoring tail: (src_id, tgt_id, u_e9) candidate pairs ->
     per-source best pair by integer ratio margin, with mutual-best and
     margin>1 flags.  Two window ranks (one per endpoint), two
     per-endpoint sum tables joined back by key, one best-of window per
     side.
 
-    ``broadcast_small=True`` (the declared small-sf operating point)
-    force-broadcasts the endpoint-sum tables and the per-target best
-    map.  Those tables are one row per DISTINCT endpoint — n_src /
-    n_tgt rows, NOT driver-sized at mining scale — so the scale path
-    (measured in SCALING.md) passes False: the planner picks
-    the join strategy, and ``best`` is eagerly localCheckpoint-ed so
-    the tgt_best leg reuses it instead of recomputing the whole window
-    subtree for a second exchange (eager because two consumers race a
-    lazy checkpoint — the eval_minhash_precision lesson).
+    The endpoint-sum tables and the per-target best map are
+    force-broadcast (the declared small-sf operating point).  They are
+    one row per DISTINCT endpoint — n_src / n_tgt rows, NOT
+    driver-sized at mining scale (see SCALING.md).
 
     r15: ``u`` itself is eagerly checkpointed — it feeds the two
     endpoint-sum rank chains AND the margin join, so the candidate
@@ -130,10 +125,9 @@ def _margin_select(u: DataFrame, broadcast_small: bool = True) -> DataFrame:
         .groupBy("tgt_id")
         .agg(F.sum("u_e9").alias("sum_tgt"))
     )
-    hint = F.broadcast if broadcast_small else (lambda df: df)
     m = (
-        u.join(hint(sa), "src_id")
-        .join(hint(sb), "tgt_id")
+        u.join(F.broadcast(sa), "src_id")
+        .join(F.broadcast(sb), "tgt_id")
         .withColumn(
             "margin_ppm",
             F.expr(f"(u_e9 * {2 * _K * 1000000}L) div (sum_src + sum_tgt)"),
@@ -148,14 +142,12 @@ def _margin_select(u: DataFrame, broadcast_small: bool = True) -> DataFrame:
     best = m.withColumn("rn_src", F.row_number().over(wb_src)).withColumn(
         "rn_tgt", F.row_number().over(wb_tgt)
     )
-    if not broadcast_small:
-        best = best.localCheckpoint(eager=True)
     tgt_best = best.filter(F.col("rn_tgt") == 1).select(
         "tgt_id", F.col("src_id").alias("back_src")
     )
     return (
         best.filter(F.col("rn_src") == 1)
-        .join(hint(tgt_best), "tgt_id")
+        .join(F.broadcast(tgt_best), "tgt_id")
         .select(
             "src_id",
             "tgt_id",

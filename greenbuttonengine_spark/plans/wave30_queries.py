@@ -139,7 +139,7 @@ def _hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the full pipeline carries a DuckDB oracle.  Scale shape: "
     "assignment/probing are scan-stage Arrow batches; the only "
     "shuffle is the cell cogroup of the shared tiled scoring tail "
-    "(literal 67 MB/task bound, cell_split hub valve).  Recall "
+    "(literal 67 MB/task bound, hot-cell split valve).  Recall "
     "differs from flat IVF by construction — eval_ann_hier_recall is "
     "the attached go/no-go measurement.",
 )

@@ -4,13 +4,15 @@ the Green Button Alliance documented example.
 
 The reference tests get_date/get_datetime with explicit operator args;
 our evaluator is SQL expression text over the packed u32 (the text the
-ESPI pipeline splices into its DST dimension), so each case packs
-the fields first (encoding per local_time_parameters.rs:108-128, with
+ESPI pipeline splices into its DST dimension) giving naive-UTC epoch
+seconds, so each case packs the fields first (encoding per local_time_parameters.rs:108-128, with
 the chrono day-of-week quirk: packed dow d decodes to weekday
 (d+1) % 7 with 0=Monday).
 """
 
 from __future__ import annotations
+
+import datetime as _dt
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,10 +38,17 @@ def dow_bits_for_weekday_monday0(target_mon0: int) -> int:
 
 
 def _rule_column(rule: str, year: str):
-    """The production rule text as a Column."""
-    from greenbuttonengine_spark.espi.dst import rule_datetime_sql
+    """The production rule text as a Column (naive-UTC epoch seconds)."""
+    from greenbuttonengine_spark.espi.dst import rule_epoch_sql
 
-    return F.expr(rule_datetime_sql(rule, year))
+    return F.expr(rule_epoch_sql(rule, year))
+
+
+def _naive(epoch):
+    """Epoch seconds -> naive datetime, as the reference's NaiveDateTime."""
+    if epoch is None:
+        return None
+    return _dt.datetime(1970, 1, 1) + _dt.timedelta(seconds=epoch)
 
 
 def eval_rule(spark, rule: int, year: int):
@@ -48,7 +57,7 @@ def eval_rule(spark, rule: int, year: int):
         .select(_rule_column(f"CAST({rule} AS BIGINT)", f"CAST({year} AS BIGINT)").alias("ts"))
         .first()
     )
-    return row.ts
+    return _naive(row.ts)
 
 
 TUESDAY = dow_bits_for_weekday_monday0(1)  # chrono Weekday::Tue = 1
@@ -99,8 +108,6 @@ def test_month_zero_yields_null(spark):
 # semantics (local_time_parameters.rs:43-143) vs the Spark SQL evaluator,
 # over randomized rules x years.
 # ---------------------------------------------------------------------------
-
-import datetime as _dt
 
 
 def _model_rule_datetime(rule: int, year: int):
@@ -172,7 +179,7 @@ def test_hypothesis_cross_check(spark):
     # evaluate the whole batch in ONE Spark job (per-case jobs would be slow)
     df = spark.createDataFrame(cases, "rule long, year long")
     got = {
-        (r.rule, r.year): r.ts
+        (r.rule, r.year): _naive(r.ts)
         for r in df.select("rule", "year", _rule_column("rule", "year").alias("ts")).collect()
     }
     for rule, year in cases:

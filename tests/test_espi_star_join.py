@@ -1,17 +1,20 @@
 """The ESPI denormalize as a star join over small broadcast dimensions.
 
-Three guards on ``espi.pipeline.denormalize_with_errors``:
+Guards on ``espi.pipeline.denormalize_with_errors``:
 
 * a MIXED multi-file ingest — good, enova, DST and every bad shape in
   one plan, so the per-file and per-entry dimensions see many files at
   once — must give each file exactly the rows and error strings the
-  single-file fast path (``espi.fastpath.convert_file``) gives it;
+  single-file fast path (``espi.fastpath.convert_file``) gives it, in
+  a UTC and in a non-UTC session;
+* a feed that repeats an href gives each reading once in both engines;
 * the fact stream must stay one stage: between the interval-reading
   scan and the root there is no shuffle and no window, only broadcast
   hash joins against the dimensions;
 * building the plan is a handful of py4j round trips: each output is
   one parsed SQL statement, not a DataFrame-API expression tree built
-  one JVM call at a time.
+  one JVM call at a time;
+* an ingest plus its parquet write runs a small fixed number of jobs.
 """
 
 from __future__ import annotations
@@ -133,8 +136,7 @@ def _by_file(ts, errors_df):
     return rows, errors
 
 
-@pytest.mark.parametrize("strict", [True, False])
-def test_mixed_ingest_equals_fastpath_per_file(spark, mixed_dir, strict):
+def _check_mixed_ingest(spark, mixed_dir, strict):
     from greenbuttonengine_spark.espi import fastpath as fp
     from greenbuttonengine_spark.espi.pipeline import timeseries_from_files
 
@@ -161,6 +163,48 @@ def test_mixed_ingest_equals_fastpath_per_file(spark, mixed_dir, strict):
     assert errors["no_rt.xml"] == ["Missing reading type"]
     assert errors["truncated.xml"][0].startswith("ParseError")
     assert errors["bad_utf8.xml"][0].startswith("UnicodeDecodeError")
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_mixed_ingest_equals_fastpath_per_file(spark, mixed_dir, strict):
+    _check_mixed_ingest(spark, mixed_dir, strict)
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_mixed_ingest_is_zone_free(spark, mixed_dir, strict):
+    """The statements never read the session time zone: a New York
+    session gives the same rows (the DST feed's readings straddle both
+    US transitions)."""
+    key = "spark.sql.session.timeZone"
+    zone = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        _check_mixed_ingest(spark, mixed_dir, strict)
+    finally:
+        spark.conf.set(key, zone)
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_duplicate_href_gives_each_reading_once(spark, tmp_path, strict):
+    """A feed that repeats its MeterReading entry: the href index keeps
+    the last entry with an href (the reference's HashMap insert), so
+    each reading still resolves to one reading type and appears once."""
+    from greenbuttonengine_spark.espi import fastpath as fp
+    from greenbuttonengine_spark.espi.pipeline import timeseries_from_files
+    from perfbench.corpus import make_feed
+
+    xml = make_feed(3, "x.xml", "egd_gas", 40).data.decode()
+    mr_type = 'type="espi-entry/MeterReading"'
+    start = xml.rindex("  <entry>", 0, xml.index(mr_type))
+    end = xml.index("</entry>\n", start) + len("</entry>\n")
+    path = tmp_path / "dup_href.xml"
+    path.write_text(xml[:end] + xml[start:end] + xml[end:])
+
+    want, want_errors = fp.convert_file(str(path))
+    assert len(want) == 40 and not want_errors
+    ts, errors = timeseries_from_files(spark, str(path), strict_single_ltp=strict)
+    assert _canon([r.asDict() for r in ts.collect()]) == _canon(want)
+    assert errors.count() == 0
 
 
 def _fact_path(node) -> list[str]:
@@ -233,3 +277,26 @@ def test_denormalize_build_is_a_few_jvm_calls(spark, mixed_dir, monkeypatch, str
     monkeypatch.undo()
     assert 0 < len(calls) <= 60, calls
     assert ts.count() > 0 and errors.count() == 0
+
+
+@pytest.mark.parametrize("strict,budget", [(True, 5), (False, 30)])
+def test_ingest_job_budget(spark, mixed_dir, tmp_path, strict, budget):
+    """One ingest of the mixed corpus plus its parquet write, counted
+    under a job group: the eager parse checkpoint, then the dimensions
+    (strict: the entry projection, the file aggregate's shuffle and the
+    DST broadcast) and the fact + parquet job.  Self-joins on hrefs or a
+    second scan of the facts for their keys would add jobs: with them
+    the same ingest ran 14 jobs strict and 41-42 in the multi-LTP mode."""
+    from greenbuttonengine_spark.espi.pipeline import timeseries_from_files
+    from greenbuttonengine_spark.sinks import write_parquet
+
+    sc = spark.sparkContext
+    group = f"espi_job_budget_{strict}"
+    sc.setJobGroup(group, group)
+    try:
+        ts, _errors = timeseries_from_files(spark, str(mixed_dir), strict_single_ltp=strict)
+        write_parquet(ts, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= budget, len(jobs)

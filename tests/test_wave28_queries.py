@@ -203,8 +203,7 @@ def test_blocked_ivf_tiling_and_split_bitwise_invariant(spark, monkeypatch):
     """The literal memory bound (r12 VERDICT item 1) must not change a
     bit: force tiny _Q_BLOCK/_C_BLOCK tiles (so the tiled merge path is
     actually exercised — sf0.001 cells are far below the production 64
-    MB bound) and a cell_split fan-out, and pin both against the
-    untiled single-matrix result."""
+    MB bound), and pin it against the untiled single-matrix result."""
     from pyspark.sql import functions as F
 
     from greenbuttonengine_spark.extensions import similarity
@@ -226,7 +225,6 @@ def test_blocked_ivf_tiling_and_split_bitwise_invariant(spark, monkeypatch):
     monkeypatch.setattr(similarity, "_Q_BLOCK", 3)
     monkeypatch.setattr(similarity, "_C_BLOCK", 5)
     assert run() == baseline  # tiled == untiled, exact doubles
-    assert run(cell_split=3) == baseline  # hub-cell split == unsplit
 
 
 def test_auto_hot_cell_valve_is_output_invariant(spark):
@@ -402,24 +400,6 @@ def test_bipartite_kernel_bitwise_equals_triangle_plus_filter(spark):
             s, t = (r.id_a, r.id_b) if r.id_a % 2 == 0 else (r.id_b, r.id_a)
             tri[(s, t)] = r.cosine
     assert bip == tri  # exact doubles, every cross-parity pair
-
-
-def test_margin_select_scale_path_matches_declared_path(spark):
-    """_margin_select(broadcast_small=False) — the mining-scale
-    configuration SCALING.md measures (planner-chosen joins, eager
-    checkpoint of the ranked pair table) — must produce exactly the
-    declared broadcast form's rows."""
-    from greenbuttonengine_spark.plans.wave28_queries import (
-        _cross_pairs,
-        _margin_select,
-    )
-
-    u = _cross_pairs(spark, SF)
-    rows = lambda df: {  # noqa: E731
-        r.src_id: (r.tgt_id, r.cos_shift_e9, r.margin_ppm, r.mutual, r.above_mean)
-        for r in df.collect()
-    }
-    assert rows(_margin_select(u, broadcast_small=False)) == rows(_margin_select(u))
 
 
 def test_bipartite_kernel_property_matches_bruteforce(spark):

@@ -243,64 +243,3 @@ def test_hier_auto_hot_cell_valve_is_output_invariant(spark):
     assert run(hot_cell_rows=1, count_sample_mod=1) == baseline
     assert run(hot_cell_rows=4, count_sample_mod=4) == baseline
     assert run(hot_cell_rows=10**9, count_sample_mod=1) == baseline
-
-
-def test_manual_cell_split_composes_with_hot_valve(spark, monkeypatch):
-    """r14 ADVICE item 3: a manual ``cell_split`` must survive the
-    auto valve as the FLOOR fan-out for cells the valve did not list
-    (it used to be silently discarded when ``cell_splits`` was
-    non-empty).  Asserted on the probe-side fan-out the tail actually
-    schedules — output itself is split-invariant either way, so only
-    the scheduled parallelism can witness the regression."""
-    from pyspark.sql import functions as F
-
-    from greenbuttonengine_spark.extensions import similarity as S
-
-    q = spark.createDataFrame(
-        [(1, [1.0, 0.0], 1.0, 0), (2, [0.0, 1.0], 1.0, 1)],
-        "query_id long, qv array<double>, qnrm double, cell int",
-    )
-    c = spark.createDataFrame(
-        [(10 + i, [1.0, float(i)], 1.0, i % 2) for i in range(8)],
-        "neighbor_id long, cv array<double>, cnrm double, cell int",
-    )
-
-    captured = {}
-    orig = S._blocked_score_window
-
-    def spy(q_, c_, k_, keys):
-        captured["fanout"] = {
-            r["cell"]: r["n"]
-            for r in q_.groupBy("cell").agg(F.count("*").alias("n")).collect()
-        }
-        captured["keys"] = keys
-        return orig(q_, c_, k_, keys)
-
-    monkeypatch.setattr(S, "_blocked_score_window", spy)
-
-    baseline = {
-        (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-        for r in S._blocked_score_tail(q, c, 2).collect()
-    }
-
-    out = {
-        (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-        for r in S._blocked_score_tail(
-            q, c, 2, cell_split=2, cell_splits={0: 3}
-        ).collect()
-    }
-    # hot cell 0 -> its own (larger) factor; unlisted cell 1 -> the
-    # manual floor, NOT 1
-    assert captured["keys"] == ("cell", "__sub")
-    assert captured["fanout"] == {0: 3, 1: 2}
-    assert out == baseline
-
-    # valve factor below the manual floor: the floor wins for BOTH
-    out2 = {
-        (r.query_id, r.neighbor_id): (r.cosine, r.rank)
-        for r in S._blocked_score_tail(
-            q, c, 2, cell_split=3, cell_splits={0: 2}
-        ).collect()
-    }
-    assert captured["fanout"] == {0: 3, 1: 3}
-    assert out2 == baseline
