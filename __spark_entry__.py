@@ -7,6 +7,7 @@ extension operators) for the DuckDB correctness gate.
 
 from __future__ import annotations
 
+import functools
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -324,15 +325,36 @@ def _ordered_names(reg) -> list[str]:
     ]
 
 
+def _pin_read_confs(spark: SparkSession) -> None:
+    # A caller may hand in a session that get_spark did not build; the
+    # catalog checks these on every read instead of setting them.
+    from greenbuttonengine_spark.sources.catalog import READ_CONFS
+
+    for key, value in READ_CONFS.items():
+        spark.conf.set(key, value)
+
+
+def _with_read_confs(fn: Callable[[SparkSession, str], DataFrame]):
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _pin_read_confs(spark)
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-style pricing summary) on sf0.001."""
     reg = _registry()
+    _pin_read_confs(spark)
     return reg.QUERIES["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     reg = _registry()
-    return {name: reg.QUERIES[name].fn for name in _ordered_names(reg)}
+    return {
+        name: _with_read_confs(reg.QUERIES[name].fn) for name in _ordered_names(reg)
+    }
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,15 +15,15 @@ Layout:
     session      SparkSession builder tuned for the workload
     shipping     ships this package to executor Python workers
     cli          gbcli batch conversion (driver-only fast path + Spark)
-    sources      table catalog (+ spread_scan) and text-corpus readers
+    sources      table catalog (+ spread_scan)
     espi         the Green Button pipeline (schemas, parse, denormalize,
                  driver-only fast path)
     plans        the declared query inventory and its DuckDB oracles
     sinks        csv / parquet / influx writers and charts
     extensions   dedup, similarity, text stats, multimodal, quality,
                  sampling and other corpus operators
-    streaming    incremental ingest, admission, bronze/silver tables
-                 (Structured Streaming)
+    streaming    incremental ingest, bronze store, per-batch admission,
+                 CDC and view merges (Structured Streaming)
 """
 
 __version__ = "0.1.0"

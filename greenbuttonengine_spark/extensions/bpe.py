@@ -18,17 +18,14 @@ before the merge loop starts.  The vocab is bounded by distinct words
    jobs (the r5 form paid one aggregate + one collect + one vocab-wide
    regexp_replace PER merge — days of scheduler overhead at tokenizer
    scale).
-3. **Spark**: ship the learned merges back through ``bpe_tokenize``,
-   which compiles the rule program into scan-stage Catalyst
-   expressions — tokenization of the 100 TB corpus never leaves the
-   JVM.
+3. **Spark**: tokenize by joining every corpus word to its final
+   training segmentation (``lm_bpe_tokenize_stats``): applying the
+   merges to a word reproduces training's segmentation, so the
+   tokenizer ships as a vocab-sized table and tokenization of the
+   100 TB corpus is one explode + one join, never leaving the JVM.
 
 Ties break (count DESC, pair ASC) — deterministic across engines; the
 heap key ``(-count, pair)`` preserves that ordering exactly.
-
-``bpe_train_spark_loop`` keeps the r5 all-Spark merge loop as a
-cross-check (pytest pins merge-sequence equality between the two); it
-is the honest-but-serial form: 1 Spark job per merge.
 """
 
 from __future__ import annotations
@@ -50,38 +47,6 @@ def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("n"))
     )
-
-
-def _to_symbols(word_col):
-    """' h e l l o ' — char symbols joined and padded with single
-    spaces so literal pair replacement is anchor-safe."""
-    return F.concat(
-        F.lit(" "),
-        F.concat_ws(" ", F.split(word_col, "")),
-        F.lit(" "),
-    )
-
-
-def _quote_java(s: str) -> str:
-    r"""Java-regex literal quoting, mirroring ``Pattern.quote``: wrap in
-    \Q..\E and split any embedded literal '\E' so it cannot terminate
-    the quote early (a symbol learned from web text CAN contain '\E';
-    a single \Q..\E span would hand the remainder to the regex engine
-    as raw pattern)."""
-    return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
-def _pair_pattern(a: str, b: str) -> str:
-    # lookarounds keep the boundary spaces UNconsumed so back-to-back
-    # occurrences (' a a a a ') merge in one pass exactly like greedy
-    # BPE — a literal ' a b '->' ab ' replace would eat the shared
-    # separator and skip every second pair in a run.
-    return f"(?<= )({_quote_java(a)}) ({_quote_java(b)})(?= )"
-
-
-def _repl_escape(s: str) -> str:
-    # Java replacement strings treat \ and $ as group references
-    return s.replace("\\", "\\\\").replace("$", "\\$")
 
 
 class BpeMarginError(ValueError):
@@ -415,67 +380,9 @@ def bpe_tokenize_stats_oracle_sql(
     """
     # Degenerate-lang parity (r10 ADVICE): a lang whose docs ALL have
     # zero tokens reaches tok never (no nonempty word), so SUM is NULL
-    # here but 0 on the Spark side (bpe_tokenize emits n_tokens=0 rows)
+    # here but 0 on the Spark side (its docs count with zero tokens)
     # — COALESCE to 0 and guard the division identically on both
     # engines (NULL chars_per_token, never NaN/inf).
-
-
-_SPARK_LOOP_MAX_MERGES = 64
-
-
-def bpe_train_spark_loop(
-    docs: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """r5's all-Spark merge loop, kept ONLY as a pytest cross-check for
-    the local-incremental loop (1 aggregate + 1 collect + 1 vocab
-    regexp_replace per merge = one Spark job PER MERGE; ``bpe_train``'s
-    3-job form supersedes it for real training).  Hard-capped so the
-    per-merge job launch cannot be misused at production merge counts.
-    """
-    if n_merges > _SPARK_LOOP_MAX_MERGES:
-        raise ValueError(
-            f"bpe_train_spark_loop launches one Spark job per merge and is "
-            f"capped at {_SPARK_LOOP_MAX_MERGES} merges (cross-check use "
-            f"only); use bpe_train for real merge counts"
-        )
-    vocab = (
-        word_vocab(docs, text_col)
-        .withColumn("syms", _to_symbols(F.col("word")))
-        .localCheckpoint(eager=False)
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        syms_arr = F.split(F.trim(F.col("syms")), " ")
-        pairs = (
-            vocab.withColumn("__arr", syms_arr)
-            .filter(F.size("__arr") >= 2)
-            .select(
-                F.col("n"),
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(__arr) - 1),"
-                        " i -> struct(element_at(__arr, i) as a,"
-                        "             element_at(__arr, i + 1) as b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("n").cast("long").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
-        if not top or top[0].cnt < min_pair_count:
-            break
-        a, b, cnt = top[0].a, top[0].b, int(top[0].cnt)
-        merges.append((a, b, cnt))
-        pat = _pair_pattern(a, b)
-        repl = _repl_escape(a + b)
-        vocab = vocab.withColumn(
-            "syms", F.regexp_replace(F.col("syms"), pat, repl)
-        ).localCheckpoint(eager=False)
-    return merges, vocab.select("word", "n", "syms")
 
 
 def bpe_merge_table(docs: DataFrame, n_merges: int = 10,
@@ -490,41 +397,4 @@ def bpe_merge_table(docs: DataFrame, n_merges: int = 10,
     return spark.createDataFrame(
         rows, "step int, left string, right string, merged string, "
               "weighted_count long",
-    )
-
-
-def bpe_tokenize(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a learned merge sequence: (id, tokens array<string>,
-    n_tokens) per document — the inference half of BPE.
-
-    The merge rules compile into a fixed chain of per-word
-    regexp_replace expressions inside one ``transform`` lambda (the
-    same lookaround/greedy semantics training used), so tokenization
-    is a single scan-stage projection: no shuffle, no Python, no
-    per-row interpretation — the rule program IS the Catalyst
-    expression tree, exactly how a trained tokenizer should ship to a
-    100 TB corpus.  Word boundaries are preserved (BPE merges never
-    cross words, matching training's per-word vocabulary).
-    """
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-    def merge_word(w):
-        s = F.concat(F.lit(" "), F.concat_ws(" ", F.split(w, "")), F.lit(" "))
-        for m in merges:
-            a, b = m[0], m[1]
-            s = F.regexp_replace(s, _pair_pattern(a, b), _repl_escape(a + b))
-        return F.split(F.trim(s), " ")
-
-    toks = F.flatten(
-        F.transform(F.filter(words, lambda w: w != ""), merge_word)
-    )
-    return docs.select(
-        F.col(id_col),
-        toks.alias("tokens"),
-        F.size(toks).cast("long").alias("n_tokens"),
     )

@@ -3,14 +3,13 @@
 Pair generation (each a DataFrame -> DataFrame function):
 
   exact_duplicates           hash-groupBy on (normalized) text
-  ngram_jaccard_pairs        exact set-Jaccard via the sparse
-                             set-similarity join (shuffle on shingle)
-  ngram_jaccard_pairs_prefix same result, AllPairs/PPJoin prefix
-                             filter — skew-proof exact variant
+  ngram_jaccard_pairs_prefix exact set-Jaccard, AllPairs/PPJoin prefix
+                             filter — skew-proof exact join
   minhash_lsh_pairs          MinHash signatures + banded LSH bucket
                              join — the approximate scale path
   simhash_pairs              48-bit SimHash + banded hamming candidates
-  embedding_cosine_pairs     cosine near-dup over an embedding column
+  embedding_cosine_pairs_blocked
+                             cosine near-dup over an embedding column
 
 Cluster resolution (pairs are not transitively closed):
 
@@ -77,58 +76,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8, k: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact set-Jaccard over k-shingles via the sparse set-similarity
-    join (explode shingles, equi-join on shingle, count co-occurrences)
-    — the classic AllPairs/token-join shape, NOT a quadratic cross
-    join.  Cost is sum over shingles of C(docs_sharing_it, 2): near
-    all-pairs only for degenerate corpora where every doc shares
-    shingles.  jaccard = i / (|A| + |B| - i) with integer sizes, so the
-    double division is bit-deterministic across engines.
-
-    At 100 TB: one hash shuffle on the shingle key; frequent-shingle
-    hot keys are the skew risk.  MEASURED under a degenerate corpus
-    (SCALING.md r14: 20k docs sharing one universal shingle -> 2e8
-    candidate pairs): AQE skew-join did NOT engage — at that shape the
-    token join is a BroadcastHashJoin, outside OptimizeSkewedJoin's
-    scope, and even on a shuffled join AQE only re-parallelizes the
-    straggler partition, the candidate WORK stays quadratic in the hot
-    key's document frequency.  :func:`ngram_jaccard_pairs_prefix` is
-    the real fix — the exact-result refinement that removes hot keys
-    from the candidate join entirely (7.2x there; the gap grows as
-    df^2)."""
-    # shingling + explode is the heavy per-row stage; spread an
-    # under-parallelized single-file scan across cores first (r15)
-    ex = spread_scan(docs).select(
-        F.col(id_col), F.explode(_shingles(text_col, k)).alias("__sh")
-    )
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.__sh") == F.col("b.__sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("i"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("i").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("i")
-    ).cast("double")
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def ngram_jaccard_pairs_prefix(
     docs: DataFrame, threshold: float = 0.8, k: int = 8,
     text_col: str = "text", id_col: str = "doc_id",
@@ -136,8 +83,9 @@ def ngram_jaccard_pairs_prefix(
 ) -> DataFrame:
     """Prefix-filtered exact set-similarity join (AllPairs/PPJoin
     family: Bayardo et al., WWW'07; Xiao et al., WWW'08) — the
-    same exact result as :func:`ngram_jaccard_pairs`, with the
-    candidate join restricted to each document's PREFIX.
+    same exact result as the plain token join (explode shingles,
+    equi-join on shingle, count co-occurrences), with the candidate
+    join restricted to each document's PREFIX.
 
     Pigeonhole: if J(A,B) >= t then |A∩B| >= ceil(t/(1+t)·(|A|+|B|)),
     so A and B must share at least one shingle among the first
@@ -816,37 +764,6 @@ def incremental_near_oracle_sql(
     """
 
 
-def simhash_column(
-    col, bits: int = 48, token_pattern: str = r"\s+", seeded: bool = False
-):
-    """bits-wide SimHash: per token, a 64-bit hash supplies the bit
-    pattern; each output bit is the sign of the +1/-1 vote sum.
-    ``seeded=True`` swaps xxhash64 for the md5-derived 60-bit hash the
-    DuckDB oracle reproduces (bits must then be <= 60)."""
-    if seeded and bits > 60:
-        raise ValueError("seeded simhash draws bits from a 60-bit hash")
-    tokens = F.split(F.trim(col), token_pattern)
-    hash_fn = md5_hash60 if seeded else F.xxhash64
-
-    def vote(b: int):
-        return F.aggregate(
-            F.transform(
-                tokens,
-                lambda t: F.when(
-                    F.shiftright(hash_fn(t), b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-
-    bit_votes = [vote(b) for b in range(bits)]
-    out = F.lit(0).cast("long")
-    for b, vote in enumerate(bit_votes):
-        out = out + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_signatures(
     docs: DataFrame,
     bits: int = 48,
@@ -858,7 +775,7 @@ def simhash_signatures(
     """(id, sh) SimHash via explode + codegen'd sum aggregates — the
     ``minhash_signatures`` shape applied to SimHash.
 
-    ``simhash_column``'s HOF form evaluates hash_fn(token) once PER
+    A per-row HOF form evaluates hash_fn(token) once PER
     BIT (48 vote expressions, each re-hashing every token; Catalyst
     does not CSE across interpreted HOF lambdas) — cheap with xxhash64,
     but 15.2s at sf0.1 with the seeded md5 hash.  Here each token is
@@ -1003,32 +920,6 @@ def _dot(a_col: str, b_col: str):
     )
 
 
-def embedding_cosine_pairs(
-    emb: DataFrame,
-    threshold: float = 0.3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Embedding near-dup: pairs with cosine >= threshold.
-
-    All-pairs (correctness / small-SF); the LSH route for scale is
-    similarity.lsh_topk's bucketing applied pairwise.  Vectors are cast
-    to double before the fold so the sum is bit-deterministic."""
-    base = _with_norm(emb, vec_col, id_col)
-    a, b = base.alias("a"), base.alias("b")
-    cosine = _dot("a.v", "b.v") / (F.col("a.__norm") * F.col("b.__norm"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cosine.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def embedding_cosine_pairs_blocked(
     emb: DataFrame,
     threshold: float = 0.3,
@@ -1037,8 +928,8 @@ def embedding_cosine_pairs_blocked(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine pairs >= threshold via a triangle block join +
-    Arrow-batched vectorized verify — the scale-shaped form of
-    :func:`embedding_cosine_pairs` (bit-identical output).
+    Arrow-batched vectorized verify — bit-identical to the all-pairs
+    cross join it replaces.
 
     Exact pair enumeration at a low threshold is inherently
     Theta(n^2 * d) FLOPs — no engine avoids that; what an engine CAN

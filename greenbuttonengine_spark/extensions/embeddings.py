@@ -3,7 +3,6 @@
   quantize_int8   symmetric per-vector int8 quantization — the standard
                   4x storage/bandwidth reduction before ANN index build
                   or shipping embeddings to a trainer.
-  l2_normalize    unit-norm projection (cosine == dot after this).
 
 All math is native Catalyst higher-order functions in DOUBLE, with
 rounding expressed as floor(x + 0.5) so results are bit-deterministic
@@ -56,146 +55,6 @@ def quantize_int8(
         F.col("q"),
         F.col("scale"),
     )
-
-
-def l2_normalize(
-    emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Unit-L2 vectors: v / ||v||; dot products become cosines."""
-    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "norm",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("v"), lambda x: x * x),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        ),
-    )
-    return base.select(
-        F.col(id_col),
-        F.transform(F.col("v"), lambda x: x / F.col("norm")).alias("unit"),
-        F.col("norm"),
-    )
-
-
-def pca_fit(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 8,
-    dim: int | None = None,
-):
-    """Fit a PCA basis distributed: per-partition Gram/mean partials
-    via one Arrow-batched ``mapInPandas`` pass (each partition emits a
-    single (n, d*d, d) row — numpy does the O(rows * d^2) flops), the
-    O(partitions) partials are reduced driver-side (the classic
-    allreduce shape: what rides the wire is d^2 doubles per partition,
-    independent of corpus size), and the d x d eigenproblem is solved
-    once on the driver with ``numpy.linalg.eigh`` — at d=64 that is
-    microseconds; even d=4096 is a single-machine problem.  This is
-    the standard scalable-PCA decomposition (distribute the moment
-    computation, centralize the tiny eigensolve).
-
-    Component signs are canonicalized (largest-|loading| coordinate
-    positive) so the basis is reproducible run-to-run; eigh is
-    deterministic for a fixed input matrix, and the partial-sum
-    reduction is the only float-order-sensitive step (documented: the
-    basis is stable to ~1e-12 across partition layouts, which is why
-    the declared query is rows-only rather than value-hashed).
-
-    Returns ``(mu, components, explained_variance_ratio)`` as numpy
-    arrays (components is d x k, columns = principal axes).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if dim is None:
-        probe = emb.select(vec_col).first()
-        if probe is None or probe[0] is None:
-            # empty input (or a NULL lead vector) would otherwise die
-            # on len(None) before the n==0 ValueError below
-            raise ValueError("pca_fit: empty input")
-        dim = len(probe[0])
-    src = emb.select(F.col(vec_col).cast("array<double>").alias("__v"))
-
-    def partial(it):
-        n = 0
-        s = np.zeros((dim, dim))
-        m = np.zeros(dim)
-        for pdf in it:
-            v = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            if len(v):
-                n += len(v)
-                s += v.T @ v
-                m += v.sum(0)
-        yield pd.DataFrame(
-            {"n": [n], "s": [s.ravel().tolist()], "m": [m.tolist()]}
-        )
-
-    parts = src.mapInPandas(
-        partial, "n long, s array<double>, m array<double>"
-    ).collect()
-    n = sum(r.n for r in parts)
-    if n == 0:
-        raise ValueError("pca_fit: empty input")
-    s = sum(np.array(r.s) for r in parts).reshape(dim, dim)
-    m = sum(np.array(r.m) for r in parts)
-    mu = m / n
-    cov = s / n - np.outer(mu, mu)
-    w, u = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    comps = u[:, order].copy()
-    for j in range(comps.shape[1]):
-        i = int(np.argmax(np.abs(comps[:, j])))
-        if comps[i, j] < 0:
-            comps[:, j] = -comps[:, j]
-    evr = w[order] / max(w.sum(), 1e-300)
-    return mu, comps, evr
-
-
-def pca_project(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = ("vec_id", "label"),
-    k: int = 8,
-) -> DataFrame:
-    """Project every vector onto the top-``k`` PCA axes as columns
-    ``pc1..pck`` — the whitening / dimensionality-reduction stage in
-    front of clustering, dedup cells, and drift dashboards.
-
-    The fitted basis rides the plan as LITERAL arrays (d*k doubles,
-    ~4 KB at d=64 k=8), so the projection is pure JVM codegen:
-    ``zip_with`` center, ``zip_with`` multiply, ``aggregate`` fold per
-    component — no Python stage, no shuffle, scan-side only.  The fit
-    itself is one extra pass (see :func:`pca_fit`); at 100 TB you fit
-    on a sampled/bounded slice and project the full corpus, which this
-    API supports by passing a different ``emb`` to each step.
-    """
-    mu, comps, _ = pca_fit(emb, vec_col=vec_col, k=k)
-    dim = comps.shape[0]
-    # dot(v - mu, w_j) = dot(v, w_j) - dot(mu, w_j): the second term is
-    # a plan-time CONSTANT, so no per-row centering pass — each
-    # component is one zip_with multiply + fold over the RAW vector.
-    # CollapseProject re-inlined the shared centered array into all k
-    # component expressions (k zip_with-subtract array allocations per
-    # row); dropping it measured 16.2s -> 0.7s on 200k x 64 for
-    # identical output.
-    offsets = mu @ comps
-    vec = F.col(vec_col).cast("array<double>")
-    cols = []
-    for j in range(comps.shape[1]):
-        axis = F.array(*[F.lit(float(comps[i, j])) for i in range(dim)])
-        cols.append(
-            (
-                F.aggregate(
-                    F.zip_with(vec, axis, lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                - F.lit(float(offsets[j]))
-            ).alias(f"pc{j + 1}")
-        )
-    return emb.select(*keep_cols, *cols)
 
 
 def _fixed_moments(qdf: DataFrame, dim: int):
@@ -334,10 +193,9 @@ def pca_project_fixed(
     iters: int = 12,
 ) -> DataFrame:
     """Project every vector onto ``k`` fixed-point principal directions
-    as integer columns ``pc1n..pckn`` — the oracle-reproducible twin of
-    :func:`pca_project` (which stays the float production path; LAPACK
-    eigh is neither cross-engine- nor cross-platform-bit-stable, this
-    is).
+    as integer columns ``pc1n..pckn`` — oracle-reproducible where a
+    LAPACK eigh projection is neither cross-engine- nor
+    cross-platform-bit-stable.
 
     Same recipe as :func:`pca_power_fixed` extended to k components via
     :func:`power_deflate_components` (Hotelling deflation between power
@@ -398,10 +256,9 @@ def pca_power_fixed(
     xscale: int = 1 << 20,
     iters: int = 12,
 ) -> DataFrame:
-    """Top principal component by FIXED-POINT power iteration — the
-    deterministic, oracle-reproducible twin of :func:`pca_fit` (which
-    stays the production path; LAPACK ``eigh`` is neither
-    cross-engine- nor cross-platform-bit-stable, this is).
+    """Top principal component by FIXED-POINT power iteration —
+    deterministic and oracle-reproducible, where LAPACK ``eigh`` is
+    neither cross-engine- nor cross-platform-bit-stable.
 
     Construction (every step exact integer arithmetic, identical in
     Spark, Python, and ANSI SQL):
@@ -412,7 +269,7 @@ def pca_power_fixed(
     2. One distributed Arrow pass accumulates the exact integer moments
        ``n``, ``m = sum q``, ``S = sum q q^T`` (int64; per-partition
        partials are order-free because integer addition commutes).
-       Collect is O(partitions * d^2) — the proven pca_fit shape.
+       Collect is O(partitions * d^2), independent of corpus size.
     3. ``A = n*S - m m^T`` (the covariance times n^2 — same
        eigenvectors, no division) is rescaled to ``|A'| <= 2^16`` with
        sign-explicit truncating division (``-((-a)*s//amax)`` for

@@ -2,9 +2,10 @@
 
 The duplicate-cluster resolver (``dedup.connected_components``) covers
 the equivalence-class shape; this module adds importance scoring —
-PageRank over an arbitrary edge list, typically the kNN similarity
-graph (``similarity.knn_graph``), where rank identifies central /
-representative documents for diversity sampling and keeper election.
+fixed-point PageRank over an edge list where every node has out-edges,
+typically the kNN similarity graph (``similarity.knn_graph``), where
+rank identifies central / representative documents for diversity
+sampling and keeper election.
 
 Design (same iterative discipline as connected components):
 the driver loop is CONTROL FLOW ONLY — each iteration is one
@@ -17,83 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 10,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """PageRank over a directed edge list; returns (node, rank).
-
-    Semantics: standard power iteration with uniform teleport,
-    ``rank = (1-d)/N + d * (sum of rank/outdeg over in-edges
-    + dangling mass / N)``.  Dangling nodes (no out-edges) donate
-    their rank uniformly, so total rank stays 1 each round.
-
-    Scale shape per iteration: one equi-join of the rank vector onto
-    the edge list (both sides keyed by src — co-partitioned after the
-    first round) and one shuffle-by-dst sum; the dangling-mass term is
-    a one-row aggregate broadcast into the update.  The rank vector is
-    O(nodes); edges are never materialized per-iteration beyond the
-    join.  Iterations localCheckpoint so round N's plan doesn't replay
-    rounds 1..N-1 (the CC discipline; on a multi-node cluster prefer
-    reliable checkpoints if executor loss must be recoverable).
-    """
-    # The static inputs (edge list, out-degrees, the dangling-node SET)
-    # are checkpointed ONCE before the loop — without this, every
-    # iteration's join replays the upstream edge computation (for the
-    # kNN graph that is a multi-second brute-force similarity job,
-    # re-executed ~2x per round).  Same discipline as
-    # connected_components, which checkpoints its edges up front.
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()
-    if n == 0:  # empty graph: no nodes, no ranks (not a 1/0 crash)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(
-        eager=False
-    )
-    dangling_nodes = nodes.join(
-        outdeg.select(F.col("src").alias("node")), "node", "left_anti"
-    ).localCheckpoint(eager=False)
-
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
-        contribs = (
-            ranks.join(outdeg, ranks["node"] == outdeg["src"], "inner")
-            .join(e, "src")
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        # dangling nodes (static set, per-round mass) donate uniformly
-        dangling = ranks.join(dangling_nodes, "node", "left_semi").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))  # one-row scalar dim (j6 shape)
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.col("dm") / n)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
 
 
 # Fixed-point scale for the oracle-reproducible PageRank: ranks are
@@ -119,17 +43,18 @@ def pagerank_scaled(
     (17 * sum) div 20, and the teleport base is (3 * scale) div
     (20 * n).  Integer sums are order/partition-invariant and both
     engines floor positive divisions identically, so a SQL oracle
-    replays the iteration bit for bit — the property the float
-    :func:`pagerank` (libm-free but order-sensitive fp sums) cannot
-    offer.  The deliberate truncation bias is bounded by
-    iters * outdeg * 2^-40 per node — ~2^-37 absolute for the 5-NN
-    graph, far below fp64 noise on real rank gaps.
+    replays the iteration bit for bit — the property a float power
+    iteration (order-sensitive fp sums) cannot offer.  The deliberate
+    truncation bias is bounded by iters * outdeg * 2^-40 per node —
+    ~2^-37 absolute for the 5-NN graph, far below fp64 noise on real
+    rank gaps.
 
     Precondition (asserted): every node has at least one out-edge —
     true by construction for a kNN graph, where each node emits
-    exactly k neighbors.  Scale shape matches :func:`pagerank`: per
-    iteration one rank-onto-edges equi-join and one shuffle-by-dst
-    sum; the node table and n are O(nodes).
+    exactly k neighbors.  Scale shape per iteration: one
+    rank-onto-edges equi-join and one shuffle-by-dst sum; the node
+    table and n are O(nodes), and iterations localCheckpoint so round
+    N's plan doesn't replay rounds 1..N-1.
     """
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -156,7 +81,7 @@ def pagerank_scaled(
     if n_dangling:
         raise ValueError(
             f"pagerank_scaled requires every node to have out-edges "
-            f"({n_dangling} dangling) — use pagerank() for general graphs"
+            f"({n_dangling} dangling)"
         )
     base = (3 * scale) // (20 * n)  # (1-d)/n teleport, d = 17/20
     ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("r"))

@@ -17,7 +17,8 @@ portable across writers.
 
 Usage at scale::
 
-    keyed = with_zorder_key(df, ["user_id", "bucket"], bits=21)
+    keyed = df.withColumn(
+        "zorder_key", morton_code([F.col("user_id"), F.col("bucket")]))
     keyed.repartitionByRange(N, "zorder_key").sortWithinPartitions(
         "zorder_key").write.parquet(...)
 
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -64,9 +65,3 @@ def morton_code(cols: list[Column], bits: int = 21) -> Column:
     ]
     spread = [_spread_bits(c, bits, k, i) for i, c in enumerate(clamped)]
     return reduce(lambda a, b: a.bitwiseOR(b), spread)
-
-
-def with_zorder_key(
-    df: DataFrame, col_names: list[str], bits: int = 21, out: str = "zorder_key"
-) -> DataFrame:
-    return df.withColumn(out, morton_code([F.col(c) for c in col_names], bits))

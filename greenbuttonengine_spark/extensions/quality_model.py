@@ -1,13 +1,13 @@
-"""Learned quality filtering with spark.ml — the fastText-classifier
-stand-in of production curation pipelines (the CCNet / GPT-3 "quality
-filter" stage): train a logistic regression on (weak) labels over
-cheap per-doc features, then score the whole corpus JVM-side.
+"""Learned quality filtering — the fastText-classifier stand-in of
+production curation pipelines (the CCNet / GPT-3 "quality filter"
+stage): weak labels from the Gopher rule gate train a linear scorer
+over cheap per-doc features, then the whole corpus is scored.
 
 Why a LEARNED stage when `text_quality_score` / `text_gopher_flags`
 exist: hand rules give a hard gate; the model turns the same signals
-into a calibrated probability, which is what temperature sampling and
-threshold sweeps actually consume.  The features deliberately mirror
-the heuristic gate (length, token stats, alpha/punct ratios, bigram
+into a graded score, which is what temperature sampling and threshold
+sweeps actually consume.  The features deliberately mirror the
+heuristic gate (length, token stats, alpha/punct ratios, bigram
 repetition) so the model's marginal value is the learned WEIGHTING —
 the role the fastText filter plays over hand rules in public
 pipelines.
@@ -16,12 +16,10 @@ Scale shape:
 
 * Feature extraction is scan-stage Catalyst (reuses the textstats
   column expressions) — no shuffle, no Python.
-* Training runs spark.ml's distributed LBFGS over the labeled set —
-  at 100 TB the labeled/weakly-labeled sample is corpus-tiny (e.g.
-  0.1%), so fitting is cheap; the model object is a handful of
-  coefficients on the driver.
-* Scoring is a Transformer pass: features + a broadcast coefficient
-  dot product per row.  One projection, fully JVM-side.
+* Training is a fixed-point batch perceptron (:func:`fixed_point_quality`):
+  one global aggregate to a single 7-int row per epoch.
+* Scoring is one projection: features dotted with a handful of
+  literal integer weights per row, fully JVM-side.
 """
 
 from __future__ import annotations
@@ -69,80 +67,6 @@ def quality_feature_cols(text: Column) -> dict[str, Column]:
             / F.size(bg).cast("double"),
         ).otherwise(F.lit(0.0)),
     }
-
-
-def quality_features(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    cols = quality_feature_cols(F.col(text_col))
-    return docs.select(F.col(id_col), *[c.alias(n) for n, c in cols.items()])
-
-
-def train_quality_model(
-    labeled_docs: DataFrame,
-    label_col: str = "label",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Fit assembler + logistic regression on labeled docs; returns a
-    PipelineModel whose transform() adds probability/prediction."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    feats = quality_features(labeled_docs, text_col, id_col).join(
-        labeled_docs.select(F.col(id_col), F.col(label_col)), id_col
-    )
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=FEATURE_COLS, outputCol="features"),
-            LogisticRegression(
-                featuresCol="features",
-                labelCol=label_col,
-                maxIter=50,
-                regParam=0.01,
-                standardization=True,
-            ),
-        ]
-    )
-    return pipe.fit(feats)
-
-
-def score_quality(
-    model, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, quality_prob, quality_keep): P(label=1) per doc via the
-    fitted pipeline — one scan-stage feature projection + a broadcast
-    coefficient dot product, fully JVM-side."""
-    from pyspark.ml.functions import vector_to_array
-
-    scored = model.transform(quality_features(docs, text_col, id_col))
-    return scored.select(
-        F.col(id_col),
-        vector_to_array(F.col("probability"))[1].alias("quality_prob"),
-        (F.col("prediction") == 1.0).alias("quality_keep"),
-    )
-
-
-def weakly_supervised_quality(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The self-supervised composition the curation loop runs: weak
-    labels from the Gopher rule gate -> learned calibrated scorer ->
-    every doc scored.  Output: (id, weak_label, quality_prob,
-    quality_keep)."""
-    from .textstats import gopher_flags
-
-    weak = gopher_flags(docs, text_col, id_col).select(
-        F.col(id_col), F.col("keep").cast("int").alias("label")
-    )
-    labeled = docs.join(weak, id_col)
-    model = train_quality_model(labeled, "label", text_col, id_col)
-    return (
-        score_quality(model, docs, text_col, id_col)
-        .join(weak.withColumnRenamed("label", "weak_label"), id_col)
-        .select(id_col, "weak_label", "quality_prob", "quality_keep")
-    )
 
 
 _FQ_GRID = 4096  # feature quantization grid (2^-12, the PCA-oracle grid)
@@ -273,11 +197,11 @@ def fixed_point_quality(
     id_col: str = "doc_id",
     epochs: int = _FQ_EPOCHS,
 ) -> DataFrame:
-    """The oracle-reproducible twin of :func:`weakly_supervised_quality`
-    (which stays the production path — LBFGS coefficients are neither
-    cross-engine- nor run-bit-stable, this is): weak labels from the
-    Gopher gate train a BATCH PERCEPTRON on integer fixed-point
-    features, and every doc gets a deterministic margin score.
+    """Oracle-reproducible learned quality (LBFGS coefficients would
+    be neither cross-engine- nor run-bit-stable, this is): weak labels
+    from the Gopher gate train a BATCH PERCEPTRON on integer
+    fixed-point features, and every doc gets a deterministic margin
+    score.
 
     Construction (every step exact integer arithmetic or one
     correctly-rounded IEEE op, identical in Spark, Python, and SQL):
@@ -297,14 +221,13 @@ def fixed_point_quality(
     4. Output (id, weak_label, quality_score = final margin BIGINT,
        quality_keep = margin > 0).  The learned weighting of the same
        signals the rule gate thresholds — the fastText-stand-in role —
-       with a margin in place of the production path's calibrated
-       probability.
+       with a margin in place of a calibrated probability.
 
     Overflow (ANSI throws): z <= 2^12 and |w| <= epochs*n*2^12, so
     |margin| = |sum_j z_j w_j| <= n_features*epochs*n*2^24 — at 7
     features x 8 epochs that is 56n*2^24 ~= n*2^29.8, under 2^63 for
     n to ~2^33 rows; the TRAINING set at 100 TB is a corpus-tiny
-    sample anyway (same note as the LBFGS path)."""
+    sample anyway."""
     from ..sources.catalog import spread_scan
     from .textstats import gopher_flag_cols
 

@@ -71,8 +71,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join costs sum C(df_shingle, 2), which blows up on boilerplate "
     "shingles (139.8s vs 12.2s at sf0.1) — the prefix filter keeps "
     "hot shingles out of candidate generation entirely, so this is "
-    "the declared scale path. dedup.ngram_jaccard_pairs survives as "
-    "the tiny-scale pytest oracle. Integer set sizes -> "
+    "the declared scale path; the plain join lives on as the "
+    "tiny-scale pytest oracle. Integer set sizes -> "
     "bit-deterministic division.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,8 +126,8 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Oracle-backed since r8 via the seeded cross-engine hash family "
     "(md5-derived 60-bit shingle hash + literal-LCG permutations + "
     "weighted-sum band keys — the r6 quantizer trick extended to "
-    "string hashing); identical plan shape to the xxhash64 production "
-    "form, which the streaming admission store keeps.  pytest "
+    "string hashing); identical plan shape to the xxhash64 "
+    "form, which the near-dup admission band store keeps.  pytest "
     "cross-checks recall against dedup_ngram_jaccard.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1709,9 +1709,8 @@ def _pagerank_knn_oracle_sql(iters: int = 10, k: int = 5, scale: int = 1 << 40) 
     "unrolled 10-step SQL oracle replays bit for bit; a kNN graph has "
     "no dangling nodes (every node emits k out-edges), so the "
     "dangling-mass term vanishes and the truncation bias is bounded "
-    "by iters * k * 2^-40.  The float power iteration with dangling "
-    "handling stays as graph.pagerank (pytest vs numpy, incl. "
-    "dangling).",
+    "by iters * k * 2^-40 (pytest checks it against a float numpy "
+    "power iteration).",
 )
 def graph_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..extensions.graph import pagerank_scaled

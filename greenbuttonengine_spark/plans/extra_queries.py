@@ -504,9 +504,8 @@ def _pca_project_oracle_sql(
     "only, no Python, no shuffle.  Convergence caveat as in "
     "embedding_pca_power: on the near-isotropic synthetic corpus the "
     "hash pins the deterministic TRANSFORMATION; pytest pins subspace "
-    "quality vs numpy eigh on planted gapped data.  The numpy-eigh "
-    "pca_fit/pca_project float path remains the production API "
-    "(extensions/embeddings.py).  100-TB shape: two scan passes "
+    "quality vs numpy eigh on planted gapped data.  100-TB shape: "
+    "two scan passes "
     "(moments, projection); the eigensolve touches d^2 numbers.",
 )
 def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,9 +630,9 @@ def scd2_user_type_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "slide): each event lands in exactly width/slide = 2 windows; "
     "counts aggregate with map-side combine and the rank is a "
     "per-window row_number over the O(keys)-per-window AGGREGATE, "
-    "never the stream. This is the batch/backfill path of "
-    "streaming.stateful.start_trending_stream — the same rank_topk "
-    "function runs inside its foreachBatch, so stream and batch "
+    "never the stream. On a live stream the same rank_topk function "
+    "runs inside foreachBatch over the watermark-closed windows of "
+    "streaming.stateful.windowed_key_counts, so stream and batch "
     "cannot diverge (pytest pins them equal on a file-driven stream).",
 )
 def trending_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,10 +43,6 @@ def _dec(c, scale: int = 2):
     return F.col(c).cast(f"decimal(18,{scale})")
 
 
-def _decsum(c, scale: int = 2):
-    return F.sum(_dec(c, scale)).cast("double")
-
-
 def _disc_price():
     """l_extendedprice * (1 - l_discount), exact decimal."""
     return _dec("l_extendedprice") * (

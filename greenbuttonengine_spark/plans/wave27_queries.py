@@ -1,13 +1,13 @@
-"""Round-12 wave: batch-parity oracle rows for the two remaining
-production streaming paths (r11 VERDICT item 4), following the
+"""Round-12 wave: batch-parity oracle rows for two per-micro-batch
+streaming functions (r11 VERDICT item 4), following the
 ``attribution_interval_join`` pattern (wave20): the gated plan calls
-the PRODUCTION streaming function on batch frames, so the code under
-the DuckDB gate is the deployed code, not a re-implementation.
+the streaming function itself on batch frames, so the code under the
+DuckDB gate is the micro-batch code, not a re-implementation.
 
 * ``streaming_admission_parity`` — the per-micro-batch admission
-  decision of ``streaming/admission.py start_admission_stream``
-  (``admission_decision``): which batch ROWS land in the accepted
-  corpus given the persistent fingerprint store.
+  decision (``streaming/admission.py admission_decision``): which
+  batch ROWS land in the accepted corpus given the persistent
+  fingerprint store.
 * ``streaming_silver_upsert`` — the per-key keeper election of the
   silver CDC MERGE (``streaming/silver.py cdc_merge_keepers``): the
   merged bucket contents for one micro-batch against stored state,
@@ -57,15 +57,15 @@ from .registry import register
     tags=("streaming-parity", "dedup", "incremental"),
     doc="Batch-parity oracle for the streaming corpus-admission path: "
     "the gated plan calls streaming/admission.py admission_decision — "
-    "the EXACT per-micro-batch decision start_admission_stream's "
-    "foreachBatch runs (incremental_dedup verdicts, then the (doc_id, "
+    "the per-micro-batch decision (incremental_dedup verdicts, then "
+    "the (doc_id, "
     "fingerprint) semi-join that lets only the accepted row of an "
     "ambiguous doc_id land) — on a batch/store split of documents "
     "(doc_id%5==4 arrives; the rest are the accepted store).  Where "
     "dedup_incremental gates the VERDICT table, this gates the rows "
-    "the stream actually APPENDS to the corpus — the channel a silent "
-    "admission bug would corrupt.  Scale shape unchanged from the "
-    "stream: fingerprint the batch only (scan-stage md5), one batch-"
+    "admission APPENDS to the corpus — the channel a silent "
+    "admission bug would corrupt.  Scale shape per micro-batch: "
+    "fingerprint the batch only (scan-stage md5), one batch-"
     "side window, a left join against the store (bucketed by "
     "fingerprint at scale: no store shuffle), and a batch-sized "
     "semi-join back.",
@@ -122,7 +122,7 @@ def streaming_admission_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming-parity", "cdc", "window"),
     doc="Batch-parity oracle for the silver CDC MERGE keeper election: "
     "the gated plan calls streaming/silver.py cdc_merge_keepers — the "
-    "EXACT merge apply_cdc_batch wires under foreachBatch (total order "
+    "per-micro-batch merge (total order "
     "(seq desc, batch-beats-stored, delete-beats-update), NULL-op -> "
     "update, tombstones carried as __deleted/__del_epoch) — on a "
     "batch/state split of events: stored state is the max-event_id row "
@@ -131,12 +131,9 @@ def streaming_admission_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op='d' on 'error'.  event_id is globally unique, so the election "
     "is a deterministic total order (no ties to break "
     "nondeterministically).  The declared bucket column is pmod("
-    "user_id, 16) for cross-engine replay; production buckets by "
-    "xxhash64 (the store's bucket function must not change shape — "
-    "same trade dedup_incremental_near documents for its hash family). "
-    " Scale shape: ONE key-partitioned window over batch+affected-"
-    "state (buckets bound the state read; the merge never scans the "
-    "table), exactly the copy-on-write cost model of silver.py.",
+    "user_id, 16) for cross-engine replay.  Scale shape: ONE "
+    "key-partitioned window over batch+affected-state (buckets bound "
+    "the state read; the merge never scans the table).",
 )
 def streaming_silver_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.silver import cdc_merge_keepers

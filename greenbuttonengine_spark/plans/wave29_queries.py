@@ -1,10 +1,9 @@
-"""Round-13 wave: batch-parity oracle row for the LAST gateable
-production streaming path (r12 VERDICT item 2) — the incremental
-materialized view's merge function (``streaming/matview.py
-agg_merge_deltas``), following the wave-27 pattern: the gated plan
-CALLS the production merge, so the code under the DuckDB gate is the
-code ``start_matview_stream`` deploys under ``foreachBatch``, not a
-re-implementation.  (The reference analog is the WASM session's
+"""Round-13 wave: batch-parity oracle row for the incremental
+materialized view's merge function (r12 VERDICT item 2,
+``streaming/matview.py agg_merge_deltas``), following the wave-27
+pattern: the gated plan CALLS the per-micro-batch merge, so the code
+under the DuckDB gate is the merge itself, not a re-implementation.
+(The reference analog is the WASM session's
 accumulate-and-requery loop, ``lib/wasm/src/lib.rs:15-42``: state from
 previously-ingested feeds, a delta from the new one, queries answered
 from the merged whole.)
@@ -40,9 +39,9 @@ _MV_SCHEMA = T.StructType(
 
 
 def mv_merge_aggs():
-    """The view's aggregate expressions: wave7's shared additive/max
-    set (the ones the deployed matview stream runs) plus a min column
-    so the oracle row exercises the ``minmax_cols`` min-merge too."""
+    """The view's aggregate expressions: wave7's additive/max set
+    (``mv_user_event_aggs``) plus a min column so the oracle row
+    exercises the ``minmax_cols`` min-merge too."""
     cents = F.round(F.col("value") * 100).cast("long")
     return [*mv_user_event_aggs(), F.min(cents).cast("long").alias("min_cents")]
 
@@ -64,8 +63,7 @@ def mv_merge_aggs():
     tags=("streaming-parity", "agg", "incremental"),
     doc="Batch-parity oracle for the incremental materialized view's "
     "merge: the gated plan calls streaming/matview.py agg_merge_deltas "
-    "— the EXACT merge apply_agg_delta_batch wires under "
-    "start_matview_stream's foreachBatch — on a state/batch split of "
+    "— the per-micro-batch merge — on a state/batch split of "
     "events: stored view state is the partial aggregate of "
     "event_id%3==0, the micro-batch delta the partial aggregate of the "
     "rest, and the production merge of the two partials must equal the "
@@ -74,9 +72,8 @@ def mv_merge_aggs():
     "makes IVM correct).  n_events/total_cents merge by SUM, "
     "max_cents/min_cents by the minmax_cols declaration — every merge "
     "class the view supports.  The declared bucket column is "
-    "pmod(user_id, 16) for cross-engine replay; production buckets by "
-    "xxhash64 (shape-stable store hashing, the silver-upsert trade).  "
-    "Scale shape unchanged from the stream: each partial is one "
+    "pmod(user_id, 16) for cross-engine replay.  "
+    "Scale shape: each partial is one "
     "map-side-combined shuffle over its OWN split, the merge is one "
     "key-partitioned aggregate over batch keys + affected buckets — "
     "never O(history).  Integer cents keep it cross-engine exact.",

@@ -19,8 +19,8 @@ round beyond similarity dedup:
   repeat spans (Lee et al., ACL'22).
 * ``dedup_incremental_near`` — batch near-dup admission vs a
   persistent LSH band store (rows-only: xxhash64 signatures).
-* ``pipeline_learned_quality`` — spark.ml quality filter on Gopher
-  weak labels (rows-only: LBFGS coefficients).
+* ``pipeline_learned_quality`` — learned quality filter on Gopher
+  weak labels (oracle-backed: fixed-point perceptron).
 * ``text_compression_ratio`` — zlib entropy-proxy quality signal
   (rows-only: no SQL DEFLATE scalar).
 * ``stats_bootstrap_ci_events`` — distributed Poisson bootstrap with
@@ -592,16 +592,15 @@ def _incremental_near_oracle() -> str:
     "accepted store, represented by its LSH band buckets + MinHash "
     "signatures): band-collision candidates verified by signature "
     "agreement >= 0.7, then connected-component keeper election among "
-    "the batch's own near-dup pairs — the batch form of the streaming "
-    "admission path (streaming/admission.py start_near_dup_admission_"
-    "stream), declared so the verdict surface is inventory-visible.  "
+    "the batch's own near-dup pairs, declared so the verdict surface "
+    "is inventory-visible.  "
     "Oracle-backed since r10 (r9 VERDICT item 1): the declared form "
     "uses the seeded md5-60 + literal-LCG hash family (the "
     "dedup_minhash_lsh trick), so every verdict — exact pre-collapse, "
     "probe-verify best match, batch-internal CC keeper — replays as a "
     "recursive-CTE DuckDB chain from the same literals; the xxhash64 "
-    "family remains the streaming-store production path (the "
-    "admission store's bucket function must not change shape).  "
+    "family stays the band-store default (a store's bucket function "
+    "must not change shape).  "
     "Scale shape: store never shuffles when partitioned by band key; "
     "signatures are touched for collisions only (semi-pruned); batch-"
     "side work is micro-batch-sized.  Pytest pins verdict semantics "
@@ -759,12 +758,9 @@ def _fixed_quality_oracle() -> str:
     "scaled features, 8 unrolled epochs of order-free integer-sum "
     "updates — the Lloyd's/pagerank discipline applied to a "
     "classifier), so weights, margins, and keep verdicts replay "
-    "bit-for-bit in the DuckDB CTE chain; the spark.ml LBFGS "
-    "logistic regression remains the production path "
-    "(quality_model.weakly_supervised_quality, calibrated "
-    "probabilities, pytest-pinned held-out separation on planted "
-    "good/spam corpora — the fixed twin is pinned on the same "
-    "corpora).  Feature extraction and scoring are one JVM-side "
+    "bit-for-bit in the DuckDB CTE chain (pytest pins agreement with "
+    "the weak teacher on planted good/spam corpora).  Feature "
+    "extraction and scoring are one JVM-side "
     "projection each; training is one 7-int driver collect per epoch "
     "(the PCA-moments pattern) over the weakly-labeled set, which at "
     "100 TB is a corpus-tiny sample.",

@@ -874,11 +874,9 @@ def ts2_mean_shift_detect(
     """,
     tags=("events", "agg", "streaming-parity"),
     doc="Per-user event totals (count / integer-cent sum / max) — the "
-    "batch/backfill form of the incremental materialized view "
-    "streaming/matview.py maintains: the SAME aggregate expressions "
-    "run inside its foreachBatch partial aggregate, and pytest pins "
-    "stream==batch on a file-driven stream over this table, so the "
-    "maintained view and this declared query cannot diverge.  One "
+    "batch form of an incremental materialized view "
+    "(streaming/matview.py merges per-batch partials of such "
+    "decomposable aggregates).  One "
     "map-side-combined shuffle; integer cents keep it cross-engine "
     "exact.",
 )
@@ -888,9 +886,8 @@ def mv_user_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mv_user_event_aggs():
-    """The view's aggregate expressions — shared between the declared
-    batch query and the streaming matview's foreachBatch, so parity is
-    structural, not coincidental."""
+    """The view's aggregate expressions: count, integer-cent sum and
+    max, each decomposable, so per-batch partials merge additively."""
     cents = F.round(F.col("value") * 100).cast("long")
     return [
         F.count("*").cast("long").alias("n_events"),
@@ -1003,10 +1000,10 @@ _HLL_NUM = repr(0.697 * _HLL_M * _HLL_M * float(1 << 55))  # alpha_32 * m^2 * 2^
     "one IEEE division for the raw estimate (alpha_32 m^2 / sum) — "
     "deterministic because register max-merge is order-invariant and "
     "every term is a pure function of row values.  The Datasketches "
-    "production form (hll_sketch_agg/hll_union_agg, binary sketches a "
-    "warehouse would persist) stays as agg_hll_rollup_native below; "
-    "pytest bounds both estimates against exact counts and pins "
-    "union-vs-direct associativity.",
+    "form (hll_sketch_agg/hll_union_agg, binary sketches a warehouse "
+    "would persist) has engine-specific sketch bytes; pytest bounds "
+    "both estimates against exact counts and pins union-vs-direct "
+    "associativity.",
 )
 def agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
@@ -1043,27 +1040,6 @@ def agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + (F.lit(_HLL_M) - F.col("regs_hit")) * F.lit(_HLL_EMPTY_TERM)
             ).cast("double")
         ).alias("distinct_users_est"),
-    )
-
-
-def agg_hll_rollup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production Datasketches form of the rollup (binary HLL sketches,
-    hll_sketch_agg -> hll_union_agg): engine-specific sketch bytes, so
-    it is pytest-bounded rather than oracle-declared."""
-    ev = load_table(spark, "events", sf_dir)
-    daily = (
-        ev.groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.hll_sketch_agg("user_id").alias("sk"))
-    )
-    return (
-        daily.groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_days"),
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("long").alias(
-                "distinct_users_est"
-            ),
-        )
-        .orderBy("event_type")
     )
 
 

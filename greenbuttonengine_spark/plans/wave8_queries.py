@@ -356,15 +356,14 @@ def _pca_power_oracle_sql(
     doc="Top-principal-component projection by FIXED-POINT power "
     "iteration (extensions/embeddings.pca_power_fixed): vectors "
     "quantized to the 2^-12 grid, exact integer moments n / sum q / "
-    "sum qq^T from ONE distributed Arrow pass (the pca_fit partial-"
-    "moments shape, collect is O(partitions*d^2)), then 12 integer "
+    "sum qq^T from ONE distributed Arrow pass (partial moments per "
+    "partition, collect is O(partitions*d^2)), then 12 integer "
     "power-iteration steps on the 64x64 matrix driver-side and a "
     "scan-stage zip_with projection pc1n = n*(q.x) - (m.x).  Every "
     "step is BIGINT arithmetic with sign-explicit truncating division "
     "-> bit-identical in Python and the unrolled 12-step CTE oracle; "
     "this converts the 'needs LAPACK' eigensolve into a driver-"
-    "checkable query, while numpy-eigh pca_fit/pca_project remain the "
-    "production path.  Convergence caveat, stated honestly: 12 steps "
+    "checkable query.  Convergence caveat, stated honestly: 12 steps "
     "recover the true top PC only when the spectrum has a gap (pytest "
     "pins >0.999 correlation with eigh on planted gapped data); the "
     "synthetic corpus is near-isotropic (lambda2/lambda1 ~ 0.99), "

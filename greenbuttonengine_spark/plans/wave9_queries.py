@@ -525,50 +525,6 @@ def _pq_centroids(
     ]
 
 
-def _pq_dists_expr(cents: list[list[list[int]]] | None = None) -> str:
-    """Straight-line expression computing, per row, the 8x16 table of
-    exact squared distances between the quantized vector (scalar
-    columns ``q0..q63`` from :func:`_pq_quantized`) and the codebook,
-    with every centroid integer baked in as a literal — since r15 the
-    SPECIFICATION twin that pytest pins the Arrow kernels
-    (:func:`pq_codes_pandas` / :func:`pq_dists_pandas`, the production
-    path) against, bitwise.
-
-    The first cut carried the codebook as a per-row 1024-int literal
-    array and walked it with nested transform/aggregate lambdas;
-    Catalyst evaluates HOFs by invoking the lambda closure per element
-    and re-materializing the literal array per row, and the 100x
-    measurement (800k vectors) clocked 308s.  Unrolling to 1,024
-    literal (q-c)*(q-c) terms over plain BIGINT columns runs 6.5s on
-    the identical corpus, 52x (SCALING.md).  Honest mechanism note:
-    the projection is wide enough that janino still refuses the fused
-    doConsume (whole-stage codegen falls back to interpreted
-    expression eval — visible as an ERROR CodeGenerator + disabled-
-    codegen WARN in the logs); the 52x comes from flat Add/Multiply
-    expression trees being ~free to interpret while lambda dispatch
-    and per-row array construction are not.  Same math, same oracle.
-
-    ``cents`` overrides the seeded codebook (wave-18's trained
-    variant); default is the md5-60 random codebook.  Geometry is
-    derived from the codebook shape (subs = len, dim = len of one
-    centroid), so any (subs, k, dim) factorization of the vector
-    width works over the same q0..q63 columns."""
-    cent = cents if cents is not None else _pq_centroids()
-    n_dim = len(cent[0][0])
-    subs = []
-    for j in range(len(cent)):
-        dists = []
-        for s in range(len(cent[j])):
-            terms = []
-            for d in range(n_dim):
-                c = cent[j][s][d]
-                q = f"q{j * n_dim + d}"
-                terms.append(f"({q} - {c}L) * ({q} - {c}L)")
-            dists.append("(" + " + ".join(terms) + ")")
-        subs.append("array(" + ", ".join(dists) + ")")
-    return "array(" + ", ".join(subs) + ")"
-
-
 def _pq_schema(df: DataFrame, books: dict, keep: tuple[str, ...]):
     """Shared setup of the PQ kernels: ``books`` as int64 arrays of one
     (subs, k, dim) geometry over the same q0..qW-1 columns, the q column
@@ -600,9 +556,9 @@ def pq_dists_pandas(
     books: dict | None = None,
     keep: tuple[str, ...] = ("vec_id",),
 ) -> DataFrame:
-    """Arrow-kernel drop-in for ``select(*keep,
-    F.expr(_pq_dists_expr(cents)).alias(name))`` per ``name: cents`` of
-    ``books`` (default: the seeded codebook as ``subs``), in ONE Arrow
+    """Per ``name: cents`` of ``books`` (default: the seeded codebook
+    as ``subs``), the per-row subs x k table of exact squared distances
+    between the quantized vector and the codebook, in ONE Arrow
     pass over the q0..qW-1 quantized scalar columns: per batch, one
     numpy int64 einsum per codebook computes every row's subs x k
     squared-distance table (exact integer arithmetic — bitwise-
@@ -781,18 +737,6 @@ def pq_quant_cols() -> list:
     ]
 
 
-def pq_code_cols() -> list:
-    """c0..c7 argmin PQ-code columns over a ``subs`` array-of-arrays
-    column (the :func:`_pq_dists_expr` output)."""
-    return [
-        F.expr(
-            f"CAST(array_position(subs[{j}], array_min(subs[{j}])) - 1"
-            " AS INT)"
-        ).alias(f"c{j}")
-        for j in range(_PQ_SUBS)
-    ]
-
-
 def pq_quant_with_cell(emb: DataFrame, cell_scores) -> DataFrame:
     """(vec_id, cell, q0..q63) — coarse Voronoi cell + the quantized
     scalar projection, the shared front half of every IVF-PQ path.
@@ -872,8 +816,8 @@ def _pq_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(k-means-trained codebooks drop in without changing the plan).  "
     "Spark plan (r15): 64 quantized scalar columns feed ONE Arrow "
     "codes kernel (pq_codes_pandas — batch numpy int64 einsum + "
-    "argmin, pytest-pinned bitwise to the _pq_dists_expr unrolled "
-    "expression twin; the kernel replaced the 1,024-term literal "
+    "argmin, pytest-pinned bitwise to an unrolled-expression "
+    "twin; the kernel replaced the 1,024-term literal "
     "projection that could never whole-stage-compile and re-paid the "
     "doomed Janino attempt on EVERY execution, and it beats the "
     "interpreted expression at data scale too: 2.2-2.4s vs 3.7s at "

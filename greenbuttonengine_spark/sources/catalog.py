@@ -29,28 +29,35 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session settings every catalog read relies on.  ``get_spark`` builds
+# sessions with them and ``__spark_entry__`` sets them on any session it
+# is handed; ``load_table`` only checks them.
+READ_CONFS = {
+    # Some test parquet stores TIMESTAMP(NANOS), which Spark's vectorized
+    # reader rejects; read them as raw nanos longs instead (converted back
+    # to timestamps in _normalize_nanos_timestamps).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # timestamps are data, not wall clock; the DuckDB oracle is UTC-naive
+    "spark.sql.session.timeZone": "UTC",
+    # micros-precision parquet timestamps must read as TIMESTAMP_LTZ
+    # (UTC session), not TIMESTAMP_NTZ: NTZ forbids cast-to-long, which
+    # the epoch-arithmetic queries (sessionization, as-of, range join)
+    # rely on, and LTZ@UTC renders identically to DuckDB's naive micros.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    _ensure_nanos_readable(spark)
+    for key, want in READ_CONFS.items():
+        got = spark.conf.get(key)
+        if got.lower() != want.lower():
+            raise ValueError(
+                f"load_table needs {key}={want}, the session has {got}: build "
+                f"the session with get_spark or set the conf before reading"
+            )
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return _normalize_nanos_timestamps(df)
-
-
-def _ensure_nanos_readable(spark: SparkSession) -> None:
-    """Some test parquet stores TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects; read them as raw nanos longs instead (converted back to
-    timestamps in :func:`_normalize_nanos_timestamps`)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # timestamps are data, not wall clock; DuckDB oracle is UTC-naive
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # micros-precision parquet timestamps must read as TIMESTAMP_LTZ
-        # (UTC session), not TIMESTAMP_NTZ: NTZ forbids cast-to-long, which
-        # the epoch-arithmetic queries (sessionization, as-of, range join)
-        # rely on, and LTZ@UTC renders identically to DuckDB's naive micros.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:  # pragma: no cover - static-conf sessions
-        pass
 
 
 def _normalize_nanos_timestamps(df: DataFrame) -> DataFrame:
@@ -75,16 +82,6 @@ def _normalize_nanos_timestamps(df: DataFrame) -> DataFrame:
             # UTC, so NTZ -> LTZ keeps identical wall values.
             out = out.withColumn(f.name, F.col(f.name).cast(T.TimestampType()))
     return out
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every synthetic table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 # Narrow logical nodes: a plan made only of these over file relations is

@@ -16,28 +16,12 @@ use — without requiring any external library:
 
 Scale notes: one marker file + one directory per epoch; listing cost is
 O(epochs) driver-side metadata (the same shape as a streaming file
-sink's log).  Epoch dirs are self-partitioned, so downstream readers
-prune by epoch range for incremental processing.
-
-``compact_bronze`` solves the log-structured store's small-files
-problem (per-trigger epochs = thousands of tiny parquet files at 100
-TB): it merges committed epochs into one consolidated directory with
-the SAME two-phase safety — the merged output publishes atomically
-under the lowest epoch's marker (marker content records the new dir +
-the subsumed epoch ids), subsumed markers become tombstones (so a
-late replay of an old epoch is still a no-op), and old directories are
-removed lazily.  Readers are consistent at every crash point: before
-publish they see the original epochs; after, only the consolidation.
-Run compaction below any incremental consumer's ``since_epoch`` cursor
-(a consolidated epoch reports the LOWEST id it contains, like any
-log-compacted format).
+sink's log).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,171 +33,26 @@ def _epoch_dir(bronze_dir: str, epoch_id: int) -> str:
     return os.path.join(bronze_dir, f"epoch={epoch_id}")
 
 
-def _marker_path(bronze_dir: str, epoch_id: int) -> str:
-    return os.path.join(bronze_dir, _COMMITS, str(epoch_id))
-
-
-def _read_marker(bronze_dir: str, epoch_id: int) -> dict:
-    """Marker content: {} (plain epoch), {'dir', 'subsumes'} (a
-    consolidation), or {'subsumed_by'} (tombstone)."""
-    try:
-        text = open(_marker_path(bronze_dir, epoch_id)).read().strip()
-    except OSError:
-        return {}
-    return json.loads(text) if text else {}
-
-
-def _publish_marker(bronze_dir: str, epoch_id: int, payload: dict | None) -> None:
-    marker_dir = os.path.join(bronze_dir, _COMMITS)
-    os.makedirs(marker_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=marker_dir, prefix=f".{epoch_id}.")
-    with os.fdopen(fd, "w") as fh:
-        if payload is not None:
-            fh.write(json.dumps(payload))
-    os.rename(tmp, _marker_path(bronze_dir, epoch_id))
-
-
 def commit_epoch(batch: DataFrame, bronze_dir: str, epoch_id: int) -> None:
-    """Write one epoch's rows transactionally (idempotent on replay —
-    including epochs later tombstoned by compaction)."""
-    marker = _marker_path(bronze_dir, epoch_id)
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    """Write one epoch's rows transactionally (idempotent on replay)."""
+    marker_dir = os.path.join(bronze_dir, _COMMITS)
+    marker = os.path.join(marker_dir, str(epoch_id))
+    os.makedirs(marker_dir, exist_ok=True)
     if os.path.exists(marker):  # already committed: replay is a no-op
         return
     batch.write.mode("overwrite").parquet(_epoch_dir(bronze_dir, epoch_id))
-    _publish_marker(bronze_dir, epoch_id, None)
+    fd, tmp = tempfile.mkstemp(dir=marker_dir, prefix=f".{epoch_id}.")
+    os.close(fd)
+    os.rename(tmp, marker)
 
 
-def _active_epochs(bronze_dir: str) -> dict[int, str]:
-    """epoch_id -> data directory, consolidations resolved and
-    tombstoned epochs dropped (even if cleanup hasn't removed them)."""
+def read_bronze(spark: SparkSession, bronze_dir: str, schema) -> DataFrame:
+    """Committed rows only: the epochs whose marker is published."""
     marker_dir = os.path.join(bronze_dir, _COMMITS)
-    if not os.path.isdir(marker_dir):
-        return {}
-    ids = sorted(
-        int(name) for name in os.listdir(marker_dir) if not name.startswith(".")
-    )
-    out: dict[int, str] = {}
-    subsumed: set[int] = set()
-    for e in ids:
-        m = _read_marker(bronze_dir, e)
-        if "subsumed_by" in m:
-            continue
-        subsumed.update(m.get("subsumes", ()))
-        out[e] = (
-            os.path.join(bronze_dir, m["dir"]) if "dir" in m else _epoch_dir(bronze_dir, e)
-        )
-    return {e: d for e, d in out.items() if e not in subsumed}
-
-
-def committed_epochs(bronze_dir: str) -> list[int]:
-    return sorted(_active_epochs(bronze_dir))
-
-
-def read_bronze(
-    spark: SparkSession,
-    bronze_dir: str,
-    schema,
-    since_epoch: int | None = None,
-) -> DataFrame:
-    """Committed rows only.  ``since_epoch`` prunes to epochs > it —
-    the incremental-consumer path (no full-history rescan)."""
-    active = _active_epochs(bronze_dir)
-    epochs = sorted(active)
-    if since_epoch is not None:
-        epochs = [e for e in epochs if e > since_epoch]
+    names = os.listdir(marker_dir) if os.path.isdir(marker_dir) else []
+    epochs = sorted(int(n) for n in names if not n.startswith("."))
     if not epochs:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*[active[e] for e in epochs])
-
-
-def compact_bronze(
-    spark: SparkSession,
-    bronze_dir: str,
-    schema,
-    up_to_epoch: int | None = None,
-    target_files: int = 1,
-) -> int:
-    """Merge committed epochs (optionally only ids <= ``up_to_epoch``)
-    into one consolidated directory of ``target_files`` parquet files.
-
-    Two-phase, crash-safe at every point:
-      1. write the merged rows to a fresh generation dir
-         ``epoch=<base>__c<n>`` (invisible: no marker references it);
-      2. atomically republish marker <base> pointing at the new dir and
-         listing the subsumed epoch ids — the switch is one rename;
-      3. lazily tombstone subsumed markers (so replayed commits stay
-         no-ops) and delete superseded directories.
-
-    Returns the number of epochs merged (0 = nothing to do).
-    """
-    active = _active_epochs(bronze_dir)
-    ids = sorted(e for e in active if up_to_epoch is None or e <= up_to_epoch)
-    if len(ids) < 2:
-        return 0
-    base = ids[0]
-    gen = 0
-    while os.path.exists(_epoch_dir(bronze_dir, base) + f"__c{gen}"):
-        gen += 1
-    out_dir = _epoch_dir(bronze_dir, base) + f"__c{gen}"
-
-    merged = spark.read.schema(schema).parquet(*[active[e] for e in ids])
-    merged.coalesce(target_files).write.mode("overwrite").parquet(out_dir)
-
-    old_dirs = [active[e] for e in ids]
-    _publish_marker(
-        bronze_dir,
-        base,
-        {"dir": os.path.basename(out_dir), "subsumes": ids[1:]},
+    return spark.read.schema(schema).parquet(
+        *[_epoch_dir(bronze_dir, e) for e in epochs]
     )
-    # lazy cleanup — safe after publish; idempotent if re-run
-    for e in ids[1:]:
-        _publish_marker(bronze_dir, e, {"subsumed_by": base})
-    for d in old_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return len(ids)
-
-
-class BronzeCursor:
-    """Durable consumer offset for incremental bronze reads.
-
-    ``read_new`` returns only epochs committed since the cursor's last
-    position and advances it AFTER the caller's processing function
-    succeeds — at-least-once consumption with a one-line API:
-
-        cur = BronzeCursor(path)
-        df = cur.read_new(spark, bronze_dir, schema)
-        ... process df ...
-        cur.advance(bronze_dir)
-
-    The position is a single integer in a file, published by atomic
-    rename (same discipline as the commit markers).  Keep compaction
-    below every consumer's position (``compact_bronze(up_to_epoch=
-    min_of_cursors)``).
-    """
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def position(self) -> int:
-        try:
-            return int(open(self.path).read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def read_new(self, spark: SparkSession, bronze_dir: str, schema) -> DataFrame:
-        return read_bronze(spark, bronze_dir, schema, since_epoch=self.position())
-
-    def advance(self, bronze_dir: str) -> int:
-        """Move to the newest committed epoch; returns the new position."""
-        epochs = committed_epochs(bronze_dir)
-        if not epochs or epochs[-1] <= self.position():
-            return self.position()
-        new = epochs[-1]
-        d = os.path.dirname(os.path.abspath(self.path))
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".cursor.")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(str(new))
-        os.rename(tmp, self.path)
-        return new

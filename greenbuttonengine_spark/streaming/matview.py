@@ -1,23 +1,17 @@
-"""Incremental materialized aggregate view: a streaming groupBy
-aggregate maintained as a queryable keyed table — the lakehouse
-"incremental view maintenance" path (Materialize/Delta Live Tables
-shape) built on the silver bucket store.
+"""Incremental materialized aggregate view: the additive merge that
+keeps a groupBy aggregate queryable as a keyed table — the lakehouse
+"incremental view maintenance" step (Materialize/Delta Live Tables
+shape).
 
-``silver.py`` maintains LATEST-ROW-WINS state; an aggregate view needs
-ADDITIVE merges instead: each micro-batch contributes a batch-local
-partial aggregate (count/sum per key — map-side combined inside the
-batch), and the store merge ADDS it to the persisted per-key totals.
-Additivity is what makes the maintenance incremental: apply cost is
-O(batch keys + data in affected buckets), never O(history), and the
-maintained table equals the full batch recompute at every commit
-(pytest pins exactly that, across stream restarts).
-
-Shared with silver: hash-bucketed copy-on-write layout (a micro-batch
-rewrites only the buckets its keys land in), the atomic ``_current``
-marker (readers never see a half-applied batch), the epoch guard
-(replaying a crashed-or-duplicate epoch is a no-op — exactly-once
-state from foreachBatch's monotonic epoch ids), and lazy
-generation-dir cleanup with a reader grace window.
+Latest-row-wins CDC state (``silver.cdc_merge_keepers``) replaces rows;
+an aggregate view needs ADDITIVE merges instead: each micro-batch
+contributes a batch-local partial aggregate (count/sum per key —
+map-side combined inside the batch), and the merge ADDS it to the
+persisted per-key totals.  Additivity is what makes the maintenance
+incremental: merge cost is O(batch keys + data in affected buckets),
+never O(history), and the merged table equals the full batch
+recompute — the declared ``streaming_matview_merge`` query checks that
+against DuckDB.
 
 Only SUM/COUNT-class aggregates merge additively; AVG ships as
 (sum, count) pairs finalized at read time, MIN/MAX merge with
@@ -29,52 +23,13 @@ documents.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from .silver import _read_bucket_store, cow_apply_batch
-
-
-def read_view(spark: SparkSession, table_dir: str, schema) -> DataFrame:
-    """The committed view state: union of every bucket's latest
-    generation (path-pruned via the marker)."""
-    store = _read_bucket_store(spark, table_dir, schema)
-    if store is None:
-        return spark.createDataFrame([], schema)
-    return store
-
-
-def apply_agg_delta_batch(
-    delta: DataFrame,
-    table_dir: str,
-    schema,
-    key_cols: list[str],
-    epoch_id: int,
-    n_buckets: int = 16,
-    minmax_cols: dict[str, str] | None = None,
-) -> None:
-    """Merge one micro-batch's partial aggregate into the view.
-
-    ``delta``: one row per key with the batch-local aggregate values
-    (every non-key column in ``schema``).  Non-key columns merge by
-    SUM, except names in ``minmax_cols`` which merge by ``"min"`` or
-    ``"max"``.  ``schema`` is the full view schema (keys + values).
-    """
-    _validate_minmax_cols(schema, key_cols, minmax_cols or {})
-
-    def merge(delta_b: DataFrame, current: DataFrame) -> DataFrame:
-        return agg_merge_deltas(delta_b, current, schema, key_cols, minmax_cols)
-
-    cow_apply_batch(
-        delta, table_dir, schema, key_cols, epoch_id, n_buckets, merge
-    )
 
 
 def _validate_minmax_cols(schema, key_cols: list[str], minmax_cols: dict[str, str]) -> None:
-    """Shared declaration check — called at stream SETUP time
-    (``start_matview_stream``) and at every merge, so a misdeclared view
-    fails fast when wired rather than on its first micro-batch."""
+    """Declaration check run before every merge: a misdeclared view
+    fails instead of silently summing a min/max column."""
     val_cols = [f.name for f in schema.fields if f.name not in key_cols]
     unknown = set(minmax_cols) - set(val_cols)
     if unknown:
@@ -97,10 +52,9 @@ def agg_merge_deltas(
     additive columns, least/greatest for names in ``minmax_cols``.
     Correctness contract: merge(partial(A), partial(B)) == partial(A+B)
     for every decomposable aggregate, which is what the declared
-    ``streaming_matview_merge`` oracle row checks cross-engine and the
-    matview pytest pins against full recomputes across restarts.  Both
-    inputs carry ``__bucket``; the merge groups by (keys, bucket) so the
-    copy-on-write store rewrites only affected buckets — O(batch keys +
+    ``streaming_matview_merge`` oracle row checks cross-engine.  Both
+    inputs carry ``__bucket``; the merge groups by (keys, bucket) so a
+    bucketed store rewrites only affected buckets — O(batch keys +
     data in affected buckets), never O(history)."""
     minmax_cols = minmax_cols or {}
     _validate_minmax_cols(schema, key_cols, minmax_cols)
@@ -120,40 +74,3 @@ def agg_merge_deltas(
         .agg(*[merge_expr(c) for c in val_cols])
         .select(*[f.name for f in schema.fields], "__bucket")
     )
-
-
-def start_matview_stream(
-    spark: SparkSession,
-    source: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema,
-    key_cols: list[str],
-    agg_exprs,
-    n_buckets: int = 16,
-    minmax_cols: dict[str, str] | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire the incremental view: each micro-batch computes its
-    batch-local partial aggregate (``groupBy(key_cols).agg(*agg_exprs)``
-    — one map-side-combined shuffle over the BATCH, not the history)
-    and merges it into the persistent totals.  Misdeclared
-    ``minmax_cols`` raise HERE, before the stream starts — not on the
-    first micro-batch (r13 ADVICE)."""
-    _validate_minmax_cols(schema, key_cols, minmax_cols or {})
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.columns:
-            return
-        delta = batch.groupBy(*key_cols).agg(*agg_exprs)
-        apply_agg_delta_batch(
-            delta, table_dir, schema, key_cols, epoch_id,
-            n_buckets=n_buckets, minmax_cols=minmax_cols,
-        )
-
-    writer = source.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

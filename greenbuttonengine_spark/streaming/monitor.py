@@ -103,19 +103,3 @@ def attach_progress_recorder(spark: SparkSession) -> ProgressRecorder:
     rec = ProgressRecorder()
     spark.streams.addListener(rec)
     return rec
-
-
-def stream_health_report(progress: DataFrame) -> DataFrame:
-    """Per-query health rollup over recorded progress rows: batches,
-    rows, mean/max batch duration, peak state — the table an on-call
-    dashboard reads.  One hash aggregate over O(batches) rows."""
-    from pyspark.sql import functions as F
-
-    return progress.groupBy("query_id", "query_name").agg(
-        F.count("*").cast("long").alias("n_batches"),
-        F.sum("num_input_rows").cast("long").alias("total_rows"),
-        F.avg("batch_duration_ms").alias("mean_batch_ms"),
-        F.max("batch_duration_ms").cast("long").alias("max_batch_ms"),
-        F.max("state_rows_total").cast("long").alias("peak_state_rows"),
-        F.max("state_memory_bytes").cast("long").alias("peak_state_bytes"),
-    )

@@ -4,9 +4,11 @@ The reference has no streaming runtime; these are the engine-level
 capabilities a continuous ingest needs, expressed with Structured
 Streaming primitives:
 
-  windowed_event_counts   event-time tumbling-window aggregation with a
+  windowed_key_counts     event-time sliding-window per-key counts with a
                           watermark (late data beyond the watermark is
-                          dropped) — the streaming d1 rollup.
+                          dropped) — the stream-legal half of trending
+                          top-k, whose rank_topk half runs per batch.
+  dedup_stream            first arrival per key within the watermark.
   sessionize_stream       custom stateful sessionization via
                           applyInPandasWithState: per-user session state
                           (start, last-seen, count) persists across
@@ -57,23 +59,6 @@ SESSION_STATE_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Tumbling event-time window counts with late-data watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
 
 
 def dedup_stream(
@@ -233,9 +218,11 @@ def rank_topk(windowed: DataFrame, k: int = 3) -> DataFrame:
     """Per-window top-k rank over the windowed AGGREGATE (O(keys) rows
     per window, never the stream).  Spark rejects window functions on
     a streaming aggregation, so on a live stream this runs inside
-    ``foreachBatch`` on the watermark-closed rows (see
-    :func:`start_trending_stream`); the same function doubles as the
-    batch/backfill path, so stream and batch can never diverge."""
+    ``foreachBatch`` on the watermark-closed rows of
+    :func:`windowed_key_counts` (a closed window arrives in exactly one
+    micro-batch, so ranking within the batch IS ranking within the
+    window); the same function doubles as the batch/backfill path, so
+    stream and batch can never diverge."""
     from pyspark.sql import Window as W
 
     rn = F.row_number().over(
@@ -248,35 +235,3 @@ def rank_topk(windowed: DataFrame, k: int = 3) -> DataFrame:
         .filter(F.col("rank") <= k)
         .withColumn("rank", F.col("rank").cast("long"))
     )
-
-
-def start_trending_stream(
-    events: DataFrame,
-    out_dir: str,
-    k: int = 3,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-    key_col: str = "event_type",
-    checkpoint_dir: str | None = None,
-):
-    """Live "trending now": sliding-window counts (stream-legal
-    stateful aggregation) append watermark-closed windows to each
-    micro-batch, and ``foreachBatch`` ranks those O(keys)-per-window
-    rows and appends the top-k to ``out_dir`` as parquet.  Because a
-    closed window arrives in exactly one micro-batch, ranking within
-    the batch IS ranking within the window — no cross-batch state
-    beyond the aggregation's own."""
-    agg = windowed_key_counts(
-        events, window=window, slide=slide, watermark=watermark, key_col=key_col
-    )
-
-    def _rank_and_write(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        rank_topk(batch, k=k).write.mode("append").parquet(out_dir)
-
-    writer = agg.writeStream.outputMode("append").foreachBatch(_rank_and_write)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

@@ -1,12 +1,21 @@
 """BPE tokenizer training: the Spark merge loop must reproduce an
 independent pure-Python Sennrich implementation (same tie-break)
-exactly — merges AND final segmentations."""
+exactly — merges AND final segmentations.
+
+Two Spark-side reference twins live here: ``bpe_train_spark_loop``
+(the all-Spark merge loop, one Spark job per merge) cross-checks the
+local merge loop of ``bpe_train``, and ``bpe_tokenize`` (the merge
+rules compiled to a chain of lookaround regexes) cross-checks the
+segmentation-lookup tokenizer of ``lm_bpe_tokenize_stats``."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
+
+from greenbuttonengine_spark.extensions.bpe import word_vocab
 
 
 def py_bpe(vocab_counts, n_merges, min_pair_count=2):
@@ -38,6 +47,132 @@ def py_bpe(vocab_counts, n_merges, min_pair_count=2):
             new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + c
         vocab = new_vocab
     return merges, vocab
+
+
+def _to_symbols(word_col):
+    """' h e l l o ' — char symbols joined and padded with single
+    spaces so literal pair replacement is anchor-safe."""
+    return F.concat(
+        F.lit(" "),
+        F.concat_ws(" ", F.split(word_col, "")),
+        F.lit(" "),
+    )
+
+
+def _quote_java(s: str) -> str:
+    r"""Java-regex literal quoting, mirroring ``Pattern.quote``: wrap in
+    \Q..\E and split any embedded literal '\E' so it cannot terminate
+    the quote early (a symbol learned from web text CAN contain '\E';
+    a single \Q..\E span would hand the remainder to the regex engine
+    as raw pattern)."""
+    return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+
+
+def _pair_pattern(a: str, b: str) -> str:
+    # lookarounds keep the boundary spaces UNconsumed so back-to-back
+    # occurrences (' a a a a ') merge in one pass exactly like greedy
+    # BPE — a literal ' a b '->' ab ' replace would eat the shared
+    # separator and skip every second pair in a run.
+    return f"(?<= )({_quote_java(a)}) ({_quote_java(b)})(?= )"
+
+
+def _repl_escape(s: str) -> str:
+    # Java replacement strings treat \ and $ as group references
+    return s.replace("\\", "\\\\").replace("$", "\\$")
+
+
+_SPARK_LOOP_MAX_MERGES = 64
+
+
+def bpe_train_spark_loop(
+    docs: DataFrame,
+    n_merges: int = 10,
+    text_col: str = "text",
+    min_pair_count: int = 2,
+) -> tuple[list[tuple[str, str, int]], DataFrame]:
+    """The all-Spark merge loop, a cross-check for the local-incremental
+    loop (1 aggregate + 1 collect + 1 vocab regexp_replace per merge =
+    one Spark job PER MERGE; ``bpe_train``'s 3-job form is the real
+    training path).  Capped so a test cannot launch hundreds of jobs.
+    """
+    if n_merges > _SPARK_LOOP_MAX_MERGES:
+        raise ValueError(
+            f"bpe_train_spark_loop launches one Spark job per merge and is "
+            f"capped at {_SPARK_LOOP_MAX_MERGES} merges"
+        )
+    vocab = (
+        word_vocab(docs, text_col)
+        .withColumn("syms", _to_symbols(F.col("word")))
+        .localCheckpoint(eager=False)
+    )
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(n_merges):
+        syms_arr = F.split(F.trim(F.col("syms")), " ")
+        pairs = (
+            vocab.withColumn("__arr", syms_arr)
+            .filter(F.size("__arr") >= 2)
+            .select(
+                F.col("n"),
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(__arr) - 1),"
+                        " i -> struct(element_at(__arr, i) as a,"
+                        "             element_at(__arr, i + 1) as b))"
+                    )
+                ).alias("p"),
+            )
+            .groupBy("p.a", "p.b")
+            .agg(F.sum("n").cast("long").alias("cnt"))
+        )
+        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
+        if not top or top[0].cnt < min_pair_count:
+            break
+        a, b, cnt = top[0].a, top[0].b, int(top[0].cnt)
+        merges.append((a, b, cnt))
+        pat = _pair_pattern(a, b)
+        repl = _repl_escape(a + b)
+        vocab = vocab.withColumn(
+            "syms", F.regexp_replace(F.col("syms"), pat, repl)
+        ).localCheckpoint(eager=False)
+    return merges, vocab.select("word", "n", "syms")
+
+
+def bpe_tokenize(
+    docs: DataFrame,
+    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Apply a learned merge sequence: (id, tokens array<string>,
+    n_tokens) per document — the inference half of BPE.
+
+    The merge rules compile into a fixed chain of per-word
+    regexp_replace expressions inside one ``transform`` lambda (the
+    same lookaround/greedy semantics training used), so tokenization
+    is a single scan-stage projection: no shuffle, no Python, no
+    per-row interpretation — the rule program IS the Catalyst
+    expression tree, exactly how a trained tokenizer should ship to a
+    100 TB corpus.  Word boundaries are preserved (BPE merges never
+    cross words, matching training's per-word vocabulary).
+    """
+    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
+    def merge_word(w):
+        s = F.concat(F.lit(" "), F.concat_ws(" ", F.split(w, "")), F.lit(" "))
+        for m in merges:
+            a, b = m[0], m[1]
+            s = F.regexp_replace(s, _pair_pattern(a, b), _repl_escape(a + b))
+        return F.split(F.trim(s), " ")
+
+    toks = F.flatten(
+        F.transform(F.filter(words, lambda w: w != ""), merge_word)
+    )
+    return docs.select(
+        F.col(id_col),
+        toks.alias("tokens"),
+        F.size(toks).cast("long").alias("n_tokens"),
+    )
+
 
 
 def test_bpe_train_matches_python_reference(spark):
@@ -109,7 +244,7 @@ def test_bpe_tokenize_matches_trained_segmentation(spark):
     word — train/apply consistency (the tokenizer-shipping contract)."""
     import random
 
-    from greenbuttonengine_spark.extensions.bpe import bpe_tokenize, bpe_train
+    from greenbuttonengine_spark.extensions.bpe import bpe_train
 
     rng = random.Random(23)
     words = ["low", "lower", "newest", "widest", "newer", "wide"]
@@ -129,15 +264,12 @@ def test_bpe_tokenize_matches_trained_segmentation(spark):
 
 def test_bpe_local_loop_matches_spark_loop(spark):
     """The scale-shaped driver-local merge loop (bpe_train) and the
-    all-Spark r5 loop (bpe_train_spark_loop) must learn identical
+    all-Spark loop (bpe_train_spark_loop, above) must learn identical
     merge sequences and segmentations — the cross-check that lets the
     local loop own the training path."""
     import random
 
-    from greenbuttonengine_spark.extensions.bpe import (
-        bpe_train,
-        bpe_train_spark_loop,
-    )
+    from greenbuttonengine_spark.extensions.bpe import bpe_train
 
     rng = random.Random(41)
     words = ["low", "lower", "newest", "widest", "est", "blow",
@@ -190,10 +322,10 @@ def test_tokenize_stats_lookup_matches_regex_chain(spark):
     trained vocabulary segmentation instead of replaying the merge
     regex program per word occurrence.  Pin the per-lang stats of the
     lookup form against a recomputation through bpe_tokenize (the
-    regex-chain form) on the sf0.001 corpus — identical rows."""
+    regex-chain form, above) on the sf0.001 corpus — identical rows."""
     from pyspark.sql import functions as F
 
-    from greenbuttonengine_spark.extensions.bpe import bpe_tokenize, bpe_train
+    from greenbuttonengine_spark.extensions.bpe import bpe_train
     from greenbuttonengine_spark.plans.wave5_queries import lm_bpe_tokenize_stats
     from greenbuttonengine_spark.sources.catalog import load_table
 

@@ -28,14 +28,15 @@ def test_each_query_runs_smoke(built_queries):
         assert df.limit(1).count() >= 0, name
 
 
-def test_sql_surface_via_registered_views(spark):
-    """register_views exposes the catalog to raw spark.sql — the
-    interface a SQL-first user drives — and results match the
+def test_sql_surface_via_registered_views(spark, sf_dir):
+    """Catalog tables registered as temp views serve raw spark.sql —
+    the interface a SQL-first user drives — and results match the
     DataFrame path (same catalog normalization, e.g. nanos
     timestamps)."""
-    from greenbuttonengine_spark.sources import register_views, load_table
+    from greenbuttonengine_spark.sources import TABLES, load_table
 
-    register_views(spark, "/root/testdata/sf0.001")
+    for name in TABLES:
+        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
     got = spark.sql(
         """
         SELECT n.n_name, COUNT(*) AS n_customers
@@ -43,8 +44,8 @@ def test_sql_surface_via_registered_views(spark):
         GROUP BY n.n_name ORDER BY n.n_name
         """
     ).collect()
-    c = load_table(spark, "customer", "/root/testdata/sf0.001")
-    n = load_table(spark, "nation", "/root/testdata/sf0.001")
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     want = {
         r.n_name: r.n_customers
         for r in c.join(n, c["c_nationkey"] == n["n_nationkey"])
@@ -58,6 +59,24 @@ def test_sql_surface_via_registered_views(spark):
     assert spark.sql(
         "SELECT MIN(ts) AS t FROM events"
     ).first().t is not None
+
+
+def test_load_table_refuses_wrong_read_conf(spark, sf_dir):
+    """load_table checks the session's read settings instead of setting
+    them: with nanosAsLong off it raises and names the conf."""
+    import pytest
+
+    from greenbuttonengine_spark.sources import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(ValueError, match=key):
+            load_table(spark, "events", sf_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert load_table(spark, "events", sf_dir).count() > 0
 
 
 def test_gate_rotation_ordering():

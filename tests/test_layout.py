@@ -63,13 +63,14 @@ def test_zorder_prunes_on_either_column(spark):
     (Worst-CASE box area is deliberately not asserted: an unaligned
     Z-curve segment crossing the top-level quadrant boundary
     legitimately spans the space; pruning is about the average.)"""
-    from greenbuttonengine_spark.extensions.layout import with_zorder_key
+    from greenbuttonengine_spark.extensions.layout import morton_code
 
     rng = random.Random(9)
     n, chunk, width = 4096, 256, 256
     rows = [Row(a=rng.randrange(1 << 12), b=rng.randrange(1 << 12))
             for _ in range(n)]
-    df = with_zorder_key(spark.createDataFrame(rows), ["a", "b"], bits=12)
+    df = spark.createDataFrame(rows).withColumn(
+        "zorder_key", morton_code([F.col("a"), F.col("b")], bits=12))
 
     def chunk_boxes(order_col):
         data = [(r.a, r.b) for r in df.orderBy(order_col).collect()]

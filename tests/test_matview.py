@@ -1,10 +1,8 @@
-"""Incremental materialized aggregate view (streaming/matview.py):
-the maintained table must equal the full batch recompute after every
-commit, across stream restarts; replayed epochs are no-ops."""
+"""Incremental materialized aggregate view (streaming/matview.py): the
+additive merge of a batch's partial aggregate into stored totals."""
 
 from __future__ import annotations
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -15,264 +13,19 @@ VIEW_SCHEMA = T.StructType([
     T.StructField("max_value", T.LongType()),
 ])
 
-def _aggs():
-    # built lazily: Column construction needs an active SparkContext,
-    # which does not exist at pytest collection time
-    return [
-        F.count("*").cast("long").alias("n_events"),
-        F.sum("value").cast("long").alias("total_value"),
-        F.max("value").cast("long").alias("max_value"),
-    ]
 
-SRC_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("value", T.LongType()),
-])
-
-
-def _rows(*tuples):
-    return [Row(user_id=u, value=v) for u, v in tuples]
-
-
-def _view(spark, d):
-    from greenbuttonengine_spark.streaming.matview import read_view
-
-    return {
-        r.user_id: (r.n_events, r.total_value, r.max_value)
-        for r in read_view(spark, d, VIEW_SCHEMA).collect()
-    }
-
-
-def _recompute(df):
-    return {
-        r.user_id: (r.n_events, r.total_value, r.max_value)
-        for r in df.groupBy("user_id").agg(*_aggs()).collect()
-    }
-
-
-def test_matview_equals_batch_recompute_across_restarts(spark, tmp_path):
-    """File-driven stream, two batches separated by restart on the
-    same checkpoint (the deterministic batch-separation recipe):
-    after each run the maintained view == groupBy over ALL input."""
-    from greenbuttonengine_spark.streaming.matview import start_matview_stream
-
-    d = str(tmp_path / "view")
-    cp = str(tmp_path / "cp")
-    drop = tmp_path / "drop"
-    drop.mkdir()
-
-    def run():
-        stream = (spark.readStream.schema(SRC_SCHEMA)
-                  .option("recursiveFileLookup", "true")
-                  .parquet(str(drop)))
-        q = start_matview_stream(
-            spark, stream, d, cp, VIEW_SCHEMA, ["user_id"], _aggs(),
-            n_buckets=4, minmax_cols={"max_value": "max"},
-            available_now=True)
-        q.awaitTermination(120)
-
-    b1 = _rows((1, 10), (1, 5), (2, 7))
-    spark.createDataFrame(b1).coalesce(1).write.parquet(str(drop / "a"))
-    run()
-    all_input = spark.createDataFrame(b1)
-    assert _view(spark, d) == _recompute(all_input)
-    assert _view(spark, d)[1] == (2, 15, 10)
-
-    b2 = _rows((1, 20), (3, 1), (2, 2))
-    spark.createDataFrame(b2).coalesce(1).write.parquet(str(drop / "b"))
-    run()
-    all_input = spark.createDataFrame(b1 + b2)
-    assert _view(spark, d) == _recompute(all_input)
-    assert _view(spark, d)[1] == (3, 35, 20)
-    assert _view(spark, d)[2] == (2, 9, 7)
-
-
-def test_matview_replay_is_noop_and_buckets_are_partial(spark, tmp_path):
-    """Replaying an applied epoch must not double-count (exactly-once
-    via the epoch guard), and a one-key delta rewrites only that key's
-    bucket generation."""
-    from greenbuttonengine_spark.streaming.matview import (
-        apply_agg_delta_batch,
-        read_view,
-    )
-    from greenbuttonengine_spark.streaming.silver import _read_state
-
-    d = str(tmp_path / "view2")
-
-    def delta(rows):
-        return spark.createDataFrame(rows, VIEW_SCHEMA)
-
-    d0 = delta([(u, 1, 10, 10) for u in range(40)])
-    apply_agg_delta_batch(d0, d, VIEW_SCHEMA, ["user_id"], epoch_id=0,
-                          n_buckets=8, minmax_cols={"max_value": "max"})
-    before = dict(_read_state(d)["buckets"])
-
-    d1 = delta([(7, 2, 5, 5)])
-    apply_agg_delta_batch(d1, d, VIEW_SCHEMA, ["user_id"], epoch_id=1,
-                          n_buckets=8, minmax_cols={"max_value": "max"})
-    got = _view(spark, d)
-    assert got[7] == (3, 15, 10)
-    assert got[8] == (1, 10, 10)
-    after = _read_state(d)["buckets"]
-    moved = {b for b in after if after[b] != before.get(b)}
-    assert len(moved) == 1, "one-key delta must rewrite exactly one bucket"
-
-    # replay epoch 1: totals unchanged
-    apply_agg_delta_batch(d1, d, VIEW_SCHEMA, ["user_id"], epoch_id=1,
-                          n_buckets=8, minmax_cols={"max_value": "max"})
-    assert _view(spark, d)[7] == (3, 15, 10)
-
-
-def test_matview_minmax_merge_is_not_additive(spark, tmp_path):
+def test_matview_minmax_merge_is_not_additive(spark):
     """max columns merge with greatest-of, not sum: a second batch
     with a smaller max leaves the stored max unchanged."""
-    from greenbuttonengine_spark.streaming.matview import apply_agg_delta_batch
+    from greenbuttonengine_spark.streaming.matview import agg_merge_deltas
 
-    d = str(tmp_path / "view3")
-    mk = lambda rows: spark.createDataFrame(rows, VIEW_SCHEMA)
-    apply_agg_delta_batch(mk([(1, 1, 100, 100)]), d, VIEW_SCHEMA,
-                          ["user_id"], epoch_id=0, n_buckets=4,
-                          minmax_cols={"max_value": "max"})
-    apply_agg_delta_batch(mk([(1, 1, 3, 3)]), d, VIEW_SCHEMA,
-                          ["user_id"], epoch_id=1, n_buckets=4,
-                          minmax_cols={"max_value": "max"})
-    assert _view(spark, d)[1] == (2, 103, 100)
+    def mk(rows):
+        return spark.createDataFrame(rows, VIEW_SCHEMA).withColumn(
+            "__bucket", F.lit(0))
 
-
-def test_matview_stream_matches_declared_batch_query(spark, tmp_path):
-    """Stream/batch parity on REAL data: the matview maintained from a
-    file-driven stream over the sf0.001 events table must equal the
-    declared mv_user_event_totals batch query — same aggregate
-    expressions by construction (mv_user_event_aggs)."""
-    from greenbuttonengine_spark.plans.wave7_queries import (
-        mv_user_event_aggs,
-        mv_user_event_totals,
-    )
-    from greenbuttonengine_spark.sources import load_table
-    from greenbuttonengine_spark.streaming.matview import (
-        read_view,
-        start_matview_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = load_table(spark, "events", sf_dir)
-    src_schema = ev.schema
-
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    d = str(tmp_path / "view")
-    cp = str(tmp_path / "cp")
-    # split the table into two file batches, separated by restart
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        str(drop / "a"))
-
-    view_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_cents", T.LongType()),
-        T.StructField("max_cents", T.LongType()),
-    ])
-
-    def run():
-        stream = (spark.readStream.schema(src_schema)
-                  .option("recursiveFileLookup", "true")
-                  .parquet(str(drop)))
-        q = start_matview_stream(
-            spark, stream, d, cp, view_schema, ["user_id"],
-            mv_user_event_aggs(), n_buckets=8,
-            minmax_cols={"max_cents": "max"}, available_now=True)
-        q.awaitTermination(180)
-
-    run()
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        str(drop / "b"))
-    run()
-
-    got = {
-        r.user_id: (r.n_events, r.total_cents, r.max_cents)
-        for r in read_view(spark, d, view_schema).collect()
-    }
-    want = {
-        r.user_id: (r.n_events, r.total_cents, r.max_cents)
-        for r in mv_user_event_totals(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_matview_crash_before_publish_replays_cleanly(spark, tmp_path):
-    """Simulated crash: epoch 1's generation dir is fully written but
-    the marker publish never happened (marker still points at epoch
-    0).  foreachBatch replays epoch 1; the merge must read current
-    state through the OLD marker and overwrite the orphan generation
-    — totals end exactly once, never doubled."""
-    import json
-    import os
-
-    from greenbuttonengine_spark.streaming.matview import apply_agg_delta_batch
-    from greenbuttonengine_spark.streaming.silver import _marker_path
-
-    d = str(tmp_path / "view_crash")
-    mk = lambda rows: spark.createDataFrame(rows, VIEW_SCHEMA)
-    apply_agg_delta_batch(mk([(1, 1, 10, 10), (2, 1, 5, 5)]), d,
-                          VIEW_SCHEMA, ["user_id"], epoch_id=0, n_buckets=4,
-                          minmax_cols={"max_value": "max"})
-    marker_after_0 = open(_marker_path(d)).read()
-
-    apply_agg_delta_batch(mk([(1, 1, 7, 7)]), d, VIEW_SCHEMA,
-                          ["user_id"], epoch_id=1, n_buckets=4,
-                          minmax_cols={"max_value": "max"})
-    assert _view(spark, d)[1] == (2, 17, 10)
-
-    # crash simulation: roll the marker back to epoch 0 — the gen-1
-    # directory is now an orphan the marker never referenced
-    with open(_marker_path(d), "w") as fh:
-        fh.write(marker_after_0)
-    assert json.loads(open(_marker_path(d)).read())["epoch"] == 0
-
-    # replay epoch 1 (same delta, as foreachBatch would)
-    apply_agg_delta_batch(mk([(1, 1, 7, 7)]), d, VIEW_SCHEMA,
-                          ["user_id"], epoch_id=1, n_buckets=4,
-                          minmax_cols={"max_value": "max"})
-    got = _view(spark, d)
-    assert got[1] == (2, 17, 10), "replay after crash must not double-count"
-    assert got[2] == (1, 5, 5)
-
-
-def test_matview_misdeclared_minmax_fails_at_setup(spark, tmp_path):
-    """A misdeclared minmax_cols must raise when the stream is WIRED
-    (start_matview_stream), not on the first micro-batch (r13 ADVICE);
-    same for the direct batch-apply entry point."""
-    import pytest
-
-    from greenbuttonengine_spark.streaming.matview import (
-        apply_agg_delta_batch,
-        start_matview_stream,
-    )
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    spark.createDataFrame(_rows((1, 5)), SRC_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(str(src_dir / "b0.parquet"))
-    stream = spark.readStream.schema(SRC_SCHEMA).parquet(str(src_dir))
-
-    with pytest.raises(ValueError, match="minmax_cols not in"):
-        start_matview_stream(
-            spark, stream, str(tmp_path / "view"), str(tmp_path / "ckpt"),
-            VIEW_SCHEMA, ["user_id"], _aggs(),
-            minmax_cols={"no_such_col": "max"},
-        )
-    with pytest.raises(ValueError, match="must be 'min' or 'max'"):
-        start_matview_stream(
-            spark, stream, str(tmp_path / "view"), str(tmp_path / "ckpt2"),
-            VIEW_SCHEMA, ["user_id"], _aggs(),
-            minmax_cols={"max_value": "avg"},
-        )
-    delta = spark.createDataFrame(_rows((1, 5)), SRC_SCHEMA).groupBy(
-        "user_id"
-    ).agg(*_aggs())
-    with pytest.raises(ValueError, match="minmax_cols not in"):
-        apply_agg_delta_batch(
-            delta, str(tmp_path / "view"), VIEW_SCHEMA, ["user_id"], 0,
-            minmax_cols={"no_such_col": "max"},
-        )
+    merged = agg_merge_deltas(mk([(1, 1, 3, 3)]), mk([(1, 1, 100, 100)]),
+                              VIEW_SCHEMA, ["user_id"],
+                              minmax_cols={"max_value": "max"})
+    got = {r.user_id: (r.n_events, r.total_value, r.max_value)
+           for r in merged.collect()}
+    assert got == {1: (2, 103, 100)}

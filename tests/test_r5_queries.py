@@ -271,14 +271,16 @@ def test_gap_fill_null_series_key(spark, tmp_path):
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
+    """The fixed-point form tracks a float power iteration with uniform
+    teleport to within its truncation bias (~ iters * outdeg * 2^-40)."""
     import numpy as np
 
-    from greenbuttonengine_spark.extensions.graph import pagerank
+    from greenbuttonengine_spark.extensions.graph import pagerank_scaled
 
-    # 5 nodes; node 4 is dangling (no out-edges); 0 is a hub
-    E = [(0, 1), (0, 2), (1, 0), (2, 0), (3, 0), (3, 4), (1, 4)]
+    # 5 dangling-free nodes; 0 is a hub
+    E = [(0, 1), (0, 2), (1, 0), (2, 0), (3, 0), (3, 4), (1, 4), (4, 3)]
     edges = spark.createDataFrame([Row(src=a, dst=b) for a, b in E])
-    got = {r.node: r.rank for r in pagerank(edges, 0.85, iters=20).collect()}
+    got = {r.node: r.rank for r in pagerank_scaled(edges, iters=20).collect()}
 
     n, d = 5, 0.85
     out = {}
@@ -287,8 +289,6 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     r = np.full(n, 1.0 / n)
     for _ in range(20):
         nxt = np.full(n, (1 - d) / n)
-        dangling = sum(r[v] for v in range(n) if v not in out)
-        nxt += d * dangling / n
         for a, b in E:
             nxt[b] += d * r[a] / out[a]
         r = nxt
@@ -301,13 +301,10 @@ def test_pagerank_matches_numpy_power_iteration(spark):
 
 def test_pagerank_scaled_matches_integer_replay(spark):
     """The fixed-point declared form replays a pure-Python integer
-    power iteration EXACTLY, tracks the float pagerank closely on a
-    dangling-free graph, and refuses dangling graphs."""
+    power iteration EXACTLY and refuses dangling graphs."""
     import pytest as _pytest
 
-    from greenbuttonengine_spark.extensions.graph import (
-        PR_SCALE, pagerank, pagerank_scaled,
-    )
+    from greenbuttonengine_spark.extensions.graph import PR_SCALE, pagerank_scaled
 
     # dangling-free 5-node graph (every node has out-edges)
     E = [(0, 1), (0, 2), (1, 0), (2, 0), (3, 0), (3, 4), (1, 4), (4, 3)]
@@ -329,11 +326,6 @@ def test_pagerank_scaled_matches_integer_replay(spark):
     for v in range(n):
         assert got[v][0] == r[v], (v, got[v][0], r[v])
         assert got[v][1] == r[v] / q
-
-    # closeness to the float form (truncation bias ~ iters*k*2^-40)
-    fp = {x.node: x.rank for x in pagerank(edges, 0.85, iters=10).collect()}
-    for v in range(n):
-        assert abs(got[v][1] - fp[v]) < 1e-9, (v, got[v][1], fp[v])
 
     # dangling node 5 (in-edges only) must be rejected
     bad = spark.createDataFrame([Row(src=a, dst=b) for a, b in E + [(0, 5)]])
@@ -391,10 +383,10 @@ def test_phrase_positions_planted(spark, tmp_path):
 
 
 def test_pagerank_empty_graph(spark):
-    from greenbuttonengine_spark.extensions.graph import pagerank
+    from greenbuttonengine_spark.extensions.graph import pagerank_scaled
 
     edges = spark.createDataFrame([], "src bigint, dst bigint")
-    assert pagerank(edges, iters=3).collect() == []
+    assert pagerank_scaled(edges, iters=3).collect() == []
 
 
 def test_bigram_lm_planted(spark, tmp_path):

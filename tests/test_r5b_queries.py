@@ -153,52 +153,6 @@ def test_latest_per_key_matches_bruteforce(spark, sf_correct_dir):
         assert (r.last_event_id, r.last_value) == (e.event_id, e.value)
 
 
-def test_pca_matches_numpy(spark, sf_correct_dir):
-    """The distributed Gram-partial fit must reproduce numpy full-data
-    PCA: same explained variance, same subspace (components equal up
-    to the canonical sign, which pca_fit fixes)."""
-    import numpy as np
-
-    from greenbuttonengine_spark.extensions.embeddings import pca_fit
-
-    emb = spark.read.parquet(f"{sf_correct_dir}/embeddings.parquet")
-    mu, comps, evr = pca_fit(emb, k=8)
-    v = np.array(
-        [list(r.embedding) for r in emb.select("embedding").collect()],
-        dtype=np.float64,
-    )
-    assert np.allclose(mu, v.mean(0), atol=1e-9)
-    cov = np.cov(v.T, bias=True)
-    w, u = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:8]
-    ref = u[:, order]
-    # subspace agreement: |cos| between matched axes ~ 1
-    for j in range(8):
-        c = abs(float(ref[:, j] @ comps[:, j]))
-        assert c > 1 - 1e-8, (j, c)
-    assert np.allclose(evr, w[order] / w.sum(), atol=1e-9)
-
-
-def test_pca_projection_plan_is_jvm_only(spark, sf_correct_dir):
-    """The projection stage must be scan-side JVM codegen: the only
-    Python in the whole job is the fit's mapInPandas pass, which never
-    appears in the PROJECTION plan (the basis is literals)."""
-    from greenbuttonengine_spark.extensions.embeddings import pca_project
-
-    emb = spark.read.parquet(f"{sf_correct_dir}/embeddings.parquet")
-    out = pca_project(emb, k=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan[:1500]
-    assert "EvalPython" not in plan and "MapInPandas" not in plan, plan[:1500]
-    rows = out.collect()
-    assert len(rows) == emb.count()
-    # projections of centered data: per-component mean ~ 0
-    import numpy as np
-
-    m = np.array([[r.pc1, r.pc2, r.pc3, r.pc4] for r in rows]).mean(0)
-    assert np.allclose(m, 0, atol=1e-9)
-
-
 def test_dq_report_planted_violations(spark):
     from pyspark.sql import Row
 

@@ -49,7 +49,8 @@ def test_bpe_tokenize_stats_degenerate_lang_parity(spark):
     import pandas as pd
 
     from greenbuttonengine_spark.extensions.bpe import (
-        bpe_tokenize, bpe_tokenize_stats_oracle_sql, bpe_train)
+        bpe_tokenize_stats_oracle_sql, bpe_train)
+    from tests.test_bpe import bpe_tokenize
     from pyspark.sql import functions as F
 
     rows = [

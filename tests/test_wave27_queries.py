@@ -1,5 +1,6 @@
 """Round-12 wave: the two streaming batch-parity queries must agree
-with the actual production streaming machinery, not just the oracle."""
+with the production per-batch functions they gate, not just the
+oracle."""
 
 from __future__ import annotations
 
@@ -65,59 +66,51 @@ def test_admission_parity_query_matches_verdicts(spark, sf_dir):
     )
 
 
-def test_silver_upsert_matches_real_cow_store(spark, sf_dir, tmp_path):
-    """Gold-standard parity: replay the SAME batch/state split through
-    the actual copy-on-write bucket store (apply_cdc_batch epoch 1 then
-    epoch 2) and require read_current == the gated plan's live rows."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
+def test_silver_upsert_matches_two_epoch_merge(spark, sf_dir):
+    """Replay the SAME batch/state split as two micro-batches through
+    the keeper election (epoch 1 into an empty table, then epoch 2 into
+    its result) and require the gated plan's rows, whose stored state
+    is hand-built in SQL, to equal it."""
     from greenbuttonengine_spark.sources.catalog import load_table
-    from greenbuttonengine_spark.streaming.silver import (
-        apply_cdc_batch, read_current,
-    )
+    from greenbuttonengine_spark.streaming.silver import cdc_merge_keepers
 
     QUERIES = _queries()
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    table = str(tmp_path / "silver")
+    data_cols = ["user_id", "event_id", "event_type", "value"]
     ev = load_table(spark, "events", sf_dir).select(
-        "user_id", "event_id", "event_type", "value"
+        *data_cols,
+        F.pmod(F.col("user_id"), F.lit(16)).cast("int").alias("__bucket"),
+        F.when(F.col("event_type") == "error", F.lit("d"))
+        .otherwise(F.lit("u")).alias("op"),
     )
-    op = F.when(F.col("event_type") == "error", F.lit("d")).otherwise(
-        F.lit("u")
+    empty = spark.createDataFrame(
+        [], "user_id bigint, event_id bigint, event_type string, value double, "
+        "__bucket int, __deleted boolean, __del_epoch bigint",
     )
+
+    def merge(batch, current, epoch_id):
+        return cdc_merge_keepers(
+            batch, current, data_cols, ["user_id"], "event_id", epoch_id,
+            op_col="op",
+        )
+
     # epoch 1: the stored-state rows; epoch 2: the micro-batch — the
     # same split streaming_silver_upsert declares
-    apply_cdc_batch(
-        ev.filter(F.col("event_id") % 3 == 0).withColumn("op", op),
-        table, schema, ["user_id"], "event_id", epoch_id=1, op_col="op",
-    )
-    apply_cdc_batch(
-        ev.filter(F.col("event_id") % 3 != 0).withColumn("op", op),
-        table, schema, ["user_id"], "event_id", epoch_id=2, op_col="op",
-    )
-    stored = {
-        (r.user_id, r.event_id, r.event_type, r.value)
-        for r in read_current(spark, table, schema).collect()
+    state = merge(ev.filter(F.col("event_id") % 3 == 0), empty, 1)
+    state = merge(ev.filter(F.col("event_id") % 3 != 0), state, 2)
+    folded = {
+        (r.user_id, r.event_id, r.event_type, r.value, r["__deleted"],
+         r["__del_epoch"])
+        for r in state.collect()
     }
     plan = QUERIES["streaming_silver_upsert"].fn(spark, sf_dir).collect()
-    live = {
-        (r.user_id, r.event_id, r.event_type, r.value)
+    declared = {
+        (r.user_id, r.event_id, r.event_type, r.value, r.deleted, r.del_epoch)
         for r in plan
-        if not r.deleted
     }
-    assert stored == live
+    assert folded == declared
     # tombstone metadata: every deleted winner carries its epoch
     for r in plan:
         if r.deleted:
             assert r.del_epoch in (1, 2)
-        # one winner per key
+    # one winner per key
     assert len({r.user_id for r in plan}) == len(plan)

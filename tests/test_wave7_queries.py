@@ -7,8 +7,31 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from greenbuttonengine_spark.sources.catalog import load_table
+
+
+def agg_hll_rollup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Datasketches form of the agg_hll_rollup rollup (binary HLL
+    sketches, hll_sketch_agg -> hll_union_agg): engine-specific sketch
+    bytes, so it is bounded here rather than oracle-declared."""
+    ev = load_table(spark, "events", sf_dir)
+    daily = (
+        ev.groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.hll_sketch_agg("user_id").alias("sk"))
+    )
+    return (
+        daily.groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("n_days"),
+            F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("long").alias(
+                "distinct_users_est"
+            ),
+        )
+        .orderBy("event_type")
+    )
 
 
 def test_hamming_topk_sign_bits_and_ranking(spark):
@@ -351,9 +374,7 @@ def test_hll_rollup_bounds_and_associativity(spark, sf_dir):
         _HLL_NUM,
         _HLL_P,
         agg_hll_rollup,
-        agg_hll_rollup_native,
     )
-    from greenbuttonengine_spark.sources import load_table
 
     est = {r.event_type: r.distinct_users_est
            for r in agg_hll_rollup(spark, sf_dir).collect()}

@@ -8,6 +8,64 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from greenbuttonengine_spark.plans.wave9_queries import _PQ_SUBS, _pq_centroids
+
+
+def _pq_dists_expr(cents: list[list[list[int]]] | None = None) -> str:
+    """Straight-line expression computing, per row, the 8x16 table of
+    exact squared distances between the quantized vector (scalar
+    columns ``q0..q63`` from :func:`_pq_quantized`) and the codebook,
+    with every centroid integer baked in as a literal — the
+    SPECIFICATION twin that the Arrow kernels (``pq_codes_pandas`` /
+    ``pq_dists_pandas``, the production path) are pinned against,
+    bitwise.
+
+    The first cut carried the codebook as a per-row 1024-int literal
+    array and walked it with nested transform/aggregate lambdas;
+    Catalyst evaluates HOFs by invoking the lambda closure per element
+    and re-materializing the literal array per row, and the 100x
+    measurement (800k vectors) clocked 308s.  Unrolling to 1,024
+    literal (q-c)*(q-c) terms over plain BIGINT columns runs 6.5s on
+    the identical corpus, 52x (SCALING.md).  Honest mechanism note:
+    the projection is wide enough that janino still refuses the fused
+    doConsume (whole-stage codegen falls back to interpreted
+    expression eval — visible as an ERROR CodeGenerator + disabled-
+    codegen WARN in the logs); the 52x comes from flat Add/Multiply
+    expression trees being ~free to interpret while lambda dispatch
+    and per-row array construction are not.  Same math, same oracle.
+
+    ``cents`` overrides the seeded codebook (wave-18's trained
+    variant); default is the md5-60 random codebook.  Geometry is
+    derived from the codebook shape (subs = len, dim = len of one
+    centroid), so any (subs, k, dim) factorization of the vector
+    width works over the same q0..q63 columns."""
+    cent = cents if cents is not None else _pq_centroids()
+    n_dim = len(cent[0][0])
+    subs = []
+    for j in range(len(cent)):
+        dists = []
+        for s in range(len(cent[j])):
+            terms = []
+            for d in range(n_dim):
+                c = cent[j][s][d]
+                q = f"q{j * n_dim + d}"
+                terms.append(f"({q} - {c}L) * ({q} - {c}L)")
+            dists.append("(" + " + ".join(terms) + ")")
+        subs.append("array(" + ", ".join(dists) + ")")
+    return "array(" + ", ".join(subs) + ")"
+
+
+def pq_code_cols() -> list:
+    """c0..c7 argmin PQ-code columns over a ``subs`` array-of-arrays
+    column (the :func:`_pq_dists_expr` output)."""
+    return [
+        F.expr(
+            f"CAST(array_position(subs[{j}], array_min(subs[{j}])) - 1"
+            " AS INT)"
+        ).alias(f"c{j}")
+        for j in range(_PQ_SUBS)
+    ]
+
 
 def _md5_60(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
@@ -158,18 +216,14 @@ def test_ann_pq_codes_argmin_and_shape(spark, sf_dir):
 def test_pq_kernels_match_expression_twins(spark, sf_dir):
     """The r15 Arrow kernels (pq_codes_pandas / pq_dists_pandas) must
     be bitwise twins of the unrolled-literal expression forms
-    (_pq_dists_expr / pq_code_cols) that specify the math and that
+    (_pq_dists_expr / pq_code_cols, above) that specify the math and that
     the DuckDB oracles mirror — including argmin tie order (numpy
     first-min == array_position(array_min)) and the best-distance
     columns."""
     from pyspark.sql import functions as F
 
     from greenbuttonengine_spark.plans.wave9_queries import (
-        _PQ_SUBS,
-        _pq_centroids,
-        _pq_dists_expr,
         _pq_quantized,
-        pq_code_cols,
         pq_codes_pandas,
         pq_dists_pandas,
     )
