@@ -66,12 +66,8 @@ def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
         )
 
 
-from ..shipping import ensure_package_shipped as _ensure_package_shipped  # noqa: E402
-
-
 def read_espi(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """paths (glob/dir/list) -> union-typed parsed DataFrame."""
-    _ensure_package_shipped(spark)
     raw = spark.read.format("binaryFile").load(paths).select("path", "content")
     return raw.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
 

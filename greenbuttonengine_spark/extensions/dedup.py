@@ -2,7 +2,7 @@
 
 Pair generation (each a DataFrame -> DataFrame function):
 
-  exact_duplicates           hash-groupBy on (normalized) text
+  exact_duplicates           hash-groupBy on normalized text
   ngram_jaccard_pairs_prefix exact set-Jaccard, AllPairs/PPJoin prefix
                              filter — skew-proof exact join
   minhash_lsh_pairs          MinHash signatures + banded LSH bucket
@@ -60,17 +60,16 @@ def _shingles(col, k: int = 8, distinct: bool = True):
     return F.array_distinct(raw) if distinct else raw
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                     normalize: bool = True) -> DataFrame:
+def exact_duplicates(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
     """Exact dedup: fingerprint -> keeper (min id) + copy count.
     One shuffle on the fingerprint; at scale this is the cheapest pass
     and runs first to shrink the corpus for the fuzzy passes."""
     from .textstats import fingerprint_col
 
-    text = F.col(text_col)
-    fp = fingerprint_col(text) if normalize else F.md5(text)
     return (
-        docs.select(fp.alias("fingerprint"), F.col(id_col))
+        docs.select(fingerprint_col(F.col(text_col)).alias("fingerprint"), F.col(id_col))
         .groupBy("fingerprint")
         .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("n_copies"))
     )
@@ -1326,7 +1325,6 @@ def incremental_dedup(
     corpus_fingerprints: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
     """Admission decision for a NEW batch against an already-deduped
     corpus — the pass a production pipeline runs per crawl drop, where
@@ -1353,9 +1351,9 @@ def incremental_dedup(
 
     from .textstats import fingerprint_col
 
-    text = F.col(text_col)
-    fp_col = fingerprint_col(text) if normalize else F.md5(text)
-    fp = new_batch.select(F.col(id_col), fp_col.alias("fingerprint"))
+    fp = new_batch.select(
+        F.col(id_col), fingerprint_col(F.col(text_col)).alias("fingerprint")
+    )
     # row_number, NOT min(id)==id: a double-delivered shard can carry
     # two physically identical rows (same id, same text); min==id would
     # accept both and the admission stream would write the row twice.
@@ -1388,7 +1386,6 @@ def incremental_near_dedup(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    batch_sigs: DataFrame | None = None,
     max_bucket: int = 10000,
     seeded: bool = False,
 ) -> DataFrame:
@@ -1423,9 +1420,7 @@ def incremental_near_dedup(
     only the CANDIDATE ids (semi-pruned), so store signatures are
     touched for collisions only.  The CC loop runs over batch-
     internal pairs (micro-batch-sized, executes eagerly at call
-    time).  Pass ``batch_sigs`` (precomputed + checkpointed) when the
-    caller also appends accepted signatures to the store, so the
-    signature pass runs once.
+    time).
 
     The EXACT pre-collapse is load-bearing, not cosmetic: identical
     texts have identical signatures, so m copies of one doc put m ids
@@ -1445,10 +1440,8 @@ def incremental_near_dedup(
     # literal-LCG one (identical plan shape) so the whole admission
     # becomes DuckDB-reproducible; incremental_near_oracle_sql emits
     # the matching oracle from the same literals.
-    sig = (
-        batch_sigs
-        if batch_sigs is not None
-        else minhash_signatures(new_batch, text_col, id_col, num_perm, k, seeded=seeded)
+    sig = minhash_signatures(
+        new_batch, text_col, id_col, num_perm, k, seeded=seeded
     ).localCheckpoint(eager=False)
 
     fp = new_batch.select(

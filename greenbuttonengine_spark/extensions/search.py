@@ -154,7 +154,8 @@ def bm25_topk(
     # table); because this form's stats leg is per_doc's own subtree,
     # AQE stage reuse resolves it to a ReusedExchange of the scoring
     # leg's doc_id shuffle at runtime — the tokenize+explode scan runs
-    # ONCE (verified in the final adaptive plan, plans/r16).
+    # ONCE (after one execution, ``df.explain()`` prints the final
+    # adaptive plan with the ReusedExchange).
     stats = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_tokens"),

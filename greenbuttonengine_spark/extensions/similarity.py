@@ -440,7 +440,6 @@ def ivf_topk(
     n_probe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the ``quantizer`` cells
     the corpus; each query scans only its ``n_probe`` cells, so at
@@ -453,13 +452,7 @@ def ivf_topk(
     Per-ROW norms are hoisted above the join by ``_with_norm``, whose
     finiteness gate runs before a k-means fit (the seeded sample reads
     the raw corpus); zero-norm rows keep their cells and are dropped
-    per-pair in ``_score_and_rank``.
-
-    ``broadcast_queries=False`` lets the planner pick the cell-join
-    strategy instead of forcing a broadcast of the exploded probe
-    side — the right setting when queries ~ corpus (e.g. the bitext
-    miner at scale: probe side is n_queries x n_probe rows and no
-    longer driver-sized); values are identical either way."""
+    per-pair in ``_score_and_rank``."""
     c = _with_norm(
         corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")),
         "cv",
@@ -475,8 +468,7 @@ def ivf_topk(
         "qnrm",
     )
     probes = probe(q, "query_id", "qv", n_probe)
-    probe_side = F.broadcast(probes) if broadcast_queries else probes
-    return _score_and_rank(assign(c, "cv", "cell").join(probe_side, "cell"), k)
+    return _score_and_rank(assign(c, "cv", "cell").join(F.broadcast(probes), "cell"), k)
 
 
 # The k-ordered fold every Arrow kernel here (and in dedup) sums with:

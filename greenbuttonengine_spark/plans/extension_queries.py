@@ -682,9 +682,7 @@ def _pack_oracle() -> str:
 )
 def pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..extensions.packing import pack_sequences
-    from ..shipping import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     return pack_sequences(load_table(spark, "documents", sf_dir), budget=512, n_groups=8)
 
 

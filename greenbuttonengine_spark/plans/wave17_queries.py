@@ -128,9 +128,9 @@ def _km_batch_q_and_d2(b, cols, cm):
     int64 arithmetic (|q| <= ~2^13, so every term is < 2^40, far
     inside int64), hence bit-identical to the per-term (q - c)^2 fold
     the oracle runs.  Module-level helper referenced as a GLOBAL from
-    the shipped kernels: cloudpickle serializes it by reference, so
-    every caller must run ``ensure_package_shipped`` before its kernel
-    executes (r16 ADVICE — both current callers do)."""
+    the shipped kernels: cloudpickle serializes it by reference, so the
+    workers import it from the package zip that the session ships
+    (``get_spark`` and the ``queries()`` wrapper both ship it)."""
     import numpy as np
 
     idx = {n: i for i, n in enumerate(b.schema.names)}
@@ -231,9 +231,6 @@ def _km_train(qdf: DataFrame, cents: list[list[int]]) -> list[list[int]]:
     "tree-aggregated doubles.",
 )
 def embedding_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     emb = load_table(spark, "embeddings", sf_dir)
     qdf = _km_qdf(emb)
     cents = _km_train(qdf, _km_init(emb))

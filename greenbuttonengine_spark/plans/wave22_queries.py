@@ -79,10 +79,8 @@ def _silhouette_oracle_sql() -> str:
     "partition-order-dependent).",
 )
 def eval_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..shipping import ensure_package_shipped
     from .wave17_queries import _KM_D
 
-    ensure_package_shipped(spark)
     emb = load_table(spark, "embeddings", sf_dir)
     qdf = _km_qdf(emb)
     cents = _km_train(qdf, _km_init(emb))

@@ -9,6 +9,9 @@ on a 1000-executor cluster:
   clock (and the DuckDB oracle is UTC-naive).
 * Arrow enabled for every pandas exchange (the XML parse stage and the
   multimodal UDFs are the only Python-side hops).
+* the package ships to the Python workers once, at session start
+  (``shipping.ensure_package_shipped``), so every Python stage runs
+  wherever the driver started.
 * shuffle partitions default to cores locally; on a real cluster AQE
   coalesces from a high initial number, so we leave the knob exposed.
 """
@@ -18,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .shipping import ensure_package_shipped
 
 
 def get_spark(
@@ -51,4 +56,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_package_shipped(spark)
     return spark

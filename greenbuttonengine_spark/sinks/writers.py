@@ -15,11 +15,9 @@ from pyspark.sql import functions as F
 from ..espi.schemas import TIMESERIES_COLUMNS
 
 
-def write_csv(ts: DataFrame, path: str, single_file: bool = True, sort: bool = False) -> None:
+def write_csv(ts: DataFrame, path: str, single_file: bool = True) -> None:
     """15-column CSV with the reference's header order (timeseries.rs:195-211)."""
     df = ts.select(*TIMESERIES_COLUMNS)
-    if sort:
-        df = df.orderBy("title", "time_period_start_unix")  # O1
     if single_file:
         df = df.coalesce(1)
     df.write.mode("overwrite").option("header", True).csv(path)
@@ -30,7 +28,6 @@ def write_parquet(
     path: str,
     single_file: bool = False,
     partition_by_title: bool = False,
-    sort: bool = False,
 ) -> None:
     """Snappy parquet; epoch seconds -> TIMESTAMP(MILLIS) naive, matching
     the reference schema (timeseries.rs:244-262, ms conversion :285-292).
@@ -42,8 +39,6 @@ def write_parquet(
         "time_period_start_unix",
         F.timestamp_seconds(F.col("time_period_start_unix")).cast("timestamp_ntz"),
     ).select(*TIMESERIES_COLUMNS)
-    if sort:
-        df = df.orderBy("title", "time_period_start_unix")
     if single_file:
         df = df.coalesce(1)
     writer = df.write.mode("overwrite").option("compression", "snappy")

@@ -46,10 +46,6 @@ def start_ingest_stream(
 ) -> StreamingQuery:
     """Watch ``drop_dir`` for new XML files; append parsed rows to the
     bronze store with exactly-once checkpointing."""
-    from ..espi.source import _ensure_package_shipped
-
-    _ensure_package_shipped(spark)
-
     # binaryFile, not text: the batch path's strict-UTF-8 decode runs
     # inside _parse_batches, so an invalid-encoding file becomes an
     # error row here exactly as in batch (source.py S2 semantics).

@@ -14,8 +14,7 @@ micro-batch into the stored rows of the buckets its keys land in:
 * tombstones are kept (``__deleted`` plus the epoch that wrote them):
   a later micro-batch carrying an out-of-order update with a LOWER
   seq than the delete must lose to the tombstone instead of
-  resurrecting the key; ``tombstone_retention_epochs`` bounds how long
-  a tombstone shields;
+  resurrecting the key;
 * re-merging an applied batch into its own result changes nothing (an
   equal-seq batch row wins over the identical stored row).
 
@@ -36,15 +35,14 @@ def cdc_merge_keepers(
     key_cols: list[str],
     seq_col: str,
     epoch_id: int,
-    op_col: str | None = None,
-    tombstone_retention_epochs: int | None = None,
+    op_col: str,
 ) -> DataFrame:
     """The per-key keeper election at the heart of the silver MERGE —
     a pure frame transform, run by the batch-parity oracle gate
     (plans/wave27_queries.py streaming_silver_upsert).
 
     ``batch_b`` is the incoming micro-batch (data columns + __bucket +
-    optional ``op_col``); ``current`` is the stored state of the
+    ``op_col``, whose NULL means update); ``current`` is the stored state of the
     affected buckets (data columns + __bucket + __deleted +
     __del_epoch).  Returns the merged bucket contents: per key the
     winning row under (seq desc, batch-beats-stored, delete-beats-
@@ -57,7 +55,7 @@ def cdc_merge_keepers(
     # coalesce, a NULL-op winner stored __deleted = (NULL == 'd')
     # = NULL — an undefined state the r5 form happened to drop and
     # the r6 tombstone path would have read back as live.
-    op = F.coalesce(F.col(op_col), F.lit("u")) if op_col else F.lit("u")
+    op = F.coalesce(F.col(op_col), F.lit("u"))
     b_norm = batch_b.withColumn("__op", op).select(
         *data_cols, "__bucket", "__op", F.lit(1).alias("__prio"),
         F.when(F.col("__op") == "d", F.lit(epoch_id))
@@ -69,16 +67,6 @@ def cdc_merge_keepers(
         F.when(stored_deleted, F.lit("d")).otherwise(F.lit("u")).alias("__op"),
         F.lit(0).alias("__prio"), F.col("__del_epoch"),
     )
-    if tombstone_retention_epochs is not None:
-        # an expired tombstone stops shielding its key: drop it
-        # BEFORE the merge window so state stays bounded
-        c_norm = c_norm.filter(
-            ~(
-                (F.col("__op") == "d")
-                & (F.col("__del_epoch")
-                   <= F.lit(epoch_id - tombstone_retention_epochs))
-            )
-        )
     # total order: highest seq wins; at equal seq the batch beats
     # stored state (__prio); a batch carrying BOTH an update and a
     # delete at the same seq resolves deterministically to the

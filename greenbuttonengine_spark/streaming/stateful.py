@@ -152,9 +152,6 @@ def sessionize_stream(
     micro-batch (triggered by ANY data or an empty trigger) flushes the
     user's open session and removes their state — idle users' sessions
     eventually emit, and state stays bounded."""
-    from ..shipping import ensure_package_shipped
-
-    ensure_package_shipped(events.sparkSession)
     timeout = (
         GroupStateTimeout.NoTimeout
         if idle_timeout_ms is None

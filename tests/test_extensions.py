@@ -462,9 +462,7 @@ def test_pack_sequences_invariants(spark, docs):
     the budget; packing efficiency beats the trivial one-doc-per-bin
     layout by a wide margin; membership is partition-invariant."""
     from greenbuttonengine_spark.extensions.packing import pack_sequences
-    from greenbuttonengine_spark.shipping import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     budget = 512
     packed = pack_sequences(docs, budget=budget, n_groups=8).cache()
     n_docs = docs.count()

@@ -14,7 +14,7 @@ STORE_SCHEMA = (
 )
 
 
-def _apply(spark, state, rows, epoch_id, **kw):
+def _apply(spark, state, rows, epoch_id):
     """Merge one micro-batch of ``(user_id, seq, plan, op)`` rows into
     ``state`` (the stored rows; None for an empty table)."""
     from greenbuttonengine_spark.streaming.silver import cdc_merge_keepers
@@ -25,7 +25,7 @@ def _apply(spark, state, rows, epoch_id, **kw):
     if state is None:
         state = spark.createDataFrame([], STORE_SCHEMA)
     return cdc_merge_keepers(
-        batch, state, DATA_COLS, ["user_id"], "seq", epoch_id, op_col="op", **kw
+        batch, state, DATA_COLS, ["user_id"], "seq", epoch_id, op_col="op"
     ).localCheckpoint()
 
 
@@ -81,16 +81,3 @@ def test_tombstone_blocks_out_of_order_resurrection(spark):
     s = _apply(spark, s, [(1, 6, "back", "u")], 3)
     assert _live(s)[1] == (6, "back")
 
-
-def test_tombstone_retention_expiry(spark):
-    """With tombstone_retention_epochs set, an expired tombstone stops
-    shielding: the late update applies once the window passes."""
-    kw = dict(tombstone_retention_epochs=2)
-    s = _apply(spark, None, [(1, 5, "x", "d"), (2, 1, "pro", "u")], 0, **kw)
-    # epoch 1: still inside the window -> shielded
-    s = _apply(spark, s, [(1, 3, "late", "u")], 1, **kw)
-    assert 1 not in _live(s)
-    # epoch 2: tombstone (del_epoch 0 <= 2-2) expired -> the same late
-    # update now lands
-    s = _apply(spark, s, [(1, 3, "late2", "u")], 2, **kw)
-    assert _live(s)[1] == (3, "late2")
