@@ -202,10 +202,10 @@ def _parse_reading_type(
 def _parse_local_time_parameters(
     node: ET.Element, entry_index: int, local: _LocalNames
 ) -> dict[str, Any]:
-    # entry_index links the LTP back to its carrying entry (-> href ->
-    # usage-point scope), which the non-strict multi-LTP mode resolves
-    # per usage point; the reference itself never needs it (it aborts
-    # on multiple LTPs, lib.rs:42-50)
+    # _parse_entry adds the carrying entry's href: its usage-point
+    # prefix scopes the LTP in the non-strict multi-LTP mode, which
+    # resolves LTPs per usage point; the reference itself never needs
+    # it (it aborts on multiple LTPs, lib.rs:42-50)
     row: dict[str, Any] = {
         "row_kind": KIND_LOCAL_TIME_PARAMETERS,
         "entry_index": entry_index,
@@ -315,7 +315,9 @@ def _parse_entry(
     if reading_type_node is not None:
         rows.append(_parse_reading_type(reading_type_node, entry_index, local))
     if ltp_node is not None:
-        rows.append(_parse_local_time_parameters(ltp_node, entry_index, local))
+        rows.append(
+            _parse_local_time_parameters(ltp_node, entry_index, local) | {"href": entry["href"]}
+        )
     return entry, rows
 
 

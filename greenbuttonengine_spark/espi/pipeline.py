@@ -18,12 +18,16 @@ not a fact, with no self-join and no pass over the facts:
                   parse-error rows: LTP count and rules, parse-error
                   flag, first-entry href (enova), 'Missing reading
                   type' (an entry with readings but no codes) and the
-                  years the entries' readings span
+                  years the entries' readings span; in the multi-LTP
+                  mode also the file's LTPs with their usage-point
+                  scopes and the scopes of its readings, from which
+                  one CASE gives its LTP error
 * entry dim       a projection of the entries with readings: title,
                   usage point, scale and the decoded codes
 * DST dim         the years of each file that passes every check
-                  (per usage point in the multi-LTP mode), with the
-                  rules evaluated per year and the enova flag
+                  (per reading scope in the multi-LTP mode, each with
+                  its usage point's rules or the file-global ones),
+                  with the rules evaluated per year and the enova flag
 
 Both dimensions carry broadcast hints and the fact stream is one stage:
 scan, two broadcast hash joins, project — no shuffle, no window.  A
@@ -31,9 +35,9 @@ file that fails any check has no row in the DST dim, so the inner join
 drops its facts, including partial rows a streaming parse emitted
 before its error row.  Every key carries ``source_file`` so a
 multi-file ingest is one job (the reference loops files
-single-threaded and UNION-ALLs).  A strict ingest plus its parquet
-write runs 5 jobs: the parse checkpoint, the entry dim, the
-aggregate's shuffle, the DST dim and the fact stream.
+single-threaded and UNION-ALLs).  An ingest plus its parquet write
+runs 5 jobs in either LTP mode: the parse checkpoint, the entry dim,
+the aggregate's shuffle, the DST dim and the fact stream.
 
 Each output — the TimeSeries and the per-file error rows — is ONE
 ``spark.sql`` statement whose CTE text is built once per process: the
@@ -94,81 +98,68 @@ def _cols(alias: str, names) -> str:
     return ", ".join(f"{alias}.{c}" for c in names)
 
 
-def _ltp_scope_ctes(ltp: str, entries: str, all_files: str, fact_ups: str) -> str:
-    """Non-strict LTP resolution as CTE text — the SURVEY §7 improvement
-    over the reference's whole-file abort on multiple
-    LocalTimeParameters (lib.rs:42-50).  Each LTP is SCOPED by the
-    usage-point prefix of its carrying entry's href (no UsagePoint path
-    -> '' = file-global), so a file may legally carry one global plus
-    one LTP per usage point.  Every (source_file, up_key) of
-    ``fact_ups`` then resolves to its UP-scoped LTP first, the
-    file-global one as fallback.
+_UP_KEY = f"regexp_extract(href, {sql_str(_USAGE_POINT_RE)}, 1)"
 
-    Arguments name the input relations; they need the columns
-    ``ltp``: source_file, entry_index + rules; ``entries``:
-    source_file, entry_index, href; ``all_files``, ``fact_ups``:
-    source_file (+ up_key).  Defines ``ltp_resolved`` (source_file,
-    up_key, rules — NULL-ruled rows kept, so callers apply
-    fail-the-file atomicity) and ``ltp_file_errors`` (one row per
-    failing file: no LTP at all, >1 LTP in the SAME scope, or a fact
-    scope that resolves to neither)."""
-    rules = _LTP_RULE_COLS
-    coalesced = ",\n               ".join(f"coalesce(u.{c}, g.{c}) AS {c}" for c in rules)
-    return f"""
-ltp_scoped AS (
-    SELECT l.source_file, coalesce(regexp_extract(h.href, {sql_str(_USAGE_POINT_RE)}, 1), '')
-               AS up_key, {_cols("l", rules)}
-    FROM {ltp} l
-    LEFT JOIN {entries} h ON l.source_file = h.source_file AND l.entry_index = h.entry_index),
-ltp_dup_files AS (
-    SELECT DISTINCT source_file FROM ltp_scoped
-    GROUP BY source_file, up_key HAVING count(*) > 1),
-ltp_scope_errors AS (
-    SELECT a.source_file, '{_LTP_MISSING}' AS error
-    FROM {all_files} a LEFT ANTI JOIN ltp_scoped s ON a.source_file = s.source_file
-    UNION ALL
-    SELECT source_file, '{_LTP_SCOPE}' AS error FROM ltp_dup_files),
-ltp_rules AS (
-    SELECT s.* FROM ltp_scoped s
-    LEFT ANTI JOIN ltp_dup_files d ON s.source_file = d.source_file),
-ltp_resolved AS (
-    SELECT f.source_file, f.up_key,
-           {coalesced}
-    FROM {fact_ups} f
-    LEFT JOIN (SELECT * FROM ltp_rules WHERE up_key != '') u
-        ON f.source_file = u.source_file AND f.up_key = u.up_key
-    LEFT JOIN (SELECT * FROM ltp_rules WHERE up_key = '') g
-        ON f.source_file = g.source_file),
-ltp_file_errors AS (
-    SELECT source_file, error FROM ltp_scope_errors
-    UNION ALL
-    -- files already errored resolve to nothing too: one error row per file
-    SELECT DISTINCT r.source_file, '{_LTP_MISSING}' AS error
-    FROM ltp_resolved r LEFT ANTI JOIN ltp_scope_errors e ON r.source_file = e.source_file
-    WHERE r.tz_offset IS NULL)"""
+# Multi-LTP resolution (SURVEY §7 improvement over the reference's
+# whole-file abort on multiple LocalTimeParameters, lib.rs:42-50), as
+# text that reads the columns of a parse table grouped by source_file.
+# Each LTP is SCOPED by the usage-point prefix of its entry's href
+# (none -> '' = file-global), so a file may legally carry one global
+# plus one LTP per usage point.  Aggregate columns: the file's LTPs
+# with their scopes, and the scopes of its entries that have readings.
+_LTP_SCOPES = f"""collect_list(CASE WHEN row_kind = '{KIND_LOCAL_TIME_PARAMETERS}'
+               THEN struct(coalesce({_UP_KEY}, '') AS up_key, {", ".join(_LTP_RULE_COLS)}) END)
+               AS ltps,
+           collect_set(CASE WHEN row_kind = '{KIND_ENTRY}' AND first_start_unix IS NOT NULL
+               THEN {_UP_KEY} END) AS fact_ups"""
+# CTE: each file of ``files`` with its LTP error over those columns
+# (NULL when it passes): no LTP at all, two LTPs in one scope, or a
+# reading scope that resolves to neither its usage point's LTP nor the
+# file-global one
+_LTP_CHECKED = f"""ltp_checked AS (
+    SELECT *, CASE WHEN size(ltps) = 0 THEN '{_LTP_MISSING}'
+                   WHEN size(ltps) > size(array_distinct(ltps.up_key)) THEN '{_LTP_SCOPE}'
+                   WHEN exists(fact_ups, u -> NOT exists(ltps, l -> l.up_key IN (u, '')))
+                       THEN '{_LTP_MISSING}' END AS ltp_error
+    FROM files)"""
+# Generator: one (up_key, rules) row per reading scope of a file that
+# passed the check; its usage point's LTP first, the file-global one
+# as fallback (try_element_at: an empty match is NULL under ANSI too)
+_SCOPE_RULES = """inline(transform(fact_ups, u -> named_struct('up_key', u, 'rules', coalesce(
+               try_element_at(filter(ltps, l -> l.up_key = u), 1),
+               try_element_at(filter(ltps, l -> l.up_key = ''), 1)))))"""
 
 
-def resolve_ltp_for_scopes(
-    ltp: DataFrame,
-    entries: DataFrame,
-    all_files: DataFrame,
-    fact_ups: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Full non-strict LTP resolution for a set of fact scopes
-    (``_ltp_scope_ctes``): (ltp_resolved rows (source_file, up_key,
-    rules...), per-file error rows (source_file, error)).
+def resolve_ltp_for_scopes(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Multi-LTP resolution over parse-table-shaped ``rows`` (entry and
+    LTP rows with source_file, row_kind, href, first_start_unix and the
+    rules): (rows (source_file, up_key, rules...) for the reading scopes
+    of every file that passes, per-file error rows (source_file, error)).
 
-    The CTE text is the one ``denormalize_with_errors(
-    strict_single_ltp=False)`` inlines, and this function is the body
-    of the espi_multi_ltp_scope_resolution oracle query — the
-    batch-parity pattern the streaming operators use, so the driver
-    gate exercises the same code the CLI's --multi-ltp runs."""
-    frames = {"ltp": ltp, "entries": entries, "all_files": all_files, "fact_ups": fact_ups}
-    ctes = _ltp_scope_ctes(**{name: "{" + name + "}" for name in frames})
-    spark = ltp.sparkSession
+    It runs the aggregate columns and the error check that
+    ``denormalize_with_errors(strict_single_ltp=False)`` inlines after
+    its file aggregate, and it is the body of the
+    espi_multi_ltp_scope_resolution oracle query, so the driver gate
+    exercises the same text the CLI's --multi-ltp runs."""
+    checked = f"""WITH files AS (
+    SELECT source_file,
+           {_LTP_SCOPES}
+    FROM {{rows}} GROUP BY source_file),
+{_LTP_CHECKED}"""
+    rules = ", ".join(f"rules.{c}" for c in _LTP_RULE_COLS)
+    spark = rows.sparkSession
     return (
-        spark.sql(f"WITH {ctes}\nSELECT * FROM ltp_resolved", **frames),
-        spark.sql(f"WITH {ctes}\nSELECT * FROM ltp_file_errors", **frames),
+        spark.sql(
+            f"""{checked}
+SELECT source_file, up_key, {rules}
+FROM (SELECT source_file, {_SCOPE_RULES} FROM ltp_checked WHERE ltp_error IS NULL)""",
+            rows=rows,
+        ),
+        spark.sql(
+            f"{checked}\nSELECT source_file, ltp_error AS error FROM ltp_checked"
+            " WHERE ltp_error IS NOT NULL",
+            rows=rows,
+        ),
     )
 
 
@@ -190,8 +181,8 @@ def _statements(strict_single_ltp: bool, include_source_file: bool) -> tuple[str
     decoded = ",\n           ".join(
         f"{decode_enum_sql(c, xsd)} AS {c}" for c, xsd in ENUM_FIELDS
     )
-    up_key = f"regexp_extract(href, {sql_str(_USAGE_POINT_RE)}, 1)"
     if strict_single_ltp:
+        scope_aggs = ""
         ltp_checks = f"""
 ltp_errors AS (
     SELECT source_file,
@@ -201,33 +192,18 @@ ltp_ok AS (SELECT * FROM files WHERE n_ltp = 1),"""
         # P11: DST/tz rules per (file, year) — the analog of the
         # reference's per-year memoization
         dst_keys = ("source_file", "year")
-        dst_from = "(SELECT *, explode(sequence(first_year, last_year)) AS year FROM good) g"
-        r = k = "g"
-        hint = ""
+        scopes = "good"
+        r = "g"
     else:
+        scope_aggs = f",\n           {_LTP_SCOPES}"
         ltp_checks = f"""
--- the usage points a file's readings fall under, and the years each spans
-fact_ups AS (
-    SELECT source_file, {up_key} AS up_key,
-           {year_sql("min(first_start_unix)")} AS first_year,
-           {year_sql("max(last_start_unix)")} AS last_year
-    FROM entries WHERE first_start_unix IS NOT NULL
-    GROUP BY source_file, {up_key}),
-{_ltp_scope_ctes("ltp", "entries", "files", "fact_ups")},
--- a file with a parse error reports only that error
-ltp_errors AS (
-    SELECT /*+ BROADCAST(f) */ x.source_file, x.error
-    FROM ltp_file_errors x LEFT SEMI JOIN files f ON x.source_file = f.source_file),
-ltp_ok AS (
-    SELECT /*+ BROADCAST(x) */ f.*
-    FROM files f LEFT ANTI JOIN ltp_errors x ON f.source_file = x.source_file),"""
+{_LTP_CHECKED},
+ltp_errors AS (SELECT source_file, ltp_error AS error FROM ltp_checked WHERE ltp_error IS NOT NULL),
+ltp_ok AS (SELECT * FROM ltp_checked WHERE ltp_error IS NULL),"""
         # rules per (file, usage point, year)
         dst_keys = ("source_file", "up_key", "year")
-        dst_from = """(SELECT *, explode(sequence(first_year, last_year)) AS year FROM fact_ups) k
-    JOIN good g ON k.source_file = g.source_file
-    LEFT JOIN ltp_resolved r ON k.source_file = r.source_file AND k.up_key = r.up_key"""
-        r, k = "r", "k"
-        hint = "/*+ BROADCAST(g, r) */"
+        scopes = f"(SELECT *, {_SCOPE_RULES} FROM good)"
+        r = "g.rules"
 
     checks = f"""WITH
 entries AS (
@@ -250,7 +226,7 @@ files AS (
            bool_or(first_start_unix IS NOT NULL AND power_of_ten_multiplier IS NULL)
                AS rt_missing,
            {year_sql("min(first_start_unix)")} AS first_year,
-           {year_sql("max(last_start_unix)")} AS last_year
+           {year_sql("max(last_start_unix)")} AS last_year{scope_aggs}
     FROM {{parsed}}
     WHERE row_kind IN ('{KIND_ENTRY}', '{KIND_LOCAL_TIME_PARAMETERS}', '{KIND_ERROR}')
     GROUP BY source_file
@@ -266,7 +242,7 @@ facts AS (
 -- codes of the reading type its hrefs resolve to, so the dimension is
 -- a projection of the entries that have readings
 entry_dim AS (
-    SELECT source_file, entry_index, title, {up_key} AS up_key,
+    SELECT source_file, entry_index, title, {_UP_KEY} AS up_key,
            -- P6: the scale factor in FLOAT, as the reference computes it
            CAST(pow(CAST(10 AS DOUBLE), CAST(power_of_ten_multiplier AS DOUBLE)) AS FLOAT)
                AS scale,
@@ -277,12 +253,12 @@ good AS (SELECT * FROM ltp_ok WHERE NOT rt_missing),
 -- every year a good file's readings span, with its enova flag and the
 -- DST window evaluated once per year
 dst_dim AS (
-    SELECT {hint}
-           {_cols(k, dst_keys)}, g.is_enova,
-           {rule_epoch_sql(f"{r}.dst_start_rule", f"{k}.year")} AS dst_start,
-           {rule_epoch_sql(f"{r}.dst_end_rule", f"{k}.year")} AS dst_end,
+    SELECT 
+           {_cols("g", dst_keys)}, g.is_enova,
+           {rule_epoch_sql(f"{r}.dst_start_rule", "g.year")} AS dst_start,
+           {rule_epoch_sql(f"{r}.dst_end_rule", "g.year")} AS dst_end,
            {r}.dst_offset, {r}.tz_offset
-    FROM {dst_from})
+    FROM (SELECT *, explode(sequence(first_year, last_year)) AS year FROM {scopes}) g)
 """
     shifted = local_time_sql(
         "f.time_period_start_unix", "t.dst_start", "t.dst_end", "t.dst_offset", "t.tz_offset"
@@ -316,15 +292,11 @@ UNION ALL SELECT source_file, error FROM rt_errors"""
     return timeseries, errors
 
 
-def denormalize_and_link(
-    parsed: DataFrame,
-    include_source_file: bool = False,
-    strict_single_ltp: bool = True,
-) -> DataFrame:
+def denormalize_and_link(parsed: DataFrame, include_source_file: bool = False) -> DataFrame:
     """Union-typed parse table -> the 15-column TimeSeries DataFrame.
     Thin wrapper over :func:`denormalize_with_errors` for callers that
     only want the data side."""
-    ts, _errors = denormalize_with_errors(parsed, include_source_file, strict_single_ltp)
+    ts, _errors = denormalize_with_errors(parsed, include_source_file)
     return ts
 
 
@@ -346,9 +318,9 @@ def denormalize_with_errors(
 
     ``strict_single_ltp=False`` (SURVEY §7 improvement; r13 VERDICT
     item 7) relaxes the reference's one-LTP-per-file restriction:
-    LTPs resolve PER USAGE POINT (``resolve_ltp_for_scopes``), so a
-    multi-utility export with one tz per usage point processes instead
-    of erroring.  The default keeps reference parity (golden
+    LTPs resolve PER USAGE POINT inside the file aggregate (the text
+    ``resolve_ltp_for_scopes`` also runs), so a multi-utility export
+    with one tz per usage point processes instead of erroring.  The default keeps reference parity (golden
     byte-parity depends on it) and the per-file error channel;
     single-global-LTP files produce identical rows under either mode.
     """
@@ -367,7 +339,7 @@ def timeseries_from_files(
 
     The parsed union table is the single Python-stage output; both
     statements read it several times (facts, entries, the file
-    aggregate; LTPs in the multi-LTP mode), so it is materialized once via
+    aggregate), so it is materialized once via
     ``localCheckpoint(eager=True)`` — one parse per file total, like
     the reference.  Eager, because a lazy checkpoint is marked by
     whichever concurrent broadcast job finishes first, and Spark 4.1

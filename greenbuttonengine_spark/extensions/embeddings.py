@@ -15,9 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _as_double(vec_col: str):
-    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+from .similarity import _as_double
 
 
 def quantize_int8(

@@ -13,16 +13,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .core_queries import _dec
 from .registry import register
 
 # The reference implementation's checkout, beside this one; may be absent.
 REFERENCE = os.path.abspath(os.path.join(__file__, *[".."] * 4, "reference"))
 EGD_XML = f"{REFERENCE}/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
 GOLDEN_PARQUET = f"{REFERENCE}/cli-frontend/tests/goldens/golden.parquet"
-
-
-def _dec(c, scale: int = 2):
-    return F.col(c).cast(f"decimal(18,{scale})")
 
 
 @register(

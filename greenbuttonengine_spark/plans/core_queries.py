@@ -576,16 +576,18 @@ def p17_composite_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="SURVEY §7 multi-LTP improvement as a driver-gated row (r14 "
     "VERDICT item 3): per-usage-point LocalTimeParameters resolution "
     "with file-global fallback, exercised through the PRODUCTION "
-    "resolve_ltp_for_scopes (espi/pipeline.py — the code gbcli "
-    "--multi-ltp runs), against a deterministic href corpus derived "
-    "from the events table.  Covers every branch: child-scoped and "
+    "resolve_ltp_for_scopes (espi/pipeline.py — the per-file aggregate "
+    "and error text that gbcli --multi-ltp runs), fed the entry and "
+    "LTP rows of a deterministic href corpus derived from the events "
+    "table.  Covers every branch: child-scoped and "
     "bare UsagePoint hrefs (the r14 ADVICE regex fix), global "
     "fallback, duplicate-scope whole-file error, missing-LTP error, "
     "and the unresolved-scope error (file has an LTP but a scope "
     "resolves to neither).",
 )
 def espi_multi_ltp_scope_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..espi.pipeline import _USAGE_POINT_RE, resolve_ltp_for_scopes
+    from ..espi.pipeline import resolve_ltp_for_scopes
+    from ..espi.schemas import KIND_ENTRY, KIND_LOCAL_TIME_PARAMETERS
 
     ev = load_table(spark, "events", sf_dir).select("event_id")
     eid = F.col("event_id")
@@ -618,8 +620,13 @@ def espi_multi_ltp_scope_resolution(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .otherwise(F.concat(F.lit(base + "Other/"), eid.cast("string")))
     )
+    # the parse table's shape: every event is an entry with readings,
+    # and a carrier event's entry also carries an LTP
     entries = ev.select(
-        sf.alias("source_file"), eid.alias("entry_index"), href.alias("href")
+        sf.alias("source_file"),
+        F.lit(KIND_ENTRY).alias("row_kind"),
+        href.alias("href"),
+        F.lit(0).cast("long").alias("first_start_unix"),
     )
     carrier = (
         (eid < 16) | ((eid >= 20) & (eid < 38)) | ((eid >= 40) & (eid < 42))
@@ -632,7 +639,8 @@ def espi_multi_ltp_scope_resolution(spark: SparkSession, sf_dir: str) -> DataFra
     )
     ltp = ev.filter(carrier).select(
         sf.alias("source_file"),
-        eid.alias("entry_index"),
+        F.lit(KIND_LOCAL_TIME_PARAMETERS).alias("row_kind"),
+        href.alias("href"),
         F.concat(F.lit("S"), F.pmod(eid, F.lit(4)).cast("string")).alias(
             "dst_start_rule"
         ),
@@ -640,18 +648,14 @@ def espi_multi_ltp_scope_resolution(spark: SparkSession, sf_dir: str) -> DataFra
         F.lit(3600).cast("long").alias("dst_offset"),
         tz.alias("tz_offset"),
     )
-    all_files = entries.select("source_file").distinct()
-    fact_ups = entries.select(
-        "source_file",
-        F.regexp_extract("href", _USAGE_POINT_RE, 1).alias("up_key"),
-    ).distinct()
-    resolved, errors = resolve_ltp_for_scopes(ltp, entries, all_files, fact_ups)
-    err_files = errors.select("source_file").distinct()
-    ok = resolved.join(err_files, "source_file", "left_anti").select(
+    resolved, errors = resolve_ltp_for_scopes(
+        entries.unionByName(ltp, allowMissingColumns=True)
+    )
+    ok = resolved.select(
         "source_file",
         "up_key",
-        F.col("tz_offset").cast("long").alias("tz_offset"),
-        F.col("dst_offset").cast("long").alias("dst_offset"),
+        "tz_offset",
+        "dst_offset",
         "dst_start_rule",
         F.lit("ok").alias("status"),
     )

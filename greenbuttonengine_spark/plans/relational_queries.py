@@ -21,11 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .core_queries import _dec
 from .registry import register
-
-
-def _dec(c, scale: int = 2):
-    return F.col(c).cast(f"decimal(18,{scale})")
 
 
 # ---------------------------------------------------------------------------

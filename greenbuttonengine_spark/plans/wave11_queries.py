@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from .registry import register
-from .wave9_queries import _md5_60
+from .wave8_queries import _md5_60
 
 # ---------------------------------------------------------------------------
 # Data-constrained epoch schedule (integer waterfilling)

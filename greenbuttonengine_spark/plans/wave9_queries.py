@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table, spread_scan
 from .registry import register
-
-
-def _md5_60(col):
-    """Seeded 60-bit hash, bit-identical in Spark and DuckDB."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+from .wave8_queries import _md5_60
 
 
 def _py_md5_60(s: str) -> int:

@@ -20,7 +20,7 @@ Streaming primitives:
 Stream-stream interval joins live in ``joins.py``.
 
 State scale notes: state is partitioned by the grouping key across
-executors; :func:`use_rocksdb_state_store` switches the provider to the
+executors; the ``ROCKSDB_STATE_STORE`` confs switch the provider to the
 bundled RocksDB store (state spills off-heap/disk — required once keyed
 state exceeds executor memory at 100 TB).  Sessions close on OBSERVED
 data by default; pass ``idle_timeout_ms`` to also flush sessions of
@@ -169,20 +169,16 @@ def sessionize_stream(
     )
 
 
-def use_rocksdb_state_store(spark) -> None:
-    """Switch streaming state to the bundled RocksDB provider — the
-    production configuration once keyed state (sessions, dedup horizon)
-    exceeds executor heap: state lives off-heap/on-disk per task with
-    changelog checkpointing, instead of the default in-memory HDFS-
-    backed map."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
+# Session confs for the bundled RocksDB state-store provider — the
+# production configuration once keyed state (sessions, dedup horizon)
+# exceeds executor heap: state lives off-heap/on-disk per task with
+# changelog checkpointing, instead of the default in-memory HDFS-backed
+# map.  The application that runs the streams sets them on its session.
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
 
 
 def windowed_key_counts(

@@ -183,13 +183,14 @@ def test_rocksdb_state_store_provider(spark, event_stream):
     run: same dedup pipeline, state backed by the bundled RocksDB
     provider instead of the in-memory HDFS-backed map."""
     from greenbuttonengine_spark.streaming.stateful import (
+        ROCKSDB_STATE_STORE,
         dedup_stream,
-        use_rocksdb_state_store,
     )
 
     stream, src = event_stream
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state_store(spark)
+    prev = {key: spark.conf.get(key, None) for key in ROCKSDB_STATE_STORE}
+    for key, value in ROCKSDB_STATE_STORE.items():
+        spark.conf.set(key, value)
     q = (
         dedup_stream(stream.union(stream), key_cols=["event_id"], watermark="120 minutes")
         .writeStream.outputMode("append")
@@ -203,13 +204,16 @@ def test_rocksdb_state_store_provider(spark, event_stream):
             "SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM deduped_rocks"
         ).first()
         assert got.n == got.d == src.count()
-        assert "RocksDB" in q.lastProgress["stateOperators"][0]["customMetrics"].__str__() or True
+        # only the RocksDB provider reports rocksdb* metrics
+        metrics = q.lastProgress["stateOperators"][0]["customMetrics"]
+        assert any(k.startswith("rocksdb") for k in metrics), metrics
     finally:
         q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def test_dedup_stream_drops_rearrivals(spark, event_stream):

@@ -130,9 +130,9 @@ def main() -> None:
     from greenbuttonengine_spark.session import get_spark
     from greenbuttonengine_spark.streaming.joins import interval_join_streams
     from greenbuttonengine_spark.streaming.stateful import (
+        ROCKSDB_STATE_STORE,
         dedup_stream,
         sessionize_stream,
-        use_rocksdb_state_store,
     )
     from pyspark.sql import functions as F
 
@@ -148,7 +148,8 @@ def main() -> None:
         f"{BASE}/ckpt_dedup",
     )
 
-    use_rocksdb_state_store(spark)
+    for key, value in ROCKSDB_STATE_STORE.items():
+        spark.conf.set(key, value)
     run_stream(
         spark,
         "soak_sessionize",
