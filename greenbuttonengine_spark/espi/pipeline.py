@@ -320,9 +320,10 @@ def denormalize_with_errors(
     item 7) relaxes the reference's one-LTP-per-file restriction:
     LTPs resolve PER USAGE POINT inside the file aggregate (the text
     ``resolve_ltp_for_scopes`` also runs), so a multi-utility export
-    with one tz per usage point processes instead of erroring.  The default keeps reference parity (golden
-    byte-parity depends on it) and the per-file error channel;
-    single-global-LTP files produce identical rows under either mode.
+    with one tz per usage point processes instead of erroring.  The
+    default keeps reference parity (golden byte-parity depends on it)
+    and the per-file error channel; single-global-LTP files produce
+    identical rows under either mode.
     """
     spark = parsed.sparkSession
     timeseries, errors = _statements(strict_single_ltp, include_source_file)

@@ -289,7 +289,7 @@ def test_ingest_job_budget(spark, mixed_dir, tmp_path, strict, budget):
     aggregate.  Self-joins on hrefs, joins of the LTP rows to the
     entries or a second scan of the facts for their keys would add jobs:
     with them the same ingest ran 14 jobs strict and 41-42 in the
-    multi-LTP mode, and 29 in the multi-LTP mode with LTP-scope joins
+    multi-LTP mode, and 29-30 in the multi-LTP mode with LTP-scope joins
     alone."""
     from greenbuttonengine_spark.espi.pipeline import timeseries_from_files
     from greenbuttonengine_spark.sinks import write_parquet
